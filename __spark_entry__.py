@@ -43,6 +43,19 @@ def _docs_as_transcripts(documents: DataFrame) -> DataFrame:
     )
 
 
+def _scratch_index_root() -> str:
+    """A fresh directory for one entry call's in-query block index,
+    removed at interpreter exit (the returned DataFrame reads it lazily,
+    so it must outlive the call)."""
+    import atexit
+    import shutil
+    import tempfile
+
+    root = tempfile.mkdtemp(prefix="ir_base_spark_idx_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
 def _bm25_query_pdf(k: int) -> pd.DataFrame:
     return pd.DataFrame(
         {
@@ -80,23 +93,14 @@ def q_bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_bm25_topk_docs_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same ranking through the compressed-block + block-max WAND path."""
-    from ir_base_spark.index.blocks import build_block_index
-    from ir_base_spark.index.build import build_index
-    from ir_base_spark.index.dictionary import assign_doc_ids
+    from ir_base_spark.index.manifest import build_single_shard_index
     from ir_base_spark.query.dataframe_bm25 import analyze_query_terms
-    from ir_base_spark.query.wand import wand_topk
+    from ir_base_spark.query.wand import wand_topk_sharded
 
-    t = _docs_as_transcripts(_docs(spark, sf_dir))
-    idx = build_index(spark, t, analyzer="simple")
-    # one conversation-base cumsum shared by the doc-id map and the
-    # block encode (each would otherwise run its own eager two-phase
-    # cumsum over doc_lens)
-    from ir_base_spark.index.dictionary import conv_doc_base
-
-    base = conv_doc_base(idx.doc_lens, num_partitions=8)
-    docs = assign_doc_ids(idx.doc_lens, base=base)
-    bidx = build_block_index(
-        idx, docs, block_size=128, bucket_bits=12, doc_base=base
+    root = _scratch_index_root()
+    build_single_shard_index(
+        spark, _docs_as_transcripts(_docs(spark, sf_dir)), root,
+        analyzer="simple",
     )
     # over-fetch, then take the final k on the ROUNDED score: the engine
     # and the oracle must agree on the k-boundary even when raw float
@@ -104,7 +108,7 @@ def q_bm25_topk_docs_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     qt = analyze_query_terms(
         spark, _bm25_query_pdf(WAND_K + 10), analyzer="simple"
     )
-    out = wand_topk(bidx, qt).select(
+    out = wand_topk_sharded(spark, root, qt).select(
         F.col("conv_id").cast("long").alias("doc_id"),
         F.round(F.col("score"), 6).alias("score6"),
     )
@@ -1578,19 +1582,15 @@ def q_transcripts_bm25_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle_sql() renders its expected top-k as a VALUES literal, giving
     the driver a full rows+schema+hash gate instead of rows-only."""
     from ir_base_spark.fixtures import make_fixture
-    from ir_base_spark.index.blocks import build_block_index
-    from ir_base_spark.index.build import build_index
-    from ir_base_spark.index.dictionary import assign_doc_ids
+    from ir_base_spark.index.manifest import build_single_shard_index
     from ir_base_spark.query.dataframe_bm25 import analyze_query_terms
-    from ir_base_spark.query.wand import wand_topk
+    from ir_base_spark.query.wand import wand_topk_sharded
 
     fx = make_fixture(**TRANSCRIPTS_FIXTURE)
-    t = spark.createDataFrame(fx.transcripts)
-    idx = build_index(spark, t)
-    docs = assign_doc_ids(idx.doc_lens)
-    bidx = build_block_index(idx, docs)
+    root = _scratch_index_root()
+    build_single_shard_index(spark, spark.createDataFrame(fx.transcripts), root)
     qt = analyze_query_terms(spark, fx.queries)
-    return wand_topk(bidx, qt).select(
+    return wand_topk_sharded(spark, root, qt).select(
         "query_id",
         "rank",
         "conv_id",

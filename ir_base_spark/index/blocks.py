@@ -2,7 +2,8 @@
 
 The reference keeps postings as boxed Java objects (~32 B/posting,
 /root/reference/src/structures/_SparseFeature.java); at 10^12 turns the
-engine instead stores term-major posting blocks:
+engine instead stores term-major posting blocks, one block file per doc
+shard (``blocks/partition_id=<p>/blocks.parquet``):
 
     (term_id, bucket, block_seq, n, first_doc, last_doc, max_weight,
      doc_gaps: binary, weights: binary)
@@ -11,52 +12,28 @@ engine instead stores term-major posting blocks:
   doc_id IS the stable turn ordering, and delta gaps are small;
 - gaps are varbyte-encoded (vectorized numpy encode/decode, no per-value
   Python in the build hot path);
-- weights stay float64 (rank identity forbids quantization); stored as
-  raw little-endian bytes;
+- the payload column carries varbyte TERM FREQUENCIES (~1 B/posting;
+  the ``sg_payload=tfv1`` format). The exact BM25 double is rebuilt at
+  decode from the term's IDF (terms/ sidecar) and the per-shard
+  ``_doclen.npz`` sidecar (doc lengths, and the per-doc L1/L2 norm when
+  the index was finalized with one) with the encoder's expression and
+  operand order, so scores are bit-identical to the encoder's weights;
 - ``max_weight`` per block drives block-max WAND pruning (query/wand.py).
 
-Hot-term skew (SURVEY §4, §7.3): the build groups by (term_id, bucket)
-where bucket = doc_id >> bucket_bits — a *doc-range* salt. A Zipf-head
-term's postings split across many buckets that build independently and
-IN GLOBAL DOC ORDER, so no single reducer sees a whole hot posting list
-and no second merge stage is needed: block order within a term is simply
-(bucket, block_seq). This replaces the naive hash-salt + re-merge
-two-stage plan with one shuffle.
+Hot-term skew (SURVEY §4, §7.3): a shard is a contiguous DOC range (the
+build's conv-range split), so a Zipf-head term's postings split across
+every shard in proportion to the docs they live in; each shard encodes
+independently with no posting-level shuffle and no merge stage.
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 DEFAULT_BLOCK_SIZE = 128
-DEFAULT_BUCKET_BITS = 16  # 65536 docs per bucket
-
-
-def choose_bucket_bits(n_docs: int, target_shards: int = 64) -> int:
-    """Corpus-adaptive doc-range shard width.
-
-    A doc-range shard behaves like a Lucene-style document shard: every
-    term's postings restricted to that doc range. Too many shards
-    explodes (term, shard) group count — every tail term pays one
-    (undersized) block per shard it touches — so shard count should stay
-    moderate (~target_shards) regardless of corpus size, while each
-    shard still holds enough docs that head-term blocks fill up.
-    """
-    import math
-
-    bits = max(10, math.ceil(math.log2(max(1, n_docs) / target_shards)))
-    return bits
-
-BLOCK_SCHEMA = (
-    "term_id long, bucket int, block_seq int, n int, first_doc long, "
-    "last_doc long, max_weight double, doc_gaps binary, weights binary"
-)
 
 
 # ---------------------------------------------------------------- varbyte
@@ -130,58 +107,31 @@ def varbyte_decode(buf: bytes) -> np.ndarray:
     return values
 
 
-def encode_postings_block(
-    doc_ids: np.ndarray, weights: np.ndarray
-) -> tuple[int, int, float, bytes, bytes]:
-    """One block: (first_doc, last_doc, max_weight, gaps_varbyte, w_bytes).
+def _tf_weights(ids: np.ndarray, payload: bytes, meta) -> np.ndarray:
+    """Exact weights of one TF payload: ``meta=(idf_t, denom, lo, nrm)``
+    — the term's BM25 IDF, the shard's per-doc saturation denominator
+    and its first doc id, and the per-doc norm divisor (None when the
+    index has no norm). Same expression and operand order as the
+    encoder (encode_shards_from_postings), so bit-identical."""
+    from .weights import K1  # B is folded into the sidecar denom
 
-    Gaps: first value is 0 (first_doc is carried absolutely in the block
-    row), then successive deltas — all >= 1 within a sorted unique list.
-    """
-    ids = np.asarray(doc_ids, dtype=np.int64)
-    w = np.asarray(weights, dtype=np.float64)
-    gaps = np.empty(ids.shape, dtype=np.uint64)
-    gaps[0] = 0
-    np.subtract(ids[1:], ids[:-1], out=gaps[1:], casting="unsafe")
-    return (
-        int(ids[0]),
-        int(ids[-1]),
-        float(w.max()),
-        varbyte_encode(gaps),
-        w.tobytes(),
-    )
+    idf_t, denom, lo, nrm = meta
+    tf = varbyte_decode(payload).astype(np.float64)
+    w = idf_t * (tf * (K1 + 1.0) / (denom[ids - lo] + tf))
+    if nrm is not None:
+        w = w / nrm[ids - lo]
+    return w
 
 
 def decode_postings_block(
-    first_doc: int, doc_gaps: bytes, payload: bytes, meta=None
+    first_doc: int, doc_gaps: bytes, payload: bytes, meta
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(doc ids, float64 weights) for one block.
-
-    ``meta=None``: ``payload`` is raw float64 weights (the
-    weights-artifact format of encode_shards / build_block_index).
-
-    ``meta=(idf_t, denom, lo)``: the TF-payload format of
-    encode_shards_from_postings — ``payload`` is varbyte TERM FREQUENCY
-    (~1 byte/posting instead of 8), and the exact BM25 double is
-    reconstructed here with the identical expression and operand order
-    the encoder used (idf from the term sidecar, the per-doc saturation
-    denominator from the per-shard doc-length sidecar), so scores are
-    bit-identical to the stored-weights format. 8x fewer payload bytes
-    touch disk, page cache and the memory bus on both the encode and
-    every decode.
-    """
+    """(doc ids, float64 weights) for one TF-payload block; ``meta`` as
+    in _tf_weights."""
     gaps = varbyte_decode(doc_gaps).astype(np.int64)
     gaps[0] = first_doc
     ids = np.cumsum(gaps)
-    if meta is None:
-        w = np.frombuffer(payload, dtype=np.float64)
-    else:
-        from .weights import K1 as _K1  # B is folded into the sidecar denom
-
-        idf_t, denom, lo = meta
-        tf = varbyte_decode(payload).astype(np.float64)
-        w = idf_t * (tf * (_K1 + 1.0) / (denom[ids - lo] + tf))
-    return ids, w
+    return ids, _tf_weights(ids, payload, meta)
 
 
 def decode_postings_run(
@@ -189,7 +139,7 @@ def decode_postings_run(
     lasts: np.ndarray,
     gaps_list: list,
     payload_list: list,
-    meta=None,
+    meta,
 ) -> tuple[np.ndarray, np.ndarray]:
     """(doc ids, float64 weights) for a whole BLOCK RUN of one term in
     one shard, decoded in ONE vectorized pass.
@@ -201,9 +151,8 @@ def decode_postings_run(
     leading gap is stored as 0 (first_doc rides in metadata), so
     rewriting position start_i to first_doc_i - last_doc_{i-1} makes a
     single global cumsum produce exactly the per-block cumsums.
-    Weights use the same expression and operand order as
-    decode_postings_block (elementwise, so per-posting results are
-    bit-identical)."""
+    Weights are elementwise (_tf_weights), so per-posting results are
+    bit-identical to per-block decode."""
     nb = len(gaps_list)
     if nb == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
@@ -225,46 +174,51 @@ def decode_postings_run(
     g[value_starts[0]] = firsts[0]
     g[value_starts[1:]] = firsts[1:] - lasts[:-1]
     ids = np.cumsum(g)
-    if meta is None:
-        w = np.frombuffer(b"".join(payload_list), dtype=np.float64)
-    else:
-        from .weights import K1 as _K1  # B folded into the sidecar denom
-
-        idf_t, denom, lo = meta
-        tf = varbyte_decode(b"".join(payload_list)).astype(np.float64)
-        w = idf_t * (tf * (_K1 + 1.0) / (denom[ids - lo] + tf))
-    return ids, w
+    return ids, _tf_weights(ids, b"".join(payload_list), meta)
 
 
 _PAYLOAD_KEY = b"sg_payload"
 _PAYLOAD_TF = b"tfv1"
 
 
-def _write_shard_doclen(out_dir: str, lo: int, dl: np.ndarray) -> None:
-    """Per-shard doc-length sidecar for the TF-payload format: doc
-    lengths over the shard's [lo, lo+span) doc-id range, int32 (doc
-    lengths are token counts per turn — far below 2^31)."""
+def _write_shard_doclen(
+    out_dir: str, lo: int, dl: np.ndarray, nrm: np.ndarray | None
+) -> None:
+    """Per-shard doc sidecar for the TF-payload format: doc lengths over
+    the shard's [lo, lo+span) doc-id range, int32 (doc lengths are token
+    counts per turn — far below 2^31), plus the per-doc norm divisor
+    (float64) when the index was finalized with norm 1 or 2."""
     path = os.path.join(out_dir, "_doclen.npz")
     tmp = path + f".tmp{os.getpid()}"
+    arrays = {"lo": np.int64(lo), "dl": dl.astype(np.int32)}
+    if nrm is not None:
+        arrays["nrm"] = nrm
     with open(tmp, "wb") as f:
-        np.savez(f, lo=np.int64(lo), dl=dl.astype(np.int32))
+        np.savez(f, **arrays)
     os.replace(tmp, path)
 
 
 _DOCLEN_CACHE: dict = {}
 
 
-def load_shard_doclen(shard_dir: str) -> tuple[int, np.ndarray]:
-    """(lo, doc_len int32 array) for one shard dir, worker-cached by
-    mtime (Spark reuses Python workers across jobs — same staleness
-    rule as _sidecar_token)."""
+def load_shard_doclen(shard_dir: str) -> tuple[int, np.ndarray, np.ndarray | None]:
+    """(lo, doc_len int32 array, norm divisor or None) for one shard
+    dir, worker-cached by mtime (Spark reuses Python workers across
+    jobs — same staleness rule as _sidecar_token)."""
     path = os.path.join(shard_dir, "_doclen.npz")
-    st = os.stat(path)
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        raise FileNotFoundError(
+            f"{path} is missing: the TF-payload blocks beside it cannot be "
+            "scored without their doc-length sidecar. Re-encode the index "
+            "with encode_shards_from_postings."
+        ) from None
     key = (path, st.st_mtime_ns, st.st_size)
     hit = _DOCLEN_CACHE.get(key)
     if hit is None:
         with np.load(path) as z:
-            hit = (int(z["lo"]), z["dl"])
+            hit = (int(z["lo"]), z["dl"], z["nrm"] if "nrm" in z else None)
         if len(_DOCLEN_CACHE) > 256:  # bound worker-resident sidecars
             _DOCLEN_CACHE.clear()
         _DOCLEN_CACHE[key] = hit
@@ -287,104 +241,9 @@ def _blocks_arrow_schema():
             ("max_weight", pa.float64()),
             ("doc_gaps", pa.binary()),
             ("weights", pa.binary()),
-        ]
+        ],
+        metadata={_PAYLOAD_KEY: _PAYLOAD_TF},
     )
-
-
-def encode_shards(
-    spark,
-    index_root: str,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-) -> dict:
-    """Doc-shard block encode with ZERO posting movement through Spark.
-
-    Input: ``<index_root>/weights/partition_id=<p>/`` (finalize_sharded);
-    output: ``<index_root>/blocks/partition_id=<p>/blocks.parquet``.
-
-    Each task receives only a PATH (a one-row Arrow batch); the shard's
-    postings are read directly with pyarrow (C++ parquet reader), sorted
-    (term_id, doc_id) with one numpy lexsort — the shard is one bucket,
-    so this local sort replaces the old cluster-wide
-    repartition(term_id, bucket) shuffle — encoded vectorized, and the
-    block file is written back with pyarrow (tmp + atomic rename).
-    Posting bytes never cross the JVM↔Python socket in either direction
-    (measured: that Arrow row stream, not the encode kernel, dominated
-    the old block phase and did not scale with cores). Per-shard
-    manifest rows (blocks, bytes, wall) come back as the only task
-    output. Row groups are kept small so query-time term_id predicate
-    pushdown prunes at row-group granularity.
-    """
-    import glob
-
-    weights_root = os.path.join(index_root, "weights")
-    blocks_root = os.path.join(index_root, "blocks")
-    os.makedirs(blocks_root, exist_ok=True)
-    shard_dirs = sorted(glob.glob(os.path.join(weights_root, "partition_id=*")))
-    rows = [
-        (int(d.rsplit("=", 1)[1]), d) for d in shard_dirs
-    ]
-    fdf = spark.createDataFrame(rows, "partition_id int, path string").repartition(
-        max(1, len(rows))
-    )
-
-    def kernel(batches):
-        import time as _t
-
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            for pid, path in zip(pdf["partition_id"], pdf["path"]):
-                t0 = _t.time()
-                tbl = pq.read_table(
-                    path, columns=["term_id", "doc_id", "weight"], use_threads=False
-                )
-                t = tbl["term_id"].to_numpy().astype(np.int64, copy=False)
-                d = tbl["doc_id"].to_numpy().astype(np.int64, copy=False)
-                wgt = tbl["weight"].to_numpy().astype(np.float64, copy=False)
-                # finalize_sharded writes each shard pre-sorted; a file
-                # split/merge could break that, so verify (two vector
-                # compares) and lexsort only as the fallback
-                same_t = t[1:] == t[:-1]
-                is_sorted = bool(
-                    np.all(t[1:] >= t[:-1])
-                    and np.all(d[1:][same_t] > d[:-1][same_t])
-                ) if t.shape[0] > 1 else True
-                if not is_sorted:
-                    order = np.lexsort((d, t))
-                    t, d, wgt = t[order], d[order], wgt[order]
-                enc = _encode_sorted_run_arrow(t, int(pid), d, wgt, block_size)
-                out_dir = os.path.join(blocks_root, f"partition_id={int(pid)}")
-                os.makedirs(out_dir, exist_ok=True)
-                out_path = os.path.join(out_dir, "blocks.parquet")
-                tmp = out_path + f".tmp{os.getpid()}"
-                pq.write_table(enc, tmp, row_group_size=4096)
-                os.replace(tmp, out_path)
-                yield pd.DataFrame(
-                    {
-                        "partition_id": pd.Series([int(pid)], dtype="int32"),
-                        "n_blocks": pd.Series([enc.num_rows], dtype="int64"),
-                        "bytes": pd.Series(
-                            [os.path.getsize(out_path)], dtype="int64"
-                        ),
-                        "wall_sec": pd.Series([_t.time() - t0], dtype="float64"),
-                        "presorted": pd.Series(
-                            [1 if is_sorted else 0], dtype="int32"
-                        ),
-                    }
-                )
-
-    report = fdf.mapInPandas(
-        kernel,
-        "partition_id int, n_blocks long, bytes long, wall_sec double, "
-        "presorted int",
-    ).collect()
-    return {
-        "shards": len(report),
-        "blocks": int(sum(r["n_blocks"] for r in report)),
-        "bytes": int(sum(r["bytes"] for r in report)),
-        "presorted_shards": int(sum(r["presorted"] for r in report)),
-        "block_size": block_size,
-    }
 
 
 # per-worker memo for the small lookup tables the direct encoder needs
@@ -484,45 +343,40 @@ def load_query_sidecar_views(index_root: str):
     return hit
 
 
-def _bm25_weight_np(tf, dl, df, n_docs: float, avg: float):
-    """numpy BM25, op-for-op the Catalyst expression in weights.py
-    (same association order → bit-identical doubles)."""
-    from .weights import B, K1
-
-    idf = np.log((n_docs - df + 0.5) / (df + 0.5))
-    nlen = dl / avg
-    return idf * (tf * (K1 + 1.0) / (K1 * ((1.0 - B) + B * nlen) + tf))
-
-
 def encode_shards_from_postings(
     spark,
     index_root: str,
     block_size: int = DEFAULT_BLOCK_SIZE,
-    scheme: str = "BM25",
 ) -> dict:
     """Blocks straight from the tokenize output — the posting stream is
-    materialized ONCE in the whole pipeline.
+    materialized ONCE in the whole pipeline, and posting bytes never
+    cross the JVM↔Python socket.
 
     Requires manifest.finalize_lite (terms/, base/, stats.json). Each
-    task reads its shard's raw postings parquet with pyarrow, maps
-    term→(id, df) and conv→doc-id base through per-worker-cached
-    sidecar tables (C-level hash joins on pandas Index — the dictionary
-    is ~MBs, the conv base is conversation-level), recomputes doc_len
-    over RETAINED terms (exactly build_index's pruning semantics; equal
-    to the stored length when nothing is pruned), computes the scheme
-    weight vectorized (bit-identical to weights.set_feature_values),
-    sorts (term_id, doc_id) and writes the shard's block file. Replaces
-    the 2× posting materialization (weights artifact) of the
-    finalize_sharded path — at 14.3M turns that artifact write was the
-    single largest finalize cost at every parallelism level.
+    task receives only a shard PATH, reads the shard's raw postings
+    parquet with pyarrow, maps term→(id, df) and conv→doc-id base
+    through per-worker-cached sidecar tables (C-level hash joins — the
+    dictionary is ~MBs, the conv base is conversation-level), recomputes
+    doc_len over RETAINED terms (exactly build_index's pruning
+    semantics; equal to the stored length when nothing is pruned),
+    computes BM25 vectorized (bit-identical to
+    weights.set_feature_values), divides by the per-doc L1/L2 norm when
+    stats.json records one (the same ``denom > 0`` rule), sorts
+    (term_id, doc_id) and writes the shard's block file plus its
+    ``_doclen.npz`` sidecar.
     """
     import glob
+    import json
 
-    if scheme.upper() != "BM25":
+    with open(os.path.join(index_root, "stats.json")) as fh:
+        stats = json.load(fh)
+    if stats.get("scheme", "BM25").upper() != "BM25":
         raise ValueError(
-            "direct path supports per-posting schemes; use "
-            "finalize_sharded + encode_shards for others"
+            f"block index supports BM25 only; {index_root} was finalized "
+            f"with scheme {stats['scheme']!r} — query it through the M1 "
+            "DataFrame path (query.dataframe_bm25.topk_search)"
         )
+    norm = int(stats.get("norm", 0))
     post_root = os.path.join(index_root, "postings")
     blocks_root = os.path.join(index_root, "blocks")
     os.makedirs(blocks_root, exist_ok=True)
@@ -619,6 +473,21 @@ def encode_shards_from_postings(
                     w = term_idf[pos_np] * (
                         tf * (_K1 + 1.0) / (denom_acc[rel] + tf)
                     )
+                    nrm = None
+                    if norm:
+                        # per-doc L1/L2 norm over the retained postings,
+                        # one bincount; a zero norm divides by 1.0 (==
+                        # set_feature_values' otherwise(weight), exactly)
+                        if norm == 1:
+                            nrm = np.bincount(
+                                rel, weights=np.abs(w), minlength=span
+                            )
+                        else:
+                            nrm = np.sqrt(
+                                np.bincount(rel, weights=w * w, minlength=span)
+                            )
+                        nrm[~(nrm > 0)] = 1.0
+                        w = w / nrm[rel]
                 t_map = _t.time()
                 if tid is not None and tid.size:
                     # (term_id, doc) is unique per shard, so the composite
@@ -636,7 +505,7 @@ def encode_shards_from_postings(
                     # tf + idf sidecar + the doclen sidecar below
                     enc = _encode_sorted_run_arrow(
                         tid[order], int(pid), doc[order], w[order],
-                        block_size, tf=tf_i[order],
+                        block_size, tf_i[order],
                     )
                 elif tid is not None:
                     t_sort = _t.time()
@@ -658,7 +527,7 @@ def encode_shards_from_postings(
                 # renames a reader could pair new doc lengths with old
                 # blocks. Re-encode into a fresh root and swap the root.
                 if enc.num_rows:
-                    _write_shard_doclen(out_dir, lo, dl_acc)
+                    _write_shard_doclen(out_dir, lo, dl_acc, nrm)
                 os.replace(tmp, out_path)
                 t_write = _t.time()
                 yield pd.DataFrame(
@@ -699,56 +568,26 @@ def encode_shards_from_postings(
     }
 
 
-def load_sharded_blocks(spark, index_root: str):
-    """blocks DataFrame (BLOCK_SCHEMA + partition_id) from encode_shards
-    output; bucket == partition_id == doc shard."""
-    return spark.read.parquet(os.path.join(index_root, "blocks"))
-
-
-# ---------------------------------------------------------------- build
-
-@dataclass
-class BlockIndex:
-    blocks: DataFrame   # BLOCK_SCHEMA
-    docs: DataFrame     # doc_id, conv_id, turn_idx, doc_len
-    terms: DataFrame    # term, term_id, df, ttf
-    n_docs: int
-    avg_doc_len: float
-    ngrams: int
-    block_size: int
-    bucket_bits: int
-
-
-def _varbyte_nbytes(v: np.ndarray) -> np.ndarray:
-    nbytes = np.ones(v.shape, dtype=np.int64)
-    tmp = v >> np.uint64(7)
-    while tmp.any():
-        nbytes += (tmp > 0).astype(np.int64)
-        tmp >>= np.uint64(7)
-    return nbytes
-
+# ---------------------------------------------------------------- encode
 
 def _block_layout(
     term_id: np.ndarray,
-    bucket: np.ndarray,
     doc_id: np.ndarray,
     weight: np.ndarray,
     block_size: int,
 ):
-    """Shared block-splitting + varbyte pass for the two encoders.
+    """Block-splitting + varbyte pass over one shard's sorted run.
 
-    Input arrays are sorted by (term_id, bucket, doc_id) and contain only
-    COMPLETE (term, bucket) groups. Returns (starts, ends, block_seq,
-    max_w, gap_bytes ndarray, per-posting byte offsets) — blocks tile the
-    run contiguously (ends[i] == starts[i+1]), so both the gap buffer and
-    the weight buffer slice by offsets with no per-block copies.
+    Input arrays are sorted by (term_id, doc_id). Returns (starts, ends,
+    block_seq, max_w, gap_bytes ndarray, per-posting byte offsets) —
+    blocks tile the run contiguously (ends[i] == starts[i+1]), so both
+    the gap buffer and the payload buffer slice by offsets with no
+    per-block copies.
     """
     n = doc_id.shape[0]
     new_group = np.empty(n, dtype=bool)
     new_group[0] = True
-    np.logical_or(
-        term_id[1:] != term_id[:-1], bucket[1:] != bucket[:-1], out=new_group[1:]
-    )
+    np.not_equal(term_id[1:], term_id[:-1], out=new_group[1:])
     # in-place passes (the shard kernels run many of these concurrently;
     # every avoided temporary is real memory-bus headroom)
     pos_in_group = np.arange(n, dtype=np.int64)
@@ -781,74 +620,24 @@ def _block_layout(
     return starts, ends, block_seq, max_w, buf, offs
 
 
-def _encode_sorted_run(
-    term_id: np.ndarray,
-    bucket: np.ndarray,
-    doc_id: np.ndarray,
-    weight: np.ndarray,
-    block_size: int,
-) -> pd.DataFrame:
-    """Vectorized multi-group multi-block encoder → pandas (the Arrow-
-    socket streaming path of build_block_index; the on-disk shard paths
-    use _encode_sorted_run_arrow, which never materializes Python bytes).
-    """
-    n = doc_id.shape[0]
-    if n == 0:
-        return pd.DataFrame(
-            {
-                "term_id": pd.Series([], dtype="int64"),
-                "bucket": pd.Series([], dtype="int32"),
-                "block_seq": pd.Series([], dtype="int32"),
-                "n": pd.Series([], dtype="int32"),
-                "first_doc": pd.Series([], dtype="int64"),
-                "last_doc": pd.Series([], dtype="int64"),
-                "max_weight": pd.Series([], dtype="float64"),
-                "doc_gaps": pd.Series([], dtype="object"),
-                "weights": pd.Series([], dtype="object"),
-            }
-        )
-    starts, ends, block_seq, max_w, buf_arr, offs = _block_layout(
-        term_id, bucket, doc_id, weight, block_size
-    )
-    buf = buf_arr.tobytes()
-    wbuf = weight.tobytes()
-    return pd.DataFrame(
-        {
-            "term_id": term_id[starts],
-            "bucket": bucket[starts].astype(np.int32),
-            "block_seq": block_seq,
-            "n": (ends - starts).astype(np.int32),
-            "first_doc": doc_id[starts],
-            "last_doc": doc_id[ends - 1],
-            "max_weight": max_w,
-            "doc_gaps": [buf[offs[s] : offs[e]] for s, e in zip(starts, ends)],
-            "weights": [wbuf[s * 8 : e * 8] for s, e in zip(starts, ends)],
-        }
-    )
-
-
 def _encode_sorted_run_arrow(
     term_id: np.ndarray,
     bucket_id: int,
     doc_id: np.ndarray,
     weight: np.ndarray,
     block_size: int,
-    tf: np.ndarray | None = None,
+    tf: np.ndarray,
 ):
-    """Arrow-native encoder for the shard paths: the two binary columns
-    are built with ``BinaryArray.from_buffers`` over the single varbyte /
-    payload buffers (blocks tile the run contiguously), so NO per-block
-    Python bytes objects and no pandas→Arrow conversion exist anywhere —
+    """Arrow-native block encoder for one shard's run sorted by
+    (term_id, doc_id): the two binary columns are built with
+    ``BinaryArray.from_buffers`` over the single varbyte gap / TF
+    buffers (blocks tile the run contiguously), so NO per-block Python
+    bytes objects and no pandas→Arrow conversion exist anywhere —
     measured, that conversion was a flat (non-scaling) term of the old
-    encode kernel. Returns a pyarrow Table in BLOCK_SCHEMA order.
-
-    ``tf=None``: the payload column carries raw float64 weights.
-    ``tf`` given: the TF-payload format — the column carries varbyte
-    term frequencies (~1 byte vs 8) and the table is stamped with the
-    ``sg_payload=tfv1`` schema metadata; ``weight`` is still consumed
-    for the exact per-block max_weight pruning bound. Requires the
-    per-shard doclen sidecar (decode_postings_block reconstructs the
-    identical doubles from tf + sidecars).
+    encode kernel. Returns a pyarrow Table stamped
+    ``sg_payload=tfv1``; ``weight`` feeds only the exact per-block
+    max_weight pruning bound (decode rebuilds the identical doubles
+    from ``tf`` + sidecars).
     """
     import pyarrow as pa
 
@@ -856,16 +645,23 @@ def _encode_sorted_run_arrow(
     n = doc_id.shape[0]
     if n == 0:
         return schema.empty_table()
-    bucket = np.full(n, bucket_id, dtype=np.int64)
     starts, ends, block_seq, max_w, buf_arr, offs = _block_layout(
-        term_id, bucket, doc_id, weight, block_size
+        term_id, doc_id, weight, block_size
     )
     nb = len(starts)
     total_gap_bytes = int(offs[-1])
-    if total_gap_bytes >= (1 << 31) or n * 8 >= (1 << 31):
+    tf_buf, tf_nbytes = _varbyte_encode_arr(tf)
+    tf_offs_all = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(tf_nbytes, out=tf_offs_all[1:])
+    if max(total_gap_bytes, int(tf_offs_all[-1])) > np.iinfo(np.int32).max:
+        # BinaryArray offsets are int32; narrowing past 2^31 would
+        # silently wrap into corrupt offsets. ~2e9 postings per shard
+        # means the shard (build partition) is mis-sized.
         raise ValueError(
-            f"shard posting payload exceeds 2 GiB ({total_gap_bytes} gap "
-            "bytes); split the shard (smaller doc-range buckets)"
+            f"shard posting payload exceeds int32 BinaryArray offsets "
+            f"({total_gap_bytes} gap bytes, {int(tf_offs_all[-1])} tf "
+            "bytes); build with more partitions so fewer postings land "
+            "per shard"
         )
     gap_offs = np.empty(nb + 1, dtype=np.int32)
     gap_offs[:-1] = offs[starts]
@@ -873,39 +669,12 @@ def _encode_sorted_run_arrow(
     gaps_col = pa.BinaryArray.from_buffers(
         pa.binary(), nb, [None, pa.py_buffer(gap_offs), pa.py_buffer(buf_arr)]
     )
-    if tf is not None:
-        tf_buf, tf_nbytes = _varbyte_encode_arr(tf)
-        tf_offs_all = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(tf_nbytes, out=tf_offs_all[1:])
-        if tf_offs_all[-1] > np.iinfo(np.int32).max:
-            # BinaryArray offsets are int32; narrowing past 2^31 would
-            # silently wrap into corrupt offsets. ~2e9 postings per
-            # shard means the shard width (bucket_bits) is mis-sized.
-            raise ValueError(
-                f"TF payload for shard exceeds int32 BinaryArray offsets "
-                f"({int(tf_offs_all[-1])} bytes); reduce shard width "
-                f"(bucket_bits) so fewer postings land per shard"
-            )
-        w_offs = np.empty(nb + 1, dtype=np.int32)
-        w_offs[:-1] = tf_offs_all[starts]
-        w_offs[-1] = int(tf_offs_all[-1])
-        weights_col = pa.BinaryArray.from_buffers(
-            pa.binary(), nb, [None, pa.py_buffer(w_offs), pa.py_buffer(tf_buf)]
-        )
-        schema = schema.with_metadata({_PAYLOAD_KEY: _PAYLOAD_TF})
-    else:
-        if n * 8 > np.iinfo(np.int32).max:
-            raise ValueError(
-                f"float64 payload for shard exceeds int32 BinaryArray "
-                f"offsets ({n} postings); reduce shard width (bucket_bits)"
-            )
-        w_offs = np.empty(nb + 1, dtype=np.int32)
-        w_offs[:-1] = starts * 8
-        w_offs[-1] = n * 8
-        w_contig = np.ascontiguousarray(weight, dtype=np.float64)
-        weights_col = pa.BinaryArray.from_buffers(
-            pa.binary(), nb, [None, pa.py_buffer(w_offs), pa.py_buffer(w_contig)]
-        )
+    w_offs = np.empty(nb + 1, dtype=np.int32)
+    w_offs[:-1] = tf_offs_all[starts]
+    w_offs[-1] = int(tf_offs_all[-1])
+    weights_col = pa.BinaryArray.from_buffers(
+        pa.binary(), nb, [None, pa.py_buffer(w_offs), pa.py_buffer(tf_buf)]
+    )
     return pa.Table.from_arrays(
         [
             pa.array(term_id[starts], type=pa.int64()),
@@ -919,115 +688,4 @@ def _encode_sorted_run_arrow(
             weights_col,
         ],
         schema=schema,
-    )
-
-
-def _make_stream_block_builder(block_size: int):
-    """mapInPandas kernel: stitches Arrow batches, holds back the
-    trailing (possibly incomplete) group, encodes complete groups
-    vectorized. Requires input sorted by (term_id, bucket, doc_id)
-    within the partition and groups never split across partitions."""
-
-    def build(batches):
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                carry = None
-                continue
-            t = pdf["term_id"].to_numpy()
-            b = pdf["bucket"].to_numpy()
-            # rows of the last (term, bucket) group form a contiguous
-            # suffix (sorted input) — hold them back for the next batch
-            mask = (t == t[-1]) & (b == b[-1])
-            rev = mask[::-1]
-            tail_len = len(pdf) if mask.all() else int(rev.argmin())
-            cut = len(pdf) - tail_len
-            head, carry = pdf.iloc[:cut], pdf.iloc[cut:]
-            if cut:
-                yield _encode_sorted_run(
-                    head["term_id"].to_numpy(np.int64),
-                    head["bucket"].to_numpy(np.int64),
-                    head["doc_id"].to_numpy(np.int64),
-                    head["weight"].to_numpy(np.float64),
-                    block_size,
-                )
-        if carry is not None and len(carry):
-            yield _encode_sorted_run(
-                carry["term_id"].to_numpy(np.int64),
-                carry["bucket"].to_numpy(np.int64),
-                carry["doc_id"].to_numpy(np.int64),
-                carry["weight"].to_numpy(np.float64),
-                block_size,
-            )
-
-    return build
-
-
-def build_block_index(
-    index,
-    docs_with_ids: DataFrame,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-    bucket_bits: int | None = None,
-    doc_base: DataFrame | None = None,
-) -> BlockIndex:
-    """InvertedIndex (M1) + doc-id map → compressed block index.
-
-    One shuffle: repartition/groupBy on (term_id, bucket). The doc-range
-    bucket salt bounds any single group to <= 2^bucket_bits postings,
-    independent of term hotness. ``bucket_bits=None`` picks a corpus-
-    adaptive width (choose_bucket_bits).
-
-    Doc ids attach to the posting stream via the conversation-level base
-    map (dictionary.conv_doc_base) — a BROADCAST hash join plus an
-    integer add, not a turn-level sort-merge shuffle of every posting on
-    the (conv_id, turn_idx) string key. ``docs_with_ids`` must use the
-    same base (assign_doc_ids does); pass ``doc_base`` to reuse one.
-    """
-    if bucket_bits is None:
-        bucket_bits = choose_bucket_bits(index.n_docs)
-    if doc_base is None:
-        from .dictionary import conv_doc_base
-
-        doc_base = conv_doc_base(index.doc_lens)
-    w = (
-        index.weights.join(F.broadcast(doc_base), "conv_id")
-        .withColumn(
-            "doc_id", (F.col("base") + F.col("turn_idx")).cast("long")
-        )
-        .withColumn(
-            "bucket", F.shiftright(F.col("doc_id"), bucket_bits).cast("int")
-        )
-        .select("term_id", "bucket", "doc_id", "weight")
-    )
-    # one hash shuffle colocates each (term, bucket) group; the in-
-    # partition sort makes groups contiguous so the streaming kernel can
-    # encode whole Arrow batches vectorized (no per-group pandas frames).
-    # The partition count is EXPLICIT: AQE's size-based coalescing would
-    # squeeze this exchange to ~64MB partitions, capping the Python
-    # encode stage's parallelism far below the executor count (measured:
-    # flat encode time 4 -> 16 cores); the encode kernel wants many
-    # smaller Arrow streams, not few fat ones.
-    spark = w.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    if index.n_docs >= 1_000_000:
-        # the over-partitioning boost was measured on multi-million-doc
-        # corpora (keeps the Python encode stage fed as cores scale);
-        # on small corpora the extra tasks are pure fixed cost
-        n_parts = max(n_parts, spark.sparkContext.defaultParallelism * 4)
-    blocks = (
-        w.repartition(n_parts, "term_id", "bucket")
-        .sortWithinPartitions("term_id", "bucket", "doc_id")
-        .mapInPandas(_make_stream_block_builder(block_size), schema=BLOCK_SCHEMA)
-    )
-    return BlockIndex(
-        blocks=blocks,
-        docs=docs_with_ids,
-        terms=index.terms,
-        n_docs=index.n_docs,
-        avg_doc_len=index.avg_doc_len,
-        ngrams=index.ngrams,
-        block_size=block_size,
-        bucket_bits=bucket_bits,
     )

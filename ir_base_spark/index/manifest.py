@@ -23,7 +23,8 @@ raw turn count (conv_partition_map; persisted as conv_parts/) —
 reproducible under restart, independent of input row order, a
 conversation never splits across partitions, and every partition owns a
 CONTIGUOUS doc-id range, so the doc shard doubles as the posting-block
-bucket (zero posting-level shuffle downstream, blocks.encode_shards).
+bucket (zero posting-level shuffle downstream,
+blocks.encode_shards_from_postings).
 At Iceberg scale, stage 0 is replaced by the table's own
 partitioning/manifest metadata (enumerate data files per partition
 range instead of rewriting); the per-partition commit protocol is
@@ -46,6 +47,7 @@ from dataclasses import asdict, dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .blocks import DEFAULT_BLOCK_SIZE, encode_shards_from_postings
 from .tokenize import tokenize_turns
 
 MANIFEST_VERSION = 1
@@ -185,7 +187,7 @@ def conv_partition_map(
     doc ids ascend in (conv_id, turn_idx), each partition owns a
     CONTIGUOUS doc-id range: the doc shard IS the posting-block bucket,
     which is what lets the block build run with zero posting-level
-    shuffle (blocks.encode_shards).
+    shuffle (blocks.encode_shards_from_postings).
     """
     from .dictionary import two_phase_cumsum
 
@@ -612,35 +614,16 @@ def finalize_lite(
     min_df: int = 1,
     max_df: int | None = None,
     write_docs: bool = True,
+    norm: int = 0,
 ):
-    """Metadata-only finalize for the direct postings→blocks path
-    (blocks.encode_shards_from_postings): writes terms/, docs/, base/
-    and stats.json but NO weights artifact — the posting stream is
-    materialized exactly once (the tokenize output); weights are
-    computed vectorized inside the shard encoder from (tf, doc_len,
-    df, N, avgdl). Supports per-posting schemes (norm=0); per-doc
-    norms use finalize_sharded + encode_shards instead.
-
-    Returns (InvertedIndex, base DataFrame).
-    """
-    return _finalize_artifacts(
-        spark, index_root, scheme=scheme, norm=0, min_df=min_df,
-        max_df=max_df, write_docs=write_docs,
-    )
-
-
-def _finalize_artifacts(
-    spark: SparkSession,
-    index_root: str,
-    scheme: str,
-    norm: int,
-    min_df: int = 1,
-    max_df: int | None = None,
-    write_docs: bool = True,
-):
-    """Fused finalize core shared by finalize_lite / finalize_sharded:
-    computes the dictionary, doc lengths, conversation bases and corpus
-    constants and writes terms/ base/ docs/ + stats.json.
+    """Metadata-only finalize for the block index
+    (blocks.encode_shards_from_postings): computes the dictionary, doc
+    lengths, conversation bases and corpus constants and writes terms/
+    base/ docs/ + stats.json (which records ``scheme`` and ``norm`` for
+    the encoder). No weights artifact — the posting stream is
+    materialized exactly once (the tokenize output); weights, and the
+    per-doc L1/L2 norm, are computed vectorized inside the shard
+    encoder.
 
     Scaling shape (this phase was the binding flat term of the pipeline
     at small core counts — fixed driver/job barriers, not data volume):
@@ -785,6 +768,27 @@ def _finalize_artifacts(
     return idx, box["base"]
 
 
+def build_single_shard_index(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    index_root: str,
+    analyzer: str = "reference",
+    block_size: int = DEFAULT_BLOCK_SIZE,
+) -> dict:
+    """Throwaway block index for an in-query build: tokenize_turns → one
+    ``postings/partition_id=0`` shard → finalize_lite(write_docs=False)
+    → encode_shards_from_postings. ``index_root`` must be fresh (the
+    postings write refuses an existing shard); nothing here resumes —
+    resumable_build's split, manifest and snapshot machinery buy nothing
+    for an index that is built once and dropped. Returns the encode
+    report."""
+    tokenize_turns(transcripts, analyzer=analyzer).write.parquet(
+        os.path.join(index_root, "postings", "partition_id=0")
+    )
+    finalize_lite(spark, index_root, write_docs=False)
+    return encode_shards_from_postings(spark, index_root, block_size=block_size)
+
+
 def _parallel_jobs(*thunks) -> None:
     """Run independent Spark actions concurrently from driver threads
     (supported: one SparkSession, many jobs; the scheduler interleaves
@@ -807,73 +811,6 @@ def _parallel_jobs(*thunks) -> None:
         th.join()
     if errors:
         raise errors[0]
-
-
-def finalize_sharded(
-    spark: SparkSession,
-    index_root: str,
-    scheme: str = "BM25",
-    norm: int = 0,
-    min_df: int = 1,
-    max_df: int | None = None,
-):
-    """finalize_index + persisted shard-aligned artifacts.
-
-    Writes under ``index_root``:
-      terms/    (term, term_id, df, ttf)
-      docs/     (conv_id, turn_idx, doc_len, doc_id)
-      weights/partition_id=<p>/  (term_id, doc_id, weight)
-
-    The weights write is SHUFFLE-FREE: postings are read from their
-    doc-shard partition files, every derivation (dictionary join, doc-id
-    base, shard id) is a broadcast hash join or column arithmetic, and
-    partitionBy(partition_id) just routes each task's rows back to its
-    own shard directory. This is the doc-sharded build phase of SURVEY
-    §7.1 taken to its limit: the ONLY turn-level shuffle in the whole
-    index pipeline is gone; what remains keyed-by-term is the (small,
-    pre-aggregated) dictionary statistics aggregation.
-
-    Returns (InvertedIndex, conv-base DataFrame).
-    """
-    # terms/ base/ docs/ + stats.json via the fused concurrent-chain
-    # core (base/ is the conversation sidecar the query path labels doc
-    # ids from in-kernel); only the weights artifact is sharded-specific
-    idx, base = _finalize_artifacts(
-        spark, index_root, scheme=scheme, norm=norm,
-        min_df=min_df, max_df=max_df,
-    )
-    cmap = spark.read.parquet(os.path.join(index_root, "conv_parts"))
-
-    w = (
-        idx.weights.join(F.broadcast(base), "conv_id")
-        .join(F.broadcast(cmap), "conv_id")
-        .select(
-            "partition_id",
-            "term_id",
-            (F.col("base") + F.col("turn_idx")).cast("long").alias("doc_id"),
-            "weight",
-        )
-    )
-    # partition-LOCAL Tungsten sort (no shuffle): the block encoder wants
-    # (term_id, doc_id) order, and sorting here (JVM, scales with tasks)
-    # beats a numpy lexsort in every encode kernel (memory-bus-contended
-    # when many kernels run); sorted term_id also RLEs well in parquet.
-    # One READ TASK per postings file for this job: the default 128MB
-    # split would break a shard across two tasks → two sorted-but-
-    # overlapping weights files → the encoder's presort fast path can't
-    # engage. (At cluster scale: write the weights as one file per
-    # shard via the table format's file-size target instead.)
-    w = w.sortWithinPartitions("partition_id", "term_id", "doc_id")
-    conf = spark.conf
-    prev = conf.get("spark.sql.files.maxPartitionBytes")
-    conf.set("spark.sql.files.maxPartitionBytes", str(4 << 30))
-    try:
-        w.write.partitionBy("partition_id").mode("overwrite").parquet(
-            os.path.join(index_root, "weights")
-        )
-    finally:
-        conf.set("spark.sql.files.maxPartitionBytes", prev)
-    return idx, base
 
 
 def finalize_index(

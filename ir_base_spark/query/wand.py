@@ -1,20 +1,19 @@
-"""Block-max WAND top-k over the compressed block index.
+"""Block-max WAND top-k over the doc-sharded on-disk block index.
 
-The scale query path (SURVEY §7.1 step 6): document-space-sharded WAND.
-Matched blocks shuffle ONCE per doc-range bucket (deduplicated on the
-query set's distinct term_ids — block bytes are never duplicated per
-query); each bucket kernel then runs EVERY query over its blocks with a
-shared per-bucket block-decode cache and an independent bounded heap per
-query. A tiny global merge (<= k rows per query per bucket) takes the
-final top-k. Candidate generation, pruning, and scoring never leave the
-executor.
+The scale query path (SURVEY §7.1 step 6): document-space-sharded
+retrieval over the shard files ``blocks.encode_shards_from_postings``
+writes. Each task reads only the matched terms' blocks of its shards
+(no block bytes shuffle) and runs EVERY query of the batch over them
+with a shared per-shard block-decode cache and an independent bounded
+top-k per query. A tiny global merge (<= k rows per query per shard)
+takes the final top-k. Candidate generation, pruning, and scoring never
+leave the executor.
 
 Correctness contract (rank identity with oracle + M1 path):
 - full evaluation accumulates qw·w in ascending term_id order (canonical
   float order, SURVEY §7.3);
-- the bounded heap orders by (score, -doc_id): first-out is lowest score,
-  then largest doc_id — so ties keep the smallest (conv_id, turn_idx),
-  the MyPriorityQueue contract
+- top-k orders by (score desc, doc_id asc) — so ties keep the smallest
+  (conv_id, turn_idx), the MyPriorityQueue contract
   (/root/reference/src/structures/MyPriorityQueue.java:40-52);
 - upper bounds are clamped at 0 (BM25 IDF goes negative when
   DF > N/2, and a negative addend would break WAND's prefix-sum
@@ -22,206 +21,19 @@ Correctness contract (rank identity with oracle + M1 path):
 - prune comparisons are tie-conservative (skip only when strictly below
   the threshold) so score-equal docs that win by doc-id tie-break are
   never pruned.
+
+The per-posting cursor DAAT kernel these scorers replaced lives on in
+``tests/wand_oracle.py`` as the fuzz-test reference.
 """
 
 from __future__ import annotations
-
-import heapq
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..index.blocks import (
-    BlockIndex,
-    decode_postings_block,
-    decode_postings_run,
-)
-
-_INF = np.iinfo(np.int64).max
-
-
-class _ListIter:
-    """Posting-list cursor over one term's blocks within one bucket.
-
-    Blocks decode lazily: ``next_geq`` skips whole blocks on
-    (first_doc, last_doc) metadata before touching payload bytes.
-    """
-
-    __slots__ = (
-        "term_id", "qw", "firsts", "lasts", "maxws", "gaps", "wbytes",
-        "meta", "bi", "ids", "ws", "pos", "cur", "ub", "cache",
-    )
-
-    def __init__(self, term_id, qw, firsts, lasts, maxws, gaps, wbytes,
-                 meta=None, cache=None):
-        self.meta = meta
-        self.term_id = term_id
-        self.qw = qw
-        self.cache = cache
-        self.firsts = firsts
-        self.lasts = lasts
-        self.maxws = maxws
-        self.gaps = gaps
-        self.wbytes = wbytes
-        self.bi = 0
-        self.ids = None
-        self.ws = None
-        self.pos = 0
-        # term-level upper bound within this bucket, clamped at 0
-        self.ub = max(0.0, qw * max(maxws))
-        self._open_block()
-
-    def _open_block(self):
-        if self.bi >= len(self.firsts):
-            self.cur = _INF
-            return
-        if self.cache is not None:
-            key = (self.term_id, self.bi)
-            hit = self.cache.get(key)
-            if hit is None:
-                hit = decode_postings_block(
-                    self.firsts[self.bi], self.gaps[self.bi],
-                    self.wbytes[self.bi], self.meta,
-                )
-                self.cache[key] = hit
-            self.ids, self.ws = hit
-        else:
-            self.ids, self.ws = decode_postings_block(
-                self.firsts[self.bi], self.gaps[self.bi],
-                self.wbytes[self.bi], self.meta,
-            )
-        self.pos = 0
-        self.cur = int(self.ids[0])
-
-    def block_max_geq(self, target: int) -> float:
-        """Shallow move: per-block max for the block that would contain
-        ``target`` (no decode). Clamped at 0."""
-        bi = self.bi
-        while bi < len(self.lasts) and self.lasts[bi] < target:
-            bi += 1
-        if bi >= len(self.lasts):
-            return 0.0
-        return max(0.0, self.qw * self.maxws[bi])
-
-    def block_last(self, target: int) -> int:
-        """last_doc of the block that would contain target (for BMW
-        skip-to-boundary moves)."""
-        bi = self.bi
-        while bi < len(self.lasts) and self.lasts[bi] < target:
-            bi += 1
-        if bi >= len(self.lasts):
-            return _INF
-        return int(self.lasts[bi])
-
-    def next_geq(self, target: int):
-        if self.cur >= target:
-            return
-        while self.bi < len(self.lasts) and self.lasts[self.bi] < target:
-            self.bi += 1
-            self.ids = None
-        if self.bi >= len(self.lasts):
-            self.cur = _INF
-            return
-        if self.ids is None:
-            self._open_block()
-        self.pos = int(np.searchsorted(self.ids, target, side="left"))
-        if self.pos >= len(self.ids):
-            # target fell in a gap right after this block's last id
-            self.bi += 1
-            self.ids = None
-            if self.bi >= len(self.lasts):
-                self.cur = _INF
-                return
-            self._open_block()
-        else:
-            self.cur = int(self.ids[self.pos])
-
-    def advance(self):
-        self.pos += 1
-        if self.pos < len(self.ids):
-            self.cur = int(self.ids[self.pos])
-        else:
-            self.bi += 1
-            self.ids = None
-            if self.bi >= len(self.lasts):
-                self.cur = _INF
-            else:
-                self._open_block()
-
-    def weight_at_cur(self) -> float:
-        return float(self.ws[self.pos])
-
-
-def _wand_bucket(lists: list[_ListIter], k: int) -> list[tuple[int, float]]:
-    """Block-max WAND over one bucket; returns [(doc_id, score)] top-k."""
-    heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
-    by_tid = sorted(lists, key=lambda x: x.term_id)
-
-    while True:
-        live = [x for x in by_tid if x.cur != _INF]
-        if not live:
-            break
-        live.sort(key=lambda x: x.cur)
-        full = len(heap) >= k
-        # pivot selection on clamped term UBs; tie-conservative (>=):
-        # a doc scoring exactly theta can still enter by doc-id tie-break
-        acc = 0.0
-        pivot = -1
-        for i, L in enumerate(live):
-            acc += L.ub
-            if not full or acc >= heap[0][0]:
-                pivot = i
-                break
-        if pivot == -1:
-            break
-        pivot_doc = live[pivot].cur
-        if live[0].cur == pivot_doc:
-            # edge = last list whose cursor sits on pivot_doc — lists past
-            # the pivot can also hold pivot_doc and contribute to it, so
-            # both the bound and the skip must cover them
-            edge = pivot
-            while edge + 1 < len(live) and live[edge + 1].cur == pivot_doc:
-                edge += 1
-            # block-max validation (shallow, no decode)
-            if full:
-                bm = 0.0
-                for L in live[: edge + 1]:
-                    bm += L.block_max_geq(pivot_doc)
-                if bm < heap[0][0]:
-                    # BMW skip: past the nearest block boundary, but never
-                    # past the first cursor beyond the edge — docs in
-                    # (pivot_doc, boundary] may score from later lists too
-                    boundary = min(L.block_last(pivot_doc) for L in live[: edge + 1])
-                    target = boundary + 1 if boundary != _INF else _INF
-                    if edge + 1 < len(live):
-                        target = min(target, live[edge + 1].cur)
-                    if target <= pivot_doc:
-                        target = pivot_doc + 1
-                    for L in live[: edge + 1]:
-                        L.next_geq(target)
-                    continue
-            # full evaluation in ascending term_id order
-            score = 0.0
-            for L in by_tid:
-                if L.cur == pivot_doc:
-                    score += L.qw * L.weight_at_cur()
-            item = (score, -pivot_doc)
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
-            for L in by_tid:
-                if L.cur == pivot_doc:
-                    L.advance()
-        else:
-            # advance all lists before the pivot up to pivot_doc
-            for L in live[:pivot]:
-                L.next_geq(pivot_doc)
-    out = [(-nd, s) for s, nd in heap]
-    out.sort(key=lambda t: (-t[1], t[0]))
-    return out
+from ..index.blocks import decode_postings_block, decode_postings_run
 
 
 def _bmw_query(
@@ -232,11 +44,11 @@ def _bmw_query(
     """Exact top-k for ONE query via VECTORIZED block-max WAND.
 
     ``lists`` = [(term_id, qw, firsts, lasts, maxws, gaps, wbytes,
-    meta, ub)] in ascending term_id. Replaces the per-posting cursor
-    kernel (`_wand_bucket`, retained as the fuzz-tested reference
-    implementation under ``algo="cursor"``) with a window-at-a-time
-    numpy formulation that keeps BOTH of block-max WAND's pruning
-    levers while doing O(#blocks), not O(#postings), Python work:
+    meta, ub)] in ascending term_id. A window-at-a-time numpy
+    formulation of the per-posting cursor kernel (kept as the fuzz
+    reference in tests/wand_oracle.py) that keeps BOTH of block-max
+    WAND's pruning levers while doing O(#blocks), not O(#postings),
+    Python work:
 
     - essential-list selection (MaxScore): the non-essential prefix of
       UB-sorted lists whose clamped-UB prefix sum is <= θ contributes
@@ -249,9 +61,8 @@ def _bmw_query(
 
     Windows advance in doc order, candidates are scored exactly with
     one searchsorted gather per term in ascending term_id order (the
-    canonical float accumulation order shared by M1/TAAT/MaxScore/
-    cursor), and blocks decode lazily through the shared per-bucket
-    ``cache`` keyed (term_id, block_idx) so a batch of queries decodes
+    canonical float accumulation order shared by M1/TAAT/MaxScore), and
+    blocks decode lazily through the shared per-shard ``cache`` keyed (term_id, block_idx) so a batch of queries decodes
     each block at most once.
     """
     nt = len(lists)
@@ -359,7 +170,7 @@ def _bmw_bucket(
 ) -> None:
     """Vectorized block-max WAND batch scorer over one bucket — the
     default selective path (algo="wand"). Rank-identical to the cursor
-    reference kernel, TAAT, MaxScore and M1 (same accumulation order,
+    reference kernel (tests/wand_oracle.py), TAAT, MaxScore and M1 (same accumulation order,
     same (score desc, doc asc) tie-break, tie-conservative pruning);
     shares one (term_id, block) decode cache across the whole batch."""
     cache: dict = {}
@@ -574,20 +385,30 @@ def _maxscore_bucket(
             out["k"].append(k)
 
 
+_SCORERS = {
+    "wand": _bmw_bucket,
+    "taat": _taat_bucket,
+    "maxscore": _maxscore_bucket,
+}
+
+
 def _make_bucket_kernel(
     queries: list[tuple[str, int, list[tuple[int, float]]]],
     algo: str = "wand",
 ):
-    """Kernel factory: one group per BUCKET; every query runs over the
-    bucket's blocks. algo="wand": vectorized block-max WAND (selective
-    queries skip whole blocks without decoding, O(#blocks) Python
-    work); algo="taat": vectorized term-at-a-time full evaluation
-    (large batches — decode once, no per-posting Python);
-    algo="maxscore": chunked essential-list pruning; algo="cursor":
-    the per-posting DAAT reference kernel (fuzz-tested baseline, not a
-    production route). All are rank-identical."""
+    """Kernel factory: every query runs over one shard's matched blocks.
+    algo="wand": vectorized block-max WAND (selective queries skip whole
+    blocks without decoding, O(#blocks) Python work); algo="taat":
+    vectorized term-at-a-time full evaluation (large batches — decode
+    once, no per-posting Python); algo="maxscore": chunked
+    essential-list pruning. All are rank-identical."""
+    if algo not in _SCORERS:
+        raise ValueError(
+            f"unknown algo {algo!r}; expected auto or one of {sorted(_SCORERS)}"
+        )
+    scorer = _SCORERS[algo]
 
-    def kernel(pdf: pd.DataFrame, meta_for=None) -> pd.DataFrame:
+    def kernel(pdf: pd.DataFrame, meta_for) -> pd.DataFrame:
         arrays: dict[int, tuple] = {}
         for term_id, g in pdf.groupby("term_id", sort=True):
             g = g.sort_values("block_seq")
@@ -597,32 +418,10 @@ def _make_bucket_kernel(
                 g["max_weight"].to_numpy(dtype=np.float64),
                 g["doc_gaps"].tolist(),
                 g["weights"].tolist(),
-                meta_for(int(term_id)) if meta_for is not None else None,
+                meta_for(int(term_id)),
             )
         out = {"query_id": [], "doc_id": [], "score": [], "k": []}
-        if algo == "wand":
-            _bmw_bucket(arrays, queries, out)
-            return pd.DataFrame(out)
-        if algo == "taat":
-            _taat_bucket(arrays, queries, out)
-            return pd.DataFrame(out)
-        if algo == "maxscore":
-            _maxscore_bucket(arrays, queries, out)
-            return pd.DataFrame(out)
-        cache: dict = {}
-        for query_id, k, terms in queries:
-            lists = [
-                _ListIter(tid, qw, *arrays[tid], cache=cache)
-                for tid, qw in terms
-                if tid in arrays
-            ]
-            if not lists:
-                continue
-            for doc_id, score in _wand_bucket(lists, k):
-                out["query_id"].append(query_id)
-                out["doc_id"].append(doc_id)
-                out["score"].append(score)
-                out["k"].append(k)
+        scorer(arrays, queries, out)
         return pd.DataFrame(out)
 
     return kernel
@@ -652,12 +451,13 @@ def wand_topk_sharded(
     spark,
     index_root: str,
     query_terms: DataFrame,
-    terms: DataFrame | None = None,
-    docs: DataFrame | None = None,
     algo: str = "wand",
 ) -> DataFrame:
-    """Block-max WAND over the doc-sharded on-disk block index
-    (blocks.encode_shards layout) — the production batch-query path.
+    """query_terms(query_id, term, qw, k) → (query_id, rank, conv_id,
+    turn_idx, score): block-max WAND over the doc-sharded on-disk block
+    index (blocks.encode_shards_from_postings layout) — the engine's one
+    block query path. ``algo`` picks the shard scorer (wand, taat,
+    maxscore) or ``auto`` by batch size; all are rank-identical.
 
     Each task gets one shard PATH; the kernel reads only the matched
     terms' blocks via a pyarrow ``term_id in (...)`` predicate (block
@@ -668,34 +468,19 @@ def wand_topk_sharded(
     results per (query, shard). The doc_id → (conv_id, turn_idx) label
     is resolved IN-KERNEL by a searchsorted against the worker-cached
     conversation-base sidecar (doc_id = base[conv] + turn by
-    construction) — the old final join against the full turn-level docs
-    table rescanned 10^N rows per batch to label <= k·|queries| results,
-    a fixed cost that dominated small-batch latency and killed query
-    scaling. The final merge is just the bounded per-query rank window.
+    construction) — a final join against the full turn-level docs
+    table would rescan 10^N rows per batch to label <= k·|queries|
+    results. The final merge is just the bounded per-query rank window.
     """
     import glob as _glob
     import os as _os
 
-    if docs is not None:
-        import warnings
-
-        warnings.warn(
-            "wand_topk_sharded ignores the `docs` argument: result labels "
-            "are resolved in-kernel from the index's base/ sidecar, not "
-            "from a caller-supplied docs mapping. Drop the argument, or "
-            "join your mapping onto the returned (conv_id, turn_idx) "
-            "frame if you need a filtered/custom labeling.",
-            stacklevel=2,
-        )
     if not _os.path.isdir(_os.path.join(index_root, "base")):
         raise FileNotFoundError(
-            f"{index_root}/base/ sidecar missing — this index was "
-            "finalized before the in-kernel labeling change. Re-run "
-            "finalize_sharded (or finalize_index) to write the "
-            "conversation-base sidecar."
+            f"{index_root}/base/ sidecar missing — finalize the index with "
+            "manifest.finalize_lite to write the conversation-base sidecar."
         )
-    if terms is None:
-        terms = spark.read.parquet(_os.path.join(index_root, "terms"))
+    terms = spark.read.parquet(_os.path.join(index_root, "terms"))
     queries, term_ids = _prepare_queries(terms, query_terms)
     if not queries:
         return spark.createDataFrame(
@@ -706,16 +491,10 @@ def wand_topk_sharded(
         _glob.glob(_os.path.join(index_root, "blocks", "partition_id=*", "*.parquet"))
     )
     if not shard_files:
-        legacy = _glob.glob(_os.path.join(index_root, "blocks", "*.parquet"))
-        hint = (
-            " (found a legacy flat blocks/ layout — rebuild the index with "
-            "encode_shards / encode_shards_from_postings)"
-            if legacy
-            else ""
-        )
         raise FileNotFoundError(
             f"no sharded block files under {index_root}/blocks/"
-            f"partition_id=*/{hint}"
+            "partition_id=*/; encode the index with "
+            "encode_shards_from_postings"
         )
     # fuse shard files into ~2 tasks per core: one task per FILE pays
     # the python-worker round trip per shard (measured ~0.15s each — at
@@ -737,7 +516,7 @@ def wand_topk_sharded(
     )
     if algo == "auto":
         # DAAT block-max WAND wins when pruning can skip most blocks
-        # (few selective queries, cursor kernel decodes lazily); a batch
+        # (few selective queries, blocks decode lazily); a batch
         # amortizes decode across queries, so the vectorized chunked-
         # MaxScore pass wins by interpreter cost while still pruning
         # the low-impact (stopword-heavy) lists TAAT would fully score
@@ -767,6 +546,14 @@ def wand_topk_sharded(
                     filters=[("term_id", "in", tid_list)],
                     use_threads=False,
                 )
+                if (tbl.schema.metadata or {}).get(_PAYLOAD_KEY) != _PAYLOAD_TF:
+                    raise ValueError(
+                        f"{path} is not a TF-payload block file "
+                        f"({_PAYLOAD_KEY.decode()}={_PAYLOAD_TF.decode()} "
+                        "schema metadata missing): it was written by an "
+                        "older float64 block format. Re-encode the index "
+                        "with encode_shards_from_postings."
+                    )
                 if tbl.num_rows == 0:
                     continue
                 if views is None:
@@ -775,29 +562,25 @@ def wand_topk_sharded(
                     # per batch, growing with worker count)
                     views = load_query_sidecar_views(index_root)
                 conv_map, idf_lut, stats = views
-                md = tbl.schema.metadata or {}
-                if md.get(_PAYLOAD_KEY) == _PAYLOAD_TF:
-                    # TF-payload shard: reconstructable exact BM25 —
-                    # per-shard denominator from the doclen sidecar,
-                    # idf per matched term from the dictionary sidecar
-                    lo_v, dl = load_shard_doclen(_os.path.dirname(path))
-                    avg = float(stats["avg_doc_len"])
-                    denom = _K1 * ((1.0 - _B) + _B * (dl.astype(np.float64) / avg))
-                    tids_sorted, idf_sorted = idf_lut
+                # exact BM25 from the TF payload: per-shard denominator
+                # (and norm divisor) from the doclen sidecar, idf per
+                # matched term from the dictionary sidecar
+                lo_v, dl, nrm = load_shard_doclen(_os.path.dirname(path))
+                avg = float(stats["avg_doc_len"])
+                denom = _K1 * ((1.0 - _B) + _B * (dl.astype(np.float64) / avg))
+                tids_sorted, idf_sorted = idf_lut
 
-                    def meta_for(tid, _d=denom, _l=lo_v):
-                        j = int(np.searchsorted(tids_sorted, tid))
-                        if j >= len(tids_sorted) or tids_sorted[j] != tid:
-                            raise RuntimeError(
-                                f"term_id {tid} present in blocks but "
-                                f"missing from the terms sidecar — "
-                                f"stale or mismatched index sidecars "
-                                f"under {index_root!r}"
-                            )
-                        return (float(idf_sorted[j]), _d, _l)
+                def meta_for(tid, _d=denom, _l=lo_v, _n=nrm):
+                    j = int(np.searchsorted(tids_sorted, tid))
+                    if j >= len(tids_sorted) or tids_sorted[j] != tid:
+                        raise RuntimeError(
+                            f"term_id {tid} present in blocks but "
+                            f"missing from the terms sidecar — "
+                            f"stale or mismatched index sidecars "
+                            f"under {index_root!r}"
+                        )
+                    return (float(idf_sorted[j]), _d, _l, _n)
 
-                else:
-                    meta_for = None
                 out = bucket_kernel(tbl.to_pandas(), meta_for)
                 if len(out) == 0:
                     continue
@@ -823,44 +606,3 @@ def wand_topk_sharded(
         .filter(F.col("rank") <= F.col("k"))
     )
     return topk.select("query_id", "rank", "conv_id", "turn_idx", "score")
-
-
-def wand_topk(index: BlockIndex, query_terms: DataFrame) -> DataFrame:
-    """query_terms(query_id, term, qw, k) → (query_id, rank, conv_id,
-    turn_idx, score): the block-max WAND retrieval plan.
-
-    The query set is small by contract (it rides to every kernel in the
-    UDF closure); block bytes shuffle once per bucket, deduplicated on
-    the distinct query term_ids.
-    """
-    queries, tids = _prepare_queries(index.terms, query_terms)
-    if not queries:
-        spark = index.blocks.sparkSession
-        return spark.createDataFrame(
-            [],
-            "query_id string, rank int, conv_id string, turn_idx int, score double",
-        )
-    term_ids = index.blocks.sparkSession.createDataFrame(
-        [(int(t),) for t in tids], "term_id long"
-    )
-    matched = index.blocks.join(F.broadcast(term_ids), "term_id", "left_semi")
-
-    bucket_kernel = _make_bucket_kernel(queries)
-    local = matched.groupBy("bucket").applyInPandas(
-        lambda pdf: bucket_kernel(pdf),
-        schema="query_id string, doc_id long, score double, k int",
-    )
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    topk = (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-    )
-    return (
-        topk.join(
-            index.docs.select("doc_id", "conv_id", "turn_idx"), "doc_id"
-        )
-        .select("query_id", "rank", "conv_id", "turn_idx", "score")
-    )

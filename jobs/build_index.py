@@ -7,8 +7,9 @@
 
 Reads the transcripts table (parquet path, or `table:<name>` for a
 catalog/Iceberg table), runs the per-partition checkpointed build
-(ir_base_spark.index.manifest), finalizes dictionary/weights, builds
-compressed posting blocks, and writes everything under --index-root.
+(ir_base_spark.index.manifest), finalizes the dictionary and corpus
+stats, encodes compressed posting blocks (applying --norm), and writes
+everything under --index-root.
 Prints a JSON build report (lineage + throughput) to stdout.
 """
 
@@ -34,8 +35,6 @@ def main() -> None:
     ap.add_argument("--max-df", type=int, default=None)
     ap.add_argument("--norm", type=int, default=0, choices=[0, 1, 2])
     ap.add_argument("--block-size", type=int, default=128)
-    ap.add_argument("--bucket-bits", type=int, default=16)
-    ap.add_argument("--concurrency", type=int, default=8)
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -48,12 +47,8 @@ def main() -> None:
     else:
         transcripts = spark.read.parquet(args.input)
 
-    from ir_base_spark.index.blocks import encode_shards, encode_shards_from_postings
-    from ir_base_spark.index.manifest import (
-        finalize_lite,
-        finalize_sharded,
-        resumable_build,
-    )
+    from ir_base_spark.index.blocks import encode_shards_from_postings
+    from ir_base_spark.index.manifest import finalize_lite, resumable_build
 
     t0 = time.time()
     report = resumable_build(
@@ -63,25 +58,14 @@ def main() -> None:
         num_partitions=args.partitions,
         ngrams=args.ngrams,
         analyzer=args.analyzer,
-        max_concurrent_jobs=args.concurrency,
     )
-    if args.norm == 0:
-        # single posting materialization: metadata finalize + blocks
-        # straight from the tokenize output
-        idx, base = finalize_lite(
-            spark, args.index_root, min_df=args.min_df, max_df=args.max_df
-        )
-        encode_shards_from_postings(
-            spark, args.index_root, block_size=args.block_size
-        )
-    else:
-        # per-doc norms need the doc-global weight pass: shard-aligned
-        # weights artifact, then the presorted shard encode
-        idx, base = finalize_sharded(
-            spark, args.index_root, norm=args.norm,
-            min_df=args.min_df, max_df=args.max_df,
-        )
-        encode_shards(spark, args.index_root, block_size=args.block_size)
+    # single posting materialization: metadata finalize + blocks
+    # straight from the tokenize output (the encoder applies --norm)
+    idx, base = finalize_lite(
+        spark, args.index_root, min_df=args.min_df, max_df=args.max_df,
+        norm=args.norm,
+    )
+    encode_shards_from_postings(spark, args.index_root, block_size=args.block_size)
 
     print(
         json.dumps(

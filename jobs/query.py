@@ -47,15 +47,13 @@ def main() -> None:
     ap.add_argument("--engine", default="wand", choices=["wand", "dataframe"])
     ap.add_argument(
         "--algo", default="auto",
-        choices=["auto", "wand", "taat", "maxscore", "cursor"],
+        choices=["auto", "wand", "taat", "maxscore"],
         help="block-index scorer: vectorized block-max WAND (selective), "
-        "vectorized TAAT (batches), chunked MaxScore, the per-posting "
-        "cursor reference kernel, or auto by query count",
+        "vectorized TAAT (batches), chunked MaxScore, or auto by query "
+        "count",
     )
     ap.add_argument("--analyzer", default="reference", choices=["reference", "simple"])
     ap.add_argument("--output", default=None)
-    ap.add_argument("--block-size", type=int, default=128)
-    ap.add_argument("--bucket-bits", type=int, default=16)
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -63,23 +61,21 @@ def main() -> None:
     spark = SparkSession.builder.appName("ir-base-spark-query").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    from ir_base_spark.index.blocks import BlockIndex
     from ir_base_spark.query.dataframe_bm25 import analyze_query_terms, topk_search
     from ir_base_spark.query.wand import wand_topk_sharded
 
     root = args.index_root
     with open(os.path.join(root, "stats.json")) as fh:
         stats = json.load(fh)
-    terms = spark.read.parquet(os.path.join(root, "terms"))
 
     qpdf = enforce_query_cap(spark.read.parquet(args.queries), args.queries)
     qt = analyze_query_terms(spark, qpdf, analyzer=args.analyzer)
 
     t0 = time.time()
     if args.engine == "wand":
-        # doc-sharded on-disk block layout (blocks.encode_shards): the
-        # kernel pulls only matched-term row groups per shard
-        out = wand_topk_sharded(spark, root, qt, terms=terms, algo=args.algo)
+        # doc-sharded on-disk block layout: the kernel pulls only
+        # matched-term row groups per shard
+        out = wand_topk_sharded(spark, root, qt, algo=args.algo)
     else:
         from ir_base_spark.index.manifest import finalize_index
 

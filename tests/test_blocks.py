@@ -8,10 +8,11 @@ from hypothesis import strategies as st
 
 from ir_base_spark.index.blocks import (
     decode_postings_block,
-    encode_postings_block,
     varbyte_decode,
     varbyte_encode,
 )
+from ir_base_spark.index.weights import B, K1
+from tests.wand_oracle import tf_term_blocks
 
 
 def test_varbyte_roundtrip_simple():
@@ -43,14 +44,18 @@ def test_varbyte_compression_ratio():
 
 def test_block_roundtrip():
     rng = np.random.default_rng(7)
-    ids = np.sort(rng.choice(10_000_000, size=128, replace=False)).astype(np.int64)
-    ws = rng.normal(size=128)
-    first, last, mx, gaps, wbytes = encode_postings_block(ids, ws)
-    assert first == ids[0] and last == ids[-1]
-    assert mx == ws.max()
-    rids, rws = decode_postings_block(first, gaps, wbytes)
-    assert (rids == ids).all()
-    assert (rws == ws).all()  # float64 bit-exact
+    ids = np.sort(rng.choice(1_000_000, size=128, replace=False)).astype(np.int64)
+    tf = rng.integers(1, 300, size=128)
+    denom = rng.uniform(0.5, 3.0, size=1_000_000)
+    for idf in (1.3, -0.4):  # negative IDF: DF > N/2
+        firsts, lasts, mx, gaps, payloads, meta, ws = tf_term_blocks(
+            ids, tf, idf, denom, None, 128
+        )
+        assert firsts[0] == ids[0] and lasts[0] == ids[-1]
+        assert mx[0] == ws.max()
+        rids, rws = decode_postings_block(firsts[0], gaps[0], payloads[0], meta)
+        assert (rids == ids).all()
+        assert (rws == ws).all()  # float64 bit-exact
 
 
 @given(st.data())
@@ -61,10 +66,17 @@ def test_block_roundtrip_property(data):
     gaps = data.draw(
         st.lists(st.integers(min_value=1, max_value=2**20), min_size=n, max_size=n)
     )
+    tf = data.draw(
+        st.lists(st.integers(min_value=1, max_value=2**16), min_size=n, max_size=n)
+    )
+    idf = data.draw(st.floats(min_value=-5, max_value=5, allow_nan=False))
     ids = start + np.cumsum(np.array([0] + gaps[:-1], dtype=np.int64))
-    ws = np.linspace(-5, 5, n)
-    first, last, mx, enc, wbytes = encode_postings_block(ids, ws)
-    rids, rws = decode_postings_block(first, enc, wbytes)
+    # zero-stride per-doc denominator: any doc id indexes it, no memory
+    denom = np.broadcast_to(np.float64(1.25), (int(ids[-1]) + 1,))
+    firsts, lasts, _mx, enc, payloads, meta, ws = tf_term_blocks(
+        ids, tf, idf, denom, None, n
+    )
+    rids, rws = decode_postings_block(firsts[0], enc[0], payloads[0], meta)
     assert (rids == ids).all()
     assert (rws == ws).all()
 
@@ -72,13 +84,7 @@ def test_block_roundtrip_property(data):
 def test_tf_payload_multibyte_roundtrip():
     """TF-payload blocks with term frequencies needing 2+ varbyte bytes
     (tf > 127) must reconstruct the exact BM25 doubles."""
-    import numpy as np
-
-    from ir_base_spark.index.blocks import (
-        _encode_sorted_run_arrow,
-        decode_postings_block,
-    )
-    from ir_base_spark.index.weights import B, K1
+    from ir_base_spark.index.blocks import _encode_sorted_run_arrow
 
     n = 500
     rng = np.random.default_rng(3)
@@ -91,13 +97,13 @@ def test_tf_payload_multibyte_roundtrip():
     idf_t = 1.7
     denom = K1 * ((1.0 - B) + B * (dl / avg))
     w = idf_t * (tf.astype(np.float64) * (K1 + 1.0) / (denom[doc] + tf))
-    enc = _encode_sorted_run_arrow(tid, 0, doc, w, 64, tf=tf)
+    enc = _encode_sorted_run_arrow(tid, 0, doc, w, 64, tf)
     assert enc.schema.metadata[b"sg_payload"] == b"tfv1"
     got_ids = []
     got_ws = []
     for r in enc.to_pylist():
         ids, ws = decode_postings_block(
-            r["first_doc"], r["doc_gaps"], r["weights"], (idf_t, denom, 0)
+            r["first_doc"], r["doc_gaps"], r["weights"], (idf_t, denom, 0, None)
         )
         got_ids.append(ids)
         got_ws.append(ws)
@@ -108,49 +114,29 @@ def test_tf_payload_multibyte_roundtrip():
 
 
 def test_decode_postings_run_bit_exact():
-    """Whole-run vectorized decode == per-block decode, bit-exact, for
-    both payload formats (float64 and TF+sidecar reconstruction),
-    including multibyte gaps and tfs."""
-    import numpy as np
-
-    from ir_base_spark.index.blocks import (
-        _encode_sorted_run_arrow,
-        decode_postings_block,
-        decode_postings_run,
-    )
-    from ir_base_spark.index.weights import B, K1
+    """Whole-run vectorized decode == per-block decode, bit-exact, with
+    and without a per-doc norm divisor, including multibyte gaps and
+    tfs."""
+    from ir_base_spark.index.blocks import decode_postings_run
 
     n = 700
     rng = np.random.default_rng(13)
     doc = np.sort(rng.choice(np.arange(5_000_000), size=n, replace=False))
     tf = rng.integers(1, 50_000, size=n).astype(np.int64)
-    tid = np.zeros(n, dtype=np.int64)
     dl = np.zeros(5_000_000, dtype=np.float64)
     dl[doc] = tf * 3.0
-    idf_t = 1.7
     denom = K1 * ((1.0 - B) + B * (dl / 40.0))
-    w = idf_t * (tf.astype(np.float64) * (K1 + 1.0) / (denom[doc] + tf))
 
-    for use_tf in (True, False):
-        enc = _encode_sorted_run_arrow(
-            tid, 0, doc, w, 64, tf=tf if use_tf else None
+    for nrm in (None, rng.uniform(0.5, 3.0, size=5_000_000)):
+        firsts, lasts, _mx, gaps, payloads, meta, w = tf_term_blocks(
+            doc, tf, 1.7, denom, nrm, 64
         )
-        rows = enc.to_pylist()
-        meta = (idf_t, denom, 0) if use_tf else None
         per_block = [
-            decode_postings_block(
-                r["first_doc"], r["doc_gaps"], r["weights"], meta
-            )
-            for r in rows
+            decode_postings_block(f, g, p, meta)
+            for f, g, p in zip(firsts, gaps, payloads)
         ]
         ids_b = np.concatenate([p[0] for p in per_block])
         ws_b = np.concatenate([p[1] for p in per_block])
-        ids_r, ws_r = decode_postings_run(
-            np.array([r["first_doc"] for r in rows], dtype=np.int64),
-            np.array([r["last_doc"] for r in rows], dtype=np.int64),
-            [r["doc_gaps"] for r in rows],
-            [r["weights"] for r in rows],
-            meta,
-        )
+        ids_r, ws_r = decode_postings_run(firsts, lasts, gaps, payloads, meta)
         assert (ids_r == ids_b).all() and (ids_r == doc).all()
-        assert (ws_r == ws_b).all()  # bit-identical
+        assert (ws_r == ws_b).all() and (ws_r == w).all()  # bit-identical

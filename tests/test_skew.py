@@ -54,15 +54,15 @@ def _skewed_transcripts(n_conversations: int = 80) -> pd.DataFrame:
 
 
 def test_skew_shard_balance_and_rank_identity(spark, tmp_path):
-    from ir_base_spark.index.blocks import encode_shards
-    from ir_base_spark.index.manifest import finalize_sharded, resumable_build
+    from ir_base_spark.index.blocks import encode_shards_from_postings
+    from ir_base_spark.index.manifest import finalize_lite, resumable_build
 
     t = _skewed_transcripts()
     root = str(tmp_path / "skewidx")
     sdf = spark.createDataFrame(t)
     resumable_build(spark, sdf, root, num_partitions=8)
-    finalize_sharded(spark, root)
-    rep = encode_shards(spark, root, block_size=16)
+    finalize_lite(spark, root)
+    rep = encode_shards_from_postings(spark, root, block_size=16)
     assert rep["shards"] >= 4
 
     # the hot term really dominates: ~2 of ~6-7 tokens per turn

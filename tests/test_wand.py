@@ -2,113 +2,155 @@
 
 from __future__ import annotations
 
-from ir_base_spark.index.blocks import build_block_index
+import os
+
+import numpy as np
+import pyarrow.parquet as pq
+import pytest
+
+from ir_base_spark.index.blocks import encode_shards_from_postings
 from ir_base_spark.index.build import build_index
-from ir_base_spark.index.dictionary import assign_doc_ids
+from ir_base_spark.index.manifest import (
+    build_single_shard_index,
+    finalize_lite,
+    resumable_build,
+)
 from ir_base_spark.oracle import build_oracle_index, search_all
 from ir_base_spark.query.dataframe_bm25 import analyze_query_terms, topk_search
+from ir_base_spark.query.wand import wand_topk_sharded
 from tests.test_rank_identity import _compare, _oracle_docs
 
 
-def test_wand_rank_identity(spark, fixture_small):
-    from ir_base_spark.query.wand import wand_topk
-
-    t = fixture_small.transcripts
-    q = fixture_small.queries
-
-    oracle_idx = build_oracle_index(_oracle_docs(t))
-    expected = search_all(
-        oracle_idx, list(zip(q["query_id"], q["query_text"], q["k"]))
+def _expected(fixture):
+    t, q = fixture.transcripts, fixture.queries
+    return search_all(
+        build_oracle_index(_oracle_docs(t)),
+        list(zip(q["query_id"], q["query_text"], q["k"])),
     )
 
-    sdf = spark.createDataFrame(t)
-    index = build_index(spark, sdf)
-    docs = assign_doc_ids(index.doc_lens)
-    # small bucket_bits + block_size force multi-bucket, multi-block paths
-    bindex = build_block_index(index, docs, block_size=16, bucket_bits=9)
 
-    qt = analyze_query_terms(spark, q)
-    got = wand_topk(bindex, qt).collect()
-    _compare(got, expected)
+def _sharded_root(spark, transcripts, root, partitions, norm=0):
+    """The production route: resumable build → metadata finalize →
+    per-shard path-based block encode."""
+    resumable_build(spark, spark.createDataFrame(transcripts), root,
+                    num_partitions=partitions)
+    finalize_lite(spark, root, norm=norm)
+    return encode_shards_from_postings(spark, root, block_size=16)
 
 
-def test_wand_matches_m1_bitwise(spark, fixture_small):
+def _by_rank(rows):
+    return {(r["query_id"], r["rank"]): (r["conv_id"], r["turn_idx"], r["score"])
+            for r in rows}
+
+
+def _decoded_weights(spark, root) -> dict:
+    """{(term, conv_id, turn_idx): weight} decoded from every block of
+    the index at ``root``."""
+    from ir_base_spark.index.blocks import (
+        _load_sidecars,
+        decode_postings_block,
+        load_shard_doclen,
+    )
+    from ir_base_spark.index.weights import B, K1
+
+    (_ts, t_ids, _td, _cs, _bs, stats, t_idf) = _load_sidecars(root)
+    idf = dict(zip(t_ids.tolist(), t_idf.tolist()))
+    term = {r["term_id"]: r["term"]
+            for r in spark.read.parquet(root + "/terms").collect()}
+    label = {r["doc_id"]: (r["conv_id"], r["turn_idx"])
+             for r in spark.read.parquet(root + "/docs").collect()}
+    avg = float(stats["avg_doc_len"])
+    metas: dict[int, tuple] = {}
+    out = {}
+    for r in spark.read.parquet(root + "/blocks").collect():
+        pid = int(r["partition_id"])
+        if pid not in metas:
+            lo, dl, nrm = load_shard_doclen(
+                os.path.join(root, "blocks", f"partition_id={pid}")
+            )
+            metas[pid] = (lo, K1 * ((1.0 - B) + B * (dl.astype(np.float64) / avg)), nrm)
+        lo, denom, nrm = metas[pid]
+        ids, ws = decode_postings_block(
+            r["first_doc"], r["doc_gaps"], r["weights"],
+            (idf[r["term_id"]], denom, lo, nrm),
+        )
+        for d, w in zip(ids.tolist(), ws.tolist()):
+            out[(term[r["term_id"]], *label[d])] = w
+    return out
+
+
+def _m1_weights(index) -> dict:
+    """{(term, conv_id, turn_idx): weight} of the M1 index."""
+    rows = index.weights.join(index.terms.select("term", "term_id"), "term_id")
+    return {(r["term"], r["conv_id"], r["turn_idx"]): r["weight"]
+            for r in rows.collect()}
+
+
+def _assert_weights_match(decoded: dict, reference: dict) -> None:
+    assert set(decoded) == set(reference)
+    worst = max(abs(decoded[k] - reference[k]) for k in reference)
+    assert worst < 1e-12, worst
+
+
+def test_wand_rank_identity(spark, fixture_small, tmp_path):
+    """The in-query route (one shard, small blocks → multi-block lists)
+    is rank-identical to the single-node oracle."""
+    root = str(tmp_path / "single")
+    rep = build_single_shard_index(
+        spark, spark.createDataFrame(fixture_small.transcripts), root,
+        block_size=16,
+    )
+    assert rep["shards"] == 1 and rep["blocks"] > 0
+    qt = analyze_query_terms(spark, fixture_small.queries)
+    _compare(wand_topk_sharded(spark, root, qt).collect(),
+             _expected(fixture_small))
+
+
+def test_wand_matches_m1_bitwise(spark, fixture_small, tmp_path):
     """WAND and the M1 DataFrame path accumulate in the same canonical
     order → identical scores (well under tolerance) and identical ranks."""
-    from ir_base_spark.query.wand import wand_topk
-
     t = fixture_small.transcripts
     q = fixture_small.queries.head(20)
     sdf = spark.createDataFrame(t)
-    index = build_index(spark, sdf)
     qt = analyze_query_terms(spark, q)
+    m1 = _by_rank(topk_search(build_index(spark, sdf), qt).collect())
 
-    m1 = {(r["query_id"], r["rank"]): (r["conv_id"], r["turn_idx"], r["score"])
-          for r in topk_search(index, qt).collect()}
-
-    docs = assign_doc_ids(index.doc_lens)
-    bindex = build_block_index(index, docs, block_size=32, bucket_bits=10)
-    wd = {(r["query_id"], r["rank"]): (r["conv_id"], r["turn_idx"], r["score"])
-          for r in wand_topk(bindex, qt).collect()}
+    root = str(tmp_path / "single")
+    build_single_shard_index(spark, sdf, root, block_size=32)
+    wd = _by_rank(wand_topk_sharded(spark, root, qt).collect())
 
     assert set(m1) == set(wd)
     for key in m1:
-        assert m1[key][0] == wd[key][0]
-        assert m1[key][1] == wd[key][1]
-        assert abs(m1[key][2] - wd[key][2]) < 1e-12
+        assert m1[key][:2] == wd[key][:2], key
+        assert abs(m1[key][2] - wd[key][2]) < 1e-12, key
 
 
 def test_sharded_pipeline_rank_identity(spark, fixture_small, tmp_path):
-    """Full production path: resumable build → sharded finalize (zero
-    posting shuffle) → per-shard pyarrow block encode → sharded WAND.
-    Must be rank-identical to the single-node oracle."""
-    from ir_base_spark.index.blocks import encode_shards
-    from ir_base_spark.index.manifest import finalize_sharded, resumable_build
-    from ir_base_spark.query.wand import wand_topk_sharded
-
-    t = fixture_small.transcripts
-    q = fixture_small.queries
-    oracle_idx = build_oracle_index(_oracle_docs(t))
-    expected = search_all(
-        oracle_idx, list(zip(q["query_id"], q["query_text"], q["k"]))
-    )
-
+    """Full production path: resumable build → metadata finalize →
+    per-shard pyarrow block encode → sharded WAND. Must be
+    rank-identical to the single-node oracle."""
     root = str(tmp_path / "sharded")
-    sdf = spark.createDataFrame(t)
-    resumable_build(spark, sdf, root, num_partitions=8)
-    idx, base = finalize_sharded(spark, root)
-    rep = encode_shards(spark, root, block_size=16)
+    rep = _sharded_root(spark, fixture_small.transcripts, root, 8)
     assert rep["shards"] >= 1 and rep["blocks"] > 0
     # doc-id ranges must never overlap (two_phase_cumsum offset pin)
     docs = spark.read.parquet(root + "/docs")
     assert docs.count() == docs.select("doc_id").distinct().count()
 
-    qt = analyze_query_terms(spark, q)
-    got = wand_topk_sharded(spark, root, qt).collect()
-    _compare(got, expected)
+    qt = analyze_query_terms(spark, fixture_small.queries)
+    _compare(wand_topk_sharded(spark, root, qt).collect(),
+             _expected(fixture_small))
 
 
 def test_taat_matches_wand_sharded(spark, fixture_small, tmp_path):
     """The vectorized TAAT batch kernel is rank- AND score-identical to
     DAAT block-max WAND over the same sharded index."""
-    from ir_base_spark.index.blocks import encode_shards
-    from ir_base_spark.index.manifest import finalize_sharded, resumable_build
-    from ir_base_spark.query.wand import wand_topk_sharded
-
-    t = fixture_small.transcripts
-    q = fixture_small.queries
     root = str(tmp_path / "taat")
-    resumable_build(spark, spark.createDataFrame(t), root, num_partitions=4)
-    finalize_sharded(spark, root)
-    encode_shards(spark, root, block_size=16)
-    qt = analyze_query_terms(spark, q)
+    _sharded_root(spark, fixture_small.transcripts, root, 4)
+    qt = analyze_query_terms(spark, fixture_small.queries)
 
-    wd = {(r["query_id"], r["rank"]): (r["conv_id"], r["turn_idx"], r["score"])
-          for r in wand_topk_sharded(spark, root, qt, algo="wand").collect()}
-    ta = {(r["query_id"], r["rank"]): (r["conv_id"], r["turn_idx"], r["score"])
-          for r in wand_topk_sharded(spark, root, qt, algo="taat").collect()}
-    ms = {(r["query_id"], r["rank"]): (r["conv_id"], r["turn_idx"], r["score"])
-          for r in wand_topk_sharded(spark, root, qt, algo="maxscore").collect()}
+    wd = _by_rank(wand_topk_sharded(spark, root, qt, algo="wand").collect())
+    ta = _by_rank(wand_topk_sharded(spark, root, qt, algo="taat").collect())
+    ms = _by_rank(wand_topk_sharded(spark, root, qt, algo="maxscore").collect())
     assert set(wd) == set(ta) == set(ms)
     for key in wd:
         assert wd[key][:2] == ta[key][:2], key
@@ -118,90 +160,55 @@ def test_taat_matches_wand_sharded(spark, fixture_small, tmp_path):
 
 
 def test_direct_postings_blocks_identical(spark, fixture_small, tmp_path):
-    """encode_shards_from_postings (no weights artifact) must produce a
-    block index rank-identical to the oracle AND byte-identical block
-    payloads vs the finalize_sharded+encode_shards path."""
-    from ir_base_spark.index.blocks import (
-        encode_shards,
-        encode_shards_from_postings,
-    )
-    from ir_base_spark.index.manifest import (
-        finalize_lite,
-        finalize_sharded,
-        resumable_build,
-    )
-    from ir_base_spark.query.wand import wand_topk_sharded
+    """Every posting weight decoded from the TF-payload blocks equals
+    the M1 index's weight for the same (term, conv_id, turn_idx), and
+    the block route is rank-identical to the oracle."""
+    root = str(tmp_path / "direct")
+    _sharded_root(spark, fixture_small.transcripts, root, 4)
+    m1 = build_index(spark, spark.createDataFrame(fixture_small.transcripts))
+    _assert_weights_match(_decoded_weights(spark, root), _m1_weights(m1))
 
+    qt = analyze_query_terms(spark, fixture_small.queries)
+    _compare(wand_topk_sharded(spark, root, qt).collect(),
+             _expected(fixture_small))
+
+
+@pytest.mark.parametrize("norm", [1, 2])
+def test_norm_rank_identity(spark, fixture_small, tmp_path, norm):
+    """Per-doc L1/L2 norms folded into the block encoder: decoded
+    weights and top-k match M1 ``build_index(norm=n)``."""
     t = fixture_small.transcripts
-    q = fixture_small.queries
-    oracle_idx = build_oracle_index(_oracle_docs(t))
-    expected = search_all(
-        oracle_idx, list(zip(q["query_id"], q["query_text"], q["k"]))
+    root = str(tmp_path / f"norm{norm}")
+    _sharded_root(spark, t, root, 4, norm=norm)
+    m1 = build_index(spark, spark.createDataFrame(t), norm=norm)
+    _assert_weights_match(_decoded_weights(spark, root), _m1_weights(m1))
+
+    qt = analyze_query_terms(spark, fixture_small.queries)
+    want = _by_rank(topk_search(m1, qt).collect())
+    got = _by_rank(wand_topk_sharded(spark, root, qt).collect())
+    assert set(want) == set(got)
+    for key in want:
+        assert abs(want[key][2] - got[key][2]) < 1e-9, key
+        assert want[key][:2] == got[key][:2], key
+
+
+def test_unscorable_block_files_raise(spark, fixture_small, tmp_path):
+    """A block shard without its _doclen.npz sidecar, or a block file
+    without the TF-payload stamp, fails with an error naming the file
+    and the fix — never a silent mis-score."""
+    root = str(tmp_path / "broken")
+    build_single_shard_index(
+        spark, spark.createDataFrame(fixture_small.transcripts), root
     )
-    sdf = spark.createDataFrame(t)
+    shard = os.path.join(root, "blocks", "partition_id=0")
+    qt = analyze_query_terms(spark, fixture_small.queries.head(3))
 
-    root_a = str(tmp_path / "via_weights")
-    resumable_build(spark, sdf, root_a, num_partitions=4)
-    finalize_sharded(spark, root_a)
-    encode_shards(spark, root_a, block_size=16)
+    os.remove(os.path.join(shard, "_doclen.npz"))
+    with pytest.raises(Exception, match="_doclen.npz is missing"):
+        wand_topk_sharded(spark, root, qt).collect()
 
-    root_b = str(tmp_path / "direct")
-    resumable_build(spark, sdf, root_b, num_partitions=4)
-    finalize_lite(spark, root_b)
-    encode_shards_from_postings(spark, root_b, block_size=16)
-
-    cols = ["term_id", "bucket", "block_seq", "n", "first_doc", "last_doc",
-            "doc_gaps"]
-    ba = sorted(
-        (tuple(r) for r in spark.read.parquet(root_a + "/blocks")
-         .select(*cols).collect())
-    )
-    bb = sorted(
-        (tuple(r) for r in spark.read.parquet(root_b + "/blocks")
-         .select(*cols).collect())
-    )
-    assert ba == bb  # identical structure + byte-identical gap payloads
-    # the direct path stores varbyte TF and reconstructs the exact BM25
-    # double at decode (sg_payload=tfv1); decoded weights must agree with
-    # the stored-float64 path to the last ulp of Math.log vs numpy log
-    import os
-
-    import numpy as np
-
-    from ir_base_spark.index.blocks import (
-        _load_sidecars,
-        decode_postings_block,
-        load_shard_doclen,
-    )
-    from ir_base_spark.index.weights import B, K1
-
-    (_ts, t_ids, _td, _cs, _bs, stats, t_idf) = _load_sidecars(root_b)
-    order = np.argsort(t_ids)
-    tids_s, idf_s = t_ids[order], t_idf[order]
-    avg = float(stats["avg_doc_len"])
-    wa = {(r["term_id"], r["bucket"], r["block_seq"]): r["weights"]
-          for r in spark.read.parquet(root_a + "/blocks").collect()}
-    denoms: dict[int, tuple] = {}
-    n_checked = 0
-    for r in spark.read.parquet(root_b + "/blocks").collect():
-        pid = int(r["partition_id"])
-        if pid not in denoms:
-            lo, dl = load_shard_doclen(
-                os.path.join(root_b, "blocks", f"partition_id={pid}")
-            )
-            denoms[pid] = (lo, K1 * ((1.0 - B) + B * (dl.astype(np.float64) / avg)))
-        lo, denom = denoms[pid]
-        idf_t = float(idf_s[int(np.searchsorted(tids_s, r["term_id"]))])
-        _ids, vb = decode_postings_block(
-            r["first_doc"], r["doc_gaps"], r["weights"], (idf_t, denom, lo)
-        )
-        va = np.frombuffer(
-            wa[(r["term_id"], r["bucket"], r["block_seq"])], dtype=np.float64
-        )
-        assert np.abs(va - vb).max(initial=0.0) < 1e-12, r["term_id"]
-        n_checked += 1
-    assert n_checked == len(wa)
-
-    qt = analyze_query_terms(spark, q)
-    got = wand_topk_sharded(spark, root_b, qt).collect()
-    _compare(got, expected)
+    path = os.path.join(shard, "blocks.parquet")
+    tbl = pq.read_table(path)
+    pq.write_table(tbl.replace_schema_metadata(None), path)
+    with pytest.raises(Exception, match="not a TF-payload block file"):
+        wand_topk_sharded(spark, root, qt).collect()

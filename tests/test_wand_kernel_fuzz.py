@@ -1,58 +1,61 @@
-"""Property fuzz of the pure-Python WAND kernel vs brute force.
+"""Property fuzz of the WAND kernels vs brute force.
 
 Catches pruning-soundness bugs (e.g. under-counted block-max bounds)
-without Spark in the loop. Negative weights are included deliberately:
-BM25 IDF goes negative for DF > N/2 and the kernel's UB clamping must
-stay sound.
+without Spark in the loop. Lists are TF-payload blocks written by the
+production encoder; each term draws a SIGNED random IDF so negative
+weights stay covered (BM25 IDF goes negative for DF > N/2 and the
+kernels' UB clamping must stay sound), and half the trials add a
+per-doc norm divisor.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from ir_base_spark.index.blocks import encode_postings_block
-from ir_base_spark.query.wand import _ListIter, _wand_bucket
+from ir_base_spark.index.weights import B, K1
+from tests.wand_oracle import _ListIter, _wand_bucket, tf_term_blocks
 
 
-def _run_trial(rng) -> None:
+def _random_lists(rng, block_size: int):
+    """→ (k, [(term_id, qw, firsts, lasts, maxws, gaps, payloads, meta,
+    ub)], brute-force top-k [(doc, score)])."""
     n_docs = int(rng.integers(5, 300))
     n_terms = int(rng.integers(1, 7))
     k = int(rng.integers(1, 15))
-    block_size = int(rng.integers(2, 10))
+    dl = rng.integers(1, 60, size=n_docs).astype(np.float64)
+    denom = K1 * ((1.0 - B) + B * (dl / float(dl.mean())))
+    nrm = rng.uniform(0.5, 3.0, size=n_docs) if rng.integers(2) else None
     lists = []
     truth: dict[int, float] = {}
     for tid in range(n_terms):
         n_post = int(rng.integers(1, n_docs + 1))
         ids = np.sort(rng.choice(n_docs, size=n_post, replace=False)).astype(np.int64)
-        ws = rng.normal(loc=1.0, size=n_post)
+        # mostly small tfs, occasionally multibyte varbyte ones
+        tf = rng.integers(1, 4 if rng.integers(4) else 400, size=n_post)
+        idf = float(rng.normal(loc=0.5, scale=1.5))
         qw = float(rng.integers(1, 4))
-        firsts, lasts, maxws, gaps, wb = [], [], [], [], []
-        for off in range(0, n_post, block_size):
-            f, l, m, g, w_ = encode_postings_block(
-                ids[off : off + block_size], ws[off : off + block_size]
-            )
-            firsts.append(f)
-            lasts.append(l)
-            maxws.append(m)
-            gaps.append(g)
-            wb.append(w_)
-        lists.append(
-            _ListIter(
-                tid, qw,
-                np.array(firsts, dtype=np.int64),
-                np.array(lasts, dtype=np.int64),
-                np.array(maxws, dtype=np.float64),
-                gaps, wb,
-            )
+        firsts, lasts, maxws, gaps, wb, meta, ws = tf_term_blocks(
+            ids, tf, idf, denom, nrm, block_size
         )
+        ub = max(0.0, qw * float(maxws.max()))
+        lists.append((tid, qw, firsts, lasts, maxws, gaps, wb, meta, ub))
         for d, w2 in zip(ids, ws):
-            truth[d] = truth.get(d, 0.0) + qw * float(w2)
+            truth[int(d)] = truth.get(int(d), 0.0) + qw * float(w2)
     expect = sorted(truth.items(), key=lambda t: (-t[1], t[0]))[:k]
-    got = _wand_bucket(lists, k)
+    return k, lists, expect
+
+
+def _assert_topk(got, expect) -> None:
     assert len(got) == len(expect)
     for g, e in zip(got, expect):
         assert g[0] == e[0], f"doc {g[0]} vs {e[0]}"
         assert abs(g[1] - e[1]) < 1e-12
+
+
+def _run_trial(rng) -> None:
+    k, lists, expect = _random_lists(rng, int(rng.integers(2, 10)))
+    its = [_ListIter(*L[:8]) for L in lists]
+    _assert_topk(_wand_bucket(its, k), expect)
 
 
 def test_wand_kernel_fuzz():
@@ -62,33 +65,18 @@ def test_wand_kernel_fuzz():
 
 
 def _run_maxscore_trial(rng) -> None:
+    from ir_base_spark.index.blocks import decode_postings_run
     from ir_base_spark.query.wand import _maxscore_query
 
-    n_docs = int(rng.integers(5, 300))
-    n_terms = int(rng.integers(1, 7))
-    k = int(rng.integers(1, 15))
+    k, blocks, expect = _random_lists(rng, int(rng.integers(2, 10)))
     chunk = int(rng.integers(2, 40))  # tiny chunks stress θ/frontier logic
     lists = []
-    truth: dict[int, float] = {}
-    for tid in range(n_terms):
-        n_post = int(rng.integers(1, n_docs + 1))
-        ids = np.sort(rng.choice(n_docs, size=n_post, replace=False)).astype(
-            np.int64
-        )
-        ws = rng.normal(loc=1.0, size=n_post)
-        qw = float(rng.integers(1, 4))
-        ub = max(0.0, qw * float(ws.max()))
-        lists.append((tid, qw, ids, ws.astype(np.float64), ub))
-        for d, w2 in zip(ids, ws):
-            truth[d] = truth.get(d, 0.0) + qw * float(w2)
-    expect = sorted(truth.items(), key=lambda t: (-t[1], t[0]))[:k]
+    for tid, qw, firsts, lasts, _m, gaps, wb, meta, ub in blocks:
+        ids, ws = decode_postings_run(firsts, lasts, gaps, wb, meta)
+        lists.append((tid, qw, ids, ws, ub))
     docs, scores = _maxscore_query(lists, k, chunk=chunk)
     order = np.lexsort((docs, -scores))[:k]
-    got = [(int(docs[i]), float(scores[i])) for i in order]
-    assert len(got) == len(expect)
-    for g, e in zip(got, expect):
-        assert g[0] == e[0], f"doc {g[0]} vs {e[0]}"
-        assert abs(g[1] - e[1]) < 1e-12
+    _assert_topk([(int(docs[i]), float(scores[i])) for i in order], expect)
 
 
 def test_maxscore_kernel_fuzz():
@@ -102,49 +90,10 @@ def test_maxscore_kernel_fuzz():
 def _run_bmw_trial(rng) -> None:
     from ir_base_spark.query.wand import _bmw_query
 
-    n_docs = int(rng.integers(5, 300))
-    n_terms = int(rng.integers(1, 7))
-    k = int(rng.integers(1, 15))
-    block_size = int(rng.integers(2, 10))
-    lists = []
-    truth: dict[int, float] = {}
-    for tid in range(n_terms):
-        n_post = int(rng.integers(1, n_docs + 1))
-        ids = np.sort(rng.choice(n_docs, size=n_post, replace=False)).astype(
-            np.int64
-        )
-        ws = rng.normal(loc=1.0, size=n_post)
-        qw = float(rng.integers(1, 4))
-        firsts, lasts, maxws, gaps, wb = [], [], [], [], []
-        for off in range(0, n_post, block_size):
-            f, l, m, g, w_ = encode_postings_block(
-                ids[off : off + block_size], ws[off : off + block_size]
-            )
-            firsts.append(f)
-            lasts.append(l)
-            maxws.append(m)
-            gaps.append(g)
-            wb.append(w_)
-        maxws_arr = np.array(maxws, dtype=np.float64)
-        ub = max(0.0, qw * float(maxws_arr.max()))
-        lists.append(
-            (
-                tid, qw,
-                np.array(firsts, dtype=np.int64),
-                np.array(lasts, dtype=np.int64),
-                maxws_arr, gaps, wb, None, ub,
-            )
-        )
-        for d, w2 in zip(ids, ws):
-            truth[d] = truth.get(d, 0.0) + qw * float(w2)
-    expect = sorted(truth.items(), key=lambda t: (-t[1], t[0]))[:k]
+    k, lists, expect = _random_lists(rng, int(rng.integers(2, 10)))
     docs, scores = _bmw_query(lists, k, cache={})
     order = np.lexsort((docs, -scores))[:k]
-    got = [(int(docs[i]), float(scores[i])) for i in order]
-    assert len(got) == len(expect)
-    for g, e in zip(got, expect):
-        assert g[0] == e[0], f"doc {g[0]} vs {e[0]}"
-        assert abs(g[1] - e[1]) < 1e-12
+    _assert_topk([(int(docs[i]), float(scores[i])) for i in order], expect)
 
 
 def test_bmw_vectorized_kernel_fuzz():

@@ -59,12 +59,13 @@ def one_task(root: str, shard: int) -> float:
         .to_numpy()
     )
     turn = tbl.column("turn_idx").chunk(0).to_numpy()
-    tf = tbl.column("tf").chunk(0).to_numpy().astype(np.float64, copy=False)
+    tf_i = tbl.column("tf").chunk(0).to_numpy()
     keep = pos_np >= 0
     if not keep.all():
-        pos_np, cpos, turn, tf = (
-            pos_np[keep], cpos[keep], turn[keep], tf[keep]
+        pos_np, cpos, turn, tf_i = (
+            pos_np[keep], cpos[keep], turn[keep], tf_i[keep]
         )
+    tf = tf_i.astype(np.float64)
     tid = term_ids[pos_np]
     doc = bases[cpos] + turn
     lo = int(doc.min())
@@ -77,7 +78,9 @@ def one_task(root: str, shard: int) -> float:
     denom_acc = _K1 * ((1.0 - _B) + _B * (dl_acc / avg))
     w = term_idf[pos_np] * (tf * (_K1 + 1.0) / (denom_acc[rel] + tf))
     order = np.argsort(tid * span + rel)
-    _encode_sorted_run_arrow(tid[order], shard, doc[order], w[order], 128)
+    _encode_sorted_run_arrow(
+        tid[order], shard, doc[order], w[order], 128, tf_i[order]
+    )
     return time.time() - t0
 
 

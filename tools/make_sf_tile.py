@@ -16,6 +16,7 @@ from __future__ import annotations
 import os
 import sys
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -36,6 +37,28 @@ KEYS: dict[str, list[str] | None] = {
 }
 
 
+def _check_key_room(table: str, key: str, col, tiles: int) -> None:
+    """Tiles stay disjoint only if every source key is below OFF, and
+    the largest tiled key, (tiles-1)*OFF + max, must fit the column
+    type; refuse before writing anything otherwise."""
+    if not pa.types.is_integer(col.type):
+        raise SystemExit(f"{table}.{key}: key column is {col.type}, not integer")
+    hi = pc.max(col).as_py()
+    if hi is None:
+        return
+    if hi >= OFF:
+        raise SystemExit(
+            f"{table}.{key}: source key {hi} >= OFF={OFF}; tiles would "
+            "collide. Tile a smaller source or raise OFF."
+        )
+    top = (tiles - 1) * OFF + hi
+    if top > np.iinfo(col.type.to_pandas_dtype()).max:
+        raise SystemExit(
+            f"{table}.{key}: tiled key {top} overflows {col.type}; "
+            "use fewer tiles."
+        )
+
+
 def main() -> None:
     src, dst = sys.argv[1], sys.argv[2]
     tiles = int(sys.argv[3]) if len(sys.argv) > 3 else 10
@@ -46,13 +69,17 @@ def main() -> None:
             pq.write_table(tab, f"{dst}/{t}.parquet")
             print(t, tab.num_rows)
             continue
+        for k in keys:
+            _check_key_room(t, k, tab[k], tiles)
         parts = []
         for i in range(tiles):
             tt = tab
             if i > 0:
                 for k in keys:
                     col = tt[k]
-                    newcol = pc.add(col, pa.scalar(i * OFF, type=col.type))
+                    newcol = pc.add_checked(
+                        col, pa.scalar(i * OFF, type=col.type)
+                    )
                     tt = tt.set_column(
                         tt.schema.get_field_index(k), tt.field(k), newcol
                     )

@@ -117,8 +117,9 @@ def child(cores: int, input_path: str, n_queries: int, partitions: int = 32) -> 
     # key so cross-round comparisons never mistake it for the cursor
     # kernel; rounds <= 3 recorded this as "wand_sec"); bmw_sec = the
     # block-max WAND kernel (VECTORIZED window-at-a-time since r5; the
-    # per-posting cursor kernel is demoted to algo="cursor" and not
-    # benchmarked); taat_sec = the exhaustive vectorized scorer.
+    # per-posting cursor kernel survives only as the fuzz-test oracle
+    # in tests/wand_oracle.py); taat_sec = the exhaustive vectorized
+    # scorer.
     # All three are rank-identical
     # (tests/test_wand.py::test_taat_matches_wand_sharded).
     t0 = time.time()
