@@ -19,7 +19,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dictionary import build_dictionary, corpus_stats
+from .dictionary import build_dictionary, corpus_stats, project_onto_dictionary
 from .tokenize import tokenize_turns
 from .weights import set_feature_values
 
@@ -68,18 +68,9 @@ def build_index(
     if cache:
         terms = terms.cache()
 
-    pruning = min_df > 1 or max_df is not None
-    if pruning:
-        # re-project doc vectors onto the pruned dictionary: doc_len and
-        # the corpus constants must reflect retained terms only (the
-        # reference's pass-2 with frozen CV, SURVEY §3.2)
-        kept = raw.drop("doc_len").join(
-            F.broadcast(terms.select("term")), "term", "left_semi"
-        )
-        doc_lens = kept.groupBy("conv_id", "turn_idx").agg(
-            F.sum("tf").alias("doc_len")
-        )
-        raw_kept = kept.join(doc_lens, ["conv_id", "turn_idx"])
+    if min_df > 1 or max_df is not None:
+        # doc_len and the corpus constants reflect retained terms only
+        raw_kept, doc_lens = project_onto_dictionary(raw, terms)
     else:
         doc_lens = (
             raw.filter(F.col("is_doc_head") == 1)

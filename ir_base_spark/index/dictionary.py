@@ -12,8 +12,7 @@ in a distributed engine, so the canonical ordering is pinned instead
 
 Scale notes (10^12 turns → ~10^8-term dictionary):
 - DF/TTF is a single shuffle of pre-aggregated (doc, term) rows keyed by
-  term; AQE handles moderate skew, and the posting-block build (blocks.py)
-  adds explicit salting for the Zipf head.
+  term; AQE handles moderate skew.
 - Term-id assignment avoids a single-partition global window: terms are
   range-partitioned on the sort key, ranked within partitions, and offset
   by cumulative partition counts (a driver-side array of #partitions
@@ -111,8 +110,6 @@ def two_phase_cumsum(
     value_col: str,
     out_col: str = "cum_before",
     num_partitions: int = 32,
-    extra_sums: list[str] | None = None,
-    totals_out: dict | None = None,
 ) -> DataFrame:
     """Exclusive prefix sum of ``value_col`` under ``order_col`` order,
     fully distributed: range-partition on the key, window-cumsum within
@@ -144,16 +141,11 @@ def two_phase_cumsum(
     # boundaries observed by the offsets job are the only ones possible.
     local = with_pid.withColumn("_cum", F.sum(value_col).over(w)).localCheckpoint()
     df.unpersist(blocking=False)
-    # piggyback requested column totals on the SAME offsets job
-    # (extra_sums/totals_out) — a separate totals aggregation would be
-    # one more driver barrier on the finalize critical path
-    aggs = [F.sum(value_col).alias("s")] + [
-        F.sum(c).alias(f"_x_{c}") for c in (extra_sums or [])
-    ]
-    sums = local.groupBy("_pid").agg(*aggs).orderBy("_pid").collect()
-    if totals_out is not None:
-        for c in extra_sums or []:
-            totals_out[c] = sum(int(r[f"_x_{c}"] or 0) for r in sums)
+    sums = (
+        local.groupBy("_pid").agg(F.sum(value_col).alias("s"))
+        .orderBy("_pid")
+        .collect()
+    )
     offsets = {}
     acc = 0
     for row in sums:
@@ -174,88 +166,29 @@ def two_phase_cumsum(
     )
 
 
-def conv_doc_base(doc_lens: DataFrame, num_partitions: int = 32) -> DataFrame:
-    """(conv_id, base): per-conversation doc-id base offsets.
+def conv_doc_base_with_stats_ranged(
+    doc_lens: DataFrame,
+) -> tuple:
+    """(conv_id, base) doc-id base offsets plus the corpus constants
+    (n_docs, avg_doc_len), from ONE conversation-level aggregation of
+    doc_lens(partition_id, conv_id, turn_idx, doc_len).
 
     base(c) = Σ over conversations c' < c (string order) of
     (max(turn_idx)+1), so ``doc_id = base[conv_id] + turn_idx`` is
     globally ascending in (conv_id, turn_idx) — the stable-ordering
     contract — WITHOUT ranking every turn. Ids are gapped where turns
-    were dropped (empty/pruned): gaps are free for delta-gap blocks and
-    doc-range buckets; only the ORDER is load-bearing.
+    were dropped (empty/pruned): only the ORDER is load-bearing.
+    Requires turn_idx >= 0 (schema contract). The table is
+    CONVERSATION-level, so labelling a 10^12-row posting stream is a
+    hash lookup + one integer add, not a turn-level shuffle.
 
-    Why this shape at scale: the base table is CONVERSATION-level (orders
-    of magnitude smaller than the turn count), so attaching doc ids to a
-    10^12-row posting stream becomes a broadcast hash join + one integer
-    add — replacing a full sort-merge shuffle of the postings on a fat
-    (conv_id string, turn_idx) key. The cumsum itself is the two-phase
-    range-partitioned pattern (local window cumsum + #partitions driver
-    offsets). At ~10^9+ conversations the base table outgrows broadcast:
-    persist it bucketed by conv_id (or rely on the Iceberg identity
-    partition) and let the join be storage-co-located instead.
-
-    Requires turn_idx >= 0 (schema contract).
-    """
-    ext = doc_lens.groupBy("conv_id").agg(
-        (F.max("turn_idx") + 1).cast("long").alias("_n")
-    )
-    return two_phase_cumsum(
-        ext, "conv_id", "_n", "base", num_partitions=num_partitions
-    ).select("conv_id", "base")
-
-
-def conv_doc_base_with_stats(
-    doc_lens: DataFrame, num_partitions: int = 32
-) -> tuple[DataFrame, int, float]:
-    """conv_doc_base PLUS the corpus scalar constants, from ONE
-    conversation-level aggregation: per-conv doc count and length sum
-    ride the same groupBy that feeds the base cumsum, so n_docs and
-    avg_doc_len derive from the (small, checkpointed) conversation
-    table instead of a second full pass over doc_lens — the separate
-    corpus_stats scan was a measured non-scaling term of finalize.
-
-    avg_doc_len stays bit-identical to corpus_stats: doc_len sums are
-    integer-exact well below 2^53, so Σlen/Σcount equals avg() however
-    the partials associate.
-
-    Returns (base DataFrame(conv_id, base), n_docs, avg_doc_len).
-    """
-    # the cumsum's boundary-sampling pass and its shuffle pass would
-    # otherwise each re-run this full doc_lens aggregation; the conv
-    # table is tiny, so cache it for the second pass and release after
-    # the checkpoint inside two_phase_cumsum has materialized. The
-    # corpus totals ride the cumsum's own offsets collect — zero extra
-    # jobs for stats.
-    ext = doc_lens.groupBy("conv_id").agg(
-        (F.max("turn_idx") + 1).cast("long").alias("_n"),
-        F.count(F.lit(1)).alias("_cnt"),
-        F.sum("doc_len").cast("long").alias("_sum"),
-    ).cache()
-    totals: dict = {}
-    cum = two_phase_cumsum(
-        ext, "conv_id", "_n", "base", num_partitions=num_partitions,
-        extra_sums=["_cnt", "_sum"], totals_out=totals,
-    )
-    ext.unpersist()
-    n_docs = int(totals.get("_cnt") or 0)
-    avg = (float(totals["_sum"]) / n_docs) if n_docs else 0.0
-    return cum.select("conv_id", "base"), n_docs, avg
-
-
-def conv_doc_base_with_stats_ranged(
-    doc_lens: DataFrame,
-) -> tuple:
-    """conv_doc_base_with_stats for doc_lens that carry the build's
-    ``partition_id`` column (the conv_partition_map contract: each
-    partition owns a CONTIGUOUS conv_id range, ranges ascending in
-    partition_id).
-
-    The data-defined ranges replace repartitionByRange entirely, which
-    removes BOTH non-scaling terms of the generic cumsum: the boundary
-    -sampling pass and the eager localCheckpoint. No checkpoint is
-    needed because partition_id is a DATA column — any recomputation
-    (lost cache block, task retry) reproduces the identical grouping,
-    so the overlapping-id hazard of sampled boundaries cannot occur.
+    ``partition_id`` is the build's conv-range split (conv_partition_map
+    contract: each partition owns a CONTIGUOUS conv_id range, ranges
+    ascending in partition_id). The data-defined ranges stand in for
+    repartitionByRange, so there is no boundary-sampling pass and no
+    checkpoint: partition_id is a DATA column, so any recomputation
+    (lost cache block, task retry) reproduces the identical grouping
+    and sampled-boundary overlapping ids cannot occur.
 
     Job shape: one collect (materializes the conv-level aggregate and
     yields per-partition totals = cumsum offsets + corpus stats) and
@@ -263,13 +196,13 @@ def conv_doc_base_with_stats_ranged(
     (the base/ write). The within-partition cumsum is a window over
     partition_id — one group per build partition, conv-level rows, so
     at 10^12 turns with 10^5 build partitions each group holds ~10^4
-    conversations: no skew, no single-partition window.
+    conversations: no skew, no single-partition window. avg_doc_len
+    equals corpus_stats' avg() bit for bit: doc_len sums are
+    integer-exact well below 2^53.
 
     Returns (base DataFrame(conv_id, base), n_docs, avg_doc_len,
     release) — ``release()`` unpersists the backing conv-level cache
-    once the caller has consumed ``base`` (e.g. after the base/ write);
-    values are identical to conv_doc_base_with_stats (same math,
-    associativity-safe integer sums).
+    once the caller has consumed ``base`` (e.g. after the base/ write).
     """
     ext = doc_lens.groupBy("partition_id", "conv_id").agg(
         (F.max("turn_idx") + 1).cast("long").alias("_n"),
@@ -315,25 +248,6 @@ def conv_doc_base_with_stats_ranged(
         .select("conv_id", "base")
     )
     return base, n_docs, avg, ext.unpersist
-
-
-def assign_doc_ids(
-    doc_lens: DataFrame,
-    num_partitions: int = 32,
-    base: DataFrame | None = None,
-) -> DataFrame:
-    """Doc ids ascending in (conv_id, turn_idx): ascending doc_id IS
-    the stable turn ordering (BASELINE.json:15), so doc-ordered posting
-    traversal and the (conv_id, turn_idx)-asc tie-break coincide.
-
-    doc_id = conv base offset + turn_idx (see conv_doc_base): attached
-    by a broadcast join on conv_id — no turn-level shuffle."""
-    b = base if base is not None else conv_doc_base(doc_lens, num_partitions)
-    return (
-        doc_lens.join(F.broadcast(b), "conv_id")
-        .withColumn("doc_id", (F.col("base") + F.col("turn_idx")).cast("long"))
-        .drop("base")
-    )
 
 
 def term_stats_from_partials(partials: DataFrame) -> DataFrame:
@@ -383,6 +297,23 @@ def build_dictionary(
     return assign_term_ids(pruned, num_partitions=num_partitions).select(
         "term", "term_id", "df", "ttf"
     )
+
+
+def project_onto_dictionary(
+    raw_postings: DataFrame,
+    terms: DataFrame,
+    doc_keys: tuple = ("conv_id", "turn_idx"),
+) -> tuple[DataFrame, DataFrame]:
+    """(postings, doc_lens) re-projected onto a pruned dictionary: the
+    postings of retained terms only, with doc_len recomputed over them,
+    and doc_lens(*doc_keys, doc_len) for every doc that keeps a term —
+    the reference's pass-2 with a frozen CV (SURVEY §3.2). ``doc_keys``
+    may lead with partition_id (a conversation never spans two)."""
+    kept = raw_postings.drop("doc_len").join(
+        F.broadcast(terms.select("term")), "term", "left_semi"
+    )
+    doc_lens = kept.groupBy(*doc_keys).agg(F.sum("tf").alias("doc_len"))
+    return kept.join(doc_lens, list(doc_keys)), doc_lens
 
 
 def corpus_stats(doc_lens: DataFrame) -> tuple[int, float]:

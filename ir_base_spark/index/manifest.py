@@ -220,11 +220,16 @@ def _split_input(
     if os.path.exists(marker):
         with open(marker) as fh:
             meta = json.load(fh)
-        if meta.get("snapshot_id") == snap and meta.get("num_partitions") == num_partitions:
+        if (
+            meta.get("snapshot_id") == snap
+            and meta.get("num_partitions") == num_partitions
+            and "conv_ranges" in meta
+        ):
             return snap
         raise ValueError(
             f"index_root {index_root} was split for snapshot "
-            f"{meta.get('snapshot_id')}/{meta.get('num_partitions')} parts; "
+            f"{meta.get('snapshot_id')}/{meta.get('num_partitions')} parts"
+            f"{'' if 'conv_ranges' in meta else ' without conv ranges'}; "
             f"got {snap}/{num_partitions}. Use a fresh index_root."
         )
     cmap_dir = os.path.join(index_root, "conv_parts")
@@ -274,25 +279,10 @@ def _split_input(
     return snap
 
 
-def _conv_ranges(spark: SparkSession, index_root: str) -> dict:
-    """{partition_id: [conv_min, conv_max]} from the split marker;
-    recomputed from conv_parts/ for roots split before the marker
-    carried ranges (and re-persisted so the agg runs at most once)."""
-    marker = os.path.join(index_root, "input_parts.done.json")
-    with open(marker) as fh:
-        meta = json.load(fh)
-    if "conv_ranges" in meta:
-        return {int(k): v for k, v in meta["conv_ranges"].items()}
-    cmap = spark.read.parquet(os.path.join(index_root, "conv_parts"))
-    ranges = {
-        int(r["partition_id"]): [r["cmin"], r["cmax"]]
-        for r in cmap.groupBy("partition_id")
-        .agg(F.min("conv_id").alias("cmin"), F.max("conv_id").alias("cmax"))
-        .collect()
-    }
-    meta["conv_ranges"] = ranges
-    _atomic_write_json(marker, meta)
-    return ranges
+def _conv_ranges(index_root: str) -> dict:
+    """{partition_id: [conv_min, conv_max]} from the split marker."""
+    with open(os.path.join(index_root, "input_parts.done.json")) as fh:
+        return {int(k): v for k, v in json.load(fh)["conv_ranges"].items()}
 
 
 def _empty_partition_manifest(snap: str, pid: int) -> PartitionManifest:
@@ -308,7 +298,6 @@ def _build_wave(
     index_root: str,
     snap: str,
     wave: list[int],
-    num_partitions: int,
     ngrams: int,
     analyzer: str,
     min_distinct_terms: int,
@@ -355,8 +344,6 @@ def _build_wave(
     tmp_dir = os.path.join(post_root, "._tmp_wave")
     if os.path.isdir(tmp_dir):
         shutil.rmtree(tmp_dir)
-    _dbg = os.environ.get("SPARK_GRAFT_PHASE_DEBUG")
-    _tw = time.time()
     # the write job is PURE tokenize+write: conv ranges were computed
     # once at split time (the split owns partition boundaries), and the
     # count metrics ride the term-partials pass below — the old
@@ -364,9 +351,6 @@ def _build_wave(
     # aggregates per posting row inside the write job, a measured ~45%
     # overhead of the build wave at 16 cores
     postings.write.partitionBy("partition_id").mode("overwrite").parquet(tmp_dir)
-    if _dbg:
-        print(f"    wave write: {time.time()-_tw:.2f}s", flush=True)
-        _tw = time.time()
 
     # per-partition PARTIAL term stats, aggregated while the wave's
     # postings are page-hot: finalize's dictionary agg then reads
@@ -401,9 +385,6 @@ def _build_wave(
         .mode("overwrite")
         .parquet(ptmp)
     )
-    if _dbg:
-        print(f"    wave term partials: {time.time()-_tw:.2f}s", flush=True)
-        _tw = time.time()
     # manifest count metrics: a tiny rollup of the partials output
     # (conv-level ranges come from the split marker). postings = Σdf,
     # terms = Σttf, turns = Σdh — exact, same source of truth as the
@@ -419,7 +400,7 @@ def _build_wave(
         )
         .collect()
     }
-    ranges = _conv_ranges(spark, index_root)
+    ranges = _conv_ranges(index_root)
     stats = {
         pid: {
             "postings": rollup[pid]["postings"],
@@ -471,8 +452,6 @@ def _build_wave(
             os.path.join(_manifest_dir(index_root), f"p{pid}.json"), asdict(m)
         )
         out.append(m)
-    if _dbg:
-        print(f"    wave promote: {time.time()-_tw:.2f}s", flush=True)
     shutil.rmtree(tmp_dir, ignore_errors=True)
     shutil.rmtree(ptmp, ignore_errors=True)
     return out
@@ -543,8 +522,8 @@ def resumable_build(
     for i in range(0, len(todo), wave_size):
         wave = todo[i : i + wave_size]
         for m in _build_wave(
-            spark, index_root, snap, wave, num_partitions,
-            ngrams, analyzer, min_distinct_terms,
+            spark, index_root, snap, wave, ngrams, analyzer,
+            min_distinct_terms,
         ):
             built += 1
             turns_total += m.turns
@@ -613,83 +592,44 @@ def finalize_lite(
     scheme: str = "BM25",
     min_df: int = 1,
     max_df: int | None = None,
-    write_docs: bool = True,
     norm: int = 0,
 ):
-    """Metadata-only finalize for the block index
-    (blocks.encode_shards_from_postings): computes the dictionary, doc
-    lengths, conversation bases and corpus constants and writes terms/
-    base/ docs/ + stats.json (which records ``scheme`` and ``norm`` for
-    the encoder). No weights artifact — the posting stream is
-    materialized exactly once (the tokenize output); weights, and the
-    per-doc L1/L2 norm, are computed vectorized inside the shard
-    encoder.
+    """The one finalize of a built root (resumable_build's postings/):
+    computes the dictionary, doc lengths, conversation bases and corpus
+    constants and writes terms/ base/ + stats.json, which records
+    ``scheme``, ``norm``, ``min_df`` and ``max_df`` for the block
+    encoder (blocks.encode_shards_from_postings) and for open_index. No
+    weights artifact — the posting stream is materialized exactly once
+    (the tokenize output); weights, and the per-doc L1/L2 norm, are
+    computed vectorized inside the shard encoder.
 
     Scaling shape (this phase was the binding flat term of the pipeline
     at small core counts — fixed driver/job barriers, not data volume):
-    - TWO composite chains run as concurrent driver-thread jobs, each
-      ENDING IN ITS OWN ARTIFACT WRITES, so no write waits on an
-      unrelated chain's barrier: [dictionary agg → dense ids → terms/]
-      ∥ [doc_lens → conv base cumsum + corpus stats → base/ ∥ docs/].
+    - TWO composite chains, each ENDING IN ITS OWN ARTIFACT WRITE:
+      [dictionary agg → dense ids → terms/] and [doc_lens → conv base
+      cumsum + corpus stats → base/]. Unpruned, they run as concurrent
+      driver-thread jobs, so neither write waits on the other chain's
+      barriers. When min_df/max_df prune, doc lengths count retained
+      terms only, so the docs chain runs after terms/ and re-projects
+      the postings onto the cached dictionary.
     - corpus stats ride the conversation-level aggregate
-      (conv_doc_base_with_stats) instead of a second full doc_lens
-      pass.
-    - no separate base.count pin: two_phase_cumsum's eager
-      localCheckpoint already froze the range boundaries.
+      (conv_doc_base_with_stats_ranged) instead of a second full
+      doc_lens pass.
 
     Returns (InvertedIndex, base DataFrame).
     """
-    from .build import InvertedIndex
     from .dictionary import (
-        assign_doc_ids,
         build_dictionary,
-        conv_doc_base,
         conv_doc_base_with_stats_ranged,
+        project_onto_dictionary,
         term_stats_from_partials,
     )
-    from .weights import set_feature_values
-
-    pruning = min_df > 1 or max_df is not None
-    if pruning:
-        # rare path: the doc projection depends on the pruned
-        # dictionary, so the chains are sequential by data dependency
-        idx = finalize_index(
-            spark, index_root, scheme=scheme, norm=norm,
-            min_df=min_df, max_df=max_df,
-        )
-        base = conv_doc_base(idx.doc_lens).cache()
-        base.count()
-        docs = assign_doc_ids(idx.doc_lens, base=base)
-        _parallel_jobs(
-            lambda: idx.terms.write.mode("overwrite").parquet(
-                os.path.join(index_root, "terms")
-            ),
-            lambda: base.write.mode("overwrite").parquet(
-                os.path.join(index_root, "base")
-            ),
-            lambda: docs.write.mode("overwrite").parquet(
-                os.path.join(index_root, "docs")
-            ),
-        )
-        return idx, base
 
     # raw postings deliberately NOT cached — page-cached parquet
     # re-reads are cheaper than JVM cache materialization (measured)
     raw_p = load_postings(spark, index_root)
     raw = raw_p.drop("partition_id")
-    # doc_lens KEEPS partition_id: the build's conv-range partitioning
-    # (conv_partition_map: contiguous conv ranges ascending in
-    # partition_id) lets the base cumsum run shuffle-sample-free and
-    # checkpoint-free (conv_doc_base_with_stats_ranged)
-    doc_lens = raw_p.filter(F.col("is_doc_head") == 1).select(
-        "partition_id", "conv_id", "turn_idx", "doc_len"
-    )
-    if write_docs:
-        # two consumers (conv aggregate + the docs export join) — pin it;
-        # with write_docs=False the conv aggregate is the only consumer
-        # (and it is itself cached inside conv_doc_base_with_stats), so
-        # the cache materialization pass would be pure overhead
-        doc_lens = doc_lens.cache()
+    pruned = min_df > 1 or max_df is not None
     box: dict = {}
 
     # build-time per-partition term partials (when complete) replace
@@ -721,51 +661,85 @@ def finalize_lite(
         box["terms"] = t
 
     def docs_chain():
+        # doc_lens KEEPS partition_id: the build's conv-range
+        # partitioning (conv_partition_map: contiguous conv ranges
+        # ascending in partition_id) lets the base cumsum run
+        # shuffle-sample-free and checkpoint-free
+        if pruned:
+            _, doc_lens = project_onto_dictionary(
+                raw_p, box["terms"], ("partition_id", "conv_id", "turn_idx")
+            )
+        else:
+            doc_lens = raw_p.filter(F.col("is_doc_head") == 1).select(
+                "partition_id", "conv_id", "turn_idx", "doc_len"
+            )
         base, n_docs, avg_doc_len, release = conv_doc_base_with_stats_ranged(
             doc_lens
         )
+        base.write.mode("overwrite").parquet(os.path.join(index_root, "base"))
+        release()
         box["base"] = base
         box["stats"] = (n_docs, avg_doc_len)
-        writes = [
-            lambda: base.write.mode("overwrite").parquet(
-                os.path.join(index_root, "base")
-            )
-        ]
-        if write_docs:
-            # the turn-level docs export is a CONVENIENCE table: the
-            # queryable index needs only terms/ base/ stats + blocks
-            # (doc_id = base[conv] + turn_idx by construction, labels
-            # resolve from base/ in-kernel). At 10^12 turns callers
-            # skip this redundant full-corpus write.
-            docs = assign_doc_ids(
-                doc_lens.drop("partition_id"), base=base
-            )
-            writes.append(
-                lambda: docs.write.mode("overwrite").parquet(
-                    os.path.join(index_root, "docs")
-                )
-            )
-        _parallel_jobs(*writes)
-        release()
 
-    _parallel_jobs(terms_chain, docs_chain)
+    if pruned:
+        terms_chain()
+        docs_chain()
+    else:
+        _parallel_jobs(terms_chain, docs_chain)
     n_docs, avg_doc_len = box["stats"]
-    _atomic_write_json(
-        os.path.join(index_root, "stats.json"),
-        {"n_docs": n_docs, "avg_doc_len": avg_doc_len,
-         "scheme": scheme, "norm": norm},
-    )
-    terms = box["terms"]
-    weights = set_feature_values(
-        raw, terms, n_docs, avg_doc_len, scheme=scheme, norm=norm
-    )
-    idx = InvertedIndex(
-        terms=terms, weights=weights,
-        doc_lens=doc_lens.drop("partition_id"),
-        n_docs=n_docs, avg_doc_len=avg_doc_len,
+    stats = {"n_docs": n_docs, "avg_doc_len": avg_doc_len, "scheme": scheme,
+             "norm": norm, "min_df": min_df, "max_df": max_df}
+    _atomic_write_json(os.path.join(index_root, "stats.json"), stats)
+    return _m1_index(raw, box["terms"], stats), box["base"]
+
+
+def open_index(spark: SparkSession, index_root: str):
+    """Read-only M1 InvertedIndex over a root finalized by finalize_lite.
+
+    Reads terms/, stats.json and postings/ and writes nothing, so the M1
+    DataFrame path scores against exactly the dictionary and corpus
+    constants the block encoder used (query.wand reads the same files).
+    A pruned root (stats.json min_df > 1 or a max_df) re-projects doc
+    lengths onto the stored dictionary, as finalize_lite did."""
+    path = os.path.join(index_root, "stats.json")
+    stats: dict = {}
+    if os.path.exists(path):
+        with open(path) as fh:
+            stats = json.load(fh)
+    if not {"min_df", "max_df"} <= stats.keys():
+        raise ValueError(
+            f"{path} is missing or records no min_df/max_df; run "
+            "manifest.finalize_lite on this index_root (with the build's "
+            "min_df/max_df), then encode_shards_from_postings"
+        )
+    terms = spark.read.parquet(os.path.join(index_root, "terms"))
+    raw = load_postings(spark, index_root).drop("partition_id")
+    return _m1_index(raw, terms, stats)
+
+
+def _m1_index(raw: DataFrame, terms: DataFrame, stats: dict):
+    """InvertedIndex over raw postings (no partition_id) and the
+    dictionary, under the corpus constants of ``stats`` (stats.json)."""
+    from .build import InvertedIndex
+    from .dictionary import project_onto_dictionary
+    from .weights import set_feature_values
+
+    if stats["min_df"] > 1 or stats["max_df"] is not None:
+        raw, doc_lens = project_onto_dictionary(raw, terms)
+    else:
+        doc_lens = raw.filter(F.col("is_doc_head") == 1).select(
+            "conv_id", "turn_idx", "doc_len"
+        )
+    n_docs, avg_doc_len = stats["n_docs"], stats["avg_doc_len"]
+    scheme, norm = stats["scheme"], stats["norm"]
+    return InvertedIndex(
+        terms=terms,
+        weights=set_feature_values(
+            raw, terms, n_docs, avg_doc_len, scheme=scheme, norm=norm
+        ),
+        doc_lens=doc_lens, n_docs=n_docs, avg_doc_len=avg_doc_len,
         ngrams=1, scheme=scheme, norm=norm,
     )
-    return idx, box["base"]
 
 
 def build_single_shard_index(
@@ -776,8 +750,8 @@ def build_single_shard_index(
     block_size: int = DEFAULT_BLOCK_SIZE,
 ) -> dict:
     """Throwaway block index for an in-query build: tokenize_turns → one
-    ``postings/partition_id=0`` shard → finalize_lite(write_docs=False)
-    → encode_shards_from_postings. ``index_root`` must be fresh (the
+    ``postings/partition_id=0`` shard → finalize_lite →
+    encode_shards_from_postings. ``index_root`` must be fresh (the
     postings write refuses an existing shard); nothing here resumes —
     resumable_build's split, manifest and snapshot machinery buy nothing
     for an index that is built once and dropped. Returns the encode
@@ -785,7 +759,7 @@ def build_single_shard_index(
     tokenize_turns(transcripts, analyzer=analyzer).write.parquet(
         os.path.join(index_root, "postings", "partition_id=0")
     )
-    finalize_lite(spark, index_root, write_docs=False)
+    finalize_lite(spark, index_root)
     return encode_shards_from_postings(spark, index_root, block_size=block_size)
 
 
@@ -811,82 +785,3 @@ def _parallel_jobs(*thunks) -> None:
         th.join()
     if errors:
         raise errors[0]
-
-
-def finalize_index(
-    spark: SparkSession,
-    index_root: str,
-    scheme: str = "BM25",
-    norm: int = 0,
-    min_df: int = 1,
-    max_df: int | None = None,
-):
-    """Derived phase: dictionary + corpus stats + weighted postings from
-    the checkpointed raw postings (cheap relative to tokenize; reruns
-    wholesale on resume). Returns an InvertedIndex and pins stats.json.
-    """
-    from .build import InvertedIndex
-    from .dictionary import build_dictionary, corpus_stats
-    from .weights import set_feature_values
-
-    # raw postings feed three consumers (dictionary agg, doc lengths,
-    # weighting join); deliberately NOT cached — page-cached parquet
-    # re-reads are cheaper and scale better than JVM cache
-    # materialization (measured: ~25% faster at 8 and 32 cores)
-    raw = load_postings(spark, index_root).drop("partition_id")
-    pruning = min_df > 1 or max_df is not None
-    if not pruning:
-        # dictionary aggregation and the doc-length/corpus-stat chain
-        # are independent subgraphs — materialize them as CONCURRENT
-        # Spark jobs so neither chain's driver barriers idle the cores
-        terms = build_dictionary(raw, min_df=min_df, max_df=max_df).cache()
-        doc_lens = (
-            raw.filter(F.col("is_doc_head") == 1)
-            .select("conv_id", "turn_idx", "doc_len")
-            .cache()
-        )
-        stats_box: dict = {}
-
-        def _stats():
-            stats_box["ns"] = corpus_stats(doc_lens)
-
-        _parallel_jobs(terms.count, _stats)
-        n_docs, avg_doc_len = stats_box["ns"]
-        _atomic_write_json(
-            os.path.join(index_root, "stats.json"),
-            {"n_docs": n_docs, "avg_doc_len": avg_doc_len,
-             "scheme": scheme, "norm": norm},
-        )
-        weights = set_feature_values(
-            raw, terms, n_docs, avg_doc_len, scheme=scheme, norm=norm
-        )
-        return InvertedIndex(
-            terms=terms, weights=weights, doc_lens=doc_lens,
-            n_docs=n_docs, avg_doc_len=avg_doc_len,
-            ngrams=1, scheme=scheme, norm=norm,
-        )
-    # pruning path: the doc projection depends on the pruned dictionary,
-    # so the chains are sequential by data dependency
-    terms = build_dictionary(raw, min_df=min_df, max_df=max_df).cache()
-    # re-project doc vectors onto the pruned dictionary: doc_len,
-    # n_docs and avg_doc_len must reflect retained terms only —
-    # identical semantics to build_index's pruning branch (the
-    # reference's pass-2 with frozen CV, SURVEY §3.2)
-    kept = raw.drop("doc_len").join(
-        F.broadcast(terms.select("term")), "term", "left_semi"
-    )
-    doc_lens = kept.groupBy("conv_id", "turn_idx").agg(
-        F.sum("tf").alias("doc_len")
-    ).cache()
-    raw = kept.join(doc_lens, ["conv_id", "turn_idx"])
-    n_docs, avg_doc_len = corpus_stats(doc_lens)
-    _atomic_write_json(
-        os.path.join(index_root, "stats.json"),
-        {"n_docs": n_docs, "avg_doc_len": avg_doc_len, "scheme": scheme, "norm": norm},
-    )
-    weights = set_feature_values(raw, terms, n_docs, avg_doc_len, scheme=scheme, norm=norm)
-    return InvertedIndex(
-        terms=terms, weights=weights, doc_lens=doc_lens,
-        n_docs=n_docs, avg_doc_len=avg_doc_len,
-        ngrams=1, scheme=scheme, norm=norm,
-    )

@@ -65,9 +65,6 @@ def main() -> None:
     from ir_base_spark.query.wand import wand_topk_sharded
 
     root = args.index_root
-    with open(os.path.join(root, "stats.json")) as fh:
-        stats = json.load(fh)
-
     qpdf = enforce_query_cap(spark.read.parquet(args.queries), args.queries)
     qt = analyze_query_terms(spark, qpdf, analyzer=args.analyzer)
 
@@ -77,13 +74,10 @@ def main() -> None:
         # matched-term row groups per shard
         out = wand_topk_sharded(spark, root, qt, algo=args.algo)
     else:
-        from ir_base_spark.index.manifest import finalize_index
+        # read-only M1 view of the same finalized artifacts
+        from ir_base_spark.index.manifest import open_index
 
-        idx = finalize_index(
-            spark, root, scheme=stats.get("scheme", "BM25"),
-            norm=stats.get("norm", 0),
-        )
-        out = topk_search(idx, qt)
+        out = topk_search(open_index(spark, root), qt)
 
     if args.output:
         out.write.mode("overwrite").parquet(args.output)

@@ -6,7 +6,8 @@ import os
 import shutil
 
 from ir_base_spark.index.manifest import (
-    finalize_index,
+    finalize_lite,
+    open_index,
     read_manifest,
     resumable_build,
 )
@@ -99,8 +100,13 @@ def test_resumed_index_identical_to_fresh(spark, fixture_small, tmp_path):
         shutil.rmtree(os.path.join(root_b, "postings", f"partition_id={pid}"))
     resumable_build(spark, t, root_b, num_partitions=P)
 
-    ia = finalize_index(spark, root_a)
-    ib = finalize_index(spark, root_b)
+    _, base_a = finalize_lite(spark, root_a)
+    _, base_b = finalize_lite(spark, root_b)
+    assert {tuple(r) for r in base_a.collect()} == {
+        tuple(r) for r in base_b.collect()
+    }
+    ia = open_index(spark, root_a)
+    ib = open_index(spark, root_b)
     assert ia.n_docs == ib.n_docs
     assert ia.avg_doc_len == ib.avg_doc_len
     ta = {tuple(r) for r in ia.terms.collect()}
@@ -112,22 +118,71 @@ def test_resumed_index_identical_to_fresh(spark, fixture_small, tmp_path):
 
 
 def test_finalize_pruning_identity(spark, fixture_small, tmp_path):
-    """finalize_index(min_df/max_df) must re-project doc stats onto the
-    pruned dictionary exactly like build_index's pruning branch."""
+    """finalize_lite(min_df/max_df), and open_index on its root, must
+    re-project doc stats onto the pruned dictionary exactly like
+    build_index's pruning branch."""
     from ir_base_spark.index.build import build_index
 
     t = spark.createDataFrame(fixture_small.transcripts)
     root = str(tmp_path / "idx")
     resumable_build(spark, t, root, num_partitions=4)
 
-    fin = finalize_index(spark, root, min_df=3, max_df=500)
+    fin, _ = finalize_lite(spark, root, min_df=3, max_df=500)
     ref = build_index(spark, t, min_df=3, max_df=500)
-
-    assert fin.n_docs == ref.n_docs
-    assert abs(fin.avg_doc_len - ref.avg_doc_len) < 1e-12
-    ta = {tuple(r) for r in fin.terms.collect()}
     tb = {tuple(r) for r in ref.terms.collect()}
-    assert ta == tb
-    wa = {(r[0], r[1], r[2], round(r[3], 12)) for r in fin.weights.collect()}
     wb = {(r[0], r[1], r[2], round(r[3], 12)) for r in ref.weights.collect()}
-    assert wa == wb
+
+    for idx in (fin, open_index(spark, root)):
+        assert idx.n_docs == ref.n_docs
+        assert abs(idx.avg_doc_len - ref.avg_doc_len) < 1e-12
+        assert {tuple(r) for r in idx.terms.collect()} == tb
+        wa = {(r[0], r[1], r[2], round(r[3], 12)) for r in idx.weights.collect()}
+        assert wa == wb
+
+
+def test_open_index_requires_finalize_lite(spark, fixture_small, tmp_path):
+    """A root whose stats.json does not record min_df/max_df (never
+    finalized, or finalized by an older build) is refused with an error
+    naming finalize_lite, not opened under guessed pruning."""
+    import json
+
+    import pytest
+
+    root = str(tmp_path / "idx")
+    resumable_build(
+        spark, spark.createDataFrame(fixture_small.transcripts), root,
+        num_partitions=2,
+    )
+    with pytest.raises(ValueError, match="finalize_lite"):
+        open_index(spark, root)
+    finalize_lite(spark, root)
+    path = os.path.join(root, "stats.json")
+    with open(path) as fh:
+        stats = json.load(fh)
+    del stats["max_df"]
+    with open(path, "w") as fh:
+        json.dump(stats, fh)
+    with pytest.raises(ValueError, match="finalize_lite"):
+        open_index(spark, root)
+
+
+def test_resume_rejects_marker_without_conv_ranges(
+    spark, fixture_small, tmp_path
+):
+    """A split marker that carries no per-partition conv ranges is not
+    resumed (nothing recomputes them): the build asks for a fresh root."""
+    import json
+
+    import pytest
+
+    t = spark.createDataFrame(fixture_small.transcripts)
+    root = str(tmp_path / "idx_marker")
+    resumable_build(spark, t, root, num_partitions=2)
+    marker = os.path.join(root, "input_parts.done.json")
+    with open(marker) as fh:
+        meta = json.load(fh)
+    del meta["conv_ranges"]
+    with open(marker, "w") as fh:
+        json.dump(meta, fh)
+    with pytest.raises(ValueError, match="Use a fresh index_root"):
+        resumable_build(spark, t, root, num_partitions=2)

@@ -13,6 +13,7 @@ from ir_base_spark.index.build import build_index
 from ir_base_spark.index.manifest import (
     build_single_shard_index,
     finalize_lite,
+    open_index,
     resumable_build,
 )
 from ir_base_spark.oracle import build_oracle_index, search_all
@@ -29,18 +30,29 @@ def _expected(fixture):
     )
 
 
-def _sharded_root(spark, transcripts, root, partitions, norm=0):
+def _sharded_root(spark, transcripts, root, partitions, **finalize_kw):
     """The production route: resumable build → metadata finalize →
     per-shard path-based block encode."""
     resumable_build(spark, spark.createDataFrame(transcripts), root,
                     num_partitions=partitions)
-    finalize_lite(spark, root, norm=norm)
+    finalize_lite(spark, root, **finalize_kw)
     return encode_shards_from_postings(spark, root, block_size=16)
 
 
 def _by_rank(rows):
     return {(r["query_id"], r["rank"]): (r["conv_id"], r["turn_idx"], r["score"])
             for r in rows}
+
+
+def _doc_labels(spark, root) -> list:
+    """(doc_id, conv_id, turn_idx) per postings doc head, with the
+    kernel's labelling rule doc_id = base[conv_id] + turn_idx."""
+    heads = spark.read.parquet(root + "/postings").filter("is_doc_head = 1")
+    return [
+        tuple(r) for r in heads.join(spark.read.parquet(root + "/base"), "conv_id")
+        .selectExpr("base + turn_idx AS doc_id", "conv_id", "turn_idx")
+        .collect()
+    ]
 
 
 def _decoded_weights(spark, root) -> dict:
@@ -57,8 +69,7 @@ def _decoded_weights(spark, root) -> dict:
     idf = dict(zip(t_ids.tolist(), t_idf.tolist()))
     term = {r["term_id"]: r["term"]
             for r in spark.read.parquet(root + "/terms").collect()}
-    label = {r["doc_id"]: (r["conv_id"], r["turn_idx"])
-             for r in spark.read.parquet(root + "/docs").collect()}
+    label = {d: (c, t) for d, c, t in _doc_labels(spark, root)}
     avg = float(stats["avg_doc_len"])
     metas: dict[int, tuple] = {}
     out = {}
@@ -132,9 +143,9 @@ def test_sharded_pipeline_rank_identity(spark, fixture_small, tmp_path):
     root = str(tmp_path / "sharded")
     rep = _sharded_root(spark, fixture_small.transcripts, root, 8)
     assert rep["shards"] >= 1 and rep["blocks"] > 0
-    # doc-id ranges must never overlap (two_phase_cumsum offset pin)
-    docs = spark.read.parquet(root + "/docs")
-    assert docs.count() == docs.select("doc_id").distinct().count()
+    # doc-id ranges must never overlap (per-partition base offsets)
+    labels = _doc_labels(spark, root)
+    assert len(labels) == len({d for d, _c, _t in labels})
 
     qt = analyze_query_terms(spark, fixture_small.queries)
     _compare(wand_topk_sharded(spark, root, qt).collect(),
@@ -212,3 +223,34 @@ def test_unscorable_block_files_raise(spark, fixture_small, tmp_path):
     pq.write_table(tbl.replace_schema_metadata(None), path)
     with pytest.raises(Exception, match="not a TF-payload block file"):
         wand_topk_sharded(spark, root, qt).collect()
+
+
+def test_pruned_root_one_answer(spark, fixture_small, tmp_path):
+    """A min_df/max_df-pruned root answers the same through block WAND
+    and through the read-only M1 view (open_index) as M1
+    build_index(min_df, max_df); the M1 query leaves stats.json
+    untouched, so a later WAND run returns the same rows."""
+    t = fixture_small.transcripts
+    root = str(tmp_path / "pruned")
+    _sharded_root(spark, t, root, 4, min_df=3, max_df=500)
+    qt = analyze_query_terms(spark, fixture_small.queries)
+    ref = build_index(spark, spark.createDataFrame(t), min_df=3, max_df=500)
+    want = _by_rank(topk_search(ref, qt).collect())
+
+    stats_path = os.path.join(root, "stats.json")
+    with open(stats_path, "rb") as fh:
+        stats_before = fh.read()
+    mtime_before = os.stat(stats_path).st_mtime_ns
+    wand_before = _by_rank(wand_topk_sharded(spark, root, qt).collect())
+    m1 = _by_rank(topk_search(open_index(spark, root), qt).collect())
+    with open(stats_path, "rb") as fh:
+        assert fh.read() == stats_before
+    assert os.stat(stats_path).st_mtime_ns == mtime_before
+    wand_after = _by_rank(wand_topk_sharded(spark, root, qt).collect())
+
+    assert wand_after == wand_before
+    for got in (wand_before, m1):
+        assert set(got) == set(want)
+        for key in want:
+            assert got[key][:2] == want[key][:2], key
+            assert abs(got[key][2] - want[key][2]) < 1e-9, key

@@ -10,8 +10,11 @@ single-box scaling of this phase. A real multi-node cluster gives every
 4-core executor its own memory bus, which is the configuration the
 north rule's N→4N criterion describes.
 
-    python tools/bus_probe.py --root /dev/shm/sg_encode_probe \
+    python tools/bus_probe.py --root /path/to/index \
         [--shard 3] [--conc 1,2,4,8,16] [--repeat 2]
+
+``--root`` is any finalized index root, e.g. one written by
+``jobs/build_index.py`` (postings/ plus terms/, base/ and stats.json).
 """
 
 from __future__ import annotations

@@ -81,14 +81,8 @@ def child(cores: int, input_path: str, n_queries: int, partitions: int = 32) -> 
         t0 = time.time()
         # metadata finalize (terms/base/stats written); the posting
         # stream is materialized exactly once — blocks build straight
-        # from the tokenize output (no weights artifact).
-        # write_docs=False: the turn-level docs/ export is a convenience
-        # table, not part of the queryable index (doc_id = base[conv] +
-        # turn_idx by construction; result labels resolve from base/
-        # in-kernel) — at 10^12 turns no production build would write a
-        # redundant full-corpus table, so the timed pipeline doesn't
-        # either (r3 and earlier included it; noted in BENCH/BASELINE.md)
-        idx, base = finalize_lite(spark, root, write_docs=False)
+        # from the tokenize output
+        idx, base = finalize_lite(spark, root)
         f = time.time() - t0
 
         t0 = time.time()
@@ -388,8 +382,9 @@ def main() -> None:
         "bus ceiling — closer to what four 2-core executors with private",
         "memory buses (the north rule's actual configuration) would see.",
         "Per-shard encode phase timings (read/map/sort/encode/write) are",
-        "reported by `encode_shards_from_postings` and",
-        "`tools/encode_probe.py`.",
+        "reported by `encode_shards_from_postings` (and per layer as",
+        "`encode_shards_from_postings.{read,map,sort,encode,write}_task_s`",
+        "by `perfbench/run.py --trace 1`).",
         "",
         "Round-4 measurement-comparability notes (vs scaling.json r<=3):",
         "(a) finalize is the fused two-chain version and the timed",
