@@ -5,9 +5,10 @@ reference IR codebase (mikelatch/IR_Base, surveyed in SURVEY.md): text
 analysis (tokenize/normalize/Porter2-stem/n-gram), exact corpus
 statistics, BM25/TFIDF weighting, inverted-index construction with
 delta-gap + varbyte compressed posting blocks and per-block max-score,
-block-max WAND top-k retrieval, resumable index builds with per-partition
-manifests, and a library of large-scale text-pipeline operators
-(dedup, similarity search, text stats) over plain DataFrames.
+exact top-k retrieval over them (chunked MaxScore), resumable index
+builds with per-partition manifests, and a library of large-scale
+text-pipeline operators (dedup, similarity search, text stats) over
+plain DataFrames.
 """
 
 __version__ = "0.1.0"

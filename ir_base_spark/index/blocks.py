@@ -18,7 +18,8 @@ shard (``blocks/partition_id=<p>/blocks.parquet``):
   ``_doclen.npz`` sidecar (doc lengths, and the per-doc L1/L2 norm when
   the index was finalized with one) with the encoder's expression and
   operand order, so scores are bit-identical to the encoder's weights;
-- ``max_weight`` per block drives block-max WAND pruning (query/wand.py).
+- ``max_weight`` per block bounds each term's score: the query
+  kernel's MaxScore upper bound (query/wand.py).
 
 Hot-term skew (SURVEY §4, §7.3): a shard is a contiguous DOC range (the
 build's conv-range split), so a Zipf-head term's postings split across

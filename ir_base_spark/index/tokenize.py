@@ -15,12 +15,12 @@ per-character work (token-boundary regex split, flatten,
 distinct-encoding) is Arrow C++, Python analyzes only DISTINCT coarse
 tokens through the per-worker memo (Zipf text → the NFKC+stem cost is
 amortized to near zero), and TF/doc_len/head come from one
-composite-key numpy pass (see _arrow_unigram_batch). ngrams >= 2
-builds run the same way (_arrow_ngram_batch: whitespace-chunk split in
-Arrow, distinct-chunk event memo, vectorized window cascade) — there
-is no per-row Python on any build path. _vectorized_unigram_batch and
-_pandas_ngram_partition are the retained reference implementations
-the parity suite checks against.
+composite-key numpy pass (_postings_batch, shared with the n-gram
+kernel). ngrams >= 2 builds run the same way (_arrow_ngram_batch:
+whitespace-chunk split in Arrow, distinct-chunk event memo, vectorized
+window cascade) — there is no per-row Python on any build path.
+_vectorized_unigram_batch and _pandas_ngram_partition are the retained
+reference implementations the parity suite checks against.
 """
 
 from __future__ import annotations
@@ -29,12 +29,21 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
-POSTINGS_SCHEMA = (
-    "conv_id string, turn_idx int, term string, tf double, doc_len double, "
-    "is_doc_head int"
+POSTINGS_ARROW_SCHEMA = pa.schema(
+    [
+        ("conv_id", pa.string()),
+        ("turn_idx", pa.int32()),
+        ("term", pa.string()),
+        ("tf", pa.float64()),
+        ("doc_len", pa.float64()),
+        ("is_doc_head", pa.int32()),
+    ]
 )
+POSTINGS_SCHEMA = from_arrow_schema(POSTINGS_ARROW_SCHEMA)
 
 _EMPTY = {
     "conv_id": pd.Series([], dtype="object"),
@@ -113,6 +122,60 @@ def _vectorized_unigram_batch(
     )
 
 
+def _empty_postings():
+    return pa.RecordBatch.from_pylist([], schema=POSTINGS_ARROW_SCHEMA)
+
+
+def _postings_batch(batch, rows, fids, terms: list, min_distinct_terms: int):
+    """Postings of one input RecordBatch from its token stream: token j
+    is term ``terms[fids[j]]`` in row ``rows[j]`` of ``batch``.
+
+    TF per (row, term) comes from one sorted-unique pass over a
+    composite int key; rows with <= min_distinct_terms distinct terms
+    are dropped; doc_len is the row's Σ tf and exactly one output row
+    per doc carries is_doc_head = 1."""
+    import pyarrow.compute as pc
+
+    if rows.size == 0:
+        return _empty_postings()
+    nf = len(terms)
+    key = rows * nf + fids
+    ukey, counts = np.unique(key, return_counts=True)
+    ui = ukey // nf
+    uf = ukey % nf
+    # per-doc distinct-term count + analyzed length (rows of one doc are
+    # contiguous in the sorted key order)
+    _, inv = np.unique(ui, return_inverse=True)
+    sizes = np.bincount(inv)
+    sums = np.bincount(inv, weights=counts)
+    sel = (sizes > min_distinct_terms)[inv]
+    if not sel.all():
+        ui = ui[sel]
+        uf = uf[sel]
+        counts = counts[sel]
+        inv = inv[sel]
+    if ui.size == 0:
+        return _empty_postings()
+    # exactly one head row per doc: lets every consumer count/collect
+    # docs without a distinct or groupBy
+    head = np.empty(ui.shape, dtype=np.int32)
+    head[0] = 1
+    head[1:] = (ui[1:] != ui[:-1]).astype(np.int32)
+
+    rows_idx = pa.array(ui)
+    return pa.RecordBatch.from_arrays(
+        [
+            pc.take(batch.column("conv_id"), rows_idx),
+            pc.cast(pc.take(batch.column("turn_idx"), rows_idx), pa.int32()),
+            pc.take(pa.array(terms, type=pa.string()), pa.array(uf)),
+            pa.array(counts.astype(np.float64)),
+            pa.array(sums[inv]),
+            pa.array(head),
+        ],
+        schema=POSTINGS_ARROW_SCHEMA,
+    )
+
+
 _COARSE_CACHE: dict[str, dict[str, tuple[str, ...]]] = {}
 
 
@@ -181,19 +244,8 @@ def _arrow_unigram_batch(
     precisely in _analyze_coarse — output is exactly the pandas path's
     (asserted by tests/test_tokenize_arrow.py).
     """
-    import pyarrow as pa
     import pyarrow.compute as pc
 
-    schema = pa.schema(
-        [
-            ("conv_id", pa.string()),
-            ("turn_idx", pa.int32()),
-            ("term", pa.string()),
-            ("tf", pa.float64()),
-            ("doc_len", pa.float64()),
-            ("is_doc_head", pa.int32()),
-        ]
-    )
     text = pc.fill_null(batch.column(text_col), "")
     if analyzer == "simple":
         split = pc.split_pattern_regex(pc.utf8_lower(text), pattern="[^a-z0-9]+")
@@ -209,9 +261,7 @@ def _arrow_unigram_batch(
     flat = pc.filter(flat, ne)
     parent = pc.filter(parent, ne)
     if len(flat) == 0:
-        return pa.RecordBatch.from_pydict(
-            {f.name: pa.array([], type=f.type) for f in schema}, schema=schema
-        )
+        return _empty_postings()
     d = pc.dictionary_encode(flat)
     dict_vals = d.dictionary.to_pylist()
 
@@ -266,52 +316,7 @@ def _arrow_unigram_batch(
                 ef.append(f)
         row_k = np.concatenate([row_k, np.asarray(er, dtype=np.int64)])
         fid_k = np.concatenate([fid_k, np.asarray(ef, dtype=np.int64)])
-    if row_k.size == 0:
-        return pa.RecordBatch.from_pydict(
-            {f.name: pa.array([], type=f.type) for f in schema}, schema=schema
-        )
-
-    # TF per (row, term): one sorted-unique pass over a composite int key
-    nf = len(final_terms)
-    key = row_k * nf + fid_k
-    ukey, counts = np.unique(key, return_counts=True)
-    ui = ukey // nf
-    uf = ukey % nf
-    # per-doc distinct-term count + analyzed length (rows of one doc are
-    # contiguous in the sorted key order)
-    uniq_rows, inv = np.unique(ui, return_inverse=True)
-    sizes = np.bincount(inv)
-    sums = np.bincount(inv, weights=counts)
-    keep_doc = sizes > min_distinct_terms
-    sel = keep_doc[inv]
-    if not sel.all():
-        ui = ui[sel]
-        uf = uf[sel]
-        counts = counts[sel]
-        inv = inv[sel]
-    if ui.size == 0:
-        return pa.RecordBatch.from_pydict(
-            {f.name: pa.array([], type=f.type) for f in schema}, schema=schema
-        )
-    head = np.empty(ui.shape, dtype=np.int32)
-    head[0] = 1
-    head[1:] = (ui[1:] != ui[:-1]).astype(np.int32)
-
-    rows_idx = pa.array(ui)
-    out_conv = pc.take(batch.column("conv_id"), rows_idx)
-    out_turn = pc.cast(pc.take(batch.column("turn_idx"), rows_idx), pa.int32())
-    out_term = pc.take(pa.array(final_terms, type=pa.string()), pa.array(uf))
-    return pa.RecordBatch.from_arrays(
-        [
-            out_conv,
-            out_turn,
-            out_term,
-            pa.array(counts.astype(np.float64)),
-            pa.array(sums[inv]),
-            pa.array(head),
-        ],
-        schema=schema,
-    )
+    return _postings_batch(batch, row_k, fid_k, final_terms, min_distinct_terms)
 
 
 _CHUNK_EVENT_CACHE: dict[str, tuple] = {}
@@ -360,24 +365,7 @@ def _arrow_ngram_batch(batch, text_col: str, ngrams: int, min_distinct_terms: in
     gram strings are built once per DISTINCT (prefix-gram, stem) pair
     via a cascade, never per emission.
     """
-    import pyarrow as pa
     import pyarrow.compute as pc
-
-    schema = pa.schema(
-        [
-            ("conv_id", pa.string()),
-            ("turn_idx", pa.int32()),
-            ("term", pa.string()),
-            ("tf", pa.float64()),
-            ("doc_len", pa.float64()),
-            ("is_doc_head", pa.int32()),
-        ]
-    )
-
-    def _empty():
-        return pa.RecordBatch.from_pydict(
-            {f.name: pa.array([], type=f.type) for f in schema}, schema=schema
-        )
 
     text = pc.fill_null(batch.column(text_col), "")
     split = pc.split_pattern_regex(text, pattern=r"\s+")
@@ -387,7 +375,7 @@ def _arrow_ngram_batch(batch, text_col: str, ngrams: int, min_distinct_terms: in
     flat = pc.filter(flat, ne)
     parent = pc.filter(parent, ne)
     if len(flat) == 0:
-        return _empty()
+        return _empty_postings()
     d = pc.dictionary_encode(flat)
     dict_vals = d.dictionary.to_pylist()
 
@@ -429,7 +417,7 @@ def _arrow_ngram_batch(batch, text_col: str, ngrams: int, min_distinct_terms: in
     L = ev_len[tok_di]
     total = int(L.sum())
     if total == 0:
-        return _empty()
+        return _empty_postings()
     cum = np.cumsum(L)
     base = np.repeat(cum - L, L)
     within = np.arange(total, dtype=np.int64) - base
@@ -463,46 +451,12 @@ def _arrow_ngram_batch(batch, text_col: str, ngrams: int, min_distinct_terms: in
         g = g_new
         win_ok = new_ok
 
-    rows_all = np.concatenate(em_rows)
-    tids_all = np.concatenate(em_tids)
-    if rows_all.size == 0:
-        return _empty()
-
-    nf = len(terms_all)
-    key = rows_all * nf + tids_all
-    ukey, counts = np.unique(key, return_counts=True)
-    ui = ukey // nf
-    uf = ukey % nf
-    uniq_rows, inv = np.unique(ui, return_inverse=True)
-    sizes = np.bincount(inv)
-    sums = np.bincount(inv, weights=counts)
-    keep_doc = sizes > min_distinct_terms
-    sel = keep_doc[inv]
-    if not sel.all():
-        ui = ui[sel]
-        uf = uf[sel]
-        counts = counts[sel]
-        inv = inv[sel]
-    if ui.size == 0:
-        return _empty()
-    head = np.empty(ui.shape, dtype=np.int32)
-    head[0] = 1
-    head[1:] = (ui[1:] != ui[:-1]).astype(np.int32)
-
-    rows_idx = pa.array(ui)
-    out_conv = pc.take(batch.column("conv_id"), rows_idx)
-    out_turn = pc.cast(pc.take(batch.column("turn_idx"), rows_idx), pa.int32())
-    out_term = pc.take(pa.array(terms_all, type=pa.string()), pa.array(uf))
-    return pa.RecordBatch.from_arrays(
-        [
-            out_conv,
-            out_turn,
-            out_term,
-            pa.array(counts.astype(np.float64)),
-            pa.array(sums[inv]),
-            pa.array(head),
-        ],
-        schema=schema,
+    return _postings_batch(
+        batch,
+        np.concatenate(em_rows),
+        np.concatenate(em_tids),
+        terms_all,
+        min_distinct_terms,
     )
 
 

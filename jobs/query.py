@@ -45,13 +45,6 @@ def main() -> None:
     ap.add_argument("--index-root", required=True)
     ap.add_argument("--queries", required=True)
     ap.add_argument("--engine", default="wand", choices=["wand", "dataframe"])
-    ap.add_argument(
-        "--algo", default="auto",
-        choices=["auto", "wand", "taat", "maxscore"],
-        help="block-index scorer: vectorized block-max WAND (selective), "
-        "vectorized TAAT (batches), chunked MaxScore, or auto by query "
-        "count",
-    )
     ap.add_argument("--analyzer", default="reference", choices=["reference", "simple"])
     ap.add_argument("--output", default=None)
     args = ap.parse_args()
@@ -72,7 +65,7 @@ def main() -> None:
     if args.engine == "wand":
         # doc-sharded on-disk block layout: the kernel pulls only
         # matched-term row groups per shard
-        out = wand_topk_sharded(spark, root, qt, algo=args.algo)
+        out = wand_topk_sharded(spark, root, qt)
     else:
         # read-only M1 view of the same finalized artifacts
         from ir_base_spark.index.manifest import open_index

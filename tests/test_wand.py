@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pandas as pd
 import pyarrow.parquet as pq
 import pytest
 
@@ -18,7 +19,7 @@ from ir_base_spark.index.manifest import (
 )
 from ir_base_spark.oracle import build_oracle_index, search_all
 from ir_base_spark.query.dataframe_bm25 import analyze_query_terms, topk_search
-from ir_base_spark.query.wand import wand_topk_sharded
+from ir_base_spark.query.wand import ALGOS, wand_topk_sharded
 from tests.test_rank_identity import _compare, _oracle_docs
 
 
@@ -152,22 +153,50 @@ def test_sharded_pipeline_rank_identity(spark, fixture_small, tmp_path):
              _expected(fixture_small))
 
 
-def test_taat_matches_wand_sharded(spark, fixture_small, tmp_path):
-    """The vectorized TAAT batch kernel is rank- AND score-identical to
-    DAAT block-max WAND over the same sharded index."""
-    root = str(tmp_path / "taat")
+def _assert_rows_match(got: dict, want: dict) -> None:
+    """Same (query_id, rank) keys, same labels, |Δscore| < 1e-9."""
+    assert set(got) == set(want)
+    for key in want:
+        assert got[key][:2] == want[key][:2], key
+        assert abs(got[key][2] - want[key][2]) < 1e-9, key
+
+
+def test_algo_names_run_one_kernel(spark, fixture_small, tmp_path):
+    """Every accepted ``algo`` name returns the same rows, equal to the
+    M1 DataFrame path over the same root; an unknown name raises."""
+    root = str(tmp_path / "algos")
     _sharded_root(spark, fixture_small.transcripts, root, 4)
     qt = analyze_query_terms(spark, fixture_small.queries)
+    m1 = _by_rank(topk_search(open_index(spark, root), qt).collect())
+    rows = {
+        algo: _by_rank(wand_topk_sharded(spark, root, qt, algo=algo).collect())
+        for algo in ALGOS
+    }
+    assert set(ALGOS) == {"auto", "maxscore", "taat", "wand"}
+    for algo in ALGOS:
+        assert rows[algo] == rows["auto"], algo
+        _assert_rows_match(rows[algo], m1)
+    with pytest.raises(ValueError, match="unknown algo"):
+        wand_topk_sharded(spark, root, qt, algo="cursor")
 
-    wd = _by_rank(wand_topk_sharded(spark, root, qt, algo="wand").collect())
-    ta = _by_rank(wand_topk_sharded(spark, root, qt, algo="taat").collect())
-    ms = _by_rank(wand_topk_sharded(spark, root, qt, algo="maxscore").collect())
-    assert set(wd) == set(ta) == set(ms)
-    for key in wd:
-        assert wd[key][:2] == ta[key][:2], key
-        assert abs(wd[key][2] - ta[key][2]) < 1e-12, key
-        assert wd[key][:2] == ms[key][:2], key
-        assert abs(wd[key][2] - ms[key][2]) < 1e-12, key
+
+def test_k_zero_query_in_batch(spark, fixture_small, tmp_path):
+    """A k = 0 query returns no rows and leaves the rest of its batch
+    intact: the batch equals M1 ``topk_search``."""
+    root = str(tmp_path / "kzero")
+    _sharded_root(spark, fixture_small.transcripts, root, 4)
+    q = fixture_small.queries
+    q = pd.concat(
+        [q, pd.DataFrame({"query_id": ["q-k0"],
+                          "query_text": [q["query_text"].iloc[0]],
+                          "k": [0]})],
+        ignore_index=True,
+    )
+    qt = analyze_query_terms(spark, q)
+    got = _by_rank(wand_topk_sharded(spark, root, qt).collect())
+    assert not [key for key in got if key[0] == "q-k0"]
+    m1 = _by_rank(topk_search(open_index(spark, root), qt).collect())
+    _assert_rows_match(got, m1)
 
 
 def test_direct_postings_blocks_identical(spark, fixture_small, tmp_path):

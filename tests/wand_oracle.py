@@ -4,9 +4,9 @@
   production encoder (blocks._encode_sorted_run_arrow) from the same
   BM25 (+ optional per-doc norm) expression the shard encoder uses.
 - ``_ListIter`` / ``_wand_bucket``: the per-posting cursor DAAT block-max
-  WAND kernel. The engine's vectorized scorers (query/wand.py) replaced
-  it; it stays here as the independent reference they are fuzzed
-  against.
+  WAND kernel. The engine's one shard kernel, chunked MaxScore
+  (query/wand.py ``_maxscore_query``), replaced it; it stays here as
+  the independent reference the fuzz tests check against.
 """
 
 from __future__ import annotations
