@@ -14,12 +14,19 @@ shard (``blocks/partition_id=<p>/blocks.parquet``):
   Python in the build hot path);
 - the payload column carries varbyte TERM FREQUENCIES (~1 B/posting;
   the ``sg_payload=tfv1`` format). The exact BM25 double is rebuilt at
-  decode from the term's IDF (terms/ sidecar) and the per-shard
+  read time from the term's IDF (terms/ sidecar) and the per-shard
   ``_doclen.npz`` sidecar (doc lengths, and the per-doc L1/L2 norm when
-  the index was finalized with one) with the encoder's expression and
-  operand order, so scores are bit-identical to the encoder's weights;
+  the index was finalized with one), through the same numpy helpers
+  (``bm25_idf``, ``bm25_doc_denom``, ``bm25_weight``) the encoder uses,
+  so read weights are bit-identical to the encoder's;
 - ``max_weight`` per block bounds each term's score: the query
   kernel's MaxScore upper bound (query/wand.py).
+
+This module is the only one that knows the format: it writes it
+(``encode_shards_from_postings``) and reads it (``read_shard_lists``:
+a shard file → each matched term's doc ids, exact weights and bound,
+through the one decoder ``decode_postings_run``; ``label_docs``: doc
+id → (conv_id, turn_idx)).
 
 Hot-term skew (SURVEY §4, §7.3): a shard is a contiguous DOC range (the
 build's conv-range split), so a Zipf-head term's postings split across
@@ -30,9 +37,12 @@ independently with no posting-level shuffle and no merge stage.
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+
+from .weights import B, K1
 
 DEFAULT_BLOCK_SIZE = 128
 
@@ -81,101 +91,81 @@ def varbyte_encode(values: np.ndarray) -> bytes:
     return out.tobytes()
 
 
-def varbyte_decode(buf: bytes) -> np.ndarray:
-    """Vectorized varbyte decoder → uint64 array."""
+def varbyte_decode(buf) -> np.ndarray:
+    """Vectorized varbyte decoder (``buf``: bytes or a uint8 array) →
+    uint64 array."""
     b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, dtype=np.uint64)
     is_last = (b & 0x80) == 0
     if is_last.all():
         # every byte is a standalone value (< 128): term frequencies are
-        # overwhelmingly 1-2 and most delta gaps are < 128, so this
-        # branch skips the grouped-accumulation path (np.add.at) that
-        # dominates generic decode
+        # overwhelmingly 1-2 and most delta gaps are < 128
         return b.astype(np.uint64)
-    group = np.zeros(b.shape, dtype=np.int64)
-    group[1:] = np.cumsum(is_last[:-1])
-    n = int(is_last.sum())
-    starts = np.zeros(n, dtype=np.int64)
+    # byte planes, as in the encoder: plane j adds the j-th 7-bit group
+    # of every value that has one (values are 1-2 bytes long, mostly)
     ends = np.flatnonzero(is_last)
-    starts[1:] = ends[:-1] + 1
-    idx_in_group = np.arange(b.size, dtype=np.int64) - starts[group]
-    contrib = (b.astype(np.uint64) & np.uint64(0x7F)) << (
-        np.uint64(7) * idx_in_group.astype(np.uint64)
-    )
-    values = np.zeros(n, dtype=np.uint64)
-    np.add.at(values, group, contrib)
+    starts = np.r_[0, ends[:-1] + 1]
+    lens = ends - starts + 1
+    values = (b[starts] & 0x7F).astype(np.uint64)
+    for j in range(1, int(lens.max())):
+        m = np.flatnonzero(lens > j)
+        values[m] |= (b[starts[m] + j] & 0x7F).astype(np.uint64) << np.uint64(
+            7 * j
+        )
     return values
 
 
-def _tf_weights(ids: np.ndarray, payload: bytes, meta) -> np.ndarray:
-    """Exact weights of one TF payload: ``meta=(idf_t, denom, lo, nrm)``
-    — the term's BM25 IDF, the shard's per-doc saturation denominator
-    and its first doc id, and the per-doc norm divisor (None when the
-    index has no norm). Same expression and operand order as the
-    encoder (encode_shards_from_postings), so bit-identical."""
-    from .weights import K1  # B is folded into the sidecar denom
+# ----------------------------------------------------------------- BM25
 
-    idf_t, denom, lo, nrm = meta
-    tf = varbyte_decode(payload).astype(np.float64)
-    w = idf_t * (tf * (K1 + 1.0) / (denom[ids - lo] + tf))
-    if nrm is not None:
-        w = w / nrm[ids - lo]
-    return w
+def bm25_idf(n_docs, df) -> np.ndarray:
+    """BM25 IDF ln((N - DF + 0.5) / (DF + 0.5)) (Analyzer.java:235-263);
+    negative when DF > N/2."""
+    df = np.asarray(df, dtype=np.float64)
+    return np.log((float(n_docs) - df + 0.5) / (df + 0.5))
 
 
-def decode_postings_block(
-    first_doc: int, doc_gaps: bytes, payload: bytes, meta
-) -> tuple[np.ndarray, np.ndarray]:
-    """(doc ids, float64 weights) for one TF-payload block; ``meta`` as
-    in _tf_weights."""
-    gaps = varbyte_decode(doc_gaps).astype(np.int64)
-    gaps[0] = first_doc
-    ids = np.cumsum(gaps)
-    return ids, _tf_weights(ids, payload, meta)
+def bm25_doc_denom(doc_len, avg_doc_len: float) -> np.ndarray:
+    """Per-doc BM25 saturation denominator k1·(1 - b + b·dl/avg)."""
+    dl = np.asarray(doc_len, dtype=np.float64)
+    return K1 * ((1.0 - B) + B * (dl / avg_doc_len))
 
 
-def decode_postings_run(
-    firsts: np.ndarray,
-    lasts: np.ndarray,
-    gaps_list: list,
-    payload_list: list,
-    meta,
-) -> tuple[np.ndarray, np.ndarray]:
-    """(doc ids, float64 weights) for a whole BLOCK RUN of one term in
-    one shard, decoded in ONE vectorized pass.
+def bm25_weight(idf, tf: np.ndarray, denom: np.ndarray) -> np.ndarray:
+    """BM25 weight of float64 term frequencies ``tf`` given the term IDF
+    and each posting's doc denominator (bm25_doc_denom), in the operand
+    order of weights.py's Catalyst expression. Encoder and reader both
+    call it, so their weights agree bit for bit."""
+    return idf * (tf * (K1 + 1.0) / (denom + tf))
 
-    Per-block decode (decode_postings_block) costs ~10 small numpy ops
-    of Python dispatch per 128 postings — measured ~50µs/block, which
-    made batch-query kernels decode-bound. Varbyte is self-delimiting,
-    so the concatenated gap buffers decode in one shot; each block's
-    leading gap is stored as 0 (first_doc rides in metadata), so
-    rewriting position start_i to first_doc_i - last_doc_{i-1} makes a
-    single global cumsum produce exactly the per-block cumsums.
-    Weights are elementwise (_tf_weights), so per-posting results are
-    bit-identical to per-block decode."""
-    nb = len(gaps_list)
-    if nb == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    if nb == 1:
-        return decode_postings_block(
-            int(firsts[0]), gaps_list[0], payload_list[0], meta
-        )
-    lens = np.fromiter((len(g) for g in gaps_list), dtype=np.int64, count=nb)
-    concat = b"".join(gaps_list)
-    b = np.frombuffer(concat, dtype=np.uint8)
-    is_last = (b & 0x80) == 0
-    cum_last = np.cumsum(is_last)
-    byte_ends = np.cumsum(lens)
-    n_per_block = np.diff(np.concatenate([[0], cum_last[byte_ends - 1]]))
-    value_starts = np.concatenate(
-        [[0], np.cumsum(n_per_block)[:-1]]
-    ).astype(np.int64)
-    g = varbyte_decode(concat).astype(np.int64)
-    g[value_starts[0]] = firsts[0]
-    g[value_starts[1:]] = firsts[1:] - lasts[:-1]
+
+def decode_postings_run(firsts, lasts, ns, gaps, tfs, meta):
+    """(doc ids, float64 weights) of a run of TF-payload blocks in file
+    order, decoded in ONE vectorized pass — the one block decoder (a
+    single block is a one-block run).
+
+    ``firsts``/``lasts``/``ns`` are the blocks' first_doc, last_doc and
+    posting counts; ``gaps``/``tfs`` their doc_gaps and weights bytes,
+    concatenated in block order; ``meta=(idf, denom, lo, nrm)``: the
+    BM25 IDF (a scalar, or one per posting), the shard's per-doc
+    denominator (bm25_doc_denom) and its first doc id, and the per-doc
+    norm divisor (None when the index has no norm).
+
+    Varbyte is self-delimiting, so the concatenated buffers decode in
+    one shot; each block's leading gap is stored as 0 (first_doc rides
+    in metadata), so rewriting it to first_doc_i - last_doc_{i-1} makes
+    a single global cumsum produce exactly the per-block cumsums."""
+    idf, denom, lo, nrm = meta
+    g = varbyte_decode(gaps).astype(np.int64)
+    if g.size == 0:
+        return g, np.empty(0, dtype=np.float64)
+    starts = np.cumsum(ns, dtype=np.int64) - ns
+    g[0] = firsts[0]
+    g[starts[1:]] = firsts[1:] - lasts[:-1]
     ids = np.cumsum(g)
-    return ids, _tf_weights(ids, b"".join(payload_list), meta)
+    rel = ids - lo
+    w = bm25_weight(idf, varbyte_decode(tfs).astype(np.float64), denom[rel])
+    if nrm is not None:
+        w = w / nrm[rel]
+    return ids, w
 
 
 _PAYLOAD_KEY = b"sg_payload"
@@ -202,9 +192,11 @@ def _write_shard_doclen(
 _DOCLEN_CACHE: dict = {}
 
 
-def load_shard_doclen(shard_dir: str) -> tuple[int, np.ndarray, np.ndarray | None]:
-    """(lo, doc_len int32 array, norm divisor or None) for one shard
-    dir, worker-cached by mtime (Spark reuses Python workers across
+def _load_shard_docs(
+    shard_dir: str, avg_doc_len: float
+) -> tuple[int, np.ndarray, np.ndarray | None]:
+    """(lo, per-doc BM25 denominator, norm divisor or None) for one
+    shard dir, worker-cached by mtime (Spark reuses Python workers across
     jobs — same staleness rule as _sidecar_token)."""
     path = os.path.join(shard_dir, "_doclen.npz")
     try:
@@ -215,18 +207,20 @@ def load_shard_doclen(shard_dir: str) -> tuple[int, np.ndarray, np.ndarray | Non
             "scored without their doc-length sidecar. Re-encode the index "
             "with encode_shards_from_postings."
         ) from None
-    key = (path, st.st_mtime_ns, st.st_size)
+    key = (path, st.st_mtime_ns, st.st_size, avg_doc_len)
     hit = _DOCLEN_CACHE.get(key)
     if hit is None:
         with np.load(path) as z:
-            hit = (int(z["lo"]), z["dl"], z["nrm"] if "nrm" in z else None)
+            hit = (
+                int(z["lo"]),
+                bm25_doc_denom(z["dl"], avg_doc_len),
+                z["nrm"] if "nrm" in z else None,
+            )
         if len(_DOCLEN_CACHE) > 256:  # bound worker-resident sidecars
             _DOCLEN_CACHE.clear()
         _DOCLEN_CACHE[key] = hit
     return hit
 
-
-# ------------------------------------------------------- sharded encode
 
 def _blocks_arrow_schema():
     import pyarrow as pa
@@ -247,9 +241,11 @@ def _blocks_arrow_schema():
     )
 
 
-# per-worker memo for the small lookup tables the direct encoder needs
-# (terms dictionary, conv bases, corpus stats) — loaded once per worker
-# process, reused across its tasks
+# ------------------------------------------------------ index sidecars
+
+# per-worker memo of each index root's lookup tables (terms dictionary,
+# conv bases, corpus stats) — loaded once per worker process per build,
+# reused across its encode and query tasks
 _SIDECAR_CACHE: dict = {}
 
 
@@ -271,11 +267,23 @@ def _sidecar_token(index_root: str) -> tuple:
     return tuple(parts)
 
 
-def _load_sidecars(index_root: str):
-    """(terms value-set Arrow array, aligned term_id/df numpy, conv
-    value-set Arrow array, aligned base numpy, stats). Lookups against
-    these run through pyarrow ``index_in`` — C++ hash joins, the term
-    and conv strings never become Python objects."""
+class _Sidecars(NamedTuple):
+    """One index root's lookup tables. The term side is sorted by
+    term_id and the conversation side by base, so both also serve
+    searchsorted lookups (IDF by term id, doc id → conversation)."""
+
+    term_set: object  # pyarrow string array of terms
+    term_ids: np.ndarray
+    term_idf: np.ndarray  # BM25 IDF per term (bm25_idf)
+    conv_set: object  # pyarrow string array of conv ids
+    bases: np.ndarray  # first doc id of each conversation
+    stats: dict  # stats.json
+
+
+def _load_sidecars(index_root: str) -> _Sidecars:
+    """The worker-cached _Sidecars of ``index_root``. Lookups against
+    the Arrow value sets run through pyarrow ``index_in`` — C++ hash
+    joins, the term and conv strings never become Python objects."""
     key = (index_root, _sidecar_token(index_root))
     hit = _SIDECAR_CACHE.get(key)
     if hit is not None:
@@ -284,65 +292,124 @@ def _load_sidecars(index_root: str):
 
     import pyarrow.parquet as pq
 
-    terms = pq.read_table(
-        os.path.join(index_root, "terms"), columns=["term", "term_id", "df"],
-        use_threads=False,
-    ).combine_chunks()
-    term_set = terms["term"].chunk(0)
-    term_ids = terms["term_id"].to_numpy().astype(np.int64, copy=False)
-    term_dfs = terms["df"].to_numpy().astype(np.float64)
-    b = pq.read_table(
-        os.path.join(index_root, "base"), use_threads=False
-    ).combine_chunks()
-    conv_set = b["conv_id"].chunk(0)
-    bases = b["base"].to_numpy().astype(np.int64, copy=False)
+    def sorted_table(sub, columns, by):
+        t = pq.read_table(
+            os.path.join(index_root, sub), columns=columns, use_threads=False
+        )
+        return t.take(np.argsort(t[by].to_numpy(), kind="stable")).combine_chunks()
+
+    terms = sorted_table("terms", ["term", "term_id", "df"], "term_id")
+    b = sorted_table("base", ["conv_id", "base"], "base")
     with open(os.path.join(index_root, "stats.json")) as fh:
         stats = _json.load(fh)
-    # per-term BM25 IDF precomputed ONCE per worker on the dictionary
-    # domain (same inputs + op order as the per-posting expression →
-    # bit-identical after the gather)
-    n_docs = float(stats["n_docs"])
-    term_idf = np.log((n_docs - term_dfs + 0.5) / (term_dfs + 0.5))
-    hit = (term_set, term_ids, term_dfs, conv_set, bases, stats, term_idf)
+    # per-term BM25 IDF computed ONCE per worker on the dictionary domain
+    hit = _Sidecars(
+        term_set=terms["term"].chunk(0),
+        term_ids=terms["term_id"].to_numpy().astype(np.int64, copy=False),
+        term_idf=bm25_idf(stats["n_docs"], terms["df"].to_numpy()),
+        conv_set=b["conv_id"].chunk(0),
+        bases=b["base"].to_numpy().astype(np.int64, copy=False),
+        stats=stats,
+    )
     if len(_SIDECAR_CACHE) > 4:
         _SIDECAR_CACHE.clear()
     _SIDECAR_CACHE[key] = hit
     return hit
 
 
-_DERIVED_CACHE: dict = {}
+# ---------------------------------------------------------------- read
+
+def _binary_values(arr) -> np.ndarray:
+    """The values of a pyarrow binary array concatenated in row order: a
+    zero-copy view of its data buffer."""
+    _validity, offsets, data = arr.buffers()
+    offs = np.frombuffer(
+        offsets, dtype=np.int32, count=len(arr) + 1, offset=4 * arr.offset
+    )
+    return np.frombuffer(data, dtype=np.uint8)[offs[0]: offs[-1]]
 
 
-def load_query_sidecar_views(index_root: str):
-    """Worker-cached DERIVED views for the sharded query path: the
-    doc-label map (conversation bases sorted for searchsorted, conv-id
-    strings aligned) and the term_id-sorted IDF lookup. Building these
-    costs an argsort over the conversation table — once per worker per
-    BATCH it was a measured per-worker fixed cost that grows with
-    worker count (anti-scaling); keyed by the same invalidation token
-    as _load_sidecars they build once per worker per index build and
-    serve every subsequent batch.
+def read_shard_lists(index_root: str, path: str, term_ids) -> dict:
+    """{term_id: (doc ids, float64 weights, max_weight)} for each term of
+    ``term_ids`` present in the shard block file ``path``: the weights
+    are bit-identical to the encoder's, and max_weight bounds them.
 
-    Returns ((bases_sorted, conv_arrow_sorted), (tids_sorted,
-    idf_sorted), stats)."""
-    key = (index_root, _sidecar_token(index_root))
-    hit = _DERIVED_CACHE.get(key)
-    if hit is None:
-        import pyarrow as pa
+    Only the matched terms' blocks are read (a pyarrow ``term_id in``
+    predicate; block files are term-sorted with small row groups, so
+    row-group statistics prune most of the file). The file's own
+    (term_id, block_seq) order cuts each term's block run — a run may
+    span row groups — and all matched blocks decode in one pass straight
+    from the Arrow buffers."""
+    import pyarrow.parquet as pq
 
-        (_ts, term_ids, _td, conv_set, bases, stats, term_idf) = (
-            _load_sidecars(index_root)
+    tbl = pq.read_table(
+        path, filters=[("term_id", "in", list(term_ids))], use_threads=False
+    )
+    if (tbl.schema.metadata or {}).get(_PAYLOAD_KEY) != _PAYLOAD_TF:
+        raise ValueError(
+            f"{path} is not a TF-payload block file (sg_payload=tfv1 schema "
+            "metadata missing): it was written by an older float64 block "
+            "format. Re-encode the index with encode_shards_from_postings."
         )
-        o = np.argsort(bases, kind="stable")
-        conv_map = (bases[o], conv_set.take(pa.array(o)))
-        t_o = np.argsort(term_ids)
-        idf_lut = (term_ids[t_o], term_idf[t_o])
-        hit = (conv_map, idf_lut, stats)
-        if len(_DERIVED_CACHE) > 4:
-            _DERIVED_CACHE.clear()
-        _DERIVED_CACHE[key] = hit
-    return hit
+    if tbl.num_rows == 0:
+        return {}
+    sc = _load_sidecars(index_root)
+    lo, denom, nrm = _load_shard_docs(
+        os.path.dirname(path), float(sc.stats["avg_doc_len"])
+    )
+    col = {name: c.chunk(0) for name, c in
+           zip(tbl.column_names, tbl.combine_chunks().columns)}
+    tid = col["term_id"].to_numpy()
+    ns = col["n"].to_numpy().astype(np.int64)
+    heads = np.flatnonzero(np.r_[True, tid[1:] != tid[:-1]])
+    run_rows = np.diff(np.r_[heads, tid.size])
+    seq = np.arange(tid.size) - np.repeat(heads, run_rows)
+    if (np.diff(tid) < 0).any() or (col["block_seq"].to_numpy() != seq).any():
+        raise RuntimeError(
+            f"{path} is not in (term_id, block_seq) order; re-encode the "
+            "index with encode_shards_from_postings"
+        )
+    run_tids = tid[heads]
+    j = np.minimum(np.searchsorted(sc.term_ids, run_tids), sc.term_ids.size - 1)
+    missing = run_tids[sc.term_ids[j] != run_tids]
+    if missing.size:
+        raise RuntimeError(
+            f"term_id {int(missing[0])} present in blocks but missing from "
+            f"the terms sidecar — stale or mismatched index sidecars under "
+            f"{index_root!r}"
+        )
+    run_posts = np.add.reduceat(ns, heads)
+    ids, ws = decode_postings_run(
+        col["first_doc"].to_numpy(), col["last_doc"].to_numpy(), ns,
+        _binary_values(col["doc_gaps"]), _binary_values(col["weights"]),
+        (np.repeat(sc.term_idf[j], run_posts), denom, lo, nrm),
+    )
+    maxw = np.maximum.reduceat(col["max_weight"].to_numpy(), heads)
+    ends = np.cumsum(run_posts)
+    return {
+        t: (ids[e - n: e], ws[e - n: e], m)
+        for t, n, e, m in zip(
+            run_tids.tolist(), run_posts.tolist(), ends.tolist(), maxw.tolist()
+        )
+    }
 
+
+def label_docs(index_root: str, doc_ids: np.ndarray) -> tuple[list, np.ndarray]:
+    """(conv_id strings, int32 turn_idx) of global doc ids, by
+    doc_id = base[conv_id] + turn_idx: one searchsorted against the
+    worker-cached conversation bases. Conv ids stay an Arrow array until
+    the labelled rows need them."""
+    import pyarrow as pa
+
+    sc = _load_sidecars(index_root)
+    j = np.searchsorted(sc.bases, doc_ids, side="right") - 1
+    return (
+        sc.conv_set.take(pa.array(j)).to_pylist(),
+        (doc_ids - sc.bases[j]).astype(np.int32),
+    )
+
+
+# ------------------------------------------------------- sharded encode
 
 def encode_shards_from_postings(
     spark,
@@ -412,8 +479,7 @@ def encode_shards_from_postings(
         for pdf in batches:
             for pid, path in zip(pdf["partition_id"], pdf["path"]):
                 t0 = _t.time()
-                (term_set, term_ids, term_dfs, conv_set, bases, stats,
-                 term_idf) = _load_sidecars(index_root)
+                sc = _load_sidecars(index_root)
                 tbl = pq.read_table(
                     path,
                     columns=["conv_id", "turn_idx", "term", "tf"],
@@ -428,12 +494,12 @@ def encode_shards_from_postings(
                     # dictionary semi-join in C++: position of each
                     # posting's term in the terms value set (null =
                     # pruned/unknown)
-                    pos = positions_in(tbl.column("term").chunk(0), term_set)
+                    pos = positions_in(tbl.column("term").chunk(0), sc.term_set)
                     # positions stay int32 (half the gather-index traffic;
                     # numpy fancy indexing takes int32 indices directly)
                     pos_np = pc.fill_null(pos, -1).to_numpy()
                     cpos_arr = positions_in(
-                        tbl.column("conv_id").chunk(0), conv_set
+                        tbl.column("conv_id").chunk(0), sc.conv_set
                     )
                     cpos = pc.fill_null(cpos_arr, -1).to_numpy()
                     turn = tbl.column("turn_idx").chunk(0).to_numpy()
@@ -453,8 +519,8 @@ def encode_shards_from_postings(
                             f"conv_id missing from base sidecar in {path}; "
                             "index_root sidecars are stale or mismatched"
                         )
-                    tid = term_ids[pos_np]
-                    doc = bases[cpos] + turn
+                    tid = sc.term_ids[pos_np]
+                    doc = sc.bases[cpos] + turn
                     # doc_len over retained terms (pruning-consistent):
                     # dense local doc index -> one bincount pass
                     lo = int(doc.min()) if doc.size else 0
@@ -467,13 +533,10 @@ def encode_shards_from_postings(
                     # exact op/association order of weights.py's Catalyst
                     # expression (bit-identical; only the domain the ops
                     # run over shrinks ~30x)
-                    from .weights import B as _B, K1 as _K1
-
-                    avg = float(stats["avg_doc_len"])
-                    denom_acc = _K1 * ((1.0 - _B) + _B * (dl_acc / avg))
-                    w = term_idf[pos_np] * (
-                        tf * (_K1 + 1.0) / (denom_acc[rel] + tf)
+                    denom_acc = bm25_doc_denom(
+                        dl_acc, float(sc.stats["avg_doc_len"])
                     )
+                    w = bm25_weight(sc.term_idf[pos_np], tf, denom_acc[rel])
                     nrm = None
                     if norm:
                         # per-doc L1/L2 norm over the retained postings,

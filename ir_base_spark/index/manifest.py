@@ -15,6 +15,8 @@ extraction — is committed per partition here:
     manifest/p<p>.json              one row per COMPLETED partition
                                     (written after the rename, also
                                     tmp + atomic rename)
+    manifest/build_params.json      tokenizer params (ngrams, analyzer):
+                                    queries are analyzed with them
     stats.json                      pinned corpus constants
                                     (n_docs, avg_doc_len — SURVEY §7.3)
 
@@ -152,6 +154,19 @@ def input_snapshot_id(transcripts: DataFrame) -> str:
 
 def _manifest_dir(root: str) -> str:
     return os.path.join(root, "manifest")
+
+
+def _build_params_path(index_root: str) -> str:
+    return os.path.join(_manifest_dir(index_root), "build_params.json")
+
+
+def build_params(index_root: str) -> dict:
+    """The tokenizer params the root's postings were built with
+    (``ngrams``, ``analyzer``, ``min_distinct_terms``; written by
+    resumable_build and build_single_shard_index). Queries against the
+    root must be analyzed with the same ``ngrams`` and ``analyzer``."""
+    with open(_build_params_path(index_root)) as fh:
+        return json.load(fh)
 
 
 def read_manifest(index_root: str) -> dict[int, PartitionManifest]:
@@ -500,10 +515,9 @@ def resumable_build(
         "analyzer": analyzer,
         "min_distinct_terms": min_distinct_terms,
     }
-    pfile = os.path.join(_manifest_dir(index_root), "build_params.json")
+    pfile = _build_params_path(index_root)
     if os.path.exists(pfile):
-        with open(pfile) as fh:
-            prev = json.load(fh)
+        prev = build_params(index_root)
         if prev != params:
             raise ValueError(
                 f"index_root {index_root} was built with params {prev}, "
@@ -690,7 +704,10 @@ def finalize_lite(
     stats = {"n_docs": n_docs, "avg_doc_len": avg_doc_len, "scheme": scheme,
              "norm": norm, "min_df": min_df, "max_df": max_df}
     _atomic_write_json(os.path.join(index_root, "stats.json"), stats)
-    return _m1_index(raw, box["terms"], stats), box["base"]
+    return (
+        _m1_index(raw, box["terms"], stats, build_params(index_root)),
+        box["base"],
+    )
 
 
 def open_index(spark: SparkSession, index_root: str):
@@ -714,12 +731,13 @@ def open_index(spark: SparkSession, index_root: str):
         )
     terms = spark.read.parquet(os.path.join(index_root, "terms"))
     raw = load_postings(spark, index_root).drop("partition_id")
-    return _m1_index(raw, terms, stats)
+    return _m1_index(raw, terms, stats, build_params(index_root))
 
 
-def _m1_index(raw: DataFrame, terms: DataFrame, stats: dict):
+def _m1_index(raw: DataFrame, terms: DataFrame, stats: dict, params: dict):
     """InvertedIndex over raw postings (no partition_id) and the
-    dictionary, under the corpus constants of ``stats`` (stats.json)."""
+    dictionary, under the corpus constants of ``stats`` (stats.json) and
+    the tokenizer ``params`` (build_params)."""
     from .build import InvertedIndex
     from .dictionary import project_onto_dictionary
     from .weights import set_feature_values
@@ -738,7 +756,8 @@ def _m1_index(raw: DataFrame, terms: DataFrame, stats: dict):
             raw, terms, n_docs, avg_doc_len, scheme=scheme, norm=norm
         ),
         doc_lens=doc_lens, n_docs=n_docs, avg_doc_len=avg_doc_len,
-        ngrams=1, scheme=scheme, norm=norm,
+        ngrams=params["ngrams"], scheme=scheme, norm=norm,
+        analyzer=params["analyzer"],
     )
 
 
@@ -754,10 +773,15 @@ def build_single_shard_index(
     encode_shards_from_postings. ``index_root`` must be fresh (the
     postings write refuses an existing shard); nothing here resumes —
     resumable_build's split, manifest and snapshot machinery buy nothing
-    for an index that is built once and dropped. Returns the encode
-    report."""
+    for an index that is built once and dropped; it records the same
+    build_params as resumable_build. Returns the encode report."""
     tokenize_turns(transcripts, analyzer=analyzer).write.parquet(
         os.path.join(index_root, "postings", "partition_id=0")
+    )
+    os.makedirs(_manifest_dir(index_root), exist_ok=True)
+    _atomic_write_json(
+        _build_params_path(index_root),
+        {"ngrams": 1, "analyzer": analyzer, "min_distinct_terms": 0},
     )
     finalize_lite(spark, index_root)
     return encode_shards_from_postings(spark, index_root, block_size=block_size)

@@ -22,8 +22,6 @@ fits (Catalyst decides; we hint) — the reference's token→id HashMap probe
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -123,7 +121,3 @@ def avg_idf_per_doc(
         F.avg(idf).alias("avg_idf")
     )
 
-
-def bm25_idf_value(n_docs: int, df: int) -> float:
-    """Scalar BM25 IDF (shared by tests and the WAND kernel)."""
-    return math.log((n_docs - df + 0.5) / (df + 0.5))

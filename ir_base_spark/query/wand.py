@@ -3,11 +3,13 @@
 The scale query path (SURVEY §7.1 step 6): document-space-sharded
 retrieval over the shard files ``blocks.encode_shards_from_postings``
 writes. Each task reads only the matched terms' blocks of its shards
-(no block bytes shuffle) and runs EVERY query of the batch over them
-with one kernel, chunked MaxScore (``_maxscore_query``), a per-shard
-decode cache and an independent bounded top-k per query. A tiny global
-merge (<= k rows per query per shard) takes the final top-k.
-Candidate generation, pruning, and scoring never leave the executor.
+(no block bytes shuffle) through ``blocks.read_shard_lists``, which owns
+the block format and returns each term's doc ids and exact weights, and
+runs EVERY query of the batch over those lists with one kernel, chunked
+MaxScore (``_maxscore_query``), and an independent bounded top-k per
+query. A tiny global merge (<= k rows per query per shard) takes the
+final top-k. Candidate generation, pruning, and scoring never leave the
+executor.
 
 Correctness contract (rank identity with oracle + M1 path):
 - full evaluation accumulates qw·w in ascending term_id order (canonical
@@ -33,23 +35,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from ..index.blocks import decode_postings_run
-
-
-def _decode_full_lists(arrays: dict[int, tuple], tids, cache: dict):
-    """Concatenated (ids, ws) per term with a shard-level cache — each
-    term's blocks decode ONCE per shard no matter how many queries in
-    the batch touch it."""
-    out = {}
-    for tid in tids:
-        hit = cache.get(tid)
-        if hit is None:
-            firsts, lasts, maxws, gaps, wbytes, meta = arrays[tid]
-            hit = decode_postings_run(firsts, lasts, gaps, wbytes, meta)
-            cache[tid] = hit
-        out[tid] = hit
-    return out
 
 
 def _maxscore_query(
@@ -131,27 +116,23 @@ def _maxscore_query(
 
 
 def _score_shard(
-    arrays: dict[int, tuple],
+    lists: dict[int, tuple[np.ndarray, np.ndarray, float]],
     queries: list[tuple[str, int, list[tuple[int, float]]]],
 ) -> pd.DataFrame:
-    """Every query of the batch over one shard's matched blocks
-    (``arrays`` = {term_id: (firsts, lasts, maxws, gaps, payloads,
-    meta)}) → (query_id, doc_id, score, k), <= k rows per query. Each
-    term's blocks decode once per shard (_decode_full_lists)."""
+    """Every query of the batch over one shard's matched term lists
+    (``lists`` = {term_id: (doc ids, weights, max_weight)}, as
+    blocks.read_shard_lists returns them) → (query_id, doc_id, score,
+    k), <= k rows per query."""
     out = {"query_id": [], "doc_id": [], "score": [], "k": []}
-    cache: dict = {}
     for query_id, k, terms in queries:
-        matched = [(tid, qw) for tid, qw in terms if tid in arrays]
-        if not matched:
+        qlists = [
+            (tid, qw, *lists[tid][:2], max(0.0, qw * lists[tid][2]))
+            for tid, qw in terms  # already ascending term_id
+            if tid in lists
+        ]
+        if not qlists:
             continue
-        decoded = _decode_full_lists(arrays, [t for t, _ in matched], cache)
-        lists = []
-        for tid, qw in matched:  # already ascending term_id
-            ids, ws = decoded[tid]
-            maxws = arrays[tid][2]
-            ub = max(0.0, qw * float(maxws.max()))
-            lists.append((tid, qw, ids, ws, ub))
-        docs, scores = _maxscore_query(lists, k)
+        docs, scores = _maxscore_query(qlists, k)
         if docs.shape[0] == 0:
             continue
         order = np.lexsort((docs, -scores))[:k]
@@ -203,18 +184,16 @@ def wand_topk_sharded(
     in ALGOS): every name in ALGOS runs the same kernel and returns the
     same rows; any other name raises ValueError.
 
-    Each task gets one shard PATH; the kernel reads only the matched
-    terms' blocks via a pyarrow ``term_id in (...)`` predicate (block
-    files are term-sorted with small row groups, so row-group statistics
-    prune most of the file), then runs every query over the shard with
-    the shared decode cache. Matched block bytes never shuffle and never
-    cross the JVM→Python socket: the only rows Spark moves are <= k
-    results per (query, shard). The doc_id → (conv_id, turn_idx) label
-    is resolved IN-KERNEL by a searchsorted against the worker-cached
-    conversation-base sidecar (doc_id = base[conv] + turn by
-    construction) — a final join against the full turn-level docs
-    table would rescan 10^N rows per batch to label <= k·|queries|
-    results. The final merge is just the bounded per-query rank window.
+    Each task gets one shard PATH; blocks.read_shard_lists reads only
+    the matched terms' blocks and returns their decoded lists, and the
+    kernel runs every query of the batch over them. Matched block bytes
+    never shuffle and never cross the JVM→Python socket: the only rows
+    Spark moves are <= k results per (query, shard). The doc_id →
+    (conv_id, turn_idx) label is resolved IN-KERNEL
+    (blocks.label_docs, doc_id = base[conv] + turn by construction) — a
+    final join against the full turn-level docs table would rescan 10^N
+    rows per batch to label <= k·|queries| results. The final merge is
+    just the bounded per-query rank window.
     """
     import glob as _glob
     import os as _os
@@ -262,80 +241,18 @@ def wand_topk_sharded(
     )
 
     def shard_kernel(batches):
-        import os as _os
+        from ..index.blocks import label_docs, read_shard_lists
 
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from ..index.blocks import (
-            _PAYLOAD_KEY,
-            _PAYLOAD_TF,
-            load_query_sidecar_views,
-            load_shard_doclen,
-        )
-        from ..index.weights import B as _B, K1 as _K1
-
-        views = None
         for pdf in batches:
             for path in pdf["path"]:
-                tbl = pq.read_table(
-                    path,
-                    filters=[("term_id", "in", term_ids)],
-                    use_threads=False,
+                out = _score_shard(
+                    read_shard_lists(index_root, path, term_ids), queries
                 )
-                if (tbl.schema.metadata or {}).get(_PAYLOAD_KEY) != _PAYLOAD_TF:
-                    raise ValueError(
-                        f"{path} is not a TF-payload block file "
-                        f"({_PAYLOAD_KEY.decode()}={_PAYLOAD_TF.decode()} "
-                        "schema metadata missing): it was written by an "
-                        "older float64 block format. Re-encode the index "
-                        "with encode_shards_from_postings."
-                    )
-                if tbl.num_rows == 0:
-                    continue
-                if views is None:
-                    # worker-cached across batches (anti-scaling fixed
-                    # cost otherwise: one conv-table argsort per worker
-                    # per batch, growing with worker count)
-                    views = load_query_sidecar_views(index_root)
-                conv_map, idf_lut, stats = views
-                # exact BM25 from the TF payload: per-shard denominator
-                # (and norm divisor) from the doclen sidecar, idf per
-                # matched term from the dictionary sidecar
-                lo_v, dl, nrm = load_shard_doclen(_os.path.dirname(path))
-                avg = float(stats["avg_doc_len"])
-                denom = _K1 * ((1.0 - _B) + _B * (dl.astype(np.float64) / avg))
-                tids_sorted, idf_sorted = idf_lut
-                arrays: dict[int, tuple] = {}
-                for term_id, g in tbl.to_pandas().groupby("term_id", sort=True):
-                    tid = int(term_id)
-                    j = int(np.searchsorted(tids_sorted, tid))
-                    if j >= len(tids_sorted) or tids_sorted[j] != tid:
-                        raise RuntimeError(
-                            f"term_id {tid} present in blocks but "
-                            f"missing from the terms sidecar — "
-                            f"stale or mismatched index sidecars "
-                            f"under {index_root!r}"
-                        )
-                    g = g.sort_values("block_seq")
-                    arrays[tid] = (
-                        g["first_doc"].to_numpy(dtype=np.int64),
-                        g["last_doc"].to_numpy(dtype=np.int64),
-                        g["max_weight"].to_numpy(dtype=np.float64),
-                        g["doc_gaps"].tolist(),
-                        g["weights"].tolist(),
-                        (float(idf_sorted[j]), denom, lo_v, nrm),
-                    )
-                out = _score_shard(arrays, queries)
                 if len(out) == 0:
                     continue
-                # conv ids stay an Arrow array; only the <= k·|q|
-                # result rows ever become Python strings
-                sbases, convs = conv_map
-                doc = out["doc_id"].to_numpy()
-                j = np.searchsorted(sbases, doc, side="right") - 1
-                out["conv_id"] = convs.take(pa.array(j)).to_pylist()
-                out["turn_idx"] = (doc - sbases[j]).astype(np.int32)
+                out["conv_id"], out["turn_idx"] = label_docs(
+                    index_root, out["doc_id"].to_numpy()
+                )
                 yield out
 
     local = fdf.mapInPandas(

@@ -34,7 +34,6 @@ def main() -> None:
     ap.add_argument("--min-df", type=int, default=1)
     ap.add_argument("--max-df", type=int, default=None)
     ap.add_argument("--norm", type=int, default=0, choices=[0, 1, 2])
-    ap.add_argument("--block-size", type=int, default=128)
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -65,7 +64,7 @@ def main() -> None:
         spark, args.index_root, min_df=args.min_df, max_df=args.max_df,
         norm=args.norm,
     )
-    encode_shards_from_postings(spark, args.index_root, block_size=args.block_size)
+    encode_shards_from_postings(spark, args.index_root)
 
     print(
         json.dumps(

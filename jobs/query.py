@@ -7,6 +7,8 @@
 
 queries.parquet columns: query_id string, query_text string, k int
 (FIXTURES.md §2). Results: (query_id, rank, conv_id, turn_idx, score).
+Queries are analyzed with the index root's own build params (ngrams,
+analyzer), as its documents were.
 """
 
 from __future__ import annotations
@@ -40,12 +42,31 @@ def enforce_query_cap(qdf, source: str, max_queries: int = MAX_QUERIES):
     return qdf.toPandas()
 
 
+def run_query(spark, root: str, qpdf, engine: str):
+    """→ (query_id, rank, conv_id, turn_idx, score) DataFrame of the
+    queries in ``qpdf``, analyzed with the ngrams and analyzer the root
+    was built with (manifest.build_params)."""
+    from ir_base_spark.index.manifest import build_params, open_index
+    from ir_base_spark.query.dataframe_bm25 import analyze_query_terms, topk_search
+    from ir_base_spark.query.wand import wand_topk_sharded
+
+    params = build_params(root)
+    qt = analyze_query_terms(
+        spark, qpdf, ngrams=params["ngrams"], analyzer=params["analyzer"]
+    )
+    if engine == "wand":
+        # doc-sharded on-disk block layout: the kernel pulls only
+        # matched-term row groups per shard
+        return wand_topk_sharded(spark, root, qt)
+    # read-only M1 view of the same finalized artifacts
+    return topk_search(open_index(spark, root), qt)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--index-root", required=True)
     ap.add_argument("--queries", required=True)
     ap.add_argument("--engine", default="wand", choices=["wand", "dataframe"])
-    ap.add_argument("--analyzer", default="reference", choices=["reference", "simple"])
     ap.add_argument("--output", default=None)
     args = ap.parse_args()
 
@@ -54,24 +75,9 @@ def main() -> None:
     spark = SparkSession.builder.appName("ir-base-spark-query").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    from ir_base_spark.query.dataframe_bm25 import analyze_query_terms, topk_search
-    from ir_base_spark.query.wand import wand_topk_sharded
-
-    root = args.index_root
     qpdf = enforce_query_cap(spark.read.parquet(args.queries), args.queries)
-    qt = analyze_query_terms(spark, qpdf, analyzer=args.analyzer)
-
     t0 = time.time()
-    if args.engine == "wand":
-        # doc-sharded on-disk block layout: the kernel pulls only
-        # matched-term row groups per shard
-        out = wand_topk_sharded(spark, root, qt)
-    else:
-        # read-only M1 view of the same finalized artifacts
-        from ir_base_spark.index.manifest import open_index
-
-        out = topk_search(open_index(spark, root), qt)
-
+    out = run_query(spark, args.index_root, qpdf, args.engine)
     if args.output:
         out.write.mode("overwrite").parquet(args.output)
         n = spark.read.parquet(args.output).count()

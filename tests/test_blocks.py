@@ -7,12 +7,22 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ir_base_spark.index.blocks import (
-    decode_postings_block,
+    _encode_sorted_run_arrow,
+    bm25_doc_denom,
+    bm25_idf,
+    bm25_weight,
+    decode_postings_run,
     varbyte_decode,
     varbyte_encode,
 )
-from ir_base_spark.index.weights import B, K1
 from tests.wand_oracle import tf_term_blocks
+
+
+def _decode(firsts, lasts, ns, gaps, payloads, meta):
+    """Decode a run of blocks given as per-block bytes lists."""
+    return decode_postings_run(
+        firsts, lasts, ns, b"".join(gaps), b"".join(payloads), meta
+    )
 
 
 def test_varbyte_roundtrip_simple():
@@ -48,12 +58,12 @@ def test_block_roundtrip():
     tf = rng.integers(1, 300, size=128)
     denom = rng.uniform(0.5, 3.0, size=1_000_000)
     for idf in (1.3, -0.4):  # negative IDF: DF > N/2
-        firsts, lasts, mx, gaps, payloads, meta, ws = tf_term_blocks(
+        firsts, lasts, ns, mx, gaps, payloads, meta, ws = tf_term_blocks(
             ids, tf, idf, denom, None, 128
         )
-        assert firsts[0] == ids[0] and lasts[0] == ids[-1]
+        assert firsts[0] == ids[0] and lasts[0] == ids[-1] and ns[0] == 128
         assert mx[0] == ws.max()
-        rids, rws = decode_postings_block(firsts[0], gaps[0], payloads[0], meta)
+        rids, rws = _decode(firsts, lasts, ns, gaps, payloads, meta)
         assert (rids == ids).all()
         assert (rws == ws).all()  # float64 bit-exact
 
@@ -73,10 +83,10 @@ def test_block_roundtrip_property(data):
     ids = start + np.cumsum(np.array([0] + gaps[:-1], dtype=np.int64))
     # zero-stride per-doc denominator: any doc id indexes it, no memory
     denom = np.broadcast_to(np.float64(1.25), (int(ids[-1]) + 1,))
-    firsts, lasts, _mx, enc, payloads, meta, ws = tf_term_blocks(
+    firsts, lasts, ns, _mx, enc, payloads, meta, ws = tf_term_blocks(
         ids, tf, idf, denom, None, n
     )
-    rids, rws = decode_postings_block(firsts[0], enc[0], payloads[0], meta)
+    rids, rws = _decode(firsts, lasts, ns, enc, payloads, meta)
     assert (rids == ids).all()
     assert (rws == ws).all()
 
@@ -84,8 +94,6 @@ def test_block_roundtrip_property(data):
 def test_tf_payload_multibyte_roundtrip():
     """TF-payload blocks with term frequencies needing 2+ varbyte bytes
     (tf > 127) must reconstruct the exact BM25 doubles."""
-    from ir_base_spark.index.blocks import _encode_sorted_run_arrow
-
     n = 500
     rng = np.random.default_rng(3)
     doc = np.sort(rng.choice(np.arange(10_000), size=n, replace=False))
@@ -93,50 +101,46 @@ def test_tf_payload_multibyte_roundtrip():
     tid = np.zeros(n, dtype=np.int64)
     dl = np.zeros(10_000, dtype=np.float64)
     dl[doc] = tf * 3.0
-    avg = 40.0
-    idf_t = 1.7
-    denom = K1 * ((1.0 - B) + B * (dl / avg))
-    w = idf_t * (tf.astype(np.float64) * (K1 + 1.0) / (denom[doc] + tf))
+    idf_t = float(bm25_idf(10_000, 37))
+    denom = bm25_doc_denom(dl, 40.0)
+    w = bm25_weight(idf_t, tf.astype(np.float64), denom[doc])
     enc = _encode_sorted_run_arrow(tid, 0, doc, w, 64, tf)
     assert enc.schema.metadata[b"sg_payload"] == b"tfv1"
-    got_ids = []
-    got_ws = []
-    for r in enc.to_pylist():
-        ids, ws = decode_postings_block(
-            r["first_doc"], r["doc_gaps"], r["weights"], (idf_t, denom, 0, None)
-        )
-        got_ids.append(ids)
-        got_ws.append(ws)
-    ids = np.concatenate(got_ids)
-    ws = np.concatenate(got_ws)
+    cols = enc.to_pydict()
+    ids, ws = _decode(
+        np.array(cols["first_doc"]), np.array(cols["last_doc"]),
+        np.array(cols["n"]), cols["doc_gaps"], cols["weights"],
+        (idf_t, denom, 0, None),
+    )
     assert (ids == doc).all()
     assert (ws == w).all()  # bit-identical reconstruction
 
 
 def test_decode_postings_run_bit_exact():
-    """Whole-run vectorized decode == per-block decode, bit-exact, with
+    """A multi-block run decodes bit-exactly to the encoder's input
+    weights, and equals the same blocks decoded as one-block runs, with
     and without a per-doc norm divisor, including multibyte gaps and
     tfs."""
-    from ir_base_spark.index.blocks import decode_postings_run
-
     n = 700
     rng = np.random.default_rng(13)
     doc = np.sort(rng.choice(np.arange(5_000_000), size=n, replace=False))
     tf = rng.integers(1, 50_000, size=n).astype(np.int64)
     dl = np.zeros(5_000_000, dtype=np.float64)
     dl[doc] = tf * 3.0
-    denom = K1 * ((1.0 - B) + B * (dl / 40.0))
+    denom = bm25_doc_denom(dl, 40.0)
 
     for nrm in (None, rng.uniform(0.5, 3.0, size=5_000_000)):
-        firsts, lasts, _mx, gaps, payloads, meta, w = tf_term_blocks(
+        firsts, lasts, ns, _mx, gaps, payloads, meta, w = tf_term_blocks(
             doc, tf, 1.7, denom, nrm, 64
         )
+        assert len(firsts) > 1
         per_block = [
-            decode_postings_block(f, g, p, meta)
-            for f, g, p in zip(firsts, gaps, payloads)
+            decode_postings_run(firsts[i:i + 1], lasts[i:i + 1], ns[i:i + 1],
+                                gaps[i], payloads[i], meta)
+            for i in range(len(firsts))
         ]
         ids_b = np.concatenate([p[0] for p in per_block])
         ws_b = np.concatenate([p[1] for p in per_block])
-        ids_r, ws_r = decode_postings_run(firsts, lasts, gaps, payloads, meta)
+        ids_r, ws_r = _decode(firsts, lasts, ns, gaps, payloads, meta)
         assert (ids_r == ids_b).all() and (ids_r == doc).all()
         assert (ws_r == ws_b).all() and (ws_r == w).all()  # bit-identical

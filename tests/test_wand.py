@@ -2,14 +2,19 @@
 
 from __future__ import annotations
 
+import glob
 import os
+import sys
 
 import numpy as np
 import pandas as pd
 import pyarrow.parquet as pq
 import pytest
 
-from ir_base_spark.index.blocks import encode_shards_from_postings
+from ir_base_spark.index.blocks import (
+    encode_shards_from_postings,
+    read_shard_lists,
+)
 from ir_base_spark.index.build import build_index
 from ir_base_spark.index.manifest import (
     build_single_shard_index,
@@ -57,37 +62,16 @@ def _doc_labels(spark, root) -> list:
 
 
 def _decoded_weights(spark, root) -> dict:
-    """{(term, conv_id, turn_idx): weight} decoded from every block of
-    the index at ``root``."""
-    from ir_base_spark.index.blocks import (
-        _load_sidecars,
-        decode_postings_block,
-        load_shard_doclen,
-    )
-    from ir_base_spark.index.weights import B, K1
-
-    (_ts, t_ids, _td, _cs, _bs, stats, t_idf) = _load_sidecars(root)
-    idf = dict(zip(t_ids.tolist(), t_idf.tolist()))
+    """{(term, conv_id, turn_idx): weight} read through
+    blocks.read_shard_lists from every shard of the index at ``root``."""
     term = {r["term_id"]: r["term"]
             for r in spark.read.parquet(root + "/terms").collect()}
     label = {d: (c, t) for d, c, t in _doc_labels(spark, root)}
-    avg = float(stats["avg_doc_len"])
-    metas: dict[int, tuple] = {}
     out = {}
-    for r in spark.read.parquet(root + "/blocks").collect():
-        pid = int(r["partition_id"])
-        if pid not in metas:
-            lo, dl, nrm = load_shard_doclen(
-                os.path.join(root, "blocks", f"partition_id={pid}")
-            )
-            metas[pid] = (lo, K1 * ((1.0 - B) + B * (dl.astype(np.float64) / avg)), nrm)
-        lo, denom, nrm = metas[pid]
-        ids, ws = decode_postings_block(
-            r["first_doc"], r["doc_gaps"], r["weights"],
-            (idf[r["term_id"]], denom, lo, nrm),
-        )
-        for d, w in zip(ids.tolist(), ws.tolist()):
-            out[(term[r["term_id"]], *label[d])] = w
+    for path in glob.glob(os.path.join(root, "blocks", "*", "blocks.parquet")):
+        for tid, (ids, ws, _mx) in read_shard_lists(root, path, term).items():
+            for d, w in zip(ids.tolist(), ws.tolist()):
+                out[(term[tid], *label[d])] = w
     return out
 
 
@@ -283,3 +267,64 @@ def test_pruned_root_one_answer(spark, fixture_small, tmp_path):
         for key in want:
             assert got[key][:2] == want[key][:2], key
             assert abs(got[key][2] - want[key][2]) < 1e-9, key
+
+
+def test_reader_runs_across_row_groups(spark, fixture_small, tmp_path):
+    """One posting per block puts > 4096 blocks in the one shard file,
+    so term runs cross parquet row-group boundaries. read_shard_lists
+    returns every posting bit-exactly: with one posting per block, each
+    block's first_doc and max_weight ARE that posting's doc id and the
+    encoder's weight."""
+    root = str(tmp_path / "bs1")
+    build_single_shard_index(
+        spark, spark.createDataFrame(fixture_small.transcripts), root,
+        block_size=1,
+    )
+    path = os.path.join(root, "blocks", "partition_id=0", "blocks.parquet")
+    meta = pq.ParquetFile(path).metadata
+    cut = meta.row_group(0).num_rows
+    tbl = pq.read_table(path).to_pandas()
+    assert meta.num_row_groups > 1
+    assert tbl["term_id"][cut - 1] == tbl["term_id"][cut]  # run spans it
+
+    tids = tbl["term_id"].unique().tolist()  # file order: ascending
+    got = read_shard_lists(root, path, tids)
+    assert list(got) == tids
+    ids = np.concatenate([got[t][0] for t in tids])
+    ws = np.concatenate([got[t][1] for t in tids])
+    assert (ids == tbl["first_doc"].to_numpy()).all()
+    assert (ws == tbl["max_weight"].to_numpy()).all()  # bit-identical
+    assert [got[t][2] for t in tids] == (
+        tbl.groupby("term_id", sort=True)["max_weight"].max().tolist()
+    )
+
+
+def test_query_cli_uses_root_build_params(spark, fixture_small, tmp_path):
+    """A root records how it was built: open_index reports its ngrams
+    and analyzer, and the query CLI analyzes queries with them, so both
+    engines equal the in-memory build_index with the same params."""
+    t, q = fixture_small.transcripts, fixture_small.queries
+    sdf = spark.createDataFrame(t)
+    bigram = str(tmp_path / "bigram")
+    resumable_build(spark, sdf, bigram, num_partitions=4, ngrams=2)
+    finalize_lite(spark, bigram)
+    encode_shards_from_postings(spark, bigram, block_size=16)
+    simple = str(tmp_path / "simple")
+    build_single_shard_index(spark, sdf, simple, analyzer="simple")
+    roots = ((bigram, {"ngrams": 2}), (simple, {"analyzer": "simple"}))
+    for root, kw in roots:
+        idx = open_index(spark, root)
+        assert (idx.ngrams, idx.analyzer) == (
+            kw.get("ngrams", 1), kw.get("analyzer", "reference"))
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+    from jobs.query import run_query
+
+    for root, kw in roots:
+        ref = build_index(spark, sdf, **kw)
+        want = _by_rank(
+            topk_search(ref, analyze_query_terms(spark, q, **kw)).collect()
+        )
+        for engine in ("wand", "dataframe"):
+            got = _by_rank(run_query(spark, root, q, engine).collect())
+            _assert_rows_match(got, want)

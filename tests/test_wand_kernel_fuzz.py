@@ -13,18 +13,18 @@ from __future__ import annotations
 
 import numpy as np
 
-from ir_base_spark.index.weights import B, K1
+from ir_base_spark.index.blocks import bm25_doc_denom
 from tests.wand_oracle import _ListIter, _wand_bucket, tf_term_blocks
 
 
 def _random_lists(rng, block_size: int):
-    """→ (k, [(term_id, qw, firsts, lasts, maxws, gaps, payloads, meta,
-    ub)], brute-force top-k [(doc, score)])."""
+    """→ (k, [(term_id, qw, firsts, lasts, ns, maxws, gaps, payloads,
+    meta, ub)], brute-force top-k [(doc, score)])."""
     n_docs = int(rng.integers(5, 300))
     n_terms = int(rng.integers(1, 7))
     k = int(rng.integers(1, 15))
     dl = rng.integers(1, 60, size=n_docs).astype(np.float64)
-    denom = K1 * ((1.0 - B) + B * (dl / float(dl.mean())))
+    denom = bm25_doc_denom(dl, float(dl.mean()))
     nrm = rng.uniform(0.5, 3.0, size=n_docs) if rng.integers(2) else None
     lists = []
     truth: dict[int, float] = {}
@@ -35,11 +35,11 @@ def _random_lists(rng, block_size: int):
         tf = rng.integers(1, 4 if rng.integers(4) else 400, size=n_post)
         idf = float(rng.normal(loc=0.5, scale=1.5))
         qw = float(rng.integers(1, 4))
-        firsts, lasts, maxws, gaps, wb, meta, ws = tf_term_blocks(
+        firsts, lasts, ns, maxws, gaps, wb, meta, ws = tf_term_blocks(
             ids, tf, idf, denom, nrm, block_size
         )
         ub = max(0.0, qw * float(maxws.max()))
-        lists.append((tid, qw, firsts, lasts, maxws, gaps, wb, meta, ub))
+        lists.append((tid, qw, firsts, lasts, ns, maxws, gaps, wb, meta, ub))
         for d, w2 in zip(ids, ws):
             truth[int(d)] = truth.get(int(d), 0.0) + qw * float(w2)
     expect = sorted(truth.items(), key=lambda t: (-t[1], t[0]))[:k]
@@ -55,7 +55,7 @@ def _assert_topk(got, expect) -> None:
 
 def _run_trial(rng) -> None:
     k, lists, expect = _random_lists(rng, int(rng.integers(2, 10)))
-    its = [_ListIter(*L[:8]) for L in lists]
+    its = [_ListIter(*L[:9]) for L in lists]
     _assert_topk(_wand_bucket(its, k), expect)
 
 
@@ -72,8 +72,10 @@ def _run_maxscore_trial(rng) -> None:
     k, blocks, expect = _random_lists(rng, int(rng.integers(2, 10)))
     chunk = int(rng.integers(2, 40))  # tiny chunks stress θ/frontier logic
     lists = []
-    for tid, qw, firsts, lasts, _m, gaps, wb, meta, ub in blocks:
-        ids, ws = decode_postings_run(firsts, lasts, gaps, wb, meta)
+    for tid, qw, firsts, lasts, ns, _m, gaps, wb, meta, ub in blocks:
+        ids, ws = decode_postings_run(
+            firsts, lasts, ns, b"".join(gaps), b"".join(wb), meta
+        )
         lists.append((tid, qw, ids, ws, ub))
     docs, scores = _maxscore_query(lists, k, chunk=chunk)
     order = np.lexsort((docs, -scores))[:k]

@@ -17,9 +17,9 @@ import numpy as np
 
 from ir_base_spark.index.blocks import (
     _encode_sorted_run_arrow,
-    decode_postings_block,
+    bm25_weight,
+    decode_postings_run,
 )
-from ir_base_spark.index.weights import K1
 
 _INF = np.iinfo(np.int64).max
 
@@ -27,12 +27,13 @@ _INF = np.iinfo(np.int64).max
 def tf_term_blocks(ids, tf, idf, denom, nrm, block_size):
     """Blocks of one term over doc ids ``ids`` (sorted, unique, >= 0)
     with term frequencies ``tf``; ``denom``/``nrm`` are per-doc arrays
-    indexed by doc id (``nrm`` may be None). Returns (firsts, lasts,
-    maxws, gaps, payloads, meta, weights) — ``weights`` are the exact
-    doubles decode must reproduce."""
+    indexed by doc id (``nrm`` may be None). Returns (firsts, lasts, ns,
+    maxws, gaps, payloads, meta, weights): per-block columns (``gaps``
+    and ``payloads`` as lists of per-block bytes), the decoder's
+    ``meta`` and the exact doubles decode must reproduce."""
     ids = np.asarray(ids, dtype=np.int64)
     tf = np.asarray(tf, dtype=np.int64)
-    w = idf * (tf.astype(np.float64) * (K1 + 1.0) / (denom[ids] + tf))
+    w = bm25_weight(idf, tf.astype(np.float64), denom[ids])
     if nrm is not None:
         w = w / nrm[ids]
     enc = _encode_sorted_run_arrow(
@@ -41,6 +42,7 @@ def tf_term_blocks(ids, tf, idf, denom, nrm, block_size):
     return (
         np.array(enc["first_doc"], dtype=np.int64),
         np.array(enc["last_doc"], dtype=np.int64),
+        np.array(enc["n"], dtype=np.int64),
         np.array(enc["max_weight"], dtype=np.float64),
         enc["doc_gaps"],
         enc["weights"],
@@ -57,16 +59,19 @@ class _ListIter:
     """
 
     __slots__ = (
-        "term_id", "qw", "firsts", "lasts", "maxws", "gaps", "wbytes",
+        "term_id", "qw", "firsts", "lasts", "ns", "maxws", "gaps", "wbytes",
         "meta", "bi", "ids", "ws", "pos", "cur", "ub",
     )
 
-    def __init__(self, term_id, qw, firsts, lasts, maxws, gaps, wbytes, meta):
+    def __init__(
+        self, term_id, qw, firsts, lasts, ns, maxws, gaps, wbytes, meta
+    ):
         self.meta = meta
         self.term_id = term_id
         self.qw = qw
         self.firsts = firsts
         self.lasts = lasts
+        self.ns = ns
         self.maxws = maxws
         self.gaps = gaps
         self.wbytes = wbytes
@@ -82,9 +87,10 @@ class _ListIter:
         if self.bi >= len(self.firsts):
             self.cur = _INF
             return
-        self.ids, self.ws = decode_postings_block(
-            self.firsts[self.bi], self.gaps[self.bi],
-            self.wbytes[self.bi], self.meta,
+        one = slice(self.bi, self.bi + 1)  # a one-block run
+        self.ids, self.ws = decode_postings_run(
+            self.firsts[one], self.lasts[one], self.ns[one],
+            self.gaps[self.bi], self.wbytes[self.bi], self.meta,
         )
         self.pos = 0
         self.cur = int(self.ids[0])

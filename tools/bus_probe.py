@@ -39,13 +39,13 @@ def one_task(root: str, shard: int) -> float:
     from ir_base_spark.index.blocks import (
         _encode_sorted_run_arrow,
         _load_sidecars,
+        bm25_doc_denom,
+        bm25_weight,
     )
 
     path = os.path.join(root, "postings", f"partition_id={shard}")
     t0 = time.time()
-    (term_set, term_ids, term_dfs, conv_set, bases, stats, term_idf) = (
-        _load_sidecars(root)
-    )
+    sc = _load_sidecars(root)
     tbl = pq.read_table(
         path,
         columns=["conv_id", "turn_idx", "term", "tf"],
@@ -53,11 +53,11 @@ def one_task(root: str, shard: int) -> float:
         read_dictionary=["conv_id", "term"],
     ).combine_chunks()
     tcol = tbl.column("term").chunk(0)
-    pos = pc.index_in(tcol.dictionary, value_set=term_set).take(tcol.indices)
+    pos = pc.index_in(tcol.dictionary, value_set=sc.term_set).take(tcol.indices)
     pos_np = pc.fill_null(pos, -1).to_numpy()
     ccol = tbl.column("conv_id").chunk(0)
     cpos = (
-        pc.index_in(ccol.dictionary, value_set=conv_set)
+        pc.index_in(ccol.dictionary, value_set=sc.conv_set)
         .take(ccol.indices)
         .to_numpy()
     )
@@ -69,17 +69,14 @@ def one_task(root: str, shard: int) -> float:
             pos_np[keep], cpos[keep], turn[keep], tf_i[keep]
         )
     tf = tf_i.astype(np.float64)
-    tid = term_ids[pos_np]
-    doc = bases[cpos] + turn
+    tid = sc.term_ids[pos_np]
+    doc = sc.bases[cpos] + turn
     lo = int(doc.min())
     span = int(doc.max()) - lo + 1
     rel = doc - lo
     dl_acc = np.bincount(rel, weights=tf, minlength=span)
-    from ir_base_spark.index.weights import B as _B, K1 as _K1
-
-    avg = float(stats["avg_doc_len"])
-    denom_acc = _K1 * ((1.0 - _B) + _B * (dl_acc / avg))
-    w = term_idf[pos_np] * (tf * (_K1 + 1.0) / (denom_acc[rel] + tf))
+    denom_acc = bm25_doc_denom(dl_acc, float(sc.stats["avg_doc_len"]))
+    w = bm25_weight(sc.term_idf[pos_np], tf, denom_acc[rel])
     order = np.argsort(tid * span + rel)
     _encode_sorted_run_arrow(
         tid[order], shard, doc[order], w[order], 128, tf_i[order]

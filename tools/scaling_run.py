@@ -155,9 +155,9 @@ def main() -> None:
     )
     ap.add_argument(
         "--probe-max", type=float, default=2.5,
-        help="max 16-way host-probe inflation accepted before a child "
-        "run (clean on this shared-bus box is ~2.0-2.5x; degraded "
-        "windows show 4-10x)",
+        help="max host-probe inflation (perfbench.host.probe: a numpy "
+        "kernel from nproc concurrent threads vs alone) accepted before "
+        "a child run; a quiet 4-core window reads ~1.25",
     )
     ap.add_argument("--child", action="store_true")
     ap.add_argument("--child-cores", type=int)
@@ -175,15 +175,13 @@ def main() -> None:
     all_runs: dict[int, list[dict]] = {c: [] for c in core_list}
     probes: list[dict] = []
 
-    # host-window bracketing (r5 verdict task 2): probe before every
-    # child and once after the last; a child whose pre-probe shows a
-    # degraded window (16-way inflation > --probe-max) is delayed until
-    # a clean probe (bounded retries), and every probe is recorded in
-    # the output JSON next to the run it brackets. Clean on THIS box is
-    # ~2.0-2.5x (32 vCPUs share one memory bus for the 16-way numpy
-    # kernel); degraded windows show 4-10x (see BENCH/r06_probes.jsonl).
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from host_probe import probe as _host_probe
+    # host-window bracketing: probe before every child and once after
+    # the last; a child whose pre-probe shows a degraded window
+    # (inflation > --probe-max) is delayed until a clean probe (bounded
+    # retries), and every probe is recorded in the output JSON next to
+    # the run it brackets. The probe is sized to the host (nproc
+    # threads), the same bracket perfbench records.
+    from perfbench.host import probe as _host_probe
 
     def _clean_probe(context: str) -> dict:
         for wait in (0, 30, 60, 120, 120, 120):
@@ -191,10 +189,11 @@ def main() -> None:
                 print(f"degraded window; sleeping {wait}s", file=sys.stderr)
                 time.sleep(wait)
             p = _host_probe()
+            p["ts"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
             p["context"] = context
             probes.append(p)
             print(f"probe {context}: {p}", file=sys.stderr)
-            if p["inflation_16"] <= args.probe_max:
+            if p["inflation"] <= args.probe_max:
                 return p
         print("WARNING: no clean window found; proceeding", file=sys.stderr)
         return p
@@ -232,7 +231,7 @@ def main() -> None:
         if not line:
             raise RuntimeError(f"child cores={c} failed twice")
         rec = json.loads(line[-1].removeprefix("CHILD_RESULT "))
-        rec["pre_probe_inflation_16"] = pre["inflation_16"]
+        rec["pre_probe_inflation"] = pre["inflation"]
         all_runs[c].append(rec)
     _clean_probe("after last run")
 
