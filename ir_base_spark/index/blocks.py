@@ -1,26 +1,26 @@
-"""Compressed posting blocks: delta-gap + varbyte, per-block max-score.
+"""Compressed posting runs: delta-gap + varbyte, one run per term per shard.
 
 The reference keeps postings as boxed Java objects (~32 B/posting,
 /root/reference/src/structures/_SparseFeature.java); at 10^12 turns the
-engine instead stores term-major posting blocks, one block file per doc
-shard (``blocks/partition_id=<p>/blocks.parquet``):
+engine instead stores term-major posting runs, one file per doc shard
+(``blocks/partition_id=<p>/blocks.parquet``), one row per term:
 
-    (term_id, bucket, block_seq, n, first_doc, last_doc, max_weight,
-     doc_gaps: binary, weights: binary)
+    (term_id, n, doc_gaps: binary, tfs: binary)
 
 - doc ids are dense longs ranked by (conv_id, turn_idx) — so ascending
   doc_id IS the stable turn ordering, and delta gaps are small;
-- gaps are varbyte-encoded (vectorized numpy encode/decode, no per-value
-  Python in the build hot path);
-- the payload column carries varbyte TERM FREQUENCIES (~1 B/posting;
-  the ``sg_payload=tfv1`` format). The exact BM25 double is rebuilt at
+- ``doc_gaps`` holds the run's varbyte doc-id gaps, and its leading gap
+  is the absolute first doc id (vectorized numpy encode/decode, no
+  per-value Python in the build hot path);
+- ``tfs`` holds the run's varbyte TERM FREQUENCIES (~1 B/posting; the
+  ``sg_payload=tfv2`` format). The exact BM25 double is rebuilt at
   read time from the term's IDF (terms/ sidecar) and the per-shard
   ``_doclen.npz`` sidecar (doc lengths, and the per-doc L1/L2 norm when
   the index was finalized with one), through the same numpy helpers
   (``bm25_idf``, ``bm25_doc_denom``, ``bm25_weight``) the encoder uses,
   so read weights are bit-identical to the encoder's;
-- ``max_weight`` per block bounds each term's score: the query
-  kernel's MaxScore upper bound (query/wand.py).
+- a term's score bound (the query kernel's MaxScore upper bound,
+  query/wand.py) is the max of its decoded weights.
 
 This module is the only one that knows the format: it writes it
 (``encode_shards_from_postings``) and reads it (``read_shard_lists``:
@@ -43,8 +43,6 @@ import numpy as np
 import pandas as pd
 
 from .weights import B, K1
-
-DEFAULT_BLOCK_SIZE = 128
 
 
 # ---------------------------------------------------------------- varbyte
@@ -137,30 +135,31 @@ def bm25_weight(idf, tf: np.ndarray, denom: np.ndarray) -> np.ndarray:
     return idf * (tf * (K1 + 1.0) / (denom + tf))
 
 
-def decode_postings_run(firsts, lasts, ns, gaps, tfs, meta):
-    """(doc ids, float64 weights) of a run of TF-payload blocks in file
-    order, decoded in ONE vectorized pass — the one block decoder (a
-    single block is a one-block run).
+def decode_postings_run(ns, gaps, tfs, meta):
+    """(doc ids, float64 weights) of consecutive term runs in file order,
+    decoded in ONE vectorized pass — the one run decoder (a single run
+    is a one-run buffer).
 
-    ``firsts``/``lasts``/``ns`` are the blocks' first_doc, last_doc and
-    posting counts; ``gaps``/``tfs`` their doc_gaps and weights bytes,
-    concatenated in block order; ``meta=(idf, denom, lo, nrm)``: the
-    BM25 IDF (a scalar, or one per posting), the shard's per-doc
-    denominator (bm25_doc_denom) and its first doc id, and the per-doc
-    norm divisor (None when the index has no norm).
+    ``ns`` are the runs' posting counts; ``gaps``/``tfs`` their doc_gaps
+    and tfs bytes, concatenated in run order; ``meta=(idf, denom, lo,
+    nrm)``: the BM25 IDF (a scalar, or one per posting), the shard's
+    per-doc denominator (bm25_doc_denom) and its first doc id, and the
+    per-doc norm divisor (None when the index has no norm).
 
     Varbyte is self-delimiting, so the concatenated buffers decode in
-    one shot; each block's leading gap is stored as 0 (first_doc rides
-    in metadata), so rewriting it to first_doc_i - last_doc_{i-1} makes
-    a single global cumsum produce exactly the per-block cumsums."""
+    one shot. Each run's leading gap is its absolute first doc id, so one
+    global cumsum less the running total before each run yields every
+    run's doc ids (uint64 arithmetic wraps, and the subtraction undoes
+    any wrap exactly)."""
     idf, denom, lo, nrm = meta
-    g = varbyte_decode(gaps).astype(np.int64)
+    g = varbyte_decode(gaps)
     if g.size == 0:
-        return g, np.empty(0, dtype=np.float64)
-    starts = np.cumsum(ns, dtype=np.int64) - ns
-    g[0] = firsts[0]
-    g[starts[1:]] = firsts[1:] - lasts[:-1]
-    ids = np.cumsum(g)
+        return g.astype(np.int64), np.empty(0, dtype=np.float64)
+    ns = np.asarray(ns, dtype=np.int64)
+    cs = np.cumsum(g)
+    before = np.zeros(ns.size, dtype=np.uint64)
+    before[1:] = cs[np.cumsum(ns[:-1]) - 1]
+    ids = (cs - np.repeat(before, ns)).view(np.int64)
     rel = ids - lo
     w = bm25_weight(idf, varbyte_decode(tfs).astype(np.float64), denom[rel])
     if nrm is not None:
@@ -169,7 +168,7 @@ def decode_postings_run(firsts, lasts, ns, gaps, tfs, meta):
 
 
 _PAYLOAD_KEY = b"sg_payload"
-_PAYLOAD_TF = b"tfv1"
+_PAYLOAD_TF = b"tfv2"
 
 
 def _write_shard_doclen(
@@ -222,20 +221,15 @@ def _load_shard_docs(
     return hit
 
 
-def _blocks_arrow_schema():
+def _shard_schema():
     import pyarrow as pa
 
     return pa.schema(
         [
             ("term_id", pa.int64()),
-            ("bucket", pa.int32()),
-            ("block_seq", pa.int32()),
             ("n", pa.int32()),
-            ("first_doc", pa.int64()),
-            ("last_doc", pa.int64()),
-            ("max_weight", pa.float64()),
             ("doc_gaps", pa.binary()),
-            ("weights", pa.binary()),
+            ("tfs", pa.binary()),
         ],
         metadata={_PAYLOAD_KEY: _PAYLOAD_TF},
     )
@@ -330,16 +324,14 @@ def _binary_values(arr) -> np.ndarray:
 
 
 def read_shard_lists(index_root: str, path: str, term_ids) -> dict:
-    """{term_id: (doc ids, float64 weights, max_weight)} for each term of
-    ``term_ids`` present in the shard block file ``path``: the weights
-    are bit-identical to the encoder's, and max_weight bounds them.
+    """{term_id: (doc ids, float64 weights, bound)} for each term of
+    ``term_ids`` present in the shard file ``path``: the weights are
+    bit-identical to the encoder's, and the bound is their max.
 
-    Only the matched terms' blocks are read (a pyarrow ``term_id in``
-    predicate; block files are term-sorted with small row groups, so
-    row-group statistics prune most of the file). The file's own
-    (term_id, block_seq) order cuts each term's block run — a run may
-    span row groups — and all matched blocks decode in one pass straight
-    from the Arrow buffers."""
+    Only the matched terms' runs are read (a pyarrow ``term_id in``
+    predicate; shard files are term-sorted with small row groups, so
+    row-group statistics prune most of the file), and they all decode in
+    one pass straight from the Arrow buffers."""
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(
@@ -347,9 +339,9 @@ def read_shard_lists(index_root: str, path: str, term_ids) -> dict:
     )
     if (tbl.schema.metadata or {}).get(_PAYLOAD_KEY) != _PAYLOAD_TF:
         raise ValueError(
-            f"{path} is not a TF-payload block file (sg_payload=tfv1 schema "
-            "metadata missing): it was written by an older float64 block "
-            "format. Re-encode the index with encode_shards_from_postings."
+            f"{path} is not a TF-payload block file (sg_payload=tfv2 schema "
+            "metadata missing): it was written by an older block format. "
+            "Re-encode the index with encode_shards_from_postings."
         )
     if tbl.num_rows == 0:
         return {}
@@ -360,36 +352,30 @@ def read_shard_lists(index_root: str, path: str, term_ids) -> dict:
     col = {name: c.chunk(0) for name, c in
            zip(tbl.column_names, tbl.combine_chunks().columns)}
     tid = col["term_id"].to_numpy()
-    ns = col["n"].to_numpy().astype(np.int64)
-    heads = np.flatnonzero(np.r_[True, tid[1:] != tid[:-1]])
-    run_rows = np.diff(np.r_[heads, tid.size])
-    seq = np.arange(tid.size) - np.repeat(heads, run_rows)
-    if (np.diff(tid) < 0).any() or (col["block_seq"].to_numpy() != seq).any():
+    if (np.diff(tid) <= 0).any():
         raise RuntimeError(
-            f"{path} is not in (term_id, block_seq) order; re-encode the "
-            "index with encode_shards_from_postings"
+            f"{path} does not hold one run per term in ascending term_id "
+            "order; re-encode the index with encode_shards_from_postings"
         )
-    run_tids = tid[heads]
-    j = np.minimum(np.searchsorted(sc.term_ids, run_tids), sc.term_ids.size - 1)
-    missing = run_tids[sc.term_ids[j] != run_tids]
+    j = np.minimum(np.searchsorted(sc.term_ids, tid), sc.term_ids.size - 1)
+    missing = tid[sc.term_ids[j] != tid]
     if missing.size:
         raise RuntimeError(
             f"term_id {int(missing[0])} present in blocks but missing from "
             f"the terms sidecar — stale or mismatched index sidecars under "
             f"{index_root!r}"
         )
-    run_posts = np.add.reduceat(ns, heads)
+    ns = col["n"].to_numpy().astype(np.int64)
     ids, ws = decode_postings_run(
-        col["first_doc"].to_numpy(), col["last_doc"].to_numpy(), ns,
-        _binary_values(col["doc_gaps"]), _binary_values(col["weights"]),
-        (np.repeat(sc.term_idf[j], run_posts), denom, lo, nrm),
+        ns, _binary_values(col["doc_gaps"]), _binary_values(col["tfs"]),
+        (np.repeat(sc.term_idf[j], ns), denom, lo, nrm),
     )
-    maxw = np.maximum.reduceat(col["max_weight"].to_numpy(), heads)
-    ends = np.cumsum(run_posts)
+    ends = np.cumsum(ns)
+    bounds = np.maximum.reduceat(ws, ends - ns)
     return {
         t: (ids[e - n: e], ws[e - n: e], m)
         for t, n, e, m in zip(
-            run_tids.tolist(), run_posts.tolist(), ends.tolist(), maxw.tolist()
+            tid.tolist(), ns.tolist(), ends.tolist(), bounds.tolist()
         )
     }
 
@@ -411,12 +397,8 @@ def label_docs(index_root: str, doc_ids: np.ndarray) -> tuple[list, np.ndarray]:
 
 # ------------------------------------------------------- sharded encode
 
-def encode_shards_from_postings(
-    spark,
-    index_root: str,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-) -> dict:
-    """Blocks straight from the tokenize output — the posting stream is
+def encode_shards_from_postings(spark, index_root: str) -> dict:
+    """Term runs straight from the tokenize output — the posting stream is
     materialized ONCE in the whole pipeline, and posting bytes never
     cross the JVM↔Python socket.
 
@@ -427,11 +409,10 @@ def encode_shards_from_postings(
     dictionary is ~MBs, the conv base is conversation-level), recomputes
     doc_len over RETAINED terms (exactly build_index's pruning
     semantics; equal to the stored length when nothing is pruned),
-    computes BM25 vectorized (bit-identical to
-    weights.set_feature_values), divides by the per-doc L1/L2 norm when
-    stats.json records one (the same ``denom > 0`` rule), sorts
-    (term_id, doc_id) and writes the shard's block file plus its
-    ``_doclen.npz`` sidecar.
+    computes the per-doc L1/L2 norm of the BM25 weights when stats.json
+    records one (bit-identical to weights.set_feature_values, the same
+    ``denom > 0`` rule), sorts (term_id, doc_id) and writes the shard's
+    run file plus its ``_doclen.npz`` sidecar.
     """
     import glob
     import json
@@ -488,8 +469,8 @@ def encode_shards_from_postings(
                 ).combine_chunks()
                 t_read = _t.time()
                 if tbl.num_rows == 0:
-                    enc = _blocks_arrow_schema().empty_table()
-                    tid = doc = w = None
+                    enc = _shard_schema().empty_table()
+                    tid = doc = None
                 else:
                     # dictionary semi-join in C++: position of each
                     # posting's term in the terms value set (null =
@@ -527,21 +508,20 @@ def encode_shards_from_postings(
                     span = (int(doc.max()) - lo + 1) if doc.size else 0
                     rel = doc - lo
                     dl_acc = np.bincount(rel, weights=tf, minlength=span)
-                    # BM25, factored onto the small domains: IDF is per
-                    # TERM (sidecar-precomputed), the saturation
-                    # denominator is per DOC — both gathered, keeping the
-                    # exact op/association order of weights.py's Catalyst
-                    # expression (bit-identical; only the domain the ops
-                    # run over shrinks ~30x)
-                    denom_acc = bm25_doc_denom(
-                        dl_acc, float(sc.stats["avg_doc_len"])
-                    )
-                    w = bm25_weight(sc.term_idf[pos_np], tf, denom_acc[rel])
                     nrm = None
                     if norm:
-                        # per-doc L1/L2 norm over the retained postings,
-                        # one bincount; a zero norm divides by 1.0 (==
-                        # set_feature_values' otherwise(weight), exactly)
+                        # BM25, factored onto the small domains: IDF is
+                        # per TERM (sidecar-precomputed), the saturation
+                        # denominator is per DOC — both gathered, keeping
+                        # the exact op/association order of weights.py's
+                        # Catalyst expression (bit-identical). The per-doc
+                        # L1/L2 norm is one bincount; a zero norm divides
+                        # by 1.0 (== set_feature_values' otherwise(weight),
+                        # exactly)
+                        denom_acc = bm25_doc_denom(
+                            dl_acc, float(sc.stats["avg_doc_len"])
+                        )
+                        w = bm25_weight(sc.term_idf[pos_np], tf, denom_acc[rel])
                         if norm == 1:
                             nrm = np.bincount(
                                 rel, weights=np.abs(w), minlength=span
@@ -551,7 +531,6 @@ def encode_shards_from_postings(
                                 np.bincount(rel, weights=w * w, minlength=span)
                             )
                         nrm[~(nrm > 0)] = 1.0
-                        w = w / nrm[rel]
                 t_map = _t.time()
                 if tid is not None and tid.size:
                     # (term_id, doc) is unique per shard, so the composite
@@ -563,17 +542,13 @@ def encode_shards_from_postings(
                     else:
                         order = np.lexsort((doc, tid))
                     t_sort = _t.time()
-                    # TF payload (varbyte, ~1 B/posting): the float64
-                    # weights feed only max_weight; query decode
-                    # reconstructs the identical doubles from
-                    # tf + idf sidecar + the doclen sidecar below
-                    enc = _encode_sorted_run_arrow(
-                        tid[order], int(pid), doc[order], w[order],
-                        block_size, tf_i[order],
-                    )
+                    # TF payload (varbyte, ~1 B/posting): query decode
+                    # rebuilds the BM25 doubles from tf + the idf
+                    # sidecar + the doclen sidecar below
+                    enc = _encode_runs(tid[order], doc[order], tf_i[order])
                 elif tid is not None:
                     t_sort = _t.time()
-                    enc = _blocks_arrow_schema().empty_table()
+                    enc = _shard_schema().empty_table()
                 else:
                     t_sort = t_map
                 t_enc = _t.time()
@@ -597,7 +572,7 @@ def encode_shards_from_postings(
                 yield pd.DataFrame(
                     {
                         "partition_id": pd.Series([int(pid)], dtype="int32"),
-                        "n_blocks": pd.Series([enc.num_rows], dtype="int64"),
+                        "n_runs": pd.Series([enc.num_rows], dtype="int64"),
                         "bytes": pd.Series(
                             [os.path.getsize(out_path)], dtype="int64"
                         ),
@@ -612,7 +587,7 @@ def encode_shards_from_postings(
 
     report = fdf.mapInPandas(
         kernel,
-        "partition_id int, n_blocks long, bytes long, wall_sec double, "
+        "partition_id int, n_runs long, bytes long, wall_sec double, "
         "read_sec double, map_sec double, sort_sec double, "
         "encode_sec double, write_sec double",
     ).collect()
@@ -622,9 +597,8 @@ def encode_shards_from_postings(
     }
     return {
         "shards": len(report),
-        "blocks": int(sum(r["n_blocks"] for r in report)),
+        "blocks": int(sum(r["n_runs"] for r in report)),
         "bytes": int(sum(r["bytes"] for r in report)),
-        "block_size": block_size,
         "phase_task_sec": phases,
         "max_shard_wall_sec": round(
             max((r["wall_sec"] for r in report), default=0.0), 3
@@ -634,122 +608,52 @@ def encode_shards_from_postings(
 
 # ---------------------------------------------------------------- encode
 
-def _block_layout(
-    term_id: np.ndarray,
-    doc_id: np.ndarray,
-    weight: np.ndarray,
-    block_size: int,
-):
-    """Block-splitting + varbyte pass over one shard's sorted run.
-
-    Input arrays are sorted by (term_id, doc_id). Returns (starts, ends,
-    block_seq, max_w, gap_bytes ndarray, per-posting byte offsets) —
-    blocks tile the run contiguously (ends[i] == starts[i+1]), so both
-    the gap buffer and the payload buffer slice by offsets with no
-    per-block copies.
-    """
-    n = doc_id.shape[0]
-    new_group = np.empty(n, dtype=bool)
-    new_group[0] = True
-    np.not_equal(term_id[1:], term_id[:-1], out=new_group[1:])
-    # in-place passes (the shard kernels run many of these concurrently;
-    # every avoided temporary is real memory-bus headroom)
-    pos_in_group = np.arange(n, dtype=np.int64)
-    group_start = np.where(new_group, pos_in_group, 0)
-    np.maximum.accumulate(group_start, out=group_start)
-    pos_in_group -= group_start
-    del group_start
-    if block_size & (block_size - 1) == 0:
-        block_start_mask = (pos_in_group & (block_size - 1)) == 0
-    else:
-        block_start_mask = (pos_in_group % block_size) == 0
-    starts = np.flatnonzero(block_start_mask)
-    ends = np.empty(starts.shape, dtype=np.int64)
-    ends[:-1] = starts[1:]
-    ends[-1] = n
-
-    # delta-gap with a 0 at every block start (first_doc carried absolutely)
-    gaps = np.empty(n, dtype=np.uint64)
-    gaps[0] = 0
-    np.subtract(doc_id[1:], doc_id[:-1], out=gaps[1:], casting="unsafe")
-    gaps[starts] = 0
-
-    # one varbyte pass over the whole run
-    buf, nbytes = _varbyte_encode_arr(gaps)
-    offs = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(nbytes, out=offs[1:])
-
-    max_w = np.maximum.reduceat(weight, starts)
-    block_seq = (pos_in_group[starts] // block_size).astype(np.int32)
-    return starts, ends, block_seq, max_w, buf, offs
-
-
-def _encode_sorted_run_arrow(
-    term_id: np.ndarray,
-    bucket_id: int,
-    doc_id: np.ndarray,
-    weight: np.ndarray,
-    block_size: int,
-    tf: np.ndarray,
-):
-    """Arrow-native block encoder for one shard's run sorted by
-    (term_id, doc_id): the two binary columns are built with
-    ``BinaryArray.from_buffers`` over the single varbyte gap / TF
-    buffers (blocks tile the run contiguously), so NO per-block Python
-    bytes objects and no pandas→Arrow conversion exist anywhere —
-    measured, that conversion was a flat (non-scaling) term of the old
-    encode kernel. Returns a pyarrow Table stamped
-    ``sg_payload=tfv1``; ``weight`` feeds only the exact per-block
-    max_weight pruning bound (decode rebuilds the identical doubles
-    from ``tf`` + sidecars).
+def _encode_runs(term_id: np.ndarray, doc_id: np.ndarray, tf: np.ndarray):
+    """Arrow-native run encoder for one shard's postings sorted by
+    (term_id, doc_id): a run starts where term_id changes. One varbyte
+    pass each over the doc gaps (every run's leading gap is its absolute
+    first doc id) and the TFs, and the two binary columns are built with
+    ``BinaryArray.from_buffers`` over those single buffers (runs tile
+    them contiguously), so no per-run Python bytes objects and no
+    pandas→Arrow conversion exist anywhere. Returns a pyarrow Table
+    stamped ``sg_payload=tfv2``.
     """
     import pyarrow as pa
 
-    schema = _blocks_arrow_schema()
     n = doc_id.shape[0]
     if n == 0:
-        return schema.empty_table()
-    starts, ends, block_seq, max_w, buf_arr, offs = _block_layout(
-        term_id, doc_id, weight, block_size
-    )
-    nb = len(starts)
-    total_gap_bytes = int(offs[-1])
-    tf_buf, tf_nbytes = _varbyte_encode_arr(tf)
-    tf_offs_all = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(tf_nbytes, out=tf_offs_all[1:])
-    if max(total_gap_bytes, int(tf_offs_all[-1])) > np.iinfo(np.int32).max:
-        # BinaryArray offsets are int32; narrowing past 2^31 would
-        # silently wrap into corrupt offsets. ~2e9 postings per shard
-        # means the shard (build partition) is mis-sized.
-        raise ValueError(
-            f"shard posting payload exceeds int32 BinaryArray offsets "
-            f"({total_gap_bytes} gap bytes, {int(tf_offs_all[-1])} tf "
-            "bytes); build with more partitions so fewer postings land "
-            "per shard"
-        )
-    gap_offs = np.empty(nb + 1, dtype=np.int32)
-    gap_offs[:-1] = offs[starts]
-    gap_offs[-1] = total_gap_bytes
-    gaps_col = pa.BinaryArray.from_buffers(
-        pa.binary(), nb, [None, pa.py_buffer(gap_offs), pa.py_buffer(buf_arr)]
-    )
-    w_offs = np.empty(nb + 1, dtype=np.int32)
-    w_offs[:-1] = tf_offs_all[starts]
-    w_offs[-1] = int(tf_offs_all[-1])
-    weights_col = pa.BinaryArray.from_buffers(
-        pa.binary(), nb, [None, pa.py_buffer(w_offs), pa.py_buffer(tf_buf)]
-    )
+        return _shard_schema().empty_table()
+    new_run = np.empty(n, dtype=bool)
+    new_run[0] = True
+    np.not_equal(term_id[1:], term_id[:-1], out=new_run[1:])
+    starts = np.flatnonzero(new_run)
+    gaps = np.empty(n, dtype=np.uint64)
+    np.subtract(doc_id[1:], doc_id[:-1], out=gaps[1:], casting="unsafe")
+    gaps[starts] = doc_id[starts]
+    cols = []
+    for values in (gaps, tf):
+        buf, nbytes = _varbyte_encode_arr(values)
+        if buf.size > np.iinfo(np.int32).max:
+            # BinaryArray offsets are int32; narrowing past 2^31 would
+            # silently wrap into corrupt offsets. ~2e9 postings per shard
+            # means the shard (build partition) is mis-sized.
+            raise ValueError(
+                f"shard posting payload exceeds int32 BinaryArray offsets "
+                f"({buf.size} bytes in one column); build with more "
+                "partitions so fewer postings land per shard"
+            )
+        offs = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(nbytes, out=offs[1:])
+        run_offs = np.append(offs[starts], offs[-1]).astype(np.int32)
+        cols.append(pa.BinaryArray.from_buffers(
+            pa.binary(), starts.size,
+            [None, pa.py_buffer(run_offs), pa.py_buffer(buf)],
+        ))
     return pa.Table.from_arrays(
         [
             pa.array(term_id[starts], type=pa.int64()),
-            pa.array(np.full(nb, bucket_id, dtype=np.int32), type=pa.int32()),
-            pa.array(block_seq, type=pa.int32()),
-            pa.array((ends - starts).astype(np.int32), type=pa.int32()),
-            pa.array(doc_id[starts], type=pa.int64()),
-            pa.array(doc_id[ends - 1], type=pa.int64()),
-            pa.array(max_w, type=pa.float64()),
-            gaps_col,
-            weights_col,
+            pa.array(np.diff(starts, append=n).astype(np.int32)),
+            *cols,
         ],
-        schema=schema,
+        schema=_shard_schema(),
     )

@@ -24,8 +24,8 @@ Partition assignment is a deterministic conv-id RANGE split balanced by
 raw turn count (conv_partition_map; persisted as conv_parts/) —
 reproducible under restart, independent of input row order, a
 conversation never splits across partitions, and every partition owns a
-CONTIGUOUS doc-id range, so the doc shard doubles as the posting-block
-bucket (zero posting-level shuffle downstream,
+CONTIGUOUS doc-id range, so the doc shard holds one posting run per
+term (zero posting-level shuffle downstream,
 blocks.encode_shards_from_postings).
 At Iceberg scale, stage 0 is replaced by the table's own
 partitioning/manifest metadata (enumerate data files per partition
@@ -49,7 +49,7 @@ from dataclasses import asdict, dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .blocks import DEFAULT_BLOCK_SIZE, encode_shards_from_postings
+from .blocks import encode_shards_from_postings
 from .tokenize import tokenize_turns
 
 MANIFEST_VERSION = 1
@@ -200,8 +200,8 @@ def conv_partition_map(
     term of the build at high core counts (each turn also carries a
     small constant so metadata-ish empty turns still weigh). Because
     doc ids ascend in (conv_id, turn_idx), each partition owns a
-    CONTIGUOUS doc-id range: the doc shard IS the posting-block bucket,
-    which is what lets the block build run with zero posting-level
+    CONTIGUOUS doc-id range: the doc shard holds one posting run per
+    term, which is what lets the run encode go with zero posting-level
     shuffle (blocks.encode_shards_from_postings).
     """
     from .dictionary import two_phase_cumsum
@@ -337,7 +337,7 @@ def _build_wave(
     ]
     out: list[PartitionManifest] = []
     empty = [pid for pid in wave if pid not in set(existing)]
-    for pid in empty:  # hash buckets with no conversations (tiny inputs)
+    for pid in empty:  # partitions with no conversations (tiny inputs)
         m = _empty_partition_manifest(snap, pid)
         _atomic_write_json(
             os.path.join(_manifest_dir(index_root), f"p{pid}.json"), asdict(m)
@@ -766,7 +766,6 @@ def build_single_shard_index(
     transcripts: DataFrame,
     index_root: str,
     analyzer: str = "reference",
-    block_size: int = DEFAULT_BLOCK_SIZE,
 ) -> dict:
     """Throwaway block index for an in-query build: tokenize_turns → one
     ``postings/partition_id=0`` shard → finalize_lite →
@@ -784,15 +783,17 @@ def build_single_shard_index(
         {"ngrams": 1, "analyzer": analyzer, "min_distinct_terms": 0},
     )
     finalize_lite(spark, index_root)
-    return encode_shards_from_postings(spark, index_root, block_size=block_size)
+    return encode_shards_from_postings(spark, index_root)
 
 
 def _parallel_jobs(*thunks) -> None:
     """Run independent Spark actions concurrently from driver threads
     (supported: one SparkSession, many jobs; the scheduler interleaves
     their tasks so no job's barrier leaves cores idle). Re-raises the
-    first failure."""
-    import threading
+    first failure. The threads are ``InheritableThread``s, so each job
+    carries the caller's local properties (its job group and
+    description); plain threads drop them in pinned-thread mode."""
+    from pyspark import InheritableThread
 
     errors: list[BaseException] = []
 
@@ -802,7 +803,7 @@ def _parallel_jobs(*thunks) -> None:
         except BaseException as e:  # noqa: BLE001 - reraised below
             errors.append(e)
 
-    threads = [threading.Thread(target=runner, args=(t,)) for t in thunks]
+    threads = [InheritableThread(runner, args=(t,)) for t in thunks]
     for th in threads:
         th.start()
     for th in threads:

@@ -1,10 +1,11 @@
-"""Chunked-MaxScore top-k over the doc-sharded on-disk block index.
+"""Chunked-MaxScore top-k over the doc-sharded on-disk term-run index.
 
 The scale query path (SURVEY §7.1 step 6): document-space-sharded
 retrieval over the shard files ``blocks.encode_shards_from_postings``
-writes. Each task reads only the matched terms' blocks of its shards
-(no block bytes shuffle) through ``blocks.read_shard_lists``, which owns
-the block format and returns each term's doc ids and exact weights, and
+writes. Each task reads only the matched terms' runs of its shards
+(no posting bytes shuffle) through ``blocks.read_shard_lists``, which
+owns the format and returns each term's doc ids, exact weights and
+score bound, and
 runs EVERY query of the batch over those lists with one kernel, chunked
 MaxScore (``_maxscore_query``), and an independent bounded top-k per
 query. A tiny global merge (<= k rows per query per shard) takes the
@@ -24,9 +25,6 @@ Correctness contract (rank identity with oracle + M1 path):
   the threshold) so score-equal docs that win by doc-id tie-break are
   never pruned;
 - a query with k < 1 returns no rows.
-
-The per-posting cursor DAAT block-max WAND kernel lives on in
-``tests/wand_oracle.py`` as the fuzz-test reference.
 """
 
 from __future__ import annotations
@@ -52,9 +50,9 @@ def _maxscore_query(
     smaller-id) incumbent, so exclusion is exact, not approximate.
     Candidates are exactly scored VECTORIZED per chunk: one searchsorted
     gather per term in ascending term_id order, so per-element float
-    accumulation order matches the M1 path and the cursor oracle. θ only
-    grows, so the non-essential prefix only widens. ~block_size× less
-    Python-interpreter work than the cursor DAAT kernel on batch loads.
+    accumulation order matches the M1 path. θ only grows, so the
+    non-essential prefix only widens. Python-interpreter work is per
+    chunk, not per posting.
 
     Returns (doc_ids, scores) of the final pool, unordered beyond the
     pool invariant (caller ranks); empty when k < 1.
@@ -120,7 +118,7 @@ def _score_shard(
     queries: list[tuple[str, int, list[tuple[int, float]]]],
 ) -> pd.DataFrame:
     """Every query of the batch over one shard's matched term lists
-    (``lists`` = {term_id: (doc ids, weights, max_weight)}, as
+    (``lists`` = {term_id: (doc ids, weights, bound)}, as
     blocks.read_shard_lists returns them) → (query_id, doc_id, score,
     k), <= k rows per query."""
     out = {"query_id": [], "doc_id": [], "score": [], "k": []}
@@ -176,7 +174,7 @@ def wand_topk_sharded(
 ) -> DataFrame:
     """query_terms(query_id, term, qw, k) → (query_id, rank, conv_id,
     turn_idx, score): chunked MaxScore over the doc-sharded on-disk
-    block index (blocks.encode_shards_from_postings layout) — the
+    term-run index (blocks.encode_shards_from_postings layout) — the
     engine's one block query path. Queries with k < 1 return no rows.
 
     ``algo`` is kept for API compatibility only (``bench.py`` passes
@@ -185,8 +183,8 @@ def wand_topk_sharded(
     same rows; any other name raises ValueError.
 
     Each task gets one shard PATH; blocks.read_shard_lists reads only
-    the matched terms' blocks and returns their decoded lists, and the
-    kernel runs every query of the batch over them. Matched block bytes
+    the matched terms' runs and returns their decoded lists, and the
+    kernel runs every query of the batch over them. Matched posting bytes
     never shuffle and never cross the JVM→Python socket: the only rows
     Spark moves are <= k results per (query, shard). The doc_id →
     (conv_id, turn_idx) label is resolved IN-KERNEL

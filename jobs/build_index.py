@@ -8,7 +8,8 @@
 Reads the transcripts table (parquet path, or `table:<name>` for a
 catalog/Iceberg table), runs the per-partition checkpointed build
 (ir_base_spark.index.manifest), finalizes the dictionary and corpus
-stats, encodes compressed posting blocks (applying --norm), and writes
+stats, encodes compressed posting runs, one per term per shard
+(applying --norm), and writes
 everything under --index-root.
 Prints a JSON build report (lineage + throughput) to stdout.
 """
@@ -58,7 +59,7 @@ def main() -> None:
         ngrams=args.ngrams,
         analyzer=args.analyzer,
     )
-    # single posting materialization: metadata finalize + blocks
+    # single posting materialization: metadata finalize + term runs
     # straight from the tokenize output (the encoder applies --norm)
     idx, base = finalize_lite(
         spark, args.index_root, min_df=args.min_df, max_df=args.max_df,

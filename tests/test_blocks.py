@@ -1,4 +1,4 @@
-"""Unit tests for the varbyte/delta-gap block codec."""
+"""Unit tests for the varbyte/delta-gap term-run codec."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ir_base_spark.index.blocks import (
-    _encode_sorted_run_arrow,
+    _encode_runs,
     bm25_doc_denom,
     bm25_idf,
     bm25_weight,
@@ -15,14 +15,7 @@ from ir_base_spark.index.blocks import (
     varbyte_decode,
     varbyte_encode,
 )
-from tests.wand_oracle import tf_term_blocks
-
-
-def _decode(firsts, lasts, ns, gaps, payloads, meta):
-    """Decode a run of blocks given as per-block bytes lists."""
-    return decode_postings_run(
-        firsts, lasts, ns, b"".join(gaps), b"".join(payloads), meta
-    )
+from tests.term_runs import tf_term_run
 
 
 def test_varbyte_roundtrip_simple():
@@ -58,14 +51,12 @@ def test_block_roundtrip():
     tf = rng.integers(1, 300, size=128)
     denom = rng.uniform(0.5, 3.0, size=1_000_000)
     for idf in (1.3, -0.4):  # negative IDF: DF > N/2
-        firsts, lasts, ns, mx, gaps, payloads, meta, ws = tf_term_blocks(
-            ids, tf, idf, denom, None, 128
-        )
-        assert firsts[0] == ids[0] and lasts[0] == ids[-1] and ns[0] == 128
-        assert mx[0] == ws.max()
-        rids, rws = _decode(firsts, lasts, ns, gaps, payloads, meta)
+        n, gaps, tfs, meta, ws = tf_term_run(ids, tf, idf, denom, None)
+        assert n == 128
+        rids, rws = decode_postings_run([n], gaps, tfs, meta)
         assert (rids == ids).all()
         assert (rws == ws).all()  # float64 bit-exact
+        assert rws.max() == ws.max()  # the reader's term bound
 
 
 @given(st.data())
@@ -83,16 +74,15 @@ def test_block_roundtrip_property(data):
     ids = start + np.cumsum(np.array([0] + gaps[:-1], dtype=np.int64))
     # zero-stride per-doc denominator: any doc id indexes it, no memory
     denom = np.broadcast_to(np.float64(1.25), (int(ids[-1]) + 1,))
-    firsts, lasts, ns, _mx, enc, payloads, meta, ws = tf_term_blocks(
-        ids, tf, idf, denom, None, n
-    )
-    rids, rws = _decode(firsts, lasts, ns, enc, payloads, meta)
+    rn, enc, tfs, meta, ws = tf_term_run(ids, tf, idf, denom, None)
+    assert rn == n
+    rids, rws = decode_postings_run([rn], enc, tfs, meta)
     assert (rids == ids).all()
     assert (rws == ws).all()
 
 
 def test_tf_payload_multibyte_roundtrip():
-    """TF-payload blocks with term frequencies needing 2+ varbyte bytes
+    """A TF-payload run with term frequencies needing 2+ varbyte bytes
     (tf > 127) must reconstruct the exact BM25 doubles."""
     n = 500
     rng = np.random.default_rng(3)
@@ -104,43 +94,51 @@ def test_tf_payload_multibyte_roundtrip():
     idf_t = float(bm25_idf(10_000, 37))
     denom = bm25_doc_denom(dl, 40.0)
     w = bm25_weight(idf_t, tf.astype(np.float64), denom[doc])
-    enc = _encode_sorted_run_arrow(tid, 0, doc, w, 64, tf)
-    assert enc.schema.metadata[b"sg_payload"] == b"tfv1"
-    cols = enc.to_pydict()
-    ids, ws = _decode(
-        np.array(cols["first_doc"]), np.array(cols["last_doc"]),
-        np.array(cols["n"]), cols["doc_gaps"], cols["weights"],
-        (idf_t, denom, 0, None),
+    enc = _encode_runs(tid, doc, tf)
+    assert enc.schema.metadata[b"sg_payload"] == b"tfv2"
+    assert enc.column_names == ["term_id", "n", "doc_gaps", "tfs"]
+    (row,) = enc.to_pylist()
+    assert row["n"] == n
+    ids, ws = decode_postings_run(
+        [n], row["doc_gaps"], row["tfs"], (idf_t, denom, 0, None)
     )
     assert (ids == doc).all()
     assert (ws == w).all()  # bit-identical reconstruction
 
 
 def test_decode_postings_run_bit_exact():
-    """A multi-block run decodes bit-exactly to the encoder's input
-    weights, and equals the same blocks decoded as one-block runs, with
-    and without a per-doc norm divisor, including multibyte gaps and
-    tfs."""
-    n = 700
+    """A multi-run buffer decoded in one pass equals each run decoded on
+    its own and the encoder's weights bit for bit, with and without a
+    per-doc norm divisor, including multibyte gaps and tfs and leading
+    gaps >= 2**32."""
     rng = np.random.default_rng(13)
-    doc = np.sort(rng.choice(np.arange(5_000_000), size=n, replace=False))
-    tf = rng.integers(1, 50_000, size=n).astype(np.int64)
-    dl = np.zeros(5_000_000, dtype=np.float64)
-    dl[doc] = tf * 3.0
-    denom = bm25_doc_denom(dl, 40.0)
+    lo, span, n_terms = 2**32 + 5, 1_000_000, 6
+    counts = rng.integers(1, 300, size=n_terms)
+    tid = np.repeat(np.arange(n_terms), counts)
+    doc = lo + np.concatenate(
+        [np.sort(rng.choice(span, size=c, replace=False)) for c in counts]
+    )
+    tf = rng.integers(1, 50_000, size=tid.size)
+    idf = rng.normal(loc=0.5, scale=1.5, size=n_terms)[tid]
+    denom = bm25_doc_denom(rng.integers(1, 400, size=span), 40.0)
+    cols = _encode_runs(tid, doc, tf).to_pydict()
+    assert cols["term_id"] == list(range(n_terms))
+    assert cols["n"] == counts.tolist()
+    ends = np.cumsum(cols["n"])
 
-    for nrm in (None, rng.uniform(0.5, 3.0, size=5_000_000)):
-        firsts, lasts, ns, _mx, gaps, payloads, meta, w = tf_term_blocks(
-            doc, tf, 1.7, denom, nrm, 64
+    for nrm in (None, rng.uniform(0.5, 3.0, size=span)):
+        w = bm25_weight(idf, tf.astype(np.float64), denom[doc - lo])
+        if nrm is not None:
+            w = w / nrm[doc - lo]
+        ids, ws = decode_postings_run(
+            cols["n"], b"".join(cols["doc_gaps"]), b"".join(cols["tfs"]),
+            (idf, denom, lo, nrm),
         )
-        assert len(firsts) > 1
-        per_block = [
-            decode_postings_run(firsts[i:i + 1], lasts[i:i + 1], ns[i:i + 1],
-                                gaps[i], payloads[i], meta)
-            for i in range(len(firsts))
-        ]
-        ids_b = np.concatenate([p[0] for p in per_block])
-        ws_b = np.concatenate([p[1] for p in per_block])
-        ids_r, ws_r = _decode(firsts, lasts, ns, gaps, payloads, meta)
-        assert (ids_r == ids_b).all() and (ids_r == doc).all()
-        assert (ws_r == ws_b).all() and (ws_r == w).all()  # bit-identical
+        assert (ids == doc).all()
+        assert (ws == w).all()  # bit-identical
+        for n, e, g, t in zip(cols["n"], ends, cols["doc_gaps"], cols["tfs"]):
+            one_ids, one_ws = decode_postings_run(
+                [n], g, t, (idf[e - n: e], denom, lo, nrm)
+            )
+            assert (one_ids == ids[e - n: e]).all()
+            assert (one_ws == ws[e - n: e]).all()

@@ -186,3 +186,24 @@ def test_resume_rejects_marker_without_conv_ranges(
         json.dump(meta, fh)
     with pytest.raises(ValueError, match="Use a fresh index_root"):
         resumable_build(spark, t, root, num_partitions=2)
+
+
+def test_finalize_lite_keeps_caller_job_group(spark, fixture_small, tmp_path):
+    """An unpruned finalize_lite runs its two chains from helper
+    threads; every job they start carries the caller's job group, so
+    none lands outside it."""
+    root = str(tmp_path / "idx")
+    resumable_build(
+        spark, spark.createDataFrame(fixture_small.transcripts), root,
+        num_partitions=4,
+    )
+    sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("finalize-under-test", "finalize_lite job group")
+    try:
+        finalize_lite(spark, root)
+    finally:  # clear the group (SparkContext.clearJobGroup's properties)
+        for key in ("jobGroup.id", "job.description", "job.interruptOnCancel"):
+            sc.setLocalProperty(f"spark.{key}", None)
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped
+    assert sc.statusTracker().getJobIdsForGroup("finalize-under-test")

@@ -62,7 +62,7 @@ def test_skew_shard_balance_and_rank_identity(spark, tmp_path):
     sdf = spark.createDataFrame(t)
     resumable_build(spark, sdf, root, num_partitions=8)
     finalize_lite(spark, root)
-    rep = encode_shards_from_postings(spark, root, block_size=16)
+    rep = encode_shards_from_postings(spark, root)
     assert rep["shards"] >= 4
 
     # the hot term really dominates: ~2 of ~6-7 tokens per turn

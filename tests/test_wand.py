@@ -1,4 +1,4 @@
-"""Block index + block-max WAND: rank identity vs oracle and M1 path."""
+"""Term-run block index + MaxScore: rank identity vs oracle and M1 path."""
 
 from __future__ import annotations
 
@@ -38,11 +38,11 @@ def _expected(fixture):
 
 def _sharded_root(spark, transcripts, root, partitions, **finalize_kw):
     """The production route: resumable build → metadata finalize →
-    per-shard path-based block encode."""
+    per-shard path-based run encode."""
     resumable_build(spark, spark.createDataFrame(transcripts), root,
                     num_partitions=partitions)
     finalize_lite(spark, root, **finalize_kw)
-    return encode_shards_from_postings(spark, root, block_size=16)
+    return encode_shards_from_postings(spark, root)
 
 
 def _by_rank(rows):
@@ -69,7 +69,7 @@ def _decoded_weights(spark, root) -> dict:
     label = {d: (c, t) for d, c, t in _doc_labels(spark, root)}
     out = {}
     for path in glob.glob(os.path.join(root, "blocks", "*", "blocks.parquet")):
-        for tid, (ids, ws, _mx) in read_shard_lists(root, path, term).items():
+        for tid, (ids, ws, _bound) in read_shard_lists(root, path, term).items():
             for d, w in zip(ids.tolist(), ws.tolist()):
                 out[(term[tid], *label[d])] = w
     return out
@@ -89,12 +89,11 @@ def _assert_weights_match(decoded: dict, reference: dict) -> None:
 
 
 def test_wand_rank_identity(spark, fixture_small, tmp_path):
-    """The in-query route (one shard, small blocks → multi-block lists)
-    is rank-identical to the single-node oracle."""
+    """The in-query route (one shard) is rank-identical to the
+    single-node oracle."""
     root = str(tmp_path / "single")
     rep = build_single_shard_index(
-        spark, spark.createDataFrame(fixture_small.transcripts), root,
-        block_size=16,
+        spark, spark.createDataFrame(fixture_small.transcripts), root
     )
     assert rep["shards"] == 1 and rep["blocks"] > 0
     qt = analyze_query_terms(spark, fixture_small.queries)
@@ -112,7 +111,7 @@ def test_wand_matches_m1_bitwise(spark, fixture_small, tmp_path):
     m1 = _by_rank(topk_search(build_index(spark, sdf), qt).collect())
 
     root = str(tmp_path / "single")
-    build_single_shard_index(spark, sdf, root, block_size=32)
+    build_single_shard_index(spark, sdf, root)
     wd = _by_rank(wand_topk_sharded(spark, root, qt).collect())
 
     assert set(m1) == set(wd)
@@ -123,7 +122,7 @@ def test_wand_matches_m1_bitwise(spark, fixture_small, tmp_path):
 
 def test_sharded_pipeline_rank_identity(spark, fixture_small, tmp_path):
     """Full production path: resumable build → metadata finalize →
-    per-shard pyarrow block encode → sharded WAND. Must be
+    per-shard pyarrow run encode → sharded WAND. Must be
     rank-identical to the single-node oracle."""
     root = str(tmp_path / "sharded")
     rep = _sharded_root(spark, fixture_small.transcripts, root, 8)
@@ -218,8 +217,9 @@ def test_norm_rank_identity(spark, fixture_small, tmp_path, norm):
 
 def test_unscorable_block_files_raise(spark, fixture_small, tmp_path):
     """A block shard without its _doclen.npz sidecar, or a block file
-    without the TF-payload stamp, fails with an error naming the file
-    and the fix — never a silent mis-score."""
+    without the tfv2 TF-payload stamp (unstamped, or stamped with the
+    older tfv1), fails with an error naming the file and the fix — never
+    a silent mis-score."""
     root = str(tmp_path / "broken")
     build_single_shard_index(
         spark, spark.createDataFrame(fixture_small.transcripts), root
@@ -233,9 +233,10 @@ def test_unscorable_block_files_raise(spark, fixture_small, tmp_path):
 
     path = os.path.join(shard, "blocks.parquet")
     tbl = pq.read_table(path)
-    pq.write_table(tbl.replace_schema_metadata(None), path)
-    with pytest.raises(Exception, match="not a TF-payload block file"):
-        wand_topk_sharded(spark, root, qt).collect()
+    for meta in (None, {b"sg_payload": b"tfv1"}):
+        pq.write_table(tbl.replace_schema_metadata(meta), path)
+        with pytest.raises(Exception, match="not a TF-payload block file"):
+            wand_topk_sharded(spark, root, qt).collect()
 
 
 def test_pruned_root_one_answer(spark, fixture_small, tmp_path):
@@ -269,33 +270,34 @@ def test_pruned_root_one_answer(spark, fixture_small, tmp_path):
             assert abs(got[key][2] - want[key][2]) < 1e-9, key
 
 
-def test_reader_runs_across_row_groups(spark, fixture_small, tmp_path):
-    """One posting per block puts > 4096 blocks in the one shard file,
-    so term runs cross parquet row-group boundaries. read_shard_lists
-    returns every posting bit-exactly: with one posting per block, each
-    block's first_doc and max_weight ARE that posting's doc id and the
-    encoder's weight."""
-    root = str(tmp_path / "bs1")
-    build_single_shard_index(
-        spark, spark.createDataFrame(fixture_small.transcripts), root,
-        block_size=1,
+def test_reader_runs_across_row_groups(spark, tmp_path):
+    """A one-shard index of 200 conversations holds more than 4096 term
+    runs, so its file spans two row groups. Reading terms from both
+    sides of the boundary in one call equals reading each term alone,
+    bit for bit, and every decoded weight matches M1."""
+    from ir_base_spark.fixtures import make_fixture
+
+    sdf = spark.createDataFrame(
+        make_fixture(n_conversations=200, seed=42).transcripts
     )
+    root = str(tmp_path / "runs")
+    build_single_shard_index(spark, sdf, root)
     path = os.path.join(root, "blocks", "partition_id=0", "blocks.parquet")
     meta = pq.ParquetFile(path).metadata
+    assert meta.num_row_groups == 2
     cut = meta.row_group(0).num_rows
-    tbl = pq.read_table(path).to_pandas()
-    assert meta.num_row_groups > 1
-    assert tbl["term_id"][cut - 1] == tbl["term_id"][cut]  # run spans it
+    tids = pq.read_table(path, columns=["term_id"])["term_id"].to_pylist()
+    pick = tids[cut - 20: cut + 20]
 
-    tids = tbl["term_id"].unique().tolist()  # file order: ascending
-    got = read_shard_lists(root, path, tids)
-    assert list(got) == tids
-    ids = np.concatenate([got[t][0] for t in tids])
-    ws = np.concatenate([got[t][1] for t in tids])
-    assert (ids == tbl["first_doc"].to_numpy()).all()
-    assert (ws == tbl["max_weight"].to_numpy()).all()  # bit-identical
-    assert [got[t][2] for t in tids] == (
-        tbl.groupby("term_id", sort=True)["max_weight"].max().tolist()
+    together = read_shard_lists(root, path, pick)
+    assert list(together) == pick
+    for t in pick:
+        ids, ws, bound = read_shard_lists(root, path, [t])[t]
+        assert (together[t][0] == ids).all()
+        assert (together[t][1] == ws).all()  # bit-identical
+        assert together[t][2] == bound == ws.max()
+    _assert_weights_match(
+        _decoded_weights(spark, root), _m1_weights(build_index(spark, sdf))
     )
 
 
@@ -308,7 +310,7 @@ def test_query_cli_uses_root_build_params(spark, fixture_small, tmp_path):
     bigram = str(tmp_path / "bigram")
     resumable_build(spark, sdf, bigram, num_partitions=4, ngrams=2)
     finalize_lite(spark, bigram)
-    encode_shards_from_postings(spark, bigram, block_size=16)
+    encode_shards_from_postings(spark, bigram)
     simple = str(tmp_path / "simple")
     build_single_shard_index(spark, sdf, simple, analyzer="simple")
     roots = ((bigram, {"ngrams": 2}), (simple, {"analyzer": "simple"}))

@@ -325,11 +325,11 @@ def main() -> None:
         "plan shapes apply with network shuffle — partitioning strategy is",
         "documented in SURVEY.md §7 and ir_base_spark/index/*.py docstrings.",
         "",
-        "Shared-bus attribution (measured, not guessed): "
-        "`BENCH/bus_probe.json` runs the EXACT block-encode kernel on one",
-        "shard from N concurrent plain processes (no Spark) — per-task",
-        "inflation vs N isolates the memory-bus ceiling from anything",
-        "plan- or scheduler-related. `BENCH/scaling_2_8.json` repeats the",
+        "Shared-bus attribution (measured, not guessed): every run is",
+        "bracketed by `perfbench.host.probe` (a numpy kernel alone and",
+        "from nproc concurrent threads; the record's `probes`) — its inflation",
+        "isolates the memory-bus ceiling from anything plan- or",
+        "scheduler-related. `BENCH/scaling_2_8.json` repeats the",
         "whole N→4N comparison at 2→8 cores, a pair that fits under the",
         "bus ceiling — closer to what four 2-core executors with private",
         "memory buses (the north rule's actual configuration) would see.",
