@@ -2,15 +2,18 @@
 
 The scale query path (SURVEY §7.1 step 6): document-space-sharded
 retrieval over the shard files ``blocks.encode_shards_from_postings``
-writes. Each task reads only the matched terms' runs of its shards
-(no posting bytes shuffle) through ``blocks.read_shard_lists``, which
-owns the format and returns each term's doc ids, exact weights and
-score bound, and
-runs EVERY query of the batch over those lists with one kernel, chunked
-MaxScore (``_maxscore_query``), and an independent bounded top-k per
-query. A tiny global merge (<= k rows per query per shard) takes the
-final top-k. Candidate generation, pruning, and scoring never leave the
-executor.
+writes. A call is eager and runs ONE Spark job over the index:
+- the driver maps the query terms to term ids, reading only those
+  terms from ``terms/`` (a pyarrow ``term in`` filter);
+- the scan job: each task reads only the matched terms' runs of its
+  shards through ``blocks.read_shard_lists`` (the format's one
+  reader), runs EVERY query of the batch over them with one kernel,
+  chunked MaxScore (``_maxscore_query``), and emits a bounded top-k
+  per query, labeled in-task (``blocks.label_docs``). Posting bytes
+  never leave the executor;
+- the driver merges the <= k rows per (query, shard) with one lexsort
+  (``_merge_topk``); nothing shuffles. ``MAX_MERGE_ROWS`` bounds them.
+Errors, such as an unscorable shard file, raise at call time.
 
 Correctness contract (rank identity with oracle + M1 path):
 - full evaluation accumulates qw·w in ascending term_id order (canonical
@@ -29,10 +32,16 @@ Correctness contract (rank identity with oracle + M1 path):
 
 from __future__ import annotations
 
+import glob
+import os
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame
+
+from ..index.blocks import label_docs, read_shard_lists
 
 
 def _maxscore_query(
@@ -142,28 +151,56 @@ def _score_shard(
     return pd.DataFrame(out)
 
 
-def _prepare_queries(terms: DataFrame, query_terms: DataFrame):
-    """query_terms ⋈ dictionary → (queries list, sorted distinct term ids);
-    the query set is small by contract (SURVEY §7.1) and rides in the
-    kernel closure."""
-    qt_pd = (
-        query_terms.join(
-            F.broadcast(terms.select("term", "term_id")), "term", "inner"
-        )
-        .select("query_id", "term_id", "qw", "k")
-        .toPandas()
-    )
-    if len(qt_pd) == 0:
+def _prepare_queries(index_root: str, query_terms: DataFrame):
+    """query_terms → (queries list, sorted distinct term ids) on the
+    driver (query sets are small by contract, SURVEY §7.1), reading only
+    the batch's own terms from ``terms/``, never the whole dictionary."""
+    qt = pd.DataFrame(query_terms.collect(), columns=query_terms.columns)
+    if len(qt) == 0:
         return [], []
+    ids = pq.read_table(
+        os.path.join(index_root, "terms"), columns=["term", "term_id"],
+        filters=[("term", "in", sorted(set(qt["term"])))],
+    ).to_pandas()
+    qt = qt.merge(ids, on="term")
     queries = [
         (qid, int(g["k"].iloc[0]), sorted(zip(g["term_id"].astype(int), g["qw"])))
-        for qid, g in qt_pd.groupby("query_id", sort=True)
+        for qid, g in qt.groupby("query_id", sort=True)
     ]
-    return queries, sorted(int(t) for t in set(qt_pd["term_id"]))
+    return queries, sorted(int(t) for t in set(qt["term_id"]))
+
+
+# the result schema; an Arrow table becomes a local relation, so the
+# returned frame collects without a Spark job
+_SCHEMA = pa.schema([
+    ("query_id", pa.string()), ("rank", pa.int32()), ("conv_id", pa.string()),
+    ("turn_idx", pa.int32()), ("score", pa.float64()),
+])
+
+
+def _merge_topk(parts: list[pd.DataFrame]) -> pa.Table:
+    """The shards' <= k rows per query → the final top-k of each query:
+    one lexsort on (query_id, score desc, doc_id asc); rank is the
+    position within the query."""
+    if not parts:
+        return _SCHEMA.empty_table()
+    rows = pd.concat(parts, ignore_index=True)
+    qcode = pd.factorize(rows["query_id"], sort=True)[0]
+    order = np.lexsort((rows["doc_id"], -rows["score"], qcode))
+    qcode = qcode[order]
+    rows = rows.iloc[order].assign(
+        rank=np.arange(len(qcode)) - np.searchsorted(qcode, qcode) + 1
+    )
+    rows = rows[rows["rank"] <= rows["k"]]
+    return pa.Table.from_pandas(rows[_SCHEMA.names], schema=_SCHEMA, preserve_index=False)
 
 
 # accepted ``algo`` names; all run the one shard kernel
 ALGOS = ("auto", "maxscore", "taat", "wand")
+
+# bound on the rows the driver merge collects: Σk over the batch's
+# scorable queries × shard count (each shard emits <= k rows per query)
+MAX_MERGE_ROWS = 1_000_000
 
 
 def wand_topk_sharded(
@@ -173,45 +210,29 @@ def wand_topk_sharded(
     algo: str = "auto",
 ) -> DataFrame:
     """query_terms(query_id, term, qw, k) → (query_id, rank, conv_id,
-    turn_idx, score): chunked MaxScore over the doc-sharded on-disk
-    term-run index (blocks.encode_shards_from_postings layout) — the
-    engine's one block query path. Queries with k < 1 return no rows.
+    turn_idx, score), a local DataFrame: the engine's one block query
+    path (module docstring). Queries with k < 1 return no rows, and a
+    batch none of whose terms is in the dictionary runs no scan.
 
     ``algo`` is kept for API compatibility only (``bench.py`` passes
     "wand" and "taat", perfbench's forced-algo check passes every name
     in ALGOS): every name in ALGOS runs the same kernel and returns the
-    same rows; any other name raises ValueError.
-
-    Each task gets one shard PATH; blocks.read_shard_lists reads only
-    the matched terms' runs and returns their decoded lists, and the
-    kernel runs every query of the batch over them. Matched posting bytes
-    never shuffle and never cross the JVM→Python socket: the only rows
-    Spark moves are <= k results per (query, shard). The doc_id →
-    (conv_id, turn_idx) label is resolved IN-KERNEL
-    (blocks.label_docs, doc_id = base[conv] + turn by construction) — a
-    final join against the full turn-level docs table would rescan 10^N
-    rows per batch to label <= k·|queries| results. The final merge is
-    just the bounded per-query rank window.
+    same rows; any other name raises ValueError. A batch whose Σk ×
+    shard count exceeds MAX_MERGE_ROWS raises ValueError before the
+    scan job.
     """
-    import glob as _glob
-    import os as _os
-
     if algo not in ALGOS:
         raise ValueError(f"unknown algo {algo!r}; expected one of {ALGOS}")
-    if not _os.path.isdir(_os.path.join(index_root, "base")):
+    if not os.path.isdir(os.path.join(index_root, "base")):
         raise FileNotFoundError(
             f"{index_root}/base/ sidecar missing — finalize the index with "
             "manifest.finalize_lite to write the conversation-base sidecar."
         )
-    terms = spark.read.parquet(_os.path.join(index_root, "terms"))
-    queries, term_ids = _prepare_queries(terms, query_terms)
+    queries, term_ids = _prepare_queries(index_root, query_terms)
     if not queries:
-        return spark.createDataFrame(
-            [],
-            "query_id string, rank int, conv_id string, turn_idx int, score double",
-        )
+        return spark.createDataFrame(_SCHEMA.empty_table())
     shard_files = sorted(
-        _glob.glob(_os.path.join(index_root, "blocks", "partition_id=*", "*.parquet"))
+        glob.glob(os.path.join(index_root, "blocks", "partition_id=*", "*.parquet"))
     )
     if not shard_files:
         raise FileNotFoundError(
@@ -219,50 +240,29 @@ def wand_topk_sharded(
             "partition_id=*/; encode the index with "
             "encode_shards_from_postings"
         )
-    # fuse shard files into ~2 tasks per core: one task per FILE pays
-    # the python-worker round trip per shard (measured ~0.15s each — at
-    # 4 cores the 32-task read floor alone was 1.6s, dominating batch
-    # latency); the kernel loop already streams multiple paths per
-    # task, and shard uniformity (test_skew) bounds straggler risk.
-    # sc.parallelize slices the path list into EXACTLY even contiguous
-    # chunks — a repartition() would round-robin from a random offset
-    # per input partition, and the resulting collisions (one task with
-    # 3-4 shards, others empty) were the measured batch straggler
-    n_tasks = max(
-        1, min(len(shard_files), spark.sparkContext.defaultParallelism * 2)
-    )
-    fdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(p,) for p in shard_files], n_tasks
-        ),
-        "path string",
-    )
+    sum_k = sum(max(k, 0) for _, k, _ in queries)
+    if sum_k * len(shard_files) > MAX_MERGE_ROWS:
+        raise ValueError(
+            f"wand_topk_sharded: Σk = {sum_k} × {len(shard_files)} shards = "
+            f"{sum_k * len(shard_files)} rows exceeds the driver merge's "
+            f"MAX_MERGE_ROWS = {MAX_MERGE_ROWS}. Split the batch or lower k."
+        )
+    # ~2 tasks per core, each an EXACTLY even contiguous slice of the
+    # paths (one task per file paid a python-worker round trip per shard;
+    # repartition() collides shards into straggler tasks). An RDD job:
+    # mapInPandas over a path DataFrame paid a second python pass per
+    # task (scan 0.83 → 0.43 s on 600 conversations, 4 cores).
+    sc = spark.sparkContext
+    n_tasks = min(len(shard_files), 2 * sc.defaultParallelism)
 
-    def shard_kernel(batches):
-        from ..index.blocks import label_docs, read_shard_lists
-
-        for pdf in batches:
-            for path in pdf["path"]:
-                out = _score_shard(
-                    read_shard_lists(index_root, path, term_ids), queries
-                )
-                if len(out) == 0:
-                    continue
+    def shard_kernel(paths):
+        for path in paths:
+            out = _score_shard(read_shard_lists(index_root, path, term_ids), queries)
+            if len(out):
                 out["conv_id"], out["turn_idx"] = label_docs(
                     index_root, out["doc_id"].to_numpy()
                 )
                 yield out
 
-    local = fdf.mapInPandas(
-        shard_kernel,
-        "query_id string, doc_id long, score double, k int, "
-        "conv_id string, turn_idx int",
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    topk = (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-    )
-    return topk.select("query_id", "rank", "conv_id", "turn_idx", "score")
+    parts = sc.parallelize(shard_files, n_tasks).mapPartitions(shard_kernel).collect()
+    return spark.createDataFrame(_merge_topk(parts))

@@ -29,17 +29,19 @@ MAX_QUERIES = 100_000
 def enforce_query_cap(qdf, source: str, max_queries: int = MAX_QUERIES):
     """Return qdf.toPandas() after verifying the row cap.
 
-    The query set is driver-resident by contract (it is broadcast to
-    every shard kernel); enforce the contract instead of assuming it."""
-    n_queries = qdf.limit(max_queries + 1).count()
-    if n_queries > max_queries:
+    The query set is driver-resident by contract (it rides to every
+    shard kernel); enforce the contract instead of assuming it. One
+    job reads at most max_queries + 1 rows, and their count is the
+    check."""
+    pdf = qdf.limit(max_queries + 1).toPandas()
+    if len(pdf) > max_queries:
         raise SystemExit(
             f"query set {source!r} has more than {max_queries} rows; "
-            f"the batch query path broadcasts queries to every shard "
+            f"the batch query path sends queries to every shard "
             f"and is sized for interactive batches. Split the file or "
             f"raise MAX_QUERIES deliberately."
         )
-    return qdf.toPandas()
+    return pdf
 
 
 def run_query(spark, root: str, qpdf, engine: str):

@@ -330,3 +330,98 @@ def test_query_cli_uses_root_build_params(spark, fixture_small, tmp_path):
         for engine in ("wand", "dataframe"):
             got = _by_rank(run_query(spark, root, q, engine).collect())
             _assert_rows_match(got, want)
+
+
+def _run_in_job_group(spark, fn):
+    """→ (fn(), number of Spark jobs fn ran), read back through the
+    status tracker once the listener bus has delivered every job event."""
+    sc = spark.sparkContext
+    group = f"wand-jobs-{os.getpid()}-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cross_shard_ties_merge_on_doc_order(spark, fixture_small, tmp_path):
+    """Identical turns spread over the 4 shards score exactly alike; k
+    cuts inside that tie group, so each shard's own top-k holds losers.
+    The merged rows equal M1 ``topk_search`` and keep the smallest
+    (conv_id, turn_idx) — the MyPriorityQueue tie rule."""
+    t = fixture_small.transcripts.copy()
+    convs = sorted(t["conv_id"].unique())[::5]
+    tie = t["conv_id"].isin(convs) & (t["turn_idx"] == 0)
+    t.loc[tie, "text"] = "zyxtie quokkatie zyxtie"
+    root = str(tmp_path / "ties")
+    _sharded_root(spark, t, root, 4)
+    q = pd.DataFrame({"query_id": ["q-tie5", "q-tie7"],
+                      "query_text": ["zyxtie", "zyxtie quokkatie"],
+                      "k": [5, 7]})
+    qt = analyze_query_terms(spark, q)
+
+    stem = qt.filter("query_id = 'q-tie5'").first()["term"]
+    tid = spark.read.parquet(root + "/terms").filter(
+        f"term = '{stem}'").first()["term_id"]
+    shards = glob.glob(os.path.join(root, "blocks", "*", "blocks.parquet"))
+    holding = [p for p in shards if read_shard_lists(root, p, [tid])]
+    assert len(shards) == 4 and len(holding) >= 3
+
+    got = _by_rank(wand_topk_sharded(spark, root, qt).collect())
+    _assert_rows_match(got, _by_rank(
+        topk_search(open_index(spark, root), qt).collect()))
+    for qid, k in (("q-tie5", 5), ("q-tie7", 7)):
+        rows = [got[(qid, r)] for r in range(1, k + 1)]
+        assert [(c, ti) for c, ti, _ in rows] == [(c, 0) for c in convs[:k]]
+        assert len({s for _, _, s in rows}) == 1
+    assert len(got) == 12
+
+
+def test_one_scan_job_per_call(spark, fixture_small, tmp_path):
+    """A call plus its collect runs at most two Spark jobs; a batch
+    whose terms are all outside the dictionary returns no rows with the
+    five-column schema and runs no job beyond reading its query terms."""
+    root = str(tmp_path / "jobs")
+    _sharded_root(spark, fixture_small.transcripts, root, 4)
+    qt = analyze_query_terms(spark, fixture_small.queries)
+    rows, n_jobs = _run_in_job_group(
+        spark, lambda: wand_topk_sharded(spark, root, qt).collect())
+    assert rows and n_jobs <= 2
+
+    absent = analyze_query_terms(spark, pd.DataFrame(
+        {"query_id": ["qa", "qb"], "query_text": ["zzqxv", "qqzvx wwxzq"],
+         "k": [5, 10]}))
+    _, n_read = _run_in_job_group(spark, absent.collect)
+    df, n_jobs = _run_in_job_group(
+        spark, lambda: wand_topk_sharded(spark, root, absent))
+    rows, n_collect = _run_in_job_group(spark, df.collect)
+    assert rows == [] and n_jobs == n_read and n_collect == 0
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+        ("query_id", "string"), ("rank", "int"), ("conv_id", "string"),
+        ("turn_idx", "int"), ("score", "double")]
+
+
+def test_merge_bound_raises_before_scan(spark, fixture_small, tmp_path,
+                                        monkeypatch):
+    """A batch whose Σk × shard count exceeds MAX_MERGE_ROWS raises an
+    error naming Σk, the shard count and the fix, and runs no Spark job."""
+    from ir_base_spark.query import wand
+
+    root = str(tmp_path / "bound")
+    _sharded_root(spark, fixture_small.transcripts, root, 4)
+    q = fixture_small.queries.head(2).assign(k=[10, 15])
+    qt = analyze_query_terms(spark, q)
+    monkeypatch.setattr(wand, "MAX_MERGE_ROWS", 99)
+
+    def call():
+        with pytest.raises(ValueError, match=r"Σk = 25 × 4 shards = 100 rows.*"
+                           r"MAX_MERGE_ROWS = 99\. Split the batch or lower k"):
+            wand_topk_sharded(spark, root, qt)
+
+    _, n_jobs = _run_in_job_group(spark, call)
+    assert n_jobs == 0
+    monkeypatch.setattr(wand, "MAX_MERGE_ROWS", 100)
+    assert wand_topk_sharded(spark, root, qt).count() > 0
