@@ -8,10 +8,13 @@ whole JOB atomic, so the expensive phase — tokenize + posting
 extraction — is committed per partition here:
 
   index_root/
-    input_parts/partition_id=<p>/   deterministic conv-hash split of the
-                                    input (stage 0, one shuffle)
+    conv_parts/                     conv_id -> partition_id map (the split)
+    input_parts.done.json           split marker: input snapshot id,
+                                    partition count, per-partition conv
+                                    ranges
     postings/partition_id=<p>/      tokenized postings, written per
                                     partition via tmp-dir + atomic rename
+    term_partials/partition_id=<p>/ per-partition (term, df, ttf, dh)
     manifest/p<p>.json              one row per COMPLETED partition
                                     (written after the rename, also
                                     tmp + atomic rename)
@@ -21,20 +24,21 @@ extraction — is committed per partition here:
                                     (n_docs, avg_doc_len — SURVEY §7.3)
 
 Partition assignment is a deterministic conv-id RANGE split balanced by
-raw turn count (conv_partition_map; persisted as conv_parts/) —
+raw text bytes (conv_partition_map; persisted as conv_parts/) —
 reproducible under restart, independent of input row order, a
 conversation never splits across partitions, and every partition owns a
 CONTIGUOUS doc-id range, so the doc shard holds one posting run per
 term (zero posting-level shuffle downstream,
 blocks.encode_shards_from_postings).
-At Iceberg scale, stage 0 is replaced by the table's own
-partitioning/manifest metadata (enumerate data files per partition
-range instead of rewriting); the per-partition commit protocol is
-unchanged. Missing partitions process in WAVES — one Spark job per wave
-over exactly the missing partitions' files — so restart cost is
-proportional to MISSING work, all cores stay busy regardless of
-partition count, and commit granularity stays bounded (a killed wave
-promotes nothing; completed waves stay done).
+The split is metadata only: the input is never copied. Each wave reads
+the input table itself, joined to the wave's slice of conv_parts, so W
+waves scan the input W times; the input snapshot id is taken again
+before each wave promotes, and a moved input promotes nothing. Missing
+partitions process in WAVES — one write job per wave over exactly the
+missing partitions — so restart cost is proportional to MISSING work,
+all cores stay busy regardless of partition count, and commit
+granularity stays bounded (a killed wave promotes nothing; completed
+waves stay done).
 """
 
 from __future__ import annotations
@@ -225,11 +229,11 @@ def _split_input(
     index_root: str,
     num_partitions: int,
 ) -> str:
-    """Stage 0: deterministic conv-range split, written once, atomically.
-
-    The conv→partition map is persisted under the index root (it is part
-    of the snapshot: doc-shard boundaries must survive restarts)."""
-    parts_dir = os.path.join(index_root, "input_parts")
+    """The split, written once, atomically: the conv→partition map
+    (conv_parts/) and the marker with each non-empty partition's conv
+    range. Both are part of the snapshot: doc-shard boundaries must
+    survive restarts. No input rows are written; the waves read the
+    input itself."""
     marker = os.path.join(index_root, "input_parts.done.json")
     snap = input_snapshot_id(transcripts)
     if os.path.exists(marker):
@@ -257,29 +261,12 @@ def _split_input(
     if os.path.isdir(cmap_dir):
         shutil.rmtree(cmap_dir)
     os.replace(tmp_cmap, cmap_dir)
-    cmap = spark.read.parquet(cmap_dir)
-
-    tmp = parts_dir + "._tmp"
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-    (
-        transcripts.join(F.broadcast(cmap), "conv_id")
-        .repartition(num_partitions, "partition_id")
-        .write.partitionBy("partition_id")
-        .mode("overwrite")
-        .parquet(tmp)
-    )
-    if os.path.isdir(parts_dir):
-        shutil.rmtree(parts_dir)
-    os.replace(tmp, parts_dir)
-    # per-partition conv ranges, computed ONCE at split time from the
-    # conv-level map (tiny agg): cmin/cmax are a property of the split,
-    # not of the tokenize pass, so the build waves don't have to
-    # observe conv_id at all (the old per-wave CollectMetrics over
-    # every posting row was a measured ~45% write-job overhead)
+    # per-partition conv ranges from the conv-level map (tiny agg): the
+    # manifest's cmin/cmax, and the list of non-empty partitions
     ranges = {
         int(r["partition_id"]): [r["cmin"], r["cmax"]]
-        for r in cmap.groupBy("partition_id")
+        for r in spark.read.parquet(cmap_dir)
+        .groupBy("partition_id")
         .agg(F.min("conv_id").alias("cmin"), F.max("conv_id").alias("cmax"))
         .collect()
     }
@@ -300,16 +287,46 @@ def _conv_ranges(index_root: str) -> dict:
         return {int(k): v for k, v in json.load(fh)["conv_ranges"].items()}
 
 
-def _empty_partition_manifest(snap: str, pid: int) -> PartitionManifest:
-    return PartitionManifest(
-        partition_id=pid, snapshot_id=snap, conv_id_min="", conv_id_max="",
-        turns=0, postings_written=0, bytes_compressed=0, wall_sec=0.0,
-        terms_per_sec=0.0, turns_per_sec=0.0, status="done",
-    )
+def _murmur3_int(k: int) -> int:
+    """Spark's ``Murmur3_x86_32.hashInt(k, 42)``: the hash that
+    ``repartition(n, int_col)`` buckets by ``pmod(hash, n)``."""
+    mask = 0xFFFFFFFF
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & mask
+
+    k1 = rotl((k & mask) * 0xCC9E2D51 & mask, 15) * 0x1B873593 & mask
+    h = (rotl(42 ^ k1, 13) * 5 + 0xE6546B64) & mask
+    h ^= 4
+    h = (h ^ (h >> 16)) * 0x85EBCA6B & mask
+    h = (h ^ (h >> 13)) * 0xC2B2AE35 & mask
+    h ^= h >> 16
+    return h - (1 << 32) if h & 0x80000000 else h
+
+
+def one_partition_per_task(df: DataFrame, pids: list[int]) -> DataFrame:
+    """Shuffle ``df`` (which has a ``partition_id`` column with values
+    in ``pids``) into ``len(pids)`` tasks holding one partition each.
+
+    ``repartition(n, "partition_id")`` buckets by hash and collides
+    (ids 0-3 land in 2 of 4 buckets); here each partition id is mapped
+    to an int slot key, picked on the driver so that the keys hash to n
+    distinct buckets."""
+    n = len(pids)
+    keys: dict[int, int] = {}
+    k = 0
+    while len(keys) < n:
+        keys.setdefault(_murmur3_int(k) % n, k)
+        k += 1
+    slot = F.create_map(
+        *(F.lit(x) for j, pid in enumerate(pids) for x in (pid, keys[j]))
+    )[F.col("partition_id")]
+    return df.repartition(n, slot.cast("int"))
 
 
 def _build_wave(
     spark: SparkSession,
+    transcripts: DataFrame,
     index_root: str,
     snap: str,
     wave: list[int],
@@ -317,152 +334,125 @@ def _build_wave(
     analyzer: str,
     min_distinct_terms: int,
 ) -> list[PartitionManifest]:
-    """Tokenize + commit one wave of partitions with ONE Spark job pair.
+    """Tokenize + commit one wave of partitions.
 
-    A single job writes every wave partition's postings (partitionBy on
-    the re-derived conv-hash — no shuffle: each input task holds exactly
-    one partition), one agg job computes per-partition metrics, then the
-    driver promotes each partition directory atomically and writes its
-    manifest row. Commit granularity = the wave; within a killed wave
-    nothing is promoted, completed waves stay done. This replaces the
-    old one-Spark-job-per-partition driver loop, whose per-job driver
-    orchestration (GIL + py4j from dozens of threads) throttled large
-    core counts.
+    The write job joins the input with ``broadcast(conv_parts)`` cut to
+    the wave's non-empty partitions (those the split marker lists),
+    shuffles it to one partition per task (one_partition_per_task), and
+    tokenizes and writes every wave partition's postings, one file per
+    partition directory. The term-partials job and a tiny rollup give
+    the per-partition metrics. Then, if the input snapshot has not
+    moved, the driver promotes each partition directory atomically and
+    writes its manifest row. Commit granularity = the wave; within a
+    killed wave nothing is promoted, completed waves stay done.
     """
-    parts_root = os.path.join(index_root, "input_parts")
     post_root = os.path.join(index_root, "postings")
-    existing = [
-        pid for pid in wave
-        if os.path.isdir(os.path.join(parts_root, f"partition_id={pid}"))
-    ]
-    out: list[PartitionManifest] = []
-    empty = [pid for pid in wave if pid not in set(existing)]
-    for pid in empty:  # partitions with no conversations (tiny inputs)
-        m = _empty_partition_manifest(snap, pid)
-        _atomic_write_json(
-            os.path.join(_manifest_dir(index_root), f"p{pid}.json"), asdict(m)
-        )
-        out.append(m)
-    if not existing:
-        return out
-
-    t0 = time.time()
-    paths = [os.path.join(parts_root, f"partition_id={pid}") for pid in existing]
-    part_df = spark.read.option("basePath", parts_root).parquet(*paths)
-    cmap = spark.read.parquet(os.path.join(index_root, "conv_parts"))
-    postings = tokenize_turns(
-        part_df.drop("partition_id"),
-        ngrams=ngrams,
-        min_distinct_terms=min_distinct_terms,
-        analyzer=analyzer,
-    ).join(F.broadcast(cmap), "conv_id")
-    tmp_dir = os.path.join(post_root, "._tmp_wave")
-    if os.path.isdir(tmp_dir):
-        shutil.rmtree(tmp_dir)
-    # the write job is PURE tokenize+write: conv ranges were computed
-    # once at split time (the split owns partition boundaries), and the
-    # count metrics ride the term-partials pass below — the old
-    # CollectMetrics observation evaluated #wave x 5 conditional
-    # aggregates per posting row inside the write job, a measured ~45%
-    # overhead of the build wave at 16 cores
-    postings.write.partitionBy("partition_id").mode("overwrite").parquet(tmp_dir)
-
-    # per-partition PARTIAL term stats, aggregated while the wave's
-    # postings are page-hot: finalize's dictionary agg then reads
-    # ~|local vocab| x #partitions rows instead of every posting row —
-    # the full-postings term scan was the measured critical path of
-    # finalize at high core counts. Written wave-atomically and
-    # promoted per-partition alongside postings/ (below); finalize
-    # falls back to the raw postings agg whenever the partials set
-    # does not exactly match the postings set (old roots, partial
-    # promotes), so the artifact is an optimization, never a
-    # correctness dependency. dh (doc-head count) rides along so the
-    # manifest turn counts come from the same pass.
     partials_root = os.path.join(index_root, "term_partials")
-    os.makedirs(partials_root, exist_ok=True)
+    tmp_dir = os.path.join(post_root, "._tmp_wave")
     ptmp = os.path.join(partials_root, "._tmp_wave")
-    if os.path.isdir(ptmp):
-        shutil.rmtree(ptmp)
-    (
-        spark.read.parquet(tmp_dir)
-        .groupBy("partition_id", "term")
-        .agg(
-            F.count(F.lit(1)).alias("df"),
-            F.sum("tf").cast("long").alias("ttf"),
-            F.sum("is_doc_head").cast("long").alias("dh"),
-        )
-        # one file per partition dir: without this, every shuffle
-        # partition writes a sliver into every hive dir (#shuffle x
-        # #partitions tiny files) and the finalize-side read pays the
-        # listing + per-task floor that this artifact exists to remove
-        .repartition(len(existing), F.col("partition_id"))
-        .write.partitionBy("partition_id")
-        .mode("overwrite")
-        .parquet(ptmp)
-    )
-    # manifest count metrics: a tiny rollup of the partials output
-    # (conv-level ranges come from the split marker). postings = Σdf,
-    # terms = Σttf, turns = Σdh — exact, same source of truth as the
-    # dictionary itself.
-    rollup = {
-        int(r["partition_id"]): r
-        for r in spark.read.parquet(ptmp)
-        .groupBy("partition_id")
-        .agg(
-            F.sum("df").alias("postings"),
-            F.sum("ttf").alias("terms"),
-            F.sum("dh").alias("turns"),
-        )
-        .collect()
-    }
     ranges = _conv_ranges(index_root)
-    stats = {
-        pid: {
-            "postings": rollup[pid]["postings"],
-            "cmin": ranges.get(pid, ["", ""])[0],
-            "cmax": ranges.get(pid, ["", ""])[1],
-            "turns": rollup[pid]["turns"],
-            "terms": rollup[pid]["terms"],
-        }
-        for pid in existing
-        if pid in rollup and rollup[pid]["postings"]
-    }
-    wall = time.time() - t0
-    for pid in existing:
-        src = os.path.join(tmp_dir, f"partition_id={pid}")
-        dst = os.path.join(post_root, f"partition_id={pid}")
-        if pid not in stats:
-            m = _empty_partition_manifest(snap, pid)
-            _atomic_write_json(
-                os.path.join(_manifest_dir(index_root), f"p{pid}.json"), asdict(m)
-            )
-            out.append(m)
-            continue
-        if os.path.isdir(dst):
-            shutil.rmtree(dst)
-        os.replace(src, dst)
-        psrc = os.path.join(ptmp, f"partition_id={pid}")
-        pdst = os.path.join(partials_root, f"partition_id={pid}")
-        if os.path.isdir(pdst):
-            shutil.rmtree(pdst)
-        if os.path.isdir(psrc):
-            os.replace(psrc, pdst)
-        agg = stats[pid]
-        nbytes = _dir_bytes(dst)
-        share = wall / max(1, len(existing))
-        m = PartitionManifest(
-            partition_id=pid,
-            snapshot_id=snap,
-            conv_id_min=str(agg["cmin"] or ""),
-            conv_id_max=str(agg["cmax"] or ""),
-            turns=int(agg["turns"] or 0),
-            postings_written=int(agg["postings"] or 0),
-            bytes_compressed=nbytes,
-            wall_sec=share,
-            terms_per_sec=float(agg["terms"] or 0.0) / share if share > 0 else 0.0,
-            turns_per_sec=int(agg["turns"] or 0) / share if share > 0 else 0.0,
-            status="done",
+    existing = [pid for pid in wave if pid in ranges]
+    stats: dict = {}
+    t0 = time.time()
+    if existing:
+        cmap = spark.read.parquet(os.path.join(index_root, "conv_parts")).filter(
+            F.col("partition_id").isin(existing)
         )
+        wave_input = one_partition_per_task(
+            transcripts.join(F.broadcast(cmap), "conv_id"), existing
+        )
+        postings = tokenize_turns(
+            wave_input,
+            ngrams=ngrams,
+            min_distinct_terms=min_distinct_terms,
+            analyzer=analyzer,
+        ).join(F.broadcast(cmap), "conv_id")
+        if os.path.isdir(tmp_dir):
+            shutil.rmtree(tmp_dir)
+        # PURE tokenize+write: conv ranges come from the split marker and
+        # the counts from the term-partials pass (per-row CollectMetrics
+        # here was a measured ~45% overhead of the wave at 16 cores)
+        postings.write.partitionBy("partition_id").mode("overwrite").parquet(
+            tmp_dir
+        )
+
+        # per-partition PARTIAL term stats, aggregated while the wave's
+        # postings are page-hot: finalize's dictionary agg then reads
+        # ~|local vocab| x #partitions rows instead of every posting row
+        # (its measured critical path at high core counts). Promoted
+        # alongside postings/; finalize falls back to the raw postings
+        # agg whenever the two sets differ, so the artifact is never a
+        # correctness dependency. dh (doc-head count) gives the turns.
+        # One partition per task keeps one file per partition dir.
+        os.makedirs(partials_root, exist_ok=True)
+        if os.path.isdir(ptmp):
+            shutil.rmtree(ptmp)
+        one_partition_per_task(
+            spark.read.parquet(tmp_dir)
+            .groupBy("partition_id", "term")
+            .agg(
+                F.count(F.lit(1)).alias("df"),
+                F.sum("tf").cast("long").alias("ttf"),
+                F.sum("is_doc_head").cast("long").alias("dh"),
+            ),
+            existing,
+        ).write.partitionBy("partition_id").mode("overwrite").parquet(ptmp)
+        # manifest count metrics: a tiny rollup of the partials output.
+        # postings = Σdf, terms = Σttf, turns = Σdh — exact, same source
+        # of truth as the dictionary itself.
+        stats = {
+            int(r["partition_id"]): r
+            for r in spark.read.parquet(ptmp)
+            .groupBy("partition_id")
+            .agg(
+                F.sum("df").alias("postings"),
+                F.sum("ttf").alias("terms"),
+                F.sum("dh").alias("turns"),
+            )
+            .collect()
+            if r["postings"]
+        }
+    wall = time.time() - t0
+    now = input_snapshot_id(transcripts)
+    if now != snap:
+        shutil.rmtree(tmp_dir, ignore_errors=True)
+        shutil.rmtree(ptmp, ignore_errors=True)
+        raise ValueError(
+            f"input snapshot moved from {snap} to {now} during the build; "
+            f"partitions {wave} were not promoted. Use a fresh index_root."
+        )
+    share = wall / max(1, len(existing))
+    out: list[PartitionManifest] = []
+    for pid in wave:
+        agg = stats.get(pid)
+        if agg is None:  # no conversations, or every turn pruned
+            m = PartitionManifest(
+                partition_id=pid, snapshot_id=snap, conv_id_min="",
+                conv_id_max="", turns=0, postings_written=0,
+                bytes_compressed=0, wall_sec=0.0, terms_per_sec=0.0,
+                turns_per_sec=0.0, status="done",
+            )
+        else:
+            for src, dst in ((tmp_dir, post_root), (ptmp, partials_root)):
+                src = os.path.join(src, f"partition_id={pid}")
+                dst = os.path.join(dst, f"partition_id={pid}")
+                if os.path.isdir(dst):
+                    shutil.rmtree(dst)
+                os.replace(src, dst)
+            m = PartitionManifest(
+                partition_id=pid, snapshot_id=snap,
+                conv_id_min=str(ranges[pid][0]),
+                conv_id_max=str(ranges[pid][1]),
+                turns=int(agg["turns"]),
+                postings_written=int(agg["postings"]),
+                bytes_compressed=_dir_bytes(
+                    os.path.join(post_root, f"partition_id={pid}")
+                ),
+                wall_sec=share,
+                terms_per_sec=float(agg["terms"]) / share if share > 0 else 0.0,
+                turns_per_sec=int(agg["turns"]) / share if share > 0 else 0.0,
+                status="done",
+            )
         _atomic_write_json(
             os.path.join(_manifest_dir(index_root), f"p{pid}.json"), asdict(m)
         )
@@ -536,7 +526,7 @@ def resumable_build(
     for i in range(0, len(todo), wave_size):
         wave = todo[i : i + wave_size]
         for m in _build_wave(
-            spark, index_root, snap, wave, ngrams, analyzer,
+            spark, transcripts, index_root, snap, wave, ngrams, analyzer,
             min_distinct_terms,
         ):
             built += 1

@@ -207,3 +207,99 @@ def test_finalize_lite_keeps_caller_job_group(spark, fixture_small, tmp_path):
             sc.setLocalProperty(f"spark.{key}", None)
     assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped
     assert sc.statusTracker().getJobIdsForGroup("finalize-under-test")
+
+
+def _one_text_changed(pdf):
+    """``pdf`` with the first letter of one text swapped for another
+    ASCII letter: same row count, same byte length, new content."""
+    pdf = pdf.copy()
+    i = next(
+        j for j, t in pdf["text"].items()
+        if isinstance(t, str) and t[:1].isascii() and t[:1].isalpha()
+    )
+    t = pdf.at[i, "text"]
+    pdf.at[i, "text"] = ("Z" if t[0] != "Z" else "Y") + t[1:]
+    return pdf
+
+
+def _write_parquet_file(pdf, path: str) -> None:
+    """One plain-encoded parquet file: a same-length text change gives a
+    same-size file, so a rewrite differs from the original only in
+    content and mtime."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.Table.from_pandas(pdf, preserve_index=False), path,
+        compression="none", use_dictionary=False, write_statistics=False,
+        coerce_timestamps="us",
+    )
+
+
+def test_resume_rejects_changed_input(spark, fixture_small, tmp_path):
+    """After a kill, a resume against a changed input (a rewritten
+    parquet file; an in-memory frame with one text changed) is refused
+    and builds nothing: the split keeps no copy of the input, so the
+    input snapshot id is the only guard against stale partitions."""
+    import pytest
+
+    pdf = fixture_small.transcripts
+    path = str(tmp_path / "transcripts.parquet")
+    _write_parquet_file(pdf, path)
+
+    def rewritten():
+        _write_parquet_file(_one_text_changed(pdf), path)
+        return spark.read.parquet(path)
+
+    cases = {
+        "parquet": (lambda: spark.read.parquet(path), rewritten),
+        "memory": (
+            lambda: spark.createDataFrame(pdf),
+            lambda: spark.createDataFrame(_one_text_changed(pdf)),
+        ),
+    }
+    for name, (original, changed) in cases.items():
+        root = str(tmp_path / f"idx_{name}")
+        resumable_build(spark, original(), root, num_partitions=4)
+        os.remove(os.path.join(root, "manifest", "p1.json"))
+        shutil.rmtree(os.path.join(root, "postings", "partition_id=1"))
+        before = _file_states(root)
+        with pytest.raises(ValueError, match="Use a fresh index_root"):
+            resumable_build(spark, changed(), root, num_partitions=4)
+        assert _file_states(root) == before, name
+        assert 1 not in read_manifest(root), name
+
+
+def test_input_rewritten_between_waves_promotes_nothing(
+    spark, fixture_small, tmp_path, monkeypatch
+):
+    """A file-backed input rewritten after the first wave: the second
+    wave re-takes the snapshot before it promotes, refuses, and leaves
+    only the first wave's partition behind."""
+    import pytest
+
+    from ir_base_spark.index import manifest
+
+    pdf = fixture_small.transcripts
+    path = str(tmp_path / "transcripts.parquet")
+    _write_parquet_file(pdf, path)
+    real_wave = manifest._build_wave
+    waves = []
+
+    def wave_then_rewrite(*args, **kwargs):
+        out = real_wave(*args, **kwargs)
+        waves.append([m.partition_id for m in out])
+        _write_parquet_file(_one_text_changed(pdf), path)
+        return out
+
+    monkeypatch.setattr(manifest, "_build_wave", wave_then_rewrite)
+    root = str(tmp_path / "idx")
+    with pytest.raises(ValueError, match="Use a fresh index_root"):
+        resumable_build(
+            spark, spark.read.parquet(path), root, num_partitions=4,
+            wave_size=1,
+        )
+    assert waves == [[0]]
+    assert set(read_manifest(root)) == {0}
+    for d in ("postings", "term_partials"):
+        assert os.listdir(os.path.join(root, d)) == ["partition_id=0"], d

@@ -66,3 +66,41 @@ def test_partials_fallback_on_incomplete_set(spark, fixture_small, tmp_path):
 
     shutil.rmtree(proot)
     assert load_term_partials(spark, root) is None
+
+
+def test_wave_placement_one_partition_per_task(spark, fixture_small, tmp_path):
+    """The build's shuffles place exactly one partition per task: for a
+    wave of 4 of 4, 8 of 32 and 16 of 64 partitions, spark_partition_id()
+    and partition_id are in bijection (hash placement on partition_id
+    puts ids 0-3 in 2 of 4 tasks). A built root has one file per
+    partition directory in postings/ and term_partials/."""
+    from pyspark.sql import functions as F
+
+    from ir_base_spark.index.manifest import one_partition_per_task
+
+    for n, total in ((4, 4), (8, 32), (16, 64)):
+        pids = list(range(total - n, total))
+        rows = spark.range(total * 20).select(
+            (F.col("id") % total).cast("int").alias("partition_id")
+        ).filter(F.col("partition_id").isin(pids))
+        pairs = {
+            (r[0], r[1])
+            for r in one_partition_per_task(rows, pids)
+            .select(F.spark_partition_id(), "partition_id")
+            .distinct()
+            .collect()
+        }
+        assert len(pairs) == n
+        assert len({t for t, _ in pairs}) == n
+        assert {p for _, p in pairs} == set(pids)
+
+    root = _built_root(spark, fixture_small, tmp_path)
+    for art in ("postings", "term_partials"):
+        dirs = [
+            d for d in os.listdir(os.path.join(root, art))
+            if d.startswith("partition_id=")
+        ]
+        assert len(dirs) == 8, art
+        for d in dirs:
+            files = os.listdir(os.path.join(root, art, d))
+            assert len([f for f in files if f.endswith(".parquet")]) == 1, d
