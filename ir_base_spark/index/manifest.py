@@ -646,9 +646,10 @@ def finalize_lite(
     )
     # single-job rank whenever the vocabulary provably fits one task
     # (footer row count is an upper bound on |vocab|, read without a
-    # Spark job). On this harness every Spark job pays a fixed
-    # ~0.3-0.5s scheduling latency, so the 4-job distributed rank only
-    # earns its barriers for vocabularies that genuinely need it.
+    # Spark job). Every Spark job pays a fixed cost (a trivial 4-task
+    # job on 4 cores: ~0.08 s with no Python stage, ~0.14 s with one),
+    # so the 4-job distributed rank only earns its barriers for
+    # vocabularies that genuinely need it.
     small = (
         pre_stats is not None
         and term_partials_row_count(index_root) <= 8_000_000

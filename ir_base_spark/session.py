@@ -2,6 +2,15 @@
 
 Designed for a multi-executor cluster (explicit partitioning everywhere;
 AQE on for runtime re-planning and skew joins) but testable on local[N].
+
+Python workers start from ``ir_base_spark.worker_daemon``: PySpark's own
+daemon with zipimport invalidation gated on the archive's stat, which
+cuts a Python task's fixed cost from ~0.23 s to ~0.05 s on 4 cores
+(``worker_daemon`` says why). The directory that holds this package goes
+on the workers' PYTHONPATH, so the daemon (and every pickled function of
+the package) imports whatever the driver's cwd. ``jobs/*.py`` keep plain
+builders: on a cluster ``--py-files`` reaches ``sys.path`` only after
+the daemon has started.
 """
 
 from __future__ import annotations
@@ -29,6 +38,9 @@ def get_spark(
     # Heap-held pages get REUSED across tasks by the long-lived workers.
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(512 * 1024 * 1024))
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(512 * 1024 * 1024))
+    conf = dict(extra_conf or {})
+    pythonpath = conf.pop("spark.executorEnv.PYTHONPATH", "")
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -41,8 +53,13 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "ir_base_spark.worker_daemon")
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(p for p in (pkg_parent, pythonpath) if p),
+        )
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
