@@ -1,11 +1,10 @@
 from .tokenize import tokenize_turns
 from .dictionary import build_dictionary, corpus_stats
-from .weights import bm25_weights, set_feature_values
+from .weights import set_feature_values
 
 __all__ = [
     "tokenize_turns",
     "build_dictionary",
     "corpus_stats",
-    "bm25_weights",
     "set_feature_values",
 ]

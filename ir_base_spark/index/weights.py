@@ -13,7 +13,8 @@ Python in the hot path):
 - PLN         (:264-291): s=0.5 pivoted length norm.
 
 plus L1/L2 per-doc normalization (Analyzer.java:316-321) as window
-aggregates, and the per-doc avgIDF quality feature (:211-212).
+aggregates. The per-doc avgIDF quality feature (:211-212) is ranking
+feature f9 in ops/l2r.py.
 
 The terms dictionary join is a broadcast hash join when the dictionary
 fits (Catalyst decides; we hint) — the reference's token→id HashMap probe
@@ -93,31 +94,5 @@ def set_feature_values(
     return out.withColumn(
         "weight",
         F.when(denom > 0, F.col("weight") / denom).otherwise(F.col("weight")),
-    )
-
-
-def bm25_weights(
-    raw_postings: DataFrame,
-    terms: DataFrame,
-    n_docs: int,
-    avg_doc_len: float,
-    norm: int = 0,
-) -> DataFrame:
-    """The canonical pipeline step: setFeatureValues("BM25", norm)
-    (/root/reference/src/mains/TransductiveMain.java:124)."""
-    return set_feature_values(
-        raw_postings, terms, n_docs, avg_doc_len, scheme="BM25", norm=norm
-    )
-
-
-def avg_idf_per_doc(
-    raw_postings: DataFrame, terms: DataFrame, n_docs: int
-) -> DataFrame:
-    """Per-doc mean IDF quality feature (Analyzer.java:211-212,261-262);
-    IDF here is the ln((N+1)/DF) variant used by the TF/TFIDF paths."""
-    joined = raw_postings.join(F.broadcast(terms), "term", "inner")
-    idf = F.log(F.lit(float(n_docs) + 1.0) / F.col("df"))
-    return joined.groupBy("conv_id", "turn_idx").agg(
-        F.avg(idf).alias("avg_idf")
     )
 

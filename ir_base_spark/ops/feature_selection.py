@@ -1,5 +1,6 @@
-"""Feature selection over a labeled corpus — DF / CHI / IG / MI scoring
-plus the percentile slice, per the reference selectors
+"""Feature selection over a labeled corpus — DF / CHI / IG / MI scoring,
+per the reference selectors (the percentile slice is
+ops/textops.term_percentile_slice)
 (/root/reference/src/Analyzer/FeatureSelector.java:64-169, chi statistic
 /root/reference/src/utils/Utils.java:900-907).
 
@@ -124,24 +125,3 @@ def mutual_info_terms(
     )
     pr_ci = F.col("n_c") / F.col("n")
     return g.groupBy("term").agg(F.sum(it_ci * pr_ci).alias("score"))
-
-
-def percentile_slice(
-    scores: DataFrame, start: float = 0.0, end: float = 1.0
-) -> DataFrame:
-    """Keep ranks [floor(start·n), floor(end·n)) of the score-ascending
-    ordering (getSelectedFeatures :47-61); ties broken by term asc.
-
-    Uses the two-phase range-partitioned rank (index.dictionary.
-    assign_dense_ids) — no single-partition global window."""
-    from ..index.dictionary import assign_dense_ids
-
-    ranked = assign_dense_ids(
-        scores, [F.col("score").asc(), F.col("term").asc()], "rk"
-    )
-    n = scores.count()  # cached by assign_dense_ids
-    lo, hi = int(n * start), int(n * end)
-    return (
-        ranked.filter((F.col("rk") >= lo) & (F.col("rk") < hi))
-        .drop("rk")
-    )

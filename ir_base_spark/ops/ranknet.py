@@ -109,14 +109,6 @@ def ranknet_train(
     return beta
 
 
-def ranknet_score(
-    features: DataFrame, feature_cols: list[str], beta: list[float]
-) -> DataFrame:
-    """score = βᵀfv (RankNet inherits Utils.dotProduct scoring,
-    LambdaRank.java:55-57) appended as a column."""
-    return features.withColumn("score", _margin_expr(feature_cols, beta))
-
-
 def ranknet_misorder(
     pair_diffs: DataFrame, feature_cols: list[str], beta: list[float]
 ) -> int:

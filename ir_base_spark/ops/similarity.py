@@ -99,18 +99,6 @@ def _bucket_expr(col, planes):
     return bucket
 
 
-def random_hyperplane_buckets(
-    embeddings: DataFrame, n_planes: int = 12, dim: int = 32, seed: int = 7
-) -> DataFrame:
-    """(vec_id, bucket): sign-of-projection LSH bucket id.
-
-    Hyperplanes are a deterministic seeded constant folded into the plan
-    (broadcast literal); the projection is zip_with/aggregate codegen.
-    """
-    planes = hyperplanes(n_planes=n_planes, dim=dim, seed=seed)
-    return embeddings.select("vec_id", _bucket_expr(F.col("embedding"), planes).alias("bucket"))
-
-
 def ann_bucket_table(
     embeddings: DataFrame, n_planes: int = 8, dim: int = 32, seed: int = 7
 ) -> DataFrame:

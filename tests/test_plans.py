@@ -107,3 +107,42 @@ def test_topk_entries_have_no_unpartitioned_window(spark, sf_dir):
         for line in plan.splitlines():
             if "Window [" in line:
                 assert "windowspecdefinition(_pid" in line, line
+
+
+def test_m1_topk_plan_one_exchange_no_arrays(spark, sf_dir, tmp_path):
+    """The executed M1 top-k plan folds without arrays (a HashAggregate,
+    no ObjectHashAggregate / collect_list / array_sort), hash-partitions
+    the candidates exactly once, and cuts each query with a
+    WindowGroupLimit. The index is read back from parquet so that the
+    plan holds the candidate path only (no dictionary-build exchanges)."""
+    from types import SimpleNamespace
+
+    import pandas as pd
+
+    from ir_base_spark.index.build import build_index
+    from ir_base_spark.query.dataframe_bm25 import analyze_query_terms, topk_search
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    t = docs.selectExpr(
+        "cast(doc_id as string) conv_id", "cast(0 as int) turn_idx", "text"
+    )
+    idx = build_index(spark, t, analyzer="simple", cache=False)
+    for name in ("terms", "weights"):
+        getattr(idx, name).write.parquet(str(tmp_path / name))
+    index = SimpleNamespace(
+        terms=spark.read.parquet(str(tmp_path / "terms")),
+        weights=spark.read.parquet(str(tmp_path / "weights")),
+    )
+    texts = [r["text"] for r in docs.limit(3).collect()]
+    queries = pd.DataFrame({
+        "query_id": ["a", "b", "c"],
+        "query_text": [" ".join(x.split()[:4]) for x in texts],
+        "k": [1, 5, 10],
+    })
+    df = topk_search(index, analyze_query_terms(spark, queries, analyzer="simple"))
+    assert df.collect()
+    plan = _plan(df).split("== Initial Plan ==")[0]
+    for node in ("ObjectHashAggregate", "collect_list", "array_sort"):
+        assert node not in plan, node
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "WindowGroupLimit" in plan
