@@ -1,10 +1,18 @@
-"""Index-build orchestration: transcripts → dictionary + weighted postings.
+"""The M1 (pure-DataFrame) index: transcripts → dictionary + weighted
+postings, and the one constructor both of its routes share.
 
-The M1 (pure-DataFrame) index: postings stay a plain DataFrame
-(conv_id, turn_idx, term_id, weight) — Catalyst handles scan pruning,
-the dictionary broadcast join, and the stats aggregation. The compressed
-block index (blocks.py) and the resumable manifest build (manifest.py)
-layer on top of this.
+Postings stay a plain DataFrame (conv_id, turn_idx, term_id, weight) —
+Catalyst handles scan pruning, the dictionary broadcast join, and the
+stats aggregation. Two routes reach it:
+
+- build_index (in memory): one tokenize pass, pinned by an eager
+  localCheckpoint → build_dictionary → m1_index, which derives the
+  corpus constants from the same doc lengths it weighs with.
+- manifest.open_index (a finalized root): postings/ + terms/ →
+  m1_index under stats.json's corpus constants.
+
+The compressed block index (blocks.py) and the resumable manifest build
+(manifest.py) layer on top of this.
 
 Build shape at scale (SURVEY §7.1):
   document-sharded tokenize (no shuffle) → term-keyed stats shuffle
@@ -40,6 +48,41 @@ class InvertedIndex:
     analyzer: str = "reference"
 
 
+def m1_index(
+    raw: DataFrame, terms: DataFrame, stats: dict, params: dict
+) -> InvertedIndex:
+    """InvertedIndex over raw postings (no partition_id) and the
+    dictionary. ``stats`` carries ``scheme``, ``norm``, ``min_df`` and
+    ``max_df`` (stats.json's keys); its corpus constants ``n_docs`` and
+    ``avg_doc_len`` are computed here from the doc lengths when it has
+    none. ``params`` carries the tokenizer's ``ngrams`` and ``analyzer``
+    (build_params).
+
+    Pruning (min_df > 1 or a max_df) re-projects the postings onto the
+    dictionary, so doc_len, and with it the corpus constants, count
+    retained terms only; unpruned, the doc-head rows carry doc_len."""
+    if stats["min_df"] > 1 or stats["max_df"] is not None:
+        raw, doc_lens = project_onto_dictionary(raw, terms)
+    else:
+        doc_lens = raw.filter(F.col("is_doc_head") == 1).select(
+            "conv_id", "turn_idx", "doc_len"
+        )
+    if "n_docs" in stats:
+        n_docs, avg_doc_len = stats["n_docs"], stats["avg_doc_len"]
+    else:
+        n_docs, avg_doc_len = corpus_stats(doc_lens)
+    scheme, norm = stats["scheme"], stats["norm"]
+    return InvertedIndex(
+        terms=terms,
+        weights=set_feature_values(
+            raw, terms, n_docs, avg_doc_len, scheme=scheme, norm=norm
+        ),
+        doc_lens=doc_lens, n_docs=n_docs, avg_doc_len=avg_doc_len,
+        ngrams=params["ngrams"], scheme=scheme, norm=norm,
+        analyzer=params["analyzer"],
+    )
+
+
 def build_index(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -49,53 +92,25 @@ def build_index(
     max_df: int | None = None,
     scheme: str = "BM25",
     norm: int = 0,
-    cache: bool = True,
     analyzer: str = "reference",
 ) -> InvertedIndex:
+    """In-memory M1 index of ``transcripts``.
+
+    One tokenize pass feeds the dictionary, the corpus constants and the
+    weights (the reference's two raw-data scans collapsed, SURVEY §3.2).
+    It is pinned by an eager localCheckpoint, not a cache(): the
+    checkpoint is no CacheManager entry, and Spark's ContextCleaner frees
+    its blocks once the returned index is unreachable, so nothing is
+    left for the caller to release."""
     raw = tokenize_turns(
         transcripts,
         ngrams=ngrams,
         min_distinct_terms=min_distinct_terms,
         analyzer=analyzer,
-    )
-    if cache:
-        # one tokenize pass feeds both the dictionary agg and the
-        # weighting join — the reference's two raw-data scans collapsed
-        # (SURVEY §3.2)
-        raw = raw.cache()
-
-    terms = build_dictionary(raw, min_df=min_df, max_df=max_df)
-    if cache:
-        terms = terms.cache()
-
-    if min_df > 1 or max_df is not None:
-        # doc_len and the corpus constants reflect retained terms only
-        raw_kept, doc_lens = project_onto_dictionary(raw, terms)
-    else:
-        doc_lens = (
-            raw.filter(F.col("is_doc_head") == 1)
-            .select("conv_id", "turn_idx", "doc_len")
-        )
-        raw_kept = raw
-    if cache:
-        doc_lens = doc_lens.cache()
-
-    n_docs, avg_doc_len = corpus_stats(doc_lens)
-
-    weights = set_feature_values(
-        raw_kept, terms, n_docs, avg_doc_len, scheme=scheme, norm=norm
-    )
-    if cache:
-        weights = weights.cache()
-
-    return InvertedIndex(
-        terms=terms,
-        weights=weights,
-        doc_lens=doc_lens,
-        n_docs=n_docs,
-        avg_doc_len=avg_doc_len,
-        ngrams=ngrams,
-        scheme=scheme,
-        norm=norm,
-        analyzer=analyzer,
+    ).localCheckpoint()
+    return m1_index(
+        raw,
+        build_dictionary(raw, min_df=min_df, max_df=max_df),
+        {"scheme": scheme, "norm": norm, "min_df": min_df, "max_df": max_df},
+        {"ngrams": ngrams, "analyzer": analyzer},
     )

@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .blocks import encode_shards_from_postings
+from .build import m1_index
 from .tokenize import tokenize_turns
 
 MANIFEST_VERSION = 1
@@ -615,12 +616,14 @@ def finalize_lite(
       driver-thread jobs, so neither write waits on the other chain's
       barriers. When min_df/max_df prune, doc lengths count retained
       terms only, so the docs chain runs after terms/ and re-projects
-      the postings onto the cached dictionary.
+      the postings onto the terms/ just written.
     - corpus stats ride the conversation-level aggregate
       (conv_doc_base_with_stats_ranged) instead of a second full
       doc_lens pass.
 
-    Returns (InvertedIndex, base DataFrame).
+    Nothing stays cached: the conv-level aggregate is released after
+    the base/ write. Returns (open_index(spark, index_root), base
+    DataFrame) — the M1 view reads back the artifacts written here.
     """
     from .dictionary import (
         build_dictionary,
@@ -633,6 +636,7 @@ def finalize_lite(
     # re-reads are cheaper than JVM cache materialization (measured)
     raw_p = load_postings(spark, index_root)
     raw = raw_p.drop("partition_id")
+    terms_path = os.path.join(index_root, "terms")
     pruned = min_df > 1 or max_df is not None
     box: dict = {}
 
@@ -656,14 +660,12 @@ def finalize_lite(
     )
 
     def terms_chain():
-        # the write IS the materializing action (and populates the
-        # cache); a count() first would be one more barrier + pass
-        t = build_dictionary(
+        # the write IS the materializing action; a count() first would
+        # be one more barrier + pass
+        build_dictionary(
             raw, min_df=min_df, max_df=max_df, stats=pre_stats,
             small_rank=small,
-        ).cache()
-        t.write.mode("overwrite").parquet(os.path.join(index_root, "terms"))
-        box["terms"] = t
+        ).write.mode("overwrite").parquet(terms_path)
 
     def docs_chain():
         # doc_lens KEEPS partition_id: the build's conv-range
@@ -672,7 +674,8 @@ def finalize_lite(
         # shuffle-sample-free and checkpoint-free
         if pruned:
             _, doc_lens = project_onto_dictionary(
-                raw_p, box["terms"], ("partition_id", "conv_id", "turn_idx")
+                raw_p, spark.read.parquet(terms_path),
+                ("partition_id", "conv_id", "turn_idx"),
             )
         else:
             doc_lens = raw_p.filter(F.col("is_doc_head") == 1).select(
@@ -695,10 +698,7 @@ def finalize_lite(
     stats = {"n_docs": n_docs, "avg_doc_len": avg_doc_len, "scheme": scheme,
              "norm": norm, "min_df": min_df, "max_df": max_df}
     _atomic_write_json(os.path.join(index_root, "stats.json"), stats)
-    return (
-        _m1_index(raw, box["terms"], stats, build_params(index_root)),
-        box["base"],
-    )
+    return open_index(spark, index_root), box["base"]
 
 
 def open_index(spark: SparkSession, index_root: str):
@@ -722,34 +722,7 @@ def open_index(spark: SparkSession, index_root: str):
         )
     terms = spark.read.parquet(os.path.join(index_root, "terms"))
     raw = load_postings(spark, index_root).drop("partition_id")
-    return _m1_index(raw, terms, stats, build_params(index_root))
-
-
-def _m1_index(raw: DataFrame, terms: DataFrame, stats: dict, params: dict):
-    """InvertedIndex over raw postings (no partition_id) and the
-    dictionary, under the corpus constants of ``stats`` (stats.json) and
-    the tokenizer ``params`` (build_params)."""
-    from .build import InvertedIndex
-    from .dictionary import project_onto_dictionary
-    from .weights import set_feature_values
-
-    if stats["min_df"] > 1 or stats["max_df"] is not None:
-        raw, doc_lens = project_onto_dictionary(raw, terms)
-    else:
-        doc_lens = raw.filter(F.col("is_doc_head") == 1).select(
-            "conv_id", "turn_idx", "doc_len"
-        )
-    n_docs, avg_doc_len = stats["n_docs"], stats["avg_doc_len"]
-    scheme, norm = stats["scheme"], stats["norm"]
-    return InvertedIndex(
-        terms=terms,
-        weights=set_feature_values(
-            raw, terms, n_docs, avg_doc_len, scheme=scheme, norm=norm
-        ),
-        doc_lens=doc_lens, n_docs=n_docs, avg_doc_len=avg_doc_len,
-        ngrams=params["ngrams"], scheme=scheme, norm=norm,
-        analyzer=params["analyzer"],
-    )
+    return m1_index(raw, terms, stats, build_params(index_root))
 
 
 def build_single_shard_index(

@@ -19,13 +19,12 @@ composite-key numpy pass (_postings_batch, shared with the n-gram
 kernel). ngrams >= 2 builds run the same way (_arrow_ngram_batch:
 whitespace-chunk split in Arrow, distinct-chunk event memo, vectorized
 window cascade) — there is no per-row Python on any build path.
-_vectorized_unigram_batch and _pandas_ngram_partition are the retained
-reference implementations the parity suite checks against.
+_vectorized_unigram_batch is the retained pandas reference that
+tests/test_tokenize_arrow.py checks the Arrow unigram kernel against;
+the n-gram kernel is checked against text.analyze.term_counts there.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -500,59 +499,3 @@ def tokenize_turns(
         arrow_partition, schema=POSTINGS_SCHEMA
     )
 
-
-def _pandas_ngram_partition(
-    transcripts: DataFrame,
-    ngrams: int,
-    min_distinct_terms: int = 0,
-    text_col: str = "text",
-    analyzer: str = "reference",
-) -> DataFrame:
-    """Retained per-row reference implementation of the n-gram build
-    (the parity suite checks the Arrow kernel against it; not a
-    production route)."""
-    cols = ["conv_id", "turn_idx", text_col]
-
-    def analyze_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ir_base_spark.text.analyze import term_counts
-
-        for pdf in batches:
-            # n-gram path: sequential chain-break window per turn
-            conv_ids: list[str] = []
-            turn_idxs: list[int] = []
-            terms: list[str] = []
-            tfs: list[float] = []
-            dls: list[float] = []
-            heads: list[int] = []
-            for conv_id, turn_idx, text in zip(
-                pdf["conv_id"].values, pdf["turn_idx"].values, pdf[text_col].values
-            ):
-                tc = term_counts(
-                    text if isinstance(text, str) else "",
-                    ngrams=ngrams,
-                    analyzer=analyzer,
-                )
-                if len(tc) <= min_distinct_terms:
-                    continue
-                dl = float(sum(tc.values()))
-                for i, (term, tf) in enumerate(tc.items()):
-                    conv_ids.append(conv_id)
-                    turn_idxs.append(int(turn_idx))
-                    terms.append(term)
-                    tfs.append(float(tf))
-                    dls.append(dl)
-                    heads.append(1 if i == 0 else 0)
-            yield pd.DataFrame(
-                {
-                    "conv_id": pd.Series(conv_ids, dtype="object"),
-                    "turn_idx": pd.Series(turn_idxs, dtype="int32"),
-                    "term": pd.Series(terms, dtype="object"),
-                    "tf": pd.Series(tfs, dtype="float64"),
-                    "doc_len": pd.Series(dls, dtype="float64"),
-                    "is_doc_head": pd.Series(heads, dtype="int32"),
-                }
-            )
-
-    return transcripts.select(*cols).mapInPandas(
-        analyze_partition, schema=POSTINGS_SCHEMA
-    )

@@ -77,58 +77,6 @@ def term_percentile_slice(
     )
 
 
-def bm25_scores(
-    documents: DataFrame,
-    query_terms: list[str],
-    k1: float = 1.5,
-    b: float = 0.75,
-) -> DataFrame:
-    """(doc_id, score): BM25 over the simple-tokenized documents table,
-    k1/b and IDF per the reference
-    (/root/reference/src/Analyzer/Analyzer.java:235-263). Declarative
-    DataFrame build (the engine's mapInPandas path is exercised by the
-    transcripts tests; this variant is pure Catalyst so the whole plan is
-    codegen'd and SQL-verifiable)."""
-    tf = token_counts(documents).withColumn("tf", F.col("tf").cast("double"))
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).cast("double").alias("n"), F.avg("dl").alias("navg")
-    )
-    df = tf.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
-    q = tf.sparkSession.createDataFrame(
-        [(t, 1.0) for t in query_terms], "term string, qw double"
-    )
-    joined = (
-        tf.join(F.broadcast(q), "term")
-        .join(F.broadcast(df), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-    )
-    contrib = (
-        F.col("qw")
-        * F.log((F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        * F.col("tf") * (k1 + 1.0)
-        / (F.lit(k1) * (1.0 - b + b * F.col("dl") / F.col("navg")) + F.col("tf"))
-    )
-    return joined.groupBy("doc_id").agg(F.sum(contrib).alias("score"))
-
-
-def bm25_topk(
-    documents: DataFrame, query_terms: list[str], k: int = 20
-) -> DataFrame:
-    """(rank, doc_id, score6): rank on the 6-dp-rounded score so the
-    boundary tie-break (doc_id asc) is float-order-independent and the
-    DuckDB oracle agrees bit-for-bit."""
-    from ..functions.ranking import rank_bounded
-
-    scores = bm25_scores(documents, query_terms).withColumn(
-        "score6", F.round(F.col("score"), 6)
-    )
-    return rank_bounded(
-        scores, [F.col("score6").desc(), F.col("doc_id").asc()], k
-    ).select("rank", "doc_id", "score6")
-
-
 def lm_topk(
     documents: DataFrame,
     query_terms: list[str],

@@ -39,30 +39,32 @@ def test_dimension_joins_broadcast(spark, sf_dir):
 
 
 def test_global_topk_is_bounded_heap(spark, sf_dir):
-    from ir_base_spark.ops.textops import bm25_topk
+    from __spark_entry__ import q_bm25_topk_docs
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    plan = _plan(bm25_topk(docs, ["spark"], k=5))
+    plan = _plan(q_bm25_topk_docs(spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
 
 
 def test_no_row_at_a_time_python(spark, sf_dir):
     """Every hot-path plan must use Arrow (MapInPandas / FlatMapGroupsIn
     Pandas), never BatchEvalPython (pickled row-at-a-time UDF)."""
+    from __spark_entry__ import q_bm25_topk_docs
     from ir_base_spark.index.build import build_index
-    from ir_base_spark.ops.textops import bm25_topk, simhash64, token_counts
+    from ir_base_spark.index.tokenize import tokenize_turns
+    from ir_base_spark.ops.textops import simhash64, token_counts
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     plans = [
         _plan(token_counts(docs)),
         _plan(simhash64(docs)),
-        _plan(bm25_topk(docs, ["spark"], k=5)),
+        _plan(q_bm25_topk_docs(spark, sf_dir)),
     ]
     t = docs.selectExpr(
         "cast(doc_id as string) conv_id", "cast(0 as int) turn_idx", "text"
     )
-    idx = build_index(spark, t, analyzer="simple", cache=False)
+    idx = build_index(spark, t, analyzer="simple")
     plans.append(_plan(idx.weights))
+    plans.append(_plan(tokenize_turns(t, analyzer="simple")))
     for plan in plans:
         assert "BatchEvalPython" not in plan
     # tokenizer is Arrow-NATIVE (mapInArrow — the batch never even
@@ -77,7 +79,7 @@ def test_dictionary_join_is_broadcast(spark, sf_dir):
     t = docs.selectExpr(
         "cast(doc_id as string) conv_id", "cast(0 as int) turn_idx", "text"
     )
-    idx = build_index(spark, t, analyzer="simple", cache=False)
+    idx = build_index(spark, t, analyzer="simple")
     assert "BroadcastHashJoin" in _plan(idx.weights)
 
 
@@ -93,13 +95,14 @@ def test_simhash_no_row_blowup(spark, sf_dir):
 def test_topk_entries_have_no_unpartitioned_window(spark, sf_dir):
     """Bounded top-k entries rank window-free (rank_bounded): any Window
     left in the plan must be partitioned (the two-phase _pid rank)."""
+    from __spark_entry__ import q_bm25_topk_docs
     from ir_base_spark.ops.similarity import cosine_topk
-    from ir_base_spark.ops.textops import bm25_topk, lm_topk
+    from ir_base_spark.ops.textops import lm_topk
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     for df in (
-        bm25_topk(docs, ["spark"], k=5),
+        q_bm25_topk_docs(spark, sf_dir),
         lm_topk(docs, ["spark"], k=5),
         cosine_topk(emb, 0, k=5),
     ):
@@ -126,7 +129,7 @@ def test_m1_topk_plan_one_exchange_no_arrays(spark, sf_dir, tmp_path):
     t = docs.selectExpr(
         "cast(doc_id as string) conv_id", "cast(0 as int) turn_idx", "text"
     )
-    idx = build_index(spark, t, analyzer="simple", cache=False)
+    idx = build_index(spark, t, analyzer="simple")
     for name in ("terms", "weights"):
         getattr(idx, name).write.parquet(str(tmp_path / name))
     index = SimpleNamespace(
