@@ -21,19 +21,69 @@ file order — an artifact of its sequential reader, not a semantic);
 dot products round to 6 dp before ranking/softmax so the SQL oracle
 ranks and weighs identically.
 
-Scale shape: groups are bounded (per-item review sets), so pairwise
-similarity within a group is the oracle-exact baseline; at 100 TB
-swap candidate generation for the ANN path and keep everything
-downstream. Each iteration is one join of the edge list against the
-rank vector plus one per-group aggregate — codegen columns, no UDFs.
+Scale shape: groups are bounded (per-item review sets), so the whole
+graph of one group is one task's state. A single
+``groupBy(group).applyInPandas`` pass hands each group to a numpy
+kernel that builds the n×n dot matrix, the top-k softmax edges and
+every power iteration in memory — no pair join, window, per-iteration
+join or cache. The matrix is O(n²) per group, so the group size is a
+declared bound: ``MAX_GROUP_SIZE`` raises before anything n×n is
+allocated. Groups above it need candidate generation from the ANN path
+(ops/similarity.py) in place of the exhaustive pairs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-from .similarity import _dot
+# The kernel holds n×n float64 matrices (the dot fold's sum and its
+# per-dimension product, the rounding temporaries, the sort order):
+# n² × 8 B each, so 4,096 rows → 134 MB per matrix; one 4,096-row group
+# of 64-dim vectors peaks about 640 MB above the worker's base and takes
+# about 7 s on one core. The bound sits above sf1's largest group (2,500
+# docs per source). Read on the driver at call time, so a test can
+# lower it.
+MAX_GROUP_SIZE = 4_096
+
+
+def _round6(x: np.ndarray) -> np.ndarray:
+    """round(x, 6) half away from zero, as SQL ``round`` does."""
+    t = np.abs(x) * 1e6
+    f = np.floor(t)
+    return np.copysign(f + (t - f >= 0.5), x) / 1e6
+
+
+def _group_ranks(
+    A: np.ndarray, top_k: int, alpha: float, iterations: int
+) -> np.ndarray:
+    """Final L2-normalized ranks of one group; rows of ``A`` in id order."""
+    n, dim = A.shape
+    # sequential fold over dimensions from 0.0: the same additions, in
+    # the same order, as similarity._dot's aggregate(zip_with(...))
+    S = np.zeros((n, n))
+    prod = np.empty((n, n))
+    for d in range(dim):
+        S += np.outer(A[:, d], A[:, d], out=prod)
+    del prod
+    S = -_round6(S)
+    np.fill_diagonal(S, np.inf)
+    k = min(top_k, n - 1)
+    # stable sort of -s: (s desc, dst asc), as rows are in id order
+    dst = np.argsort(S, axis=1, kind="stable")[:, :k]
+    e = np.exp(-np.take_along_axis(S, dst, axis=1))
+    w = (e / e.sum(axis=1, keepdims=True)).ravel()
+    src = np.repeat(np.arange(n), k)
+    dst = dst.ravel()
+    r = np.full(n, 1.0 / np.sqrt(n))
+    for _ in range(iterations):
+        infl = np.bincount(dst, weights=w * r[src], minlength=n)
+        r = alpha / n + (1.0 - alpha) * infl
+        r = r / np.sqrt(np.sum(r * r))
+    return r
 
 
 def pagerank_instance_weights(
@@ -51,88 +101,37 @@ def pagerank_instance_weights(
         F.col(group_col).alias("g"),
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
+    ).where(F.col("g").isNotNull())
+    schema = StructType(
+        [V.schema["g"], V.schema["id"], StructField("r", DoubleType())]
     )
-    sizes = V.groupBy("g").agg(F.count(F.lit(1)).alias("N")).filter(
-        F.col("N") > min_group_size
-    )
-    # cached: read by both sides of the pair join, the node table and
-    # the edge build — without it the pair self-join re-derives the
-    # grouped/filtered vector table once per consumer
-    V = V.join(F.broadcast(sizes), "g").cache()
+    bound = MAX_GROUP_SIZE
 
-    pairs = (
-        V.alias("a")
-        .join(
-            V.select(
-                F.col("g"), F.col("id").alias("dst"), F.col("vec").alias("bv")
-            ).alias("b"),
-            "g",
-        )
-        .filter(F.col("id") != F.col("dst"))
-        .select(
-            "g",
-            F.col("id").alias("src"),
-            "dst",
-            F.round(_dot(F.col("vec"), F.col("bv")), 6).alias("s"),
-        )
-    )
-    w = Window.partitionBy("g", "src").orderBy(
-        F.col("s").desc(), F.col("dst").asc()
-    )
-    top = pairs.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= top_k
-    )
-    # softmax over each node's top-k (constructSparseGraph :83-94)
-    edges = (
-        top.withColumn("e", F.exp(F.col("s")))
-        .withColumn(
-            "w",
-            F.col("e")
-            / F.sum("e").over(Window.partitionBy("g", "src")),
-        )
-        .select("g", "src", "dst", "w")
-        .cache()
-    )
-
-    nodes = V.select("g", "id", "N")
-    r = nodes.withColumn("r", F.lit(1.0) / F.sqrt(F.col("N")))
-    for _ in range(iterations):
-        inc = (
-            edges.join(
-                r.select(
-                    "g", F.col("id").alias("src"), F.col("r").alias("rs")
-                ),
-                ["g", "src"],
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        n = len(pdf)
+        if n <= min_group_size:
+            return pdf.iloc[:0, :2].assign(r=0.0)
+        if n > bound:
+            raise ValueError(
+                f"pagerank_instance_weights: group {pdf['g'].iloc[0]!r} "
+                f"has {n} rows, above MAX_GROUP_SIZE={bound}; each group "
+                f"is ranked from exhaustive n×n similarity matrices "
+                f"({n * n * 8 / 1e6:.0f} MB each at this size). Take each "
+                f"node's neighbor candidates from the ANN candidate seam "
+                f"(ops/similarity.py ann_ivf_topk / ann_lsh_topk_batch) "
+                f"for larger groups."
             )
-            .groupBy("g", "dst")
-            .agg(F.sum(F.col("w") * F.col("rs")).alias("infl"))
-        )
-        upd = (
-            nodes.join(
-                inc.select("g", F.col("dst").alias("id"), "infl"),
-                ["g", "id"],
-                "left",
-            )
-            .withColumn(
-                "r",
-                F.lit(alpha) / F.col("N")
-                + F.lit(1.0 - alpha) * F.coalesce(F.col("infl"), F.lit(0.0)),
-            )
-            # read twice per iteration (L2 norm + the normalized rank):
-            # cached, or the pre-norm subtree doubles per iteration
-            # (2^iterations plan blowup — 206 Exchange / 2731 lines
-            # for the 3-iteration entry before; 19 after)
-            .cache()
-        )
-        norm = upd.groupBy("g").agg(
-            F.sqrt(F.sum(F.col("r") * F.col("r"))).alias("nrm")
-        )
-        r = (
-            upd.join(F.broadcast(norm), "g")
-            .withColumn("r", F.col("r") / F.col("nrm"))
-            .select("g", "id", "N", "r")
+        pdf = pdf.sort_values("id", kind="stable")
+        A = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+        return pd.DataFrame(
+            {
+                "g": pdf["g"].to_numpy(),
+                "id": pdf["id"].to_numpy(),
+                "r": _group_ranks(A, top_k, alpha, iterations),
+            }
         )
 
+    r = V.groupBy("g").applyInPandas(kernel, schema=schema)
     return r.select(
         F.col("g").alias(group_col),
         F.col("id").alias(id_col),

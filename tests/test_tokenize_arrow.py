@@ -8,10 +8,8 @@ from __future__ import annotations
 import pandas as pd
 import pyarrow as pa
 
-from ir_base_spark.index.tokenize import (
-    _arrow_unigram_batch,
-    _vectorized_unigram_batch,
-)
+from ir_base_spark.index.tokenize import _arrow_unigram_batch
+from tests.unigram_reference import _vectorized_unigram_batch
 
 EDGE_TEXTS = [
     "the cat sat on the mat",
