@@ -6,8 +6,9 @@ Catalyst handles scan pruning, the dictionary broadcast join, and the
 stats aggregation. Two routes reach it:
 
 - build_index (in memory): one tokenize pass, pinned by an eager
-  localCheckpoint → build_dictionary → m1_index, which derives the
-  corpus constants from the same doc lengths it weighs with.
+  localCheckpoint (its one Spark job, which also observes the rank's
+  vocabulary bound and the corpus constants) → build_dictionary →
+  m1_index.
 - manifest.open_index (a finalized root): postings/ + terms/ →
   m1_index under stats.json's corpus constants.
 
@@ -24,9 +25,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from . import dictionary
 from .dictionary import build_dictionary, corpus_stats, project_onto_dictionary
 from .tokenize import tokenize_turns
 from .weights import set_feature_values
@@ -101,16 +103,31 @@ def build_index(
     It is pinned by an eager localCheckpoint, not a cache(): the
     checkpoint is no CacheManager entry, and Spark's ContextCleaner frees
     its blocks once the returned index is unreachable, so nothing is
-    left for the caller to release."""
+    left for the caller to release. It is the only job: its Observation
+    counts the postings (the vocabulary bound for SMALL_RANK_ROWS) and
+    sums the doc heads into the corpus constants (exact: integer-valued
+    doc_len); pruning changes doc lengths, so m1_index recomputes them."""
+    seen = Observation()
     raw = tokenize_turns(
         transcripts,
         ngrams=ngrams,
         min_distinct_terms=min_distinct_terms,
         analyzer=analyzer,
+    ).observe(
+        seen,
+        F.count(F.lit(1)).alias("postings"),
+        F.sum("is_doc_head").alias("n_docs"),
+        F.sum(F.when(F.col("is_doc_head") == 1, F.col("doc_len"))).alias("len"),
     ).localCheckpoint()
+    got = seen.get
+    stats = {"scheme": scheme, "norm": norm, "min_df": min_df, "max_df": max_df}
+    if min_df <= 1 and max_df is None:
+        n = got["n_docs"] or 0
+        stats.update(n_docs=n, avg_doc_len=got["len"] / n if n else 0.0)
+    small = got["postings"] <= dictionary.SMALL_RANK_ROWS
     return m1_index(
         raw,
-        build_dictionary(raw, min_df=min_df, max_df=max_df),
-        {"scheme": scheme, "norm": norm, "min_df": min_df, "max_df": max_df},
+        build_dictionary(raw, min_df=min_df, max_df=max_df, small_rank=small),
+        stats,
         {"ngrams": ngrams, "analyzer": analyzer},
     )

@@ -16,13 +16,15 @@ Scale notes (10^12 turns → ~10^8-term dictionary):
 - Term-id assignment avoids a single-partition global window: terms are
   range-partitioned on the sort key, ranked within partitions, and offset
   by cumulative partition counts (a driver-side array of #partitions
-  ints) — fully distributed, deterministic.
+  ints); up to SMALL_RANK_ROWS, one sorted partition is cheaper.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+SMALL_RANK_ROWS = 8_000_000  # vocabulary bound for small_rank callers
 
 
 def term_stats(raw_postings: DataFrame) -> DataFrame:
@@ -69,10 +71,10 @@ def assign_dense_ids(
     # local 1-based rank within each range partition
     w = Window.partitionBy("_pid").orderBy(*order_cols)
     local = with_pid.withColumn("_rk", F.row_number().over(w)).localCheckpoint()
-    sizes = (
-        local.groupBy("_pid").agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("_pid")
-        .collect()
+    # <= num_partitions rows: sorted on the driver, not in a Spark stage
+    sizes = sorted(
+        local.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect(),
+        key=lambda r: r["_pid"],
     )
     df.unpersist()
     if not sizes:
@@ -141,10 +143,9 @@ def two_phase_cumsum(
     # boundaries observed by the offsets job are the only ones possible.
     local = with_pid.withColumn("_cum", F.sum(value_col).over(w)).localCheckpoint()
     df.unpersist(blocking=False)
-    sums = (
-        local.groupBy("_pid").agg(F.sum(value_col).alias("s"))
-        .orderBy("_pid")
-        .collect()
+    sums = sorted(
+        local.groupBy("_pid").agg(F.sum(value_col).alias("s")).collect(),
+        key=lambda r: r["_pid"],
     )
     offsets = {}
     acc = 0
@@ -275,23 +276,24 @@ def build_dictionary(
     term_stats_from_partials — replacing the full-postings aggregation
     (values must be identical; the id ranking depends on exact df).
 
-    ``small_rank``: rank with a single-partition window instead of the
-    two-phase range-partitioned machinery. Identical ids, ONE Spark job
-    instead of four (sampling, checkpoint, sizes collect, write) —
-    each job pays a fixed scheduling latency, and for a vocabulary
-    that fits one task (callers gate on a driver-side row-count bound)
-    the latency dominates the sort. Large vocabularies (10^8 terms)
-    must keep the distributed path."""
+    ``small_rank``: sort in ONE partition on (df desc, term asc) and
+    number rows positionally (as functions.ranking.rank_bounded does):
+    identical ids, no Window, and no job before the consumer's own (the
+    two-phase rank runs a range sample, a checkpoint, a sizes collect).
+    A total order sorted in one partition is deterministic, so no
+    checkpoint pins the ids: every evaluation recomputes the same ones.
+    Callers gate it on SMALL_RANK_ROWS; 10^8-term vocabularies must
+    keep the distributed path."""
     if stats is None:
         stats = term_stats(raw_postings)
     pruned = stats.filter(F.col("df") >= F.lit(min_df))
     if max_df is not None:
         pruned = pruned.filter(F.col("df") <= F.lit(max_df))
     if small_rank:
-        w = Window.orderBy(F.col("df").desc(), F.col("term").asc())
         return (
             pruned.repartition(1)
-            .withColumn("term_id", (F.row_number().over(w) - 1).cast("long"))
+            .sortWithinPartitions(F.col("df").desc(), F.col("term").asc())
+            .withColumn("term_id", F.monotonically_increasing_id())
             .select("term", "term_id", "df", "ttf")
         )
     return assign_term_ids(pruned, num_partitions=num_partitions).select(

@@ -626,6 +626,7 @@ def finalize_lite(
     DataFrame) — the M1 view reads back the artifacts written here.
     """
     from .dictionary import (
+        SMALL_RANK_ROWS,
         build_dictionary,
         conv_doc_base_with_stats_ranged,
         project_onto_dictionary,
@@ -648,15 +649,15 @@ def finalize_lite(
     pre_stats = (
         term_stats_from_partials(partials) if partials is not None else None
     )
-    # single-job rank whenever the vocabulary provably fits one task
-    # (footer row count is an upper bound on |vocab|, read without a
-    # Spark job). Every Spark job pays a fixed cost (a trivial 4-task
-    # job on 4 cores: ~0.08 s with no Python stage, ~0.14 s with one),
-    # so the 4-job distributed rank only earns its barriers for
-    # vocabularies that genuinely need it.
+    # one-partition rank, no jobs before the terms/ write, whenever the
+    # vocabulary provably fits one task (footer row count bounds |vocab|,
+    # read without a Spark job). Every job pays a fixed cost (a trivial
+    # 4-task job on 4 cores: ~0.08 s, ~0.14 s with a Python stage), so
+    # the distributed rank only earns its barriers for vocabularies that
+    # genuinely need it.
     small = (
         pre_stats is not None
-        and term_partials_row_count(index_root) <= 8_000_000
+        and term_partials_row_count(index_root) <= SMALL_RANK_ROWS
     )
 
     def terms_chain():
