@@ -28,7 +28,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from . import dictionary
 from .dictionary import build_dictionary, corpus_stats, project_onto_dictionary
 from .tokenize import tokenize_turns
 from .weights import set_feature_values
@@ -104,7 +103,8 @@ def build_index(
     checkpoint is no CacheManager entry, and Spark's ContextCleaner frees
     its blocks once the returned index is unreachable, so nothing is
     left for the caller to release. It is the only job: its Observation
-    counts the postings (the vocabulary bound for SMALL_RANK_ROWS) and
+    counts the postings (the vocabulary bound: up to SMALL_RANK_ROWS,
+    build_dictionary ranks in one partition with no job of its own) and
     sums the doc heads into the corpus constants (exact: integer-valued
     doc_len); pruning changes doc lengths, so m1_index recomputes them."""
     seen = Observation()
@@ -124,10 +124,11 @@ def build_index(
     if min_df <= 1 and max_df is None:
         n = got["n_docs"] or 0
         stats.update(n_docs=n, avg_doc_len=got["len"] / n if n else 0.0)
-    small = got["postings"] <= dictionary.SMALL_RANK_ROWS
     return m1_index(
         raw,
-        build_dictionary(raw, min_df=min_df, max_df=max_df, small_rank=small),
+        build_dictionary(
+            raw, min_df=min_df, max_df=max_df, rows=got["postings"]
+        ),
         stats,
         {"ngrams": ngrams, "analyzer": analyzer},
     )

@@ -3,7 +3,7 @@
 Reference semantics: exact DF/TTF per term
 (/root/reference/src/structures/_stat.java:54-62) — NOT
 approx_count_distinct; rank-identity needs exact DF (SURVEY §4.5).
-Deterministic term ids: row_number over (df desc, term asc) — arrival
+Deterministic term ids: the dense rank over (df desc, term asc) — arrival
 order (the reference's expandVocabulary,
 /root/reference/src/Analyzer/Analyzer.java:126-130) is not reproducible
 in a distributed engine, so the canonical ordering is pinned instead
@@ -13,18 +13,25 @@ in a distributed engine, so the canonical ordering is pinned instead
 Scale notes (10^12 turns → ~10^8-term dictionary):
 - DF/TTF is a single shuffle of pre-aggregated (doc, term) rows keyed by
   term; AQE handles moderate skew.
-- Term-id assignment avoids a single-partition global window: terms are
-  range-partitioned on the sort key, ranked within partitions, and offset
-  by cumulative partition counts (a driver-side array of #partitions
-  ints); up to SMALL_RANK_ROWS, one sorted partition is cheaper.
+- Every numbering of the index is an exclusive prefix sum under a total
+  order: term ids count rows under (df desc, term asc), the build's
+  conversation split sums text bytes under conv_id. prefix_offsets is
+  the one routine. It picks its route from a row bound the caller
+  already holds: up to SMALL_RANK_ROWS, one sorted partition; above
+  (or unknown), range partitions offset by cumulative partition sums
+  (a driver-side array of #partitions ints), with no single-partition
+  bottleneck.
 """
 
 from __future__ import annotations
 
+from itertools import accumulate
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-SMALL_RANK_ROWS = 8_000_000  # vocabulary bound for small_rank callers
+SMALL_RANK_ROWS = 8_000_000  # prefix_offsets' one-partition row bound
+_RANGE_PARTITIONS = 32
 
 
 def term_stats(raw_postings: DataFrame) -> DataFrame:
@@ -39,132 +46,69 @@ def term_stats(raw_postings: DataFrame) -> DataFrame:
     )
 
 
-def assign_dense_ids(
-    df: DataFrame,
-    order_cols: list,
-    id_name: str,
-    num_partitions: int = 32,
+def prefix_offsets(
+    df: DataFrame, order: list, value: str | None, out_col: str, rows: int | None
 ) -> DataFrame:
-    """Deterministic dense 0-based ids = row_number over ``order_cols``.
+    """``df`` plus ``out_col``, the exclusive prefix sum of ``value``
+    under ``order`` (a total order: a unique key), and for a sum
+    ``_total``, the grand total, on every row. ``value=None`` counts
+    rows: ``out_col`` is then the dense 0-based rank.
 
-    Distributed two-phase ranking: range-partition by the sort key, rank
-    within each partition, add exclusive cumulative offsets (a driver
-    array of #partitions ints). Equivalent to a global-window row_number
-    but with no single-partition bottleneck — safe for 10^8-term
-    dictionaries and 10^12-row doc maps alike. ``order_cols`` must be a
-    total order (unique key) for determinism.
+    ``rows`` bounds df's row count (None: unknown) and picks the route;
+    both give the same rows. Up to SMALL_RANK_ROWS, one partition: a
+    count numbers the sorted rows positionally (no Window, as
+    functions.ranking.rank_bounded), a sum runs a running-sum window.
+    No sample, checkpoint or collect: one sorted partition is
+    deterministic. Above, range partitions: a prefix sum within each
+    plus the driver-side exclusive sums of the partitions before it.
     """
-    # the ranked frame is traversed twice (sizes collect + final select);
-    # cache the input (so upstream aggs don't recompute during the
-    # boundary-sampling passes), then pin the ranked frame with an EAGER
-    # localCheckpoint: repartitionByRange samples its boundaries, and
-    # the two traversals must observe the SAME partition assignment or
-    # the per-partition offsets are applied to the wrong partitions. A
-    # plain cache() is not enough at scale — a lost cached partition
-    # would silently recompute through a fresh boundary sample (the
-    # overlapping-id hazard); the checkpoint truncates lineage so a lost
-    # block fails LOUDLY instead, and the input cache can be released
-    # immediately because nothing can recompute through it.
-    df = df.cache()
-    ordered = df.repartitionByRange(num_partitions, *order_cols)
-    with_pid = ordered.withColumn("_pid", F.spark_partition_id())
-    # local 1-based rank within each range partition
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    local = with_pid.withColumn("_rk", F.row_number().over(w)).localCheckpoint()
-    # <= num_partitions rows: sorted on the driver, not in a Spark stage
-    sizes = sorted(
-        local.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect(),
-        key=lambda r: r["_pid"],
-    )
-    df.unpersist()
-    if not sizes:
-        return local.withColumn(id_name, (F.col("_rk") - 1).cast("long")).drop(
-            "_pid", "_rk"
-        )
-    offsets = {}
-    acc = 0
-    for row in sizes:
-        offsets[row["_pid"]] = acc
-        acc += row["n"]
-    offs = F.create_map(
-        *[F.lit(x) for kv in offsets.items() for x in kv]
-    )
-    return (
-        local.withColumn(id_name, (F.col("_rk") - 1 + offs[F.col("_pid")]).cast("long"))
-        .drop("_pid", "_rk")
-    )
-
-
-def assign_term_ids(stats: DataFrame, num_partitions: int = 32) -> DataFrame:
-    """Deterministic dense term ids: row_number over (df desc, term asc)
-    (FIXTURES.md §4)."""
-    return assign_dense_ids(
-        stats,
-        [F.col("df").desc(), F.col("term").asc()],
-        "term_id",
-        num_partitions=num_partitions,
-    )
-
-
-def two_phase_cumsum(
-    df: DataFrame,
-    order_col: str,
-    value_col: str,
-    out_col: str = "cum_before",
-    num_partitions: int = 32,
-) -> DataFrame:
-    """Exclusive prefix sum of ``value_col`` under ``order_col`` order,
-    fully distributed: range-partition on the key, window-cumsum within
-    each partition, add #partitions driver offsets. Returns the input
-    columns plus ``out_col`` (sum of all values strictly before this
-    row) and ``_total`` (grand total, same on every row).
-
-    The partitioned+ranked frame is pinned with an eager localCheckpoint
-    before the offsets collect: the offsets job and the returned plan
-    must observe the SAME range boundaries, and repartitionByRange
-    samples its boundaries — two separate evaluations could disagree,
-    silently producing overlapping id ranges (observed as duplicate doc
-    ids at 3.4M docs before this pin)."""
-    # cache the input: repartitionByRange SAMPLES the frame for range
-    # boundaries before the checkpoint pass materializes it — without
-    # the cache every upstream aggregation runs twice (assign_dense_ids
-    # already does this; a measured ~1.5s of the sf0.1 split phase)
-    df = df.cache()
-    part = df.repartitionByRange(num_partitions, F.col(order_col).asc())
-    with_pid = part.withColumn("_pid", F.spark_partition_id())
-    w = (
+    v = F.lit(1) if value is None else F.col(value)
+    small = rows is not None and rows <= SMALL_RANK_ROWS
+    if small and value is None:
+        one = df.repartition(1).sortWithinPartitions(*order)
+        return one.withColumn(out_col, F.monotonically_increasing_id())
+    if small:
+        part = df.repartition(1)
+    else:
+        # cache the input: repartitionByRange SAMPLES the frame for range
+        # boundaries before the checkpoint pass materializes it — without
+        # the cache every upstream aggregation runs twice (a measured
+        # ~1.5s of the sf0.1 split phase)
+        df = df.cache()
+        part = df.repartitionByRange(_RANGE_PARTITIONS, *order)
+    run = (
         Window.partitionBy("_pid")
-        .orderBy(order_col)
+        .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # eager localCheckpoint, not cache(): same overlapping-id hazard as
-    # assign_dense_ids — a lost cached partition would recompute through
-    # a fresh boundary sample; the checkpoint truncates lineage so the
-    # boundaries observed by the offsets job are the only ones possible.
-    local = with_pid.withColumn("_cum", F.sum(value_col).over(w)).localCheckpoint()
-    df.unpersist(blocking=False)
-    sums = sorted(
-        local.groupBy("_pid").agg(F.sum(value_col).alias("s")).collect(),
-        key=lambda r: r["_pid"],
+    local = part.withColumn("_pid", F.spark_partition_id()).withColumn(
+        "_cum", F.sum(v).over(run)
     )
-    offsets = {}
-    acc = 0
-    for row in sums:
-        offsets[row["_pid"]] = acc
-        acc += row["s"]
-    if not offsets:
-        return local.withColumn(out_col, F.lit(0).cast("long")).withColumn(
-            "_total", F.lit(0).cast("long")
-        ).drop("_pid", "_cum")
-    offs = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
-    return (
-        local.withColumn(
-            out_col,
-            (F.col("_cum") - F.col(value_col) + offs[F.col("_pid")]).cast("long"),
-        )
-        .withColumn("_total", F.lit(acc).cast("long"))
-        .drop("_pid", "_cum")
-    )
+    if small:
+        offs, total = F.lit(0), F.sum(v).over(Window.partitionBy("_pid"))
+    else:
+        # Pin the range partitions with an eager localCheckpoint, not
+        # cache(), before the offsets collect: the offsets job and the
+        # returned plan must observe the SAME range boundaries, and
+        # repartitionByRange samples its boundaries — two separate
+        # evaluations could disagree, silently producing overlapping id
+        # ranges (observed as duplicate doc ids at 3.4M docs before this
+        # pin). A lost cached partition would recompute through a fresh
+        # boundary sample; the checkpoint truncates lineage so a lost
+        # block fails LOUDLY instead, and the input cache can go at once.
+        local = local.localCheckpoint()
+        df.unpersist(blocking=False)
+        # exclusive per-partition offsets, summed on the driver in _pid order
+        sums = [0] * _RANGE_PARTITIONS
+        for pid, s in local.groupBy("_pid").agg(F.sum(v)).collect():
+            sums[pid] = s
+        starts = list(accumulate(sums, initial=0))
+        offs = F.array(*map(F.lit, starts))[F.col("_pid")]
+        total = F.lit(starts[-1])
+    out = local.withColumn(out_col, (F.col("_cum") - v + offs).cast("long"))
+    if value is not None:
+        out = out.withColumn("_total", total.cast("long"))
+    return out.drop("_pid", "_cum")
 
 
 def conv_doc_base_with_stats_ranged(
@@ -267,38 +211,26 @@ def build_dictionary(
     raw_postings: DataFrame,
     min_df: int = 1,
     max_df: int | None = None,
-    num_partitions: int = 32,
     stats: DataFrame | None = None,
-    small_rank: bool = False,
+    rows: int | None = None,
 ) -> DataFrame:
     """terms(term, term_id, df, ttf), pruned then deterministically
-    ranked. ``stats``: precomputed (term, df, ttf) — e.g.
+    ranked: term_id is prefix_offsets' dense rank over (df desc, term
+    asc). ``stats``: precomputed (term, df, ttf) — e.g.
     term_stats_from_partials — replacing the full-postings aggregation
     (values must be identical; the id ranking depends on exact df).
-
-    ``small_rank``: sort in ONE partition on (df desc, term asc) and
-    number rows positionally (as functions.ranking.rank_bounded does):
-    identical ids, no Window, and no job before the consumer's own (the
-    two-phase rank runs a range sample, a checkpoint, a sizes collect).
-    A total order sorted in one partition is deterministic, so no
-    checkpoint pins the ids: every evaluation recomputes the same ones.
-    Callers gate it on SMALL_RANK_ROWS; 10^8-term vocabularies must
-    keep the distributed path."""
+    ``rows`` bounds the vocabulary (a postings or partials row count;
+    None: unknown) and picks prefix_offsets' route: the same ids either
+    way, and up to SMALL_RANK_ROWS no Window and no job before the
+    consumer's own."""
     if stats is None:
         stats = term_stats(raw_postings)
     pruned = stats.filter(F.col("df") >= F.lit(min_df))
     if max_df is not None:
         pruned = pruned.filter(F.col("df") <= F.lit(max_df))
-    if small_rank:
-        return (
-            pruned.repartition(1)
-            .sortWithinPartitions(F.col("df").desc(), F.col("term").asc())
-            .withColumn("term_id", F.monotonically_increasing_id())
-            .select("term", "term_id", "df", "ttf")
-        )
-    return assign_term_ids(pruned, num_partitions=num_partitions).select(
-        "term", "term_id", "df", "ttf"
-    )
+    return prefix_offsets(
+        pruned, [F.col("df").desc(), F.col("term").asc()], None, "term_id", rows
+    ).select("term", "term_id", "df", "ttf")
 
 
 def project_onto_dictionary(

@@ -43,6 +43,7 @@ waves stay done).
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
@@ -195,28 +196,34 @@ def conv_partition_map(
     """(conv_id, partition_id): deterministic conv-RANGE split balanced
     by raw text bytes.
 
-    Conversations are ordered by conv_id and packed into ``num_partitions``
-    contiguous ranges of ~equal total TEXT BYTES (two-phase distributed
-    prefix sum — no sampling, so the assignment is reproducible under
-    restart, unlike repartitionByRange). Bytes, not turns: tokenize cost
-    and postings volume follow text length, and under a Zipf turn-length
-    distribution turn-balanced ranges left one straggler task per build
-    wave — the last finisher's solo tail was the dominant non-scaling
-    term of the build at high core counts (each turn also carries a
-    small constant so metadata-ish empty turns still weigh). Because
-    doc ids ascend in (conv_id, turn_idx), each partition owns a
-    CONTIGUOUS doc-id range: the doc shard holds one posting run per
-    term, which is what lets the run encode go with zero posting-level
-    shuffle (blocks.encode_shards_from_postings).
+    Conversations are ordered by conv_id and packed into
+    ``num_partitions`` contiguous ranges of ~equal total TEXT BYTES: the
+    exclusive prefix sum of bytes under conv_id
+    (dictionary.prefix_offsets, bounded by the input's parquet footer
+    rows; None for an in-memory frame), scaled to a partition id.
+    Reproducible under restart, unlike repartitionByRange: the prefix
+    sum's range route samples its boundaries, but the sums it returns do
+    not depend on them. Bytes, not turns: tokenize cost and postings
+    volume follow text length, and under a Zipf turn-length distribution
+    turn-balanced ranges left one straggler task per build wave — the
+    last finisher's solo tail was the dominant non-scaling term of the
+    build at high core counts (each turn also carries a small constant
+    so metadata-ish empty turns still weigh). Because doc ids ascend in
+    (conv_id, turn_idx), each partition owns a CONTIGUOUS doc-id range:
+    the doc shard holds one posting run per term, which is what lets the
+    run encode go with zero posting-level shuffle
+    (blocks.encode_shards_from_postings).
     """
-    from .dictionary import two_phase_cumsum
+    from .dictionary import prefix_offsets
 
     ext = transcripts.groupBy("conv_id").agg(
         F.sum(
             F.octet_length(F.coalesce(F.col("text"), F.lit(""))) + F.lit(16)
         ).cast("long").alias("_n")
     )
-    cum = two_phase_cumsum(ext, "conv_id", "_n", "cum_before")
+    cum = prefix_offsets(
+        ext, ["conv_id"], "_n", "cum_before", footer_rows(transcripts.inputFiles())
+    )
     pid = F.least(
         F.lit(num_partitions - 1),
         F.floor(F.col("cum_before") * num_partitions / F.col("_total")),
@@ -571,24 +578,17 @@ def load_term_partials(
     return spark.read.parquet(proot)
 
 
-def term_partials_row_count(index_root: str) -> int:
-    """Total term-partial rows (an upper bound on |vocabulary|), read
-    from parquet FOOTER metadata driver-side — no Spark job. Lets
-    finalize choose the single-job dictionary rank when the vocabulary
-    is small without paying a count() barrier to find out."""
+def footer_rows(files: list[str]) -> int | None:
+    """Total rows of parquet ``files`` (local paths or ``file:`` URIs),
+    read from their FOOTER metadata on the driver — no Spark job: the
+    row bound callers hand dictionary.prefix_offsets. None (no bound)
+    when there are no files or one is not a local parquet file."""
     import pyarrow.parquet as pq
 
-    proot = os.path.join(index_root, "term_partials")
-    n = 0
-    for d in os.listdir(proot):
-        if not d.startswith("partition_id="):
-            continue
-        for f in os.listdir(os.path.join(proot, d)):
-            if f.endswith(".parquet"):
-                n += pq.ParquetFile(
-                    os.path.join(proot, d, f)
-                ).metadata.num_rows
-    return n
+    paths = [f.removeprefix("file:") for f in files]
+    if paths and all(p.endswith(".parquet") and os.path.isfile(p) for p in paths):
+        return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
+    return None
 
 
 def finalize_lite(
@@ -626,7 +626,6 @@ def finalize_lite(
     DataFrame) — the M1 view reads back the artifacts written here.
     """
     from .dictionary import (
-        SMALL_RANK_ROWS,
         build_dictionary,
         conv_doc_base_with_stats_ranged,
         project_onto_dictionary,
@@ -649,15 +648,13 @@ def finalize_lite(
     pre_stats = (
         term_stats_from_partials(partials) if partials is not None else None
     )
-    # one-partition rank, no jobs before the terms/ write, whenever the
-    # vocabulary provably fits one task (footer row count bounds |vocab|,
-    # read without a Spark job). Every job pays a fixed cost (a trivial
-    # 4-task job on 4 cores: ~0.08 s, ~0.14 s with a Python stage), so
-    # the distributed rank only earns its barriers for vocabularies that
-    # genuinely need it.
-    small = (
-        pre_stats is not None
-        and term_partials_row_count(index_root) <= SMALL_RANK_ROWS
+    # the stats source's footer row count bounds |vocab| with no Spark
+    # job: a vocabulary that fits one task ranks in one partition, with
+    # no job before the terms/ write (a trivial job costs ~0.08-0.14 s
+    # on 4 cores; the range rank earns its barriers only at scale)
+    src = "term_partials" if partials is not None else "postings"
+    vocab_bound = footer_rows(
+        glob.glob(os.path.join(index_root, src, "partition_id=*", "*.parquet"))
     )
 
     def terms_chain():
@@ -665,7 +662,7 @@ def finalize_lite(
         # be one more barrier + pass
         build_dictionary(
             raw, min_df=min_df, max_df=max_df, stats=pre_stats,
-            small_rank=small,
+            rows=vocab_bound,
         ).write.mode("overwrite").parquet(terms_path)
 
     def docs_chain():

@@ -57,19 +57,20 @@ def term_percentile_slice(
     percentile cut (/root/reference/src/Analyzer/FeatureSelector.java:47-61):
     sort terms ascending by DF, keep [start, end) of the distribution.
 
-    Rank is the two-phase range-partitioned dense rank (no global
-    single-partition window — a ~10^8-term dictionary ranks fully
-    distributed); percent_rank == rk/(n-1) because (df, term) is a total
+    Rank is dictionary.prefix_offsets' dense rank, routed by the term
+    count (one sorted partition up to SMALL_RANK_ROWS terms, else range
+    partitions: no global single-partition window for a ~10^8-term
+    dictionary); percent_rank == rk/(n-1) because (df, term) is a total
     order."""
-    from ..index.dictionary import assign_dense_ids
+    from ..index.dictionary import prefix_offsets
 
     stats = term_stats(documents)
-    ranked = assign_dense_ids(
-        stats, [F.col("df").asc(), F.col("term").asc()], "_rk"
-    )
     n = stats.count()  # small agg; recomputed (no cache pinned on stats)
     if n <= 1:
         return stats.select("term", "df", "ttf").limit(0)
+    ranked = prefix_offsets(
+        stats, [F.col("df").asc(), F.col("term").asc()], None, "_rk", n
+    )
     pr = F.col("_rk") / float(n - 1)
     return (
         ranked.filter((pr >= start) & (pr < end))

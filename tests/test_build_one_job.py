@@ -14,13 +14,14 @@ import random
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
+from pyspark.sql import functions as F
 
 from ir_base_spark.index import dictionary
 from ir_base_spark.index.build import build_index
 from ir_base_spark.index.dictionary import (
-    assign_term_ids,
     build_dictionary,
     corpus_stats,
+    prefix_offsets,
 )
 from ir_base_spark.query.dataframe_bm25 import analyze_query_terms, score_all
 from tests.test_wand import _run_in_job_group as _jobs
@@ -84,9 +85,9 @@ def test_observed_constants_equal_corpus_stats(spark, fixture_small):
     assert idx.terms.collect() == []
 
 
-def test_small_rank_dense_ids_on_ties(spark):
+def test_small_route_dense_ids_on_ties(spark):
     """600 terms over 4 df values: the window-free one-partition rank
-    numbers them 0..n-1 in (df desc, term asc) order, as assign_term_ids
+    numbers them 0..n-1 in (df desc, term asc) order, as the range route
     does, unpruned and pruned; an empty stats frame gives no rows."""
     rng = random.Random(3)
     stats = [(f"w{i:04d}", rng.choice((1, 2, 3, 4)), 0) for i in range(600)]
@@ -95,7 +96,7 @@ def test_small_rank_dense_ids_on_ties(spark):
     sdf = sdf.repartition(4)
     for lo, hi in ((1, None), (2, 3)):
         small = build_dictionary(
-            None, min_df=lo, max_df=hi, stats=sdf, small_rank=True
+            None, min_df=lo, max_df=hi, stats=sdf, rows=len(stats)
         )
         assert "Window" not in small._jdf.queryExecution().optimizedPlan().toString()
         kept = sorted(
@@ -108,6 +109,9 @@ def test_small_rank_dense_ids_on_ties(spark):
         pruned = sdf.filter(sdf.df >= lo)
         if hi is not None:
             pruned = pruned.filter(pruned.df <= hi)
-        ref = assign_term_ids(pruned).select("term", "term_id", "df", "ttf")
+        ref = prefix_offsets(
+            pruned, [F.col("df").desc(), F.col("term").asc()], None,
+            "term_id", None,
+        ).select("term", "term_id", "df", "ttf")
         assert _rows(ref) == sorted(want)
-    assert build_dictionary(None, stats=sdf.limit(0), small_rank=True).collect() == []
+    assert build_dictionary(None, stats=sdf.limit(0), rows=0).collect() == []

@@ -44,13 +44,13 @@ def test_partials_dictionary_identical_to_raw(spark, fixture_small, tmp_path):
     assert ids == list(range(len(ids)))
 
 
-def test_small_rank_ids_identical(spark, fixture_small, tmp_path):
+def test_small_route_ids_identical(spark, fixture_small, tmp_path):
     """The single-job rank route must assign exactly the ids the
     distributed two-phase route assigns."""
     root = _built_root(spark, fixture_small, tmp_path)
     raw = load_postings(spark, root).drop("partition_id")
     t_dist = build_dictionary(raw)
-    t_small = build_dictionary(raw, small_rank=True)
+    t_small = build_dictionary(raw, rows=raw.count())
     assert sorted(map(tuple, t_dist.collect())) == sorted(
         map(tuple, t_small.collect())
     )
