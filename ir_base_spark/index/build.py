@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .dictionary import build_dictionary, corpus_stats, project_onto_dictionary
+from .dictionary import term_stats
 from .tokenize import tokenize_turns
 from .weights import set_feature_values
 
@@ -127,7 +128,7 @@ def build_index(
     return m1_index(
         raw,
         build_dictionary(
-            raw, min_df=min_df, max_df=max_df, rows=got["postings"]
+            term_stats(raw), min_df=min_df, max_df=max_df, rows=got["postings"]
         ),
         stats,
         {"ngrams": ngrams, "analyzer": analyzer},

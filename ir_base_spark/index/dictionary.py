@@ -195,36 +195,19 @@ def conv_doc_base_with_stats_ranged(
     return base, n_docs, avg, ext.unpersist
 
 
-def term_stats_from_partials(partials: DataFrame) -> DataFrame:
-    """(term, df, ttf) from build-time per-partition partial aggregates
-    (manifest.load_term_partials). Exact: df/ttf are sums of disjoint
-    per-partition counts — the final-agg half of the partial+final
-    pattern, with the partial half already paid during the build wave
-    while the postings were page-hot."""
-    return partials.groupBy("term").agg(
-        F.sum("df").cast("long").alias("df"),
-        F.sum("ttf").cast("long").alias("ttf"),
-    )
-
-
 def build_dictionary(
-    raw_postings: DataFrame,
+    stats: DataFrame,
     min_df: int = 1,
     max_df: int | None = None,
-    stats: DataFrame | None = None,
     rows: int | None = None,
 ) -> DataFrame:
-    """terms(term, term_id, df, ttf), pruned then deterministically
+    """terms(term, term_id, df, ttf) from ``stats``, the exact
+    (term, df, ttf) counts (term_stats), pruned then deterministically
     ranked: term_id is prefix_offsets' dense rank over (df desc, term
-    asc). ``stats``: precomputed (term, df, ttf) — e.g.
-    term_stats_from_partials — replacing the full-postings aggregation
-    (values must be identical; the id ranking depends on exact df).
-    ``rows`` bounds the vocabulary (a postings or partials row count;
-    None: unknown) and picks prefix_offsets' route: the same ids either
-    way, and up to SMALL_RANK_ROWS no Window and no job before the
-    consumer's own."""
-    if stats is None:
-        stats = term_stats(raw_postings)
+    asc). ``rows`` bounds the vocabulary (a postings row count; None:
+    unknown) and picks prefix_offsets' route: the same ids either way,
+    and up to SMALL_RANK_ROWS no Window and no job before the consumer's
+    own."""
     pruned = stats.filter(F.col("df") >= F.lit(min_df))
     if max_df is not None:
         pruned = pruned.filter(F.col("df") <= F.lit(max_df))

@@ -14,7 +14,6 @@ extraction — is committed per partition here:
                                     ranges
     postings/partition_id=<p>/      tokenized postings, written per
                                     partition via tmp-dir + atomic rename
-    term_partials/partition_id=<p>/ per-partition (term, df, ttf, dh)
     manifest/p<p>.json              one row per COMPLETED partition
                                     (written after the rename, also
                                     tmp + atomic rename)
@@ -53,12 +52,18 @@ from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .blocks import encode_shards_from_postings
 from .build import m1_index
-from .tokenize import tokenize_turns
+from .tokenize import POSTINGS_SCHEMA, tokenize_turns
 
 MANIFEST_VERSION = 1
+# postings/ as written (tokenize columns + the hive partition column),
+# declared so that reading it runs no schema-inference job
+_POSTINGS_READ_SCHEMA = StructType(
+    [*POSTINGS_SCHEMA.fields, StructField("partition_id", IntegerType())]
+)
 
 
 @dataclass
@@ -66,19 +71,18 @@ class PartitionManifest:
     """Per-partition build lineage + metrics.
 
     Lineage fields (snapshot_id, conv_id_min/max, status) are exact
-    and idempotent under task retries. Since the r5 term-partials
-    change, cmin/cmax come from the split-time conversation map (the
-    conversations ASSIGNED to the partition), not from observed
-    postings: a partition whose edge conversations were fully pruned
-    (min_distinct_terms, empty turns) reports a range WIDER than its
-    postings actually cover. That is a safe superset for conv-range
-    pruning — readers must not treat cmin/cmax as tight postings
-    bounds. Count/rate fields (turns, postings_written,
-    terms_per_sec, turns_per_sec) are collected via the Observation
-    API on the write job and are APPROXIMATE under task retries or
-    speculative execution — treat them as operational reporting, not
-    lineage. bytes_compressed is derived from the written files and
-    is exact."""
+    and idempotent under task retries. cmin/cmax come from the
+    split-time conversation map (the conversations ASSIGNED to the
+    partition), not from observed postings: a partition whose edge
+    conversations were fully pruned (min_distinct_terms, empty turns)
+    reports a range WIDER than its postings actually cover. That is a
+    safe superset for conv-range pruning — readers must not treat
+    cmin/cmax as tight postings bounds. The counts (turns,
+    postings_written, and the terms behind terms_per_sec) are one
+    aggregate over the wave's written postings, so they are exact;
+    the rates divide them by the wave's wall time spread evenly over
+    its partitions. bytes_compressed is derived from the written files
+    and is exact."""
 
     partition_id: int
     snapshot_id: str
@@ -348,16 +352,15 @@ def _build_wave(
     the wave's non-empty partitions (those the split marker lists),
     shuffles it to one partition per task (one_partition_per_task), and
     tokenizes and writes every wave partition's postings, one file per
-    partition directory. The term-partials job and a tiny rollup give
-    the per-partition metrics. Then, if the input snapshot has not
-    moved, the driver promotes each partition directory atomically and
-    writes its manifest row. Commit granularity = the wave; within a
-    killed wave nothing is promoted, completed waves stay done.
+    partition directory. One aggregate over the written postings,
+    grouped by partition, gives the manifest counts. Then, if the input
+    snapshot has not moved, the driver promotes each partition directory
+    atomically and writes its manifest row. Commit granularity = the
+    wave; within a killed wave nothing is promoted, completed waves stay
+    done.
     """
     post_root = os.path.join(index_root, "postings")
-    partials_root = os.path.join(index_root, "term_partials")
     tmp_dir = os.path.join(post_root, "._tmp_wave")
-    ptmp = os.path.join(partials_root, "._tmp_wave")
     ranges = _conv_ranges(index_root)
     existing = [pid for pid in wave if pid in ranges]
     stats: dict = {}
@@ -378,53 +381,28 @@ def _build_wave(
         if os.path.isdir(tmp_dir):
             shutil.rmtree(tmp_dir)
         # PURE tokenize+write: conv ranges come from the split marker and
-        # the counts from the term-partials pass (per-row CollectMetrics
-        # here was a measured ~45% overhead of the wave at 16 cores)
+        # the counts from the rollup below (per-row CollectMetrics here
+        # was a measured ~45% overhead of the wave at 16 cores)
         postings.write.partitionBy("partition_id").mode("overwrite").parquet(
             tmp_dir
         )
-
-        # per-partition PARTIAL term stats, aggregated while the wave's
-        # postings are page-hot: finalize's dictionary agg then reads
-        # ~|local vocab| x #partitions rows instead of every posting row
-        # (its measured critical path at high core counts). Promoted
-        # alongside postings/; finalize falls back to the raw postings
-        # agg whenever the two sets differ, so the artifact is never a
-        # correctness dependency. dh (doc-head count) gives the turns.
-        # One partition per task keeps one file per partition dir.
-        os.makedirs(partials_root, exist_ok=True)
-        if os.path.isdir(ptmp):
-            shutil.rmtree(ptmp)
-        one_partition_per_task(
-            spark.read.parquet(tmp_dir)
-            .groupBy("partition_id", "term")
-            .agg(
-                F.count(F.lit(1)).alias("df"),
-                F.sum("tf").cast("long").alias("ttf"),
-                F.sum("is_doc_head").cast("long").alias("dh"),
-            ),
-            existing,
-        ).write.partitionBy("partition_id").mode("overwrite").parquet(ptmp)
-        # manifest count metrics: a tiny rollup of the partials output.
-        # postings = Σdf, terms = Σttf, turns = Σdh — exact, same source
-        # of truth as the dictionary itself.
+        # manifest counts: one aggregate over the wave's written postings
         stats = {
             int(r["partition_id"]): r
-            for r in spark.read.parquet(ptmp)
+            for r in spark.read.schema(_POSTINGS_READ_SCHEMA)
+            .parquet(tmp_dir)
             .groupBy("partition_id")
             .agg(
-                F.sum("df").alias("postings"),
-                F.sum("ttf").alias("terms"),
-                F.sum("dh").alias("turns"),
+                F.count(F.lit(1)).alias("postings"),
+                F.sum("tf").alias("terms"),
+                F.sum("is_doc_head").alias("turns"),
             )
             .collect()
-            if r["postings"]
         }
     wall = time.time() - t0
     now = input_snapshot_id(transcripts)
     if now != snap:
         shutil.rmtree(tmp_dir, ignore_errors=True)
-        shutil.rmtree(ptmp, ignore_errors=True)
         raise ValueError(
             f"input snapshot moved from {snap} to {now} during the build; "
             f"partitions {wave} were not promoted. Use a fresh index_root."
@@ -441,21 +419,17 @@ def _build_wave(
                 turns_per_sec=0.0, status="done",
             )
         else:
-            for src, dst in ((tmp_dir, post_root), (ptmp, partials_root)):
-                src = os.path.join(src, f"partition_id={pid}")
-                dst = os.path.join(dst, f"partition_id={pid}")
-                if os.path.isdir(dst):
-                    shutil.rmtree(dst)
-                os.replace(src, dst)
+            dst = os.path.join(post_root, f"partition_id={pid}")
+            if os.path.isdir(dst):
+                shutil.rmtree(dst)
+            os.replace(os.path.join(tmp_dir, f"partition_id={pid}"), dst)
             m = PartitionManifest(
                 partition_id=pid, snapshot_id=snap,
                 conv_id_min=str(ranges[pid][0]),
                 conv_id_max=str(ranges[pid][1]),
                 turns=int(agg["turns"]),
                 postings_written=int(agg["postings"]),
-                bytes_compressed=_dir_bytes(
-                    os.path.join(post_root, f"partition_id={pid}")
-                ),
+                bytes_compressed=_dir_bytes(dst),
                 wall_sec=share,
                 terms_per_sec=float(agg["terms"]) / share if share > 0 else 0.0,
                 turns_per_sec=int(agg["turns"]) / share if share > 0 else 0.0,
@@ -466,7 +440,6 @@ def _build_wave(
         )
         out.append(m)
     shutil.rmtree(tmp_dir, ignore_errors=True)
-    shutil.rmtree(ptmp, ignore_errors=True)
     return out
 
 
@@ -486,10 +459,10 @@ def resumable_build(
     Idempotent: rerunning after a kill skips every partition with a
     'done' manifest row; their outputs are untouched (asserted
     byte-identical in tests/test_resume.py). Missing partitions process
-    in waves (default: 4 waves) — each wave is one Spark job over many
-    input splits, so all cores stay busy regardless of partition count,
-    and the per-partition commit protocol runs driver-side only at wave
-    boundaries.
+    in waves (default: 4 waves) — each wave is one write job over many
+    input splits plus the rollup of its manifest counts, so all cores
+    stay busy regardless of partition count, and the per-partition
+    commit protocol runs driver-side only at wave boundaries.
     """
     os.makedirs(index_root, exist_ok=True)
     os.makedirs(_manifest_dir(index_root), exist_ok=True)
@@ -506,8 +479,8 @@ def resumable_build(
 
     # Tokenizer-params guard: the snapshot id covers the INPUT only, so
     # resuming the same root with different build params would otherwise
-    # mix postings (and term partials) produced under two tokenizers —
-    # the one staleness path input_snapshot_id cannot see.
+    # mix postings produced under two tokenizers — the one staleness
+    # path input_snapshot_id cannot see.
     params = {
         "ngrams": ngrams,
         "analyzer": analyzer,
@@ -555,27 +528,8 @@ def resumable_build(
 
 
 def load_postings(spark: SparkSession, index_root: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(index_root, "postings"))
-
-
-def load_term_partials(
-    spark: SparkSession, index_root: str
-) -> DataFrame | None:
-    """Build-time per-partition (term, df, ttf) partials, or None when
-    they don't exactly cover the postings set (old roots, interrupted
-    promotes) — callers must then aggregate from raw postings. Exact
-    coverage check: the hive partition dirs under term_partials/ must
-    equal those under postings/ (both are promoted per-partition by
-    the same wave loop, postings first)."""
-    proot = os.path.join(index_root, "term_partials")
-    post = os.path.join(index_root, "postings")
-    if not (os.path.isdir(proot) and os.path.isdir(post)):
-        return None
-    pp = {d for d in os.listdir(proot) if d.startswith("partition_id=")}
-    qq = {d for d in os.listdir(post) if d.startswith("partition_id=")}
-    if not pp or pp != qq:
-        return None
-    return spark.read.parquet(proot)
+    path = os.path.join(index_root, "postings")
+    return spark.read.schema(_POSTINGS_READ_SCHEMA).parquet(path)
 
 
 def footer_rows(files: list[str]) -> int | None:
@@ -608,6 +562,16 @@ def finalize_lite(
     (the tokenize output); weights, and the per-doc L1/L2 norm, are
     computed vectorized inside the shard encoder.
 
+    The dictionary's one source is postings/: term_stats over it, whose
+    map-side partial aggregation does the per-partition reduction. A
+    term_partials/ directory left in a root built before this layout is
+    never read. The postings footer row count bounds the vocabulary with
+    no Spark job and picks dictionary.prefix_offsets' route: up to
+    SMALL_RANK_ROWS postings the terms rank in one sorted partition, with
+    no job before the terms/ write; above it (sf1 is about 6.6M) they
+    take the range route, which gives the same ids
+    (tests/test_prefix_offsets.py).
+
     Scaling shape (this phase was the binding flat term of the pipeline
     at small core counts — fixed driver/job barriers, not data volume):
     - TWO composite chains, each ENDING IN ITS OWN ARTIFACT WRITE:
@@ -629,7 +593,7 @@ def finalize_lite(
         build_dictionary,
         conv_doc_base_with_stats_ranged,
         project_onto_dictionary,
-        term_stats_from_partials,
+        term_stats,
     )
 
     # raw postings deliberately NOT cached — page-cached parquet
@@ -639,30 +603,15 @@ def finalize_lite(
     terms_path = os.path.join(index_root, "terms")
     pruned = min_df > 1 or max_df is not None
     box: dict = {}
-
-    # build-time per-partition term partials (when complete) replace
-    # the full-postings dictionary aggregation — the measured critical
-    # path of finalize at high core counts; identical (term, df, ttf)
-    # values by the partial+final aggregation identity
-    partials = load_term_partials(spark, index_root)
-    pre_stats = (
-        term_stats_from_partials(partials) if partials is not None else None
-    )
-    # the stats source's footer row count bounds |vocab| with no Spark
-    # job: a vocabulary that fits one task ranks in one partition, with
-    # no job before the terms/ write (a trivial job costs ~0.08-0.14 s
-    # on 4 cores; the range rank earns its barriers only at scale)
-    src = "term_partials" if partials is not None else "postings"
     vocab_bound = footer_rows(
-        glob.glob(os.path.join(index_root, src, "partition_id=*", "*.parquet"))
+        glob.glob(os.path.join(index_root, "postings", "partition_id=*", "*.parquet"))
     )
 
     def terms_chain():
         # the write IS the materializing action; a count() first would
         # be one more barrier + pass
         build_dictionary(
-            raw, min_df=min_df, max_df=max_df, stats=pre_stats,
-            rows=vocab_bound,
+            term_stats(raw), min_df=min_df, max_df=max_df, rows=vocab_bound
         ).write.mode("overwrite").parquet(terms_path)
 
     def docs_chain():

@@ -42,7 +42,6 @@ def set_feature_values(
     avg_doc_len: float,
     scheme: str = "BM25",
     norm: int = 0,
-    broadcast_terms: bool = True,
 ) -> DataFrame:
     """raw postings (conv_id, turn_idx, term, tf, doc_len) → weighted
     postings (conv_id, turn_idx, term_id, weight).
@@ -51,8 +50,7 @@ def set_feature_values(
     pruned from the dictionary drop out of every doc vector here
     (DocAnalyzer.java:406-420 analog).
     """
-    t = F.broadcast(terms) if broadcast_terms else terms
-    joined = raw_postings.join(t, "term", "inner")
+    joined = raw_postings.join(F.broadcast(terms), "term", "inner")
 
     scheme_u = scheme.upper()
     if scheme_u == "TF":

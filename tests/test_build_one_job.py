@@ -95,9 +95,7 @@ def test_small_route_dense_ids_on_ties(spark):
     sdf = spark.createDataFrame(stats, "term string, df long, ttf long")
     sdf = sdf.repartition(4)
     for lo, hi in ((1, None), (2, 3)):
-        small = build_dictionary(
-            None, min_df=lo, max_df=hi, stats=sdf, rows=len(stats)
-        )
+        small = build_dictionary(sdf, min_df=lo, max_df=hi, rows=len(stats))
         assert "Window" not in small._jdf.queryExecution().optimizedPlan().toString()
         kept = sorted(
             (r for r in stats if r[1] >= lo and (hi is None or r[1] <= hi)),
@@ -114,4 +112,4 @@ def test_small_route_dense_ids_on_ties(spark):
             "term_id", None,
         ).select("term", "term_id", "df", "ttf")
         assert _rows(ref) == sorted(want)
-    assert build_dictionary(None, stats=sdf.limit(0), rows=0).collect() == []
+    assert build_dictionary(sdf.limit(0), rows=0).collect() == []

@@ -75,8 +75,7 @@ def test_resume_skips_completed_partitions(spark, fixture_small, tmp_path):
 def test_resume_rejects_changed_build_params(spark, fixture_small, tmp_path):
     """Same root + same input but different tokenizer params must be
     refused: the input snapshot id cannot see the params, and mixing
-    postings/term-partials built under two tokenizers would be silent
-    corruption (r5 ADVICE item on load_term_partials staleness)."""
+    postings built under two tokenizers would be silent corruption."""
     import pytest
 
     t = spark.createDataFrame(fixture_small.transcripts)
@@ -301,5 +300,5 @@ def test_input_rewritten_between_waves_promotes_nothing(
         )
     assert waves == [[0]]
     assert set(read_manifest(root)) == {0}
-    for d in ("postings", "term_partials"):
-        assert os.listdir(os.path.join(root, d)) == ["partition_id=0"], d
+    assert os.listdir(os.path.join(root, "postings")) == ["partition_id=0"]
+    assert not os.path.exists(os.path.join(root, "term_partials"))
